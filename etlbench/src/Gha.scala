@@ -3,7 +3,6 @@ package etlbench
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import java.time.Instant
-import scala.collection.mutable.ArrayBuffer
 
 /** Seeded GH-Archive hour generator plus a plain-Scala oracle for the two
   * `query_data` result tables.
@@ -79,6 +78,21 @@ object Gha {
     Vector.tabulate(1500)(i => s"user$i") ++
       Vector("ci-bot", "dependabot", "robotics-dev", "botanist", "lint-bot")
 
+  /** Share of each kind of line in a generated hour. The shares, like the
+    * Zipf(1.1) repo skew over 400 repos and the 1,500 users above, are
+    * chosen by hand, not measured from GH Archive: pushes lead, every type
+    * the pipeline curates is present, and 1 % of lines are broken. Most of
+    * a tick's cost is fixed per tick; etlbench/README.md gives the measured
+    * effect of a push-heavier mix.
+    * `PushEvent/empty` is a push without `commits`; `malformed` is a
+    * truncated push line.
+    */
+  val mix: Seq[(String, Double)] = Seq(
+    "PushEvent" -> 0.42, "PushEvent/empty" -> 0.005, "WatchEvent" -> 0.155,
+    "CreateEvent" -> 0.11, "PullRequestEvent" -> 0.08,
+    "IssueCommentEvent" -> 0.125, "ForkEvent" -> 0.06,
+    "GollumEvent" -> 0.035, "malformed" -> 0.01)
+
   /** One hour of events. Every hour uses its own random stream derived
     * from (seed, hour index), so history and new hours are independent of
     * how many hours a run generates.
@@ -86,39 +100,36 @@ object Gha {
   def hourEvents(seed: Long, idx: Int, start: Instant, n: Int): Seq[Event] = {
     val r = new java.util.Random(seed * 1000003L + idx)
     val repos = new Repos(400)
-    val out = new ArrayBuffer[Event](n)
-    var i = 0
-    while (i < n) {
+    val cdf = mix.map(_._2).scanLeft(0.0)(_ + _).tail.toArray
+    def kind(u: Double): String = {
+      val i = cdf.indexWhere(u < _)
+      mix(if (i < 0) mix.size - 1 else i)._1
+    }
+    Seq.fill(n) {
       val login = if (r.nextDouble() < 0.05) pick(r, users.takeRight(5))
         else pick(r, users)
       val repo = repos.draw(r)
       val ts = Gha.iso(start.plusSeconds(r.nextInt(3600)))
-      val u = r.nextDouble()
-      val e =
-        if (u < 0.42) {
+      kind(r.nextDouble()) match {
+        case "PushEvent" =>
+          // 2 % of pushes carry 40-99 commits, the explode fan-out case
           val k = if (r.nextDouble() < 0.02) 40 + r.nextInt(60)
             else 1 + r.nextInt(4)
           Event("PushEvent", login, repo, ts, commits = Some(Seq.tabulate(k)(
             j => Commit(f"${r.nextLong()}%016x$j%02x", sentence(r, 0.05)))))
-        } else if (u < 0.425) Event("PushEvent", login, repo, ts) // no commits
-        else if (u < 0.58) Event("WatchEvent", login, repo, ts)
-        else if (u < 0.69) Event("CreateEvent", login, repo, ts)
-        else if (u < 0.77) Event("PullRequestEvent", login, repo, ts)
-        else if (u < 0.895) Event("IssueCommentEvent", login, repo, ts,
+        case "PushEvent/empty" => Event("PushEvent", login, repo, ts)
+        case "IssueCommentEvent" => Event("IssueCommentEvent", login, repo, ts,
           comment = if (r.nextDouble() < 0.02) None
             else Some(sentence(r, 0.08)),
           issueCreatedAt =
             if (r.nextDouble() < 0.03) None
             else Some(Gha.iso(start.minusSeconds(r.nextInt(86400 * 30)))))
-        else if (u < 0.955) Event("ForkEvent", login, repo, ts)
-        else if (u < 0.99) Event("GollumEvent", login, repo, ts)
-        else Event("PushEvent", login, repo, ts,
+        case "malformed" => Event("PushEvent", login, repo, ts,
           commits = Some(Seq(Commit("bad", "use dask for the etl step"))),
           malformed = true)
-      out += e
-      i += 1
+        case tpe => Event(tpe, login, repo, ts)
+      }
     }
-    out.toSeq
   }
 
   private val isoFmt = java.time.format.DateTimeFormatter

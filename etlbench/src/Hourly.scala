@@ -2,6 +2,7 @@ package etlbench
 
 import java.nio.file.Path
 import java.time.Instant
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.ingest.Serve
@@ -55,8 +56,8 @@ object Hourly {
     val afterNow = newHour.plusSeconds(3660)
     def restore(i: Int): Path = {
       val dir = work.resolve(s"op$i")
-      Files2.delete(dir)
-      Files2.copyTree(template, dir)
+      FileUtils.deleteDirectory(dir.toFile)
+      FileUtils.copyDirectory(template.toFile, dir.toFile)
       dir
     }
     System.err.println(f"[hourly] template $templateS%.2f s")
@@ -85,11 +86,12 @@ object Hourly {
       failures ++= bad
       if (bad.nonEmpty) failedOps += 1
       if (i == nTicks) {
-        amp = (Files2.size(dir.resolve("store")) + Files2.size(dir.resolve("mv"))
-          ).toDouble / hours.map(_.bytes).sum
+        amp = (FileUtils.sizeOfDirectory(dir.resolve("store").toFile) +
+          FileUtils.sizeOfDirectory(dir.resolve("mv").toFile)).toDouble /
+          hours.map(_.bytes).sum
         resultRows = countRows(ctx, dir)
       }
-      Files2.delete(dir)
+      FileUtils.deleteDirectory(dir.toFile)
       if (traced && !traceThis) { untraced += r.secs; None } else Some(r)
     }
     val passS = (System.nanoTime() - p0) / 1e9
@@ -153,7 +155,7 @@ object Hourly {
     ctx.spark.createDataFrame(
       ctx.spark.sparkContext.parallelize(bad +: rs.drop(1), 1), schema)
       .write.parquet(tmp.toString)
-    Files2.delete(path)
+    FileUtils.deleteDirectory(path.toFile)
     java.nio.file.Files.move(tmp, path)
   }
 }

@@ -4,7 +4,8 @@ import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.etlbench.{Bus, Recorder, Span}
+import org.apache.spark.etlbench.{Recorder, Span}
+import org.apache.spark.graft.CoreBridge
 
 /** JVM side of the benchmark. `run.py` builds the classes, prepares the
   * registry data and calls
@@ -90,7 +91,7 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val work: Path,
     * and the listener deltas are read after the bus drains.
     */
   def op[T](name: String, traceThis: Boolean)(body: => T): Op[T] = {
-    Bus.drain(sc)
+    CoreBridge.drainListenerBus(sc)
     rec.foreach(_.reset())
     attach(traceThis)
     val gc0 = gcMs
@@ -103,7 +104,7 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val work: Path,
     val secs = (System.nanoTime() - t0) / 1e9
     val spans = if (traceThis) Span.finish() else Nil
     val wall1 = System.currentTimeMillis()
-    Bus.drain(sc)
+    CoreBridge.drainListenerBus(sc)
     val layers = if (traceThis) Some(Layers.of(spans, rec.get, wall0, wall1))
       else None
     attach(false)
@@ -113,29 +114,6 @@ final class Ctx(val spark: SparkSession, val o: Main.Opts, val work: Path,
 
 final case class Op[T](out: Either[Throwable, T], secs: Double, gcMs: Long,
     layers: Option[Layers])
-
-object Files2 {
-  def copyTree(src: Path, dst: Path): Unit = {
-    val s = Files.walk(src)
-    try s.iterator.asScala.foreach { p =>
-      val t = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t)
-      else Files.copy(p, t)
-    } finally s.close()
-  }
-  def delete(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.iterator.asScala.toSeq.reverse.foreach(Files.delete) finally s.close()
-    }
-  def size(p: Path): Long =
-    if (!Files.exists(p)) 0L
-    else {
-      val s = Files.walk(p)
-      try s.iterator.asScala.filter(Files.isRegularFile(_))
-        .map(Files.size).sum finally s.close()
-    }
-}
 
 object Stats {
   def median(xs: Seq[Double]): Double = {

@@ -1,7 +1,9 @@
 package etlbench
 
 import java.nio.file.Path
-import org.apache.spark.etlbench.{Bus, Span}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.etlbench.Span
+import org.apache.spark.graft.CoreBridge
 
 /** `registry`: analyst queries, one client, closed loop.
   *
@@ -24,13 +26,13 @@ object Registry {
     def fresh(): Unit = {
       spark.catalog.clearCache()
       System.gc()
-      Bus.drain(sc)
+      CoreBridge.drainListenerBus(sc)
     }
 
     val data = java.nio.file.Paths.get(o("data"))
     def copy(name: String): Path = {
       val dir = work.resolve(name).resolve(data.getFileName.toString)
-      Files2.copyTree(data, dir)
+      FileUtils.copyDirectory(data.toFile, dir.toFile)
       dir
     }
     // every key first runs once untimed on its own copy, writing its result
@@ -43,7 +45,14 @@ object Registry {
     val warmDir = copy("warm")
     val copies = (if (traced) Seq(false, true) else Seq(false))
       .map(t => t -> copy(if (t) "traced" else "plain")).toMap
+    // the warm-up results plus the keys' oracle SQL, laid out as graft.Verify
+    // writes them, so run.py checks them with the repo's tools/check.py
     val checkDir = work.resolve("check")
+    java.nio.file.Files.createDirectories(checkDir)
+    java.nio.file.Files.writeString(checkDir.resolve("oracle_sql.json"),
+      org.json4s.jackson.Serialization.write(
+        keys.flatMap(k => graft.SparkEntry.oracleSql.get(k).map(k -> _)).toMap)(
+        org.json4s.DefaultFormats))
     var warmS = 0.0
     var timedS = 0.0
     val results = keys.zipWithIndex.flatMap { case (k, i) =>
@@ -69,7 +78,7 @@ object Registry {
           try df.write.format("noop").mode("overwrite").save()
           finally Span.exit()
         }
-        Bus.drain(sc)
+        CoreBridge.drainListenerBus(sc)
         timedS += (System.nanoTime() - t) / 1e9
         System.err.println(f"[registry] $k traced=$traceThis ${r.secs}%.2f s")
         r.out.left.foreach(e => failures +=
@@ -80,7 +89,7 @@ object Registry {
     val passS = timedS / copies.size
     spark.catalog.clearCache()
     val liveMb = liveHeapMb()
-    (copies.values.toSeq :+ warmDir).foreach(d => Files2.delete(d.getParent))
+    (copies.values.toSeq :+ warmDir).foreach(d => FileUtils.deleteDirectory(d.getParent.toFile))
 
     val timed = results.filter(_._1 == traced).map(_._2)
     val plain = results.filterNot(_._1).map(_._2)
@@ -94,7 +103,6 @@ object Registry {
       "failed" -> timed.count { case (k, r) =>
         r.out.isLeft || warmFailed.contains(k) },
       "failures" -> failures.toSeq,
-      "oracle" -> keys.flatMap(k => graft.SparkEntry.oracleSql.get(k).map(k -> _)).toMap,
       "setup_parts" -> Map("warmup_s" -> warmS),
       "setup_s" -> warmS,
       "op_s" -> ops.map(_.secs),

@@ -151,8 +151,3 @@ final class Recorder extends SparkListener with QueryExecutionListener {
     total
   }
 }
-
-object Bus {
-  /** Wait until every event posted so far reached every listener. */
-  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-}
