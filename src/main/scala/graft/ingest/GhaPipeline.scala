@@ -10,9 +10,11 @@ import graft.time.Increments
   * result tables (`/root/reference/preprocess.py:247-266`).
   *
   * Execution shape vs the reference: one declarative read replaces the
-  * manual `client.map` fan-out (file-per-task falls out of gzip
-  * unsplittability), the six table writes are six narrow jobs off one
-  * persisted parse, barriers become job boundaries, and the Prefect layer
+  * manual `client.map` fan-out over files (file-per-task falls out of gzip
+  * unsplittability); the six table appends off one persisted parse, and
+  * the six per-table compactions, each run concurrently ([[Fanout]], the
+  * `client.map` over tables); the partitions a batch touched come back
+  * from the append commits rather than from a scan; and the Prefect layer
   * is this thin driver object.
   */
 object GhaPipeline {
@@ -21,27 +23,34 @@ object GhaPipeline {
   def ingest(spark: SparkSession, paths: Seq[String], storeDir: String): Unit =
     ingestWith(spark, paths, storeDir)(_ => ())
 
-  /** [[ingest]] plus a hook over the batch's curated frames while the
-    * parsed raw is still persisted — the views path folds the SAME batch
-    * the appends wrote, without re-parsing.
-    */
   /** Test hook: named crash-injection points inside a tick. A spec that
     * throws from it simulates the process dying at exactly that point
     * (ChaosPipelineSpec sweeps every point and proves the resumed run is
-    * byte-identical to a never-crashed one). Production no-op.
+    * byte-identical to a never-crashed one). Production no-op. The
+    * per-table points (`post-append:<t>`, `post-compact:<t>`) fire on the
+    * fan-out's threads.
     */
-  private[ingest] var chaosHook: String => Unit = _ => ()
+  @volatile private[ingest] var chaosHook: String => Unit = _ => ()
 
+  /** [[ingest]] plus a hook over the batch's curated frames while the
+    * parsed raw is still persisted — the views path folds the SAME batch
+    * the appends wrote, without re-parsing. The six appends run
+    * concurrently; `f` runs after all of them committed. Returns the
+    * distinct `date` values the batch wrote across all tables (null for
+    * the default partition, sorted first).
+    */
   def ingestWith(spark: SparkSession, paths: Seq[String], storeDir: String)(
-      f: Map[String, org.apache.spark.sql.DataFrame] => Unit): Unit = {
+      f: Map[String, DataFrame] => Unit): Seq[String] = {
     val (raw, tables) = Ingest.extractAll(spark, paths)
     try {
-      tables.foreach { case (name, df) =>
-        TableStore.append(df, s"$storeDir/$name")
+      val touched = Fanout(spark, "append", tables.keys.toSeq) { name =>
+        val dates = TableStore.append(tables(name), s"$storeDir/$name")
         chaosHook(s"post-append:$name")
+        dates
       }
       chaosHook("pre-views")
       f(tables)
+      touched.flatten.distinct.sortBy(Option(_))
     } finally raw.unpersist()
   }
 
@@ -59,13 +68,16 @@ object GhaPipeline {
     * new generation — O(table) every hour, which at 100 TB dwarfs the
     * O(batch) tick it rides on (Delta's OPTIMIZE, the reference's analog
     * at `preprocess.py:199-206`, only rewrites under-target file groups
-    * for the same reason).
+    * for the same reason). The six tables compact concurrently
+    * ([[Fanout]]); a failure in one surfaces only after the others have
+    * finished, so no `compact_stage.tmp` is mid-write when recovery runs.
     */
   def compactTouched(spark: SparkSession, storeDir: String,
       dates: Seq[String]): Unit =
-    graft.schema.GhaSchemas.tableNames.foreach { t =>
+    Fanout(spark, "compact", graft.schema.GhaSchemas.tableNames) { t =>
       TableStore.compactDates(spark, s"$storeDir/$t", dates,
         Some(graft.schema.GhaSchemas.curated(t)))
+      chaosHook(s"post-compact:$t")
     }
 
   /** The `query_data` analytics (`preprocess.py:209-244`), parameterized by
@@ -332,19 +344,16 @@ object GhaPipeline {
       writeMarker(spark, s"$storeDir/_ingest_inflight",
         s"${hourly.head._1}|$lastHour")
       chaosHook("post-inflight-marker")
-      // touched dates come from the batch DATA, not the hour range: an
-      // event's created_at (the partition value) can fall on the previous
-      // UTC date at an hour-file boundary
-      var touched = Set.empty[String]
-      ingestWith(spark, hourly.map(_._2), storeDir) { tables =>
+      // touched dates come from the batch DATA (the partitions the appends
+      // committed), not the hour range: an event's created_at (the
+      // partition value) can fall on the previous UTC date at an
+      // hour-file boundary
+      val touched = ingestWith(spark, hourly.map(_._2), storeDir) { tables =>
         IncrementalViews.maintainTick(spark, tables, mvDir, keyword)
-        touched = tables.valuesIterator.flatMap(df =>
-          df.select(org.apache.spark.sql.functions.col("date").cast("string"))
-            .distinct().collect().map(_.getString(0))).toSet
       }
       chaosHook("post-ingest")
       // maintenance stays O(batch): bin-pack only the touched partitions
-      compactTouched(spark, storeDir, touched.toSeq.sorted)
+      compactTouched(spark, storeDir, touched)
       chaosHook("post-compact")
       val (commits, comments) = IncrementalViews.queryData(spark, mvDir, keyword)
       TableStore.overwrite(commits, s"$storeDir/results/commits")

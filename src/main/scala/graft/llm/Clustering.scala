@@ -121,12 +121,15 @@ object Clustering {
     // barrier exchange, and ONE hash probe per row: the corpus-sized
     // exchange per iteration is REMOVED; the only shuffle left is the
     // k x partitions partial-aggregate rows. Requires fixed-dim vectors
-    // (dim from the seeds — already this function's contract; ANSI
-    // element_at would throw on a short vector instead of silently
-    // skipping dims, which is the better failure).
+    // (dim from the seeds — already this function's contract). ANSI
+    // element_at throws on a short vector; a non-ANSI session reads null
+    // past its end instead — silent drift in a shared cluster, a null sum
+    // in a cluster of its own — so `ragged` counts wrong-size vectors and
+    // the driver fails descriptively on either.
     for (_ <- 1 to iters) {
       val sumCols = (0 until dim).map(i =>
-        sum(element_at(col("__v"), i + 1)).as(s"s$i")) :+ cnt.as("n")
+        sum(element_at(col("__v"), i + 1)).as(s"s$i")) :+ cnt.as("n") :+
+        count(when(size(col("__v")) =!= dim, true)).as("ragged")
       val stats = corpus
         .filter(col(vecCol).isNotNull) // match posexplode: null rows count nowhere
         .select(clusterOf(cents)(col(vecCol)).as("cluster"),
@@ -138,8 +141,17 @@ object Clustering {
       val ns = new Array[Long](kEff)
       stats.foreach { r =>
         val c = r.getInt(0)
+        if (r.getLong(dim + 2) > 0L) throw new IllegalArgumentException(
+          s"k-means: cluster $c holds ${r.getLong(dim + 2)} vectors in " +
+            s"$vecCol whose size is not the seeds' dimension $dim " +
+            "(ragged vectors)")
         var i = 0
-        while (i < dim) { sums(c)(i) = r.getDouble(i + 1); i += 1 }
+        while (i < dim) {
+          if (r.isNullAt(i + 1)) throw new IllegalArgumentException(
+            s"k-means: cluster $c has no value in dimension $i — the " +
+              s"vectors in $vecCol hold null elements there")
+          sums(c)(i) = r.getDouble(i + 1); i += 1
+        }
         ns(c) = r.getLong(dim + 1)
       }
       cents = IndexedSeq.tabulate(kEff) { i =>

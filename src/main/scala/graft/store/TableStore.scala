@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{array, col, concat, concat_ws, lit, size, sum, when}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -397,8 +398,15 @@ object TableStore {
     * rebase picks the files up from the old generation, or the rename
     * lands them in the new one. Never both (the lock serializes the two
     * commit points), never neither.
+    *
+    * Returns the batch's distinct `date` values as strings — what
+    * `df.select(col("date").cast("string")).distinct().collect()` gives,
+    * read off the staged `date=` directories the commit lists anyway, so
+    * a caller that needs the touched partitions pays no second job. The
+    * default partition maps back to null; like Spark's writer, an empty
+    * string value also lands there and so comes back as null.
     */
-  def append(df: DataFrame, dir: String): Unit = {
+  def append(df: DataFrame, dir: String): Seq[String] = {
     val spark = df.sparkSession
     val f = fs(spark, dir)
     val staging = s"$dir/.staging/append-${java.util.UUID.randomUUID()}"
@@ -416,10 +424,12 @@ object TableStore {
 
   private def appendCommit(spark: SparkSession,
       f: org.apache.hadoop.fs.FileSystem, dir: String,
-      staging: String): Unit = {
+      staging: String): Seq[String] = {
     withCommitLock(f, dir, 30L * 60 * 1000) {
       val tgt = new Path(writeDir(spark, dir))
       f.mkdirs(tgt)
+      val parts = f.listStatus(new Path(staging)).toSeq.filter(pd =>
+        pd.isDirectory && pd.getPath.getName.startsWith("date="))
       // a LIVE rewrite claim on a staged date means a merge/delete/replace/
       // compactDates is mid-way through its read→rewrite window: files this
       // append publishes now would be invisible to that rewrite's snapshot
@@ -428,26 +438,22 @@ object TableStore {
       // the claim exists here (back off, re-run after the rewrite) or the
       // rewriter's read starts after this whole commit. Appends still never
       // claim — append ∥ append and append ∥ compact stay fully parallel.
-      f.listStatus(new Path(staging)).foreach { pd =>
-        if (pd.isDirectory && pd.getPath.getName.startsWith("date=")) {
-          val d = unescapePath(pd.getPath.getName.stripPrefix("date="))
-          val cp = dateClaimPath(dir, d)
-          expireStaleClaim(f, cp, 30L * 60 * 1000)
-          if (f.exists(cp)) throw new ConcurrentWriteException(
-            s"date=$d on $dir is being rewritten (live rewrite claim) — " +
-              "re-run the append after the rewrite commits")
-        }
+      parts.foreach { pd =>
+        val d = unescapePath(pd.getPath.getName.stripPrefix("date="))
+        val cp = dateClaimPath(dir, d)
+        expireStaleClaim(f, cp, 30L * 60 * 1000)
+        if (f.exists(cp)) throw new ConcurrentWriteException(
+          s"date=$d on $dir is being rewritten (live rewrite claim) — " +
+            "re-run the append after the rewrite commits")
       }
-      f.listStatus(new Path(staging)).foreach { pd =>
-        if (pd.isDirectory && pd.getPath.getName.startsWith("date=")) {
-          val dst = new Path(tgt, pd.getPath.getName)
-          f.mkdirs(dst)
-          f.listStatus(pd.getPath).foreach { file =>
-            val name = file.getPath.getName
-            if (!name.startsWith("_") && !name.startsWith("."))
-              require(f.rename(file.getPath, new Path(dst, name)),
-                s"append publish rename failed: ${file.getPath} -> $dst")
-          }
+      parts.foreach { pd =>
+        val dst = new Path(tgt, pd.getPath.getName)
+        f.mkdirs(dst)
+        f.listStatus(pd.getPath).foreach { file =>
+          val name = file.getPath.getName
+          if (!name.startsWith("_") && !name.startsWith("."))
+            require(f.rename(file.getPath, new Path(dst, name)),
+              s"append publish rename failed: ${file.getPath} -> $dst")
         }
       }
       // a fresh g0 needs its visibility marker (committer wrote it into
@@ -457,6 +463,10 @@ object TableStore {
         if (!f.exists(marker)) f.create(marker).close()
       }
       f.delete(new Path(staging), true)
+      parts.map(pd => pd.getPath.getName.stripPrefix("date=") match {
+        case ExternalCatalogUtils.DEFAULT_PARTITION_NAME => null
+        case v => unescapePath(v)
+      })
     }
   }
 
@@ -1107,6 +1117,14 @@ object TableStore {
     * partition rewrite): keep other files' rows, re-derive the touched
     * partitions' rows from their new footers — O(touched) footer reads,
     * never O(table).
+    *
+    * Swap protocol: retract the live sidecar's `_SUCCESS` first (readers
+    * fall back to footers from here on), write the union to the sibling
+    * `stats_g<N>.swap`, then delete the live dir and rename the sibling
+    * over it. A crash anywhere before the rename leaves readers on
+    * footers, never on a torn or stale sidecar; the next refresh
+    * overwrites the leftover sibling, and [[vacuum]] drops one left behind
+    * by a superseded generation.
     */
   private def updateStatsSidecar(spark: SparkSession, dataDir: String,
       dates: Seq[String]): Unit = {
@@ -1118,37 +1136,44 @@ object TableStore {
     import spark.implicits._
     val f = fs(spark, dataDir)
     val sp = statsPath(dataDir)
+    val swap = new Path(sp.getParent, s"${sp.getName}.swap")
+    val live = new Path(sp, "_SUCCESS")
     val qualBase = f.makeQualified(new Path(dataDir)).toString
     val touched = dates.map(d => s"date=$d/").toSet
     import org.apache.spark.sql.functions.{col => c}
+    def noRows = Seq.empty[(String, String, Double, Double)]
+      .toDF("file", "col", "mn", "mx")
     // kept rows stay DISTRIBUTED: the sidecar is O(files x cols) — at 10^6
-    // files that's a driver-memory hazard as a collect. localCheckpoint
-    // materializes the filtered rows to executor storage, which is also
-    // what makes overwriting the path we just read from legal.
+    // files that's a driver-memory hazard as a collect. They are read with
+    // the sidecar's declared schema (no inference job) and written to the
+    // sibling, so the read never races an overwrite of its own path.
     val existing: DataFrame =
-      if (isGenerationDir(dataDir) && f.exists(new Path(sp, "_SUCCESS")))
-        spark.read.parquet(sp.toString)
+      if (isGenerationDir(dataDir) && f.exists(live)) {
+        f.delete(live, false)
+        spark.read.schema(statsSchema).parquet(sp.toString)
           .filter(!touched.map(p => c("file").startsWith(p))
             .reduce(_ || _))
-          .localCheckpoint()
-      else {
-        import spark.implicits._
-        Seq.empty[(String, String, Double, Double)]
-          .toDF("file", "col", "mn", "mx")
-      }
+      } else noRows
     val touchedFiles = dates
       .flatMap(d => listParquet(spark, s"$dataDir/date=$d"))
     val fresh =
-      if (touchedFiles.isEmpty) {
-        import spark.implicits._
-        Seq.empty[(String, String, Double, Double)]
-          .toDF("file", "col", "mn", "mx")
-      } else footerStatsDf(spark, touchedFiles, qualBase)
-    // brief non-visibility window during the overwrite (no _SUCCESS):
-    // concurrent readers fall back to footers, never a torn sidecar
+      if (touchedFiles.isEmpty) noRows
+      else footerStatsDf(spark, touchedFiles, qualBase)
     existing.unionByName(fresh)
-      .coalesce(1).write.mode("overwrite").parquet(sp.toString)
+      .coalesce(1).write.mode("overwrite").parquet(swap.toString)
+    beforeSidecarSwapHook()
+    f.delete(sp, true)
+    require(f.rename(swap, sp), s"stats sidecar swap failed: $swap -> $sp")
   }
+
+  /** Test hook: runs between the sidecar refresh's sibling write and its
+    * swap into place. Production no-op.
+    */
+  private[store] var beforeSidecarSwapHook: () => Unit = () => ()
+
+  /** The sidecar's own layout: one row per (data file, numeric column). */
+  private val statsSchema = new StructType().add("file", "string")
+    .add("col", "string").add("mn", "double").add("mx", "double")
 
   /** File-level data skipping from parquet footer stats — the engine-side
     * half of Delta data skipping (Delta reads min/max from its tx log; a
@@ -1179,10 +1204,7 @@ object TableStore {
           import org.apache.spark.sql.functions.{col => c, lit}
           // explicit schema: the sidecar layout is ours, so the read skips
           // the footer-inference job — one less job on every pruned query
-          val st = spark.read.schema(
-            new StructType().add("file", "string").add("col", "string")
-              .add("mn", "double").add("mx", "double"))
-            .parquet(sp.toString)
+          val st = spark.read.schema(statsSchema).parquet(sp.toString)
           val dropCond = ranges.map(r =>
             c("col") === r.name && (c("mx") < r.lo || c("mn") > r.hi))
             .reduceOption(_ || _).getOrElse(lit(false))
@@ -1527,7 +1549,7 @@ object TableStore {
             col("date"), col(zCol))
           .sortWithinPartitions(col("date"), col(zCol))
           .drop(zCol)
-      } else binPack(spark, df, bucketsFor)
+      } else binPack(df, bucketsFor)
     compacted.write.mode("overwrite").partitionBy("date")
       .option("partitionOverwriteMode", "static")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
@@ -1569,10 +1591,15 @@ object TableStore {
     * [[compactDates]]): spread each date's rows across its bucket count so
     * `partitionBy("date")` emits ~target-sized files, one per bucket.
     *
-    * Bucket counts join in as a broadcast — a literal when-chain over
-    * thousands of dates would bloat the plan. Internal columns carry an
-    * improbable prefix: a user table with a column of the same name would
-    * otherwise be silently overwritten and dropped from the output.
+    * Bucket counts ride in the plan as one map literal holding only the
+    * dates that need more than one bucket; every other date — the hourly
+    * tick's case, so the map is usually empty — defaults to one. A literal
+    * costs no job (the broadcast join of a local frame it replaces cost
+    * one per call); its lookup scans the map's keys, so per-row cost grows
+    * with the number of over-target dates in a full [[compact]]. The
+    * internal column carries an improbable prefix: a user table with a
+    * column of the same name would otherwise be silently overwritten and
+    * dropped from the output.
     *
     * The bucket key must be DETERMINISTIC under task retry: a recomputed
     * map task must assign every row the same bucket already-fetched
@@ -1581,19 +1608,16 @@ object TableStore {
     * (skipping unhashable map types); byte-identical duplicate rows then
     * share a bucket, which skews only degenerate all-duplicate dates.
     */
-  private def binPack(spark: SparkSession, df: DataFrame,
+  private def binPack(df: DataFrame,
       bucketsFor: Map[String, Long]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val dCol = "__graft_compact_d"; val nbCol = "__graft_compact_nb"
     val bCol = "__graft_compact_b"
-    val nbDf = broadcast(spark
-      .createDataFrame(bucketsFor.toSeq).toDF(dCol, nbCol))
+    val nb = typedLit(bucketsFor.filter(_._2 > 1L))
+      .getItem(df.col("date").cast("string"))
     val hashCols = df.schema.fields
       .filter(f => hashableType(f.dataType)).map(f => df.col(f.name))
     val rowKey = if (hashCols.isEmpty) lit(0L) else xxhash64(hashCols.toIndexedSeq: _*)
-    val bucketed = df
-      .join(nbDf, df.col("date").cast("string") === col(dCol), "left")
-      .withColumn(bCol, pmod(rowKey, coalesce(col(nbCol), lit(1L))))
+    val bucketed = df.withColumn(bCol, pmod(rowKey, coalesce(nb, lit(1L))))
     // every (date, bucket) lands wholly in one task; partitionBy("date")
     // then emits one file per bucket. The partition count is EXPLICIT —
     // a column-only repartition is subject to AQE coalescing, which at
@@ -1603,7 +1627,7 @@ object TableStore {
     val totalBuckets = math.max(1L, bucketsFor.values.sum)
     bucketed.repartition((totalBuckets * 2).min(20000).toInt,
         col("date"), col(bCol))
-      .drop(dCol, nbCol, bCol)
+      .drop(bCol)
   }
 
   /** Delta-OPTIMIZE-shaped INCREMENTAL maintenance: bin-pack ONLY `dates`,
@@ -1696,7 +1720,7 @@ object TableStore {
     // stage OUTSIDE the generation dir (readers of the generation never
     // see it); the static-mode committer writes stage/_SUCCESS LAST, which
     // is what marks the stage publishable/recoverable
-    binPack(spark, df, bucketsFor)
+    binPack(df, bucketsFor)
       .write.mode("overwrite").partitionBy("date")
       .option("partitionOverwriteMode", "static").parquet(stage.toString)
     publishStage(spark, f, stage, dataDir)
@@ -1803,11 +1827,16 @@ object TableStore {
     if (!f.exists(root)) return
     val ClaimName = "^g(\\d+)\\.claim$".r
     val StatsName = "^stats_g(\\d+)$".r
+    val SwapName = "^stats_g(\\d+)\\.swap$".r
     val BloomName = "^bloom_g(\\d+)$".r
+    // a sidecar refresh only ever targets the current generation, so the
+    // swap sibling of any older one is a crashed refresh's orphan
+    val current = currentGenNumber(spark, dir)
     f.listStatus(root).foreach { s =>
       if (s.isDirectory) s.getPath.getName match {
         case GenName(n) if n.toInt < keepFrom => f.delete(s.getPath, true)
         case StatsName(n) if n.toInt < keepFrom => f.delete(s.getPath, true)
+        case SwapName(n) if n.toInt < current => f.delete(s.getPath, true)
         case BloomName(n) if n.toInt < keepFrom => f.delete(s.getPath, true)
         case name if name.startsWith("date=") && keepFrom >= 0 =>
           f.delete(s.getPath, true)

@@ -8,13 +8,18 @@ import graft.store.TableStore
 
 /** Chaos sweep over the continuous pipeline (the round-7 verdict's item 6):
   * for EVERY named crash point inside a tick — after the inflight marker,
-  * after each curated-table append, before the view folds, after ingest,
-  * after compaction, after the result publish, after the hwm — kill tick 2
-  * of a 3-tick run at that point, resume, and prove the final store,
-  * result tables, and views are CONTENT-IDENTICAL to a never-crashed
-  * 3-tick run. One golden run, eight deaths, eight equivalence proofs —
-  * the exactly-once claim as a sweep instead of a single hand-picked
-  * crash (ContinuousPipelineSpec keeps the original worst-point case).
+  * after each of the six curated-table appends, before the view folds,
+  * after ingest, after each table's compaction and after all of them,
+  * after the result publish, after the hwm — kill tick 2 of a 3-tick run
+  * at that point, resume, and prove the final store, result tables, and
+  * views are CONTENT-IDENTICAL to a never-crashed 3-tick run. One golden
+  * run, eighteen deaths, eighteen equivalence proofs — the exactly-once
+  * claim as a sweep instead of a single hand-picked crash
+  * (ContinuousPipelineSpec keeps the original worst-point case).
+  *
+  * The per-table points fire on the concurrent fan-out's threads; a
+  * second test pins the fan-out's crash contract — a kill in one table
+  * surfaces only after every sibling's write has finished.
   *
   * The kill is an exception thrown from `GhaPipeline.chaosHook`
   * (everything the process wrote up to that point stays on disk, exactly
@@ -80,42 +85,88 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
 
   private def resetHook(): Unit = GhaPipeline.chaosHook = _ => ()
 
-  test("kill tick 2 at EVERY chaos point: the resumed run is " +
-    "content-identical to the never-crashed run") {
-    // golden: 3 clean ticks
+  // golden: 3 clean ticks
+  private lazy val golden: Map[String, Seq[String]] = {
     val (gl, gs, gm) = mkDirs("gold")
     for (h <- 1 to 3) { land(gl, h); assert(tick(gl, gs, gm, h).size === 1) }
-    val golden = fingerprint(gs, gm)
-    assert(golden("watch").size === 9, "fixture sanity")
+    val g = fingerprint(gs, gm)
+    assert(g("watch").size === 9, "fixture sanity")
+    g
+  }
 
-    val killPoints = Seq("post-inflight-marker", "post-append:watch",
-      "post-append:commit", "pre-views", "post-ingest", "post-compact",
-      "post-results", "post-hwm")
-    for (kp <- killPoints) {
-      val (l, s, m) = mkDirs(kp.replace(":", "_").replace("-", "_"))
-      land(l, 1); assert(tick(l, s, m, 1).size === 1)
-      land(l, 2)
-      // arm the kill for tick 2 only
-      GhaPipeline.chaosHook = name =>
-        if (name == kp) {
-          resetHook() // one-shot: the resume must run clean
-          throw new RuntimeException(s"chaos kill @ $kp")
-        }
-      val died =
-        try { tick(l, s, m, 2); false }
-        catch { case e: RuntimeException if e.getMessage.contains("chaos") =>
-          true }
+  /** Run tick 1 clean, then tick 2 with `hook` armed (it must kill the
+    * tick), run `check` on the dead store, resume tick 2 and run tick 3,
+    * and compare everything with the golden run.
+    */
+  private def killAndResume(tag: String, hook: String => Unit,
+      resumedHours: Int)(check: String => Unit): Unit = {
+    val (l, s, m) = mkDirs(tag.replace(":", "_").replace("-", "_"))
+    land(l, 1); assert(tick(l, s, m, 1).size === 1)
+    land(l, 2)
+    GhaPipeline.chaosHook = hook
+    val died =
+      try { tick(l, s, m, 2); false }
+      catch { case e: RuntimeException if e.getMessage.contains("chaos") =>
+        true }
       finally resetHook()
-      assert(died, s"$kp never fired — a renamed hook point breaks the sweep")
-      // resume: re-run tick 2 (recovery + re-ingest), then tick 3
-      val resumed = tick(l, s, m, 2)
+    assert(died, s"$tag never fired — a renamed hook point breaks the sweep")
+    check(s)
+    // resume: re-run tick 2 (recovery + re-ingest), then tick 3
+    val resumed = tick(l, s, m, 2)
+    assert(resumed.size === resumedHours,
+      s"$tag: unexpected resume ingest count ${resumed.size}")
+    land(l, 3); assert(tick(l, s, m, 3).size === 1)
+    val got = fingerprint(s, m)
+    for ((table, want) <- golden)
+      assert(got(table) === want, s"$tag: $table diverged from the clean run")
+  }
+
+  private val tables = graft.schema.GhaSchemas.tableNames
+
+  test("kill tick 2 at EVERY chaos point: the resumed run is " +
+    "content-identical to the never-crashed run") {
+    val killPoints = Seq("post-inflight-marker") ++
+      tables.map(t => s"post-append:$t") ++ Seq("pre-views", "post-ingest") ++
+      tables.map(t => s"post-compact:$t") ++
+      Seq("post-compact", "post-results", "post-hwm")
+    for (kp <- killPoints)
       // post-hwm death already counted the hour; every earlier death re-runs it
-      assert(resumed.size === (if (kp == "post-hwm") 0 else 1),
-        s"$kp: unexpected resume ingest count ${resumed.size}")
-      land(l, 3); assert(tick(l, s, m, 3).size === 1)
-      val got = fingerprint(s, m)
-      for ((table, want) <- golden)
-        assert(got(table) === want, s"$kp: $table diverged from the clean run")
+      killAndResume(kp, name => if (name == kp) {
+        resetHook() // one-shot: the resume must run clean
+        throw new RuntimeException(s"chaos kill @ $kp")
+      }, resumedHours = if (kp == "post-hwm") 0 else 1)(_ => ())
+  }
+
+  test("a kill in one table's append or compaction returns from the tick " +
+    "only after every sibling table's write has finished") {
+    for (phase <- Seq("post-append", "post-compact")) {
+      val victim = s"$phase:${tables.head}"
+      val finished = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      // the victim dies at once; every sibling is still busy for a while
+      // after its own write, so a fan-out that did not wait would return
+      // before they record themselves
+      killAndResume(phase, name =>
+        if (name == victim) throw new RuntimeException(s"chaos kill @ $name")
+        else if (name.startsWith(s"$phase:")) {
+          Thread.sleep(300)
+          finished.add(name)
+        }, resumedHours = 1) { store =>
+        assert(finished.size === tables.size - 1,
+          s"$phase: siblings still running when the tick returned: " +
+            s"only $finished had finished")
+        val f = new org.apache.hadoop.fs.Path(store)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        for (t <- tables) {
+          val staging = new org.apache.hadoop.fs.Path(s"$store/$t/.staging")
+          val inFlight = if (!f.exists(staging)) Nil
+            else f.listStatus(staging).toSeq.map(_.getPath.getName)
+              .filter(_.startsWith("append-"))
+          assert(inFlight.isEmpty, s"$phase: $t has staged appends $inFlight")
+          assert(!f.exists(new org.apache.hadoop.fs.Path(
+            s"$store/$t/compact_stage.tmp")),
+            s"$phase: $t has a compaction stage left")
+        }
+      }
     }
   }
 }

@@ -62,6 +62,45 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
       === Seq("frank"))
   }
 
+  test("a tick's per-table jobs are described tick:<phase>:<table> and " +
+    "keep the caller's job group") {
+    val dir = Files.createTempDirectory("gha_desc").toString
+    Files.createDirectories(Paths.get(s"$dir/landing"))
+    Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
+      corpus.mkString("\n").getBytes)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((e.properties.getProperty("spark.job.description"),
+          e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup("serve-tick", "one hourly tick")
+    try {
+      assert(GhaPipeline.incrementalRunWithViews(spark, s"$dir/landing",
+        s"$dir/store", s"$dir/mv",
+        java.time.Instant.parse("2024-02-29T03:10:00Z"),
+        java.time.Instant.parse("2024-02-29T01:00:00Z")).size === 1)
+      org.apache.spark.graft.CoreBridge.drainListenerBus(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val jobs = seen.asScala.toSeq
+    val described = jobs.collect { case (d, g) if d != null => (d, g) }
+    // every table appends; only the tables with rows have a partition to
+    // compact (the corpus holds watches, pushes and comments)
+    for (t <- graft.schema.GhaSchemas.tableNames)
+      assert(described.exists(_._1 == s"tick:append:$t"), s"append of $t")
+    for (t <- Seq("watch", "commit", "comment"))
+      assert(described.exists(_._1 == s"tick:compact:$t"), s"compact of $t")
+    assert(described.filter(_._1.startsWith("tick:")).forall(
+      _._2 == "serve-tick"), s"fan-out jobs lost the job group: $described")
+  }
+
   test("incrementalRun: watermark-driven resume ingests only new hours (§3.1 parity)") {
     import java.time.Instant
     val base = Paths.get("/root/repo/target/tmp")

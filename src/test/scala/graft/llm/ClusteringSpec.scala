@@ -48,6 +48,28 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture {
     assert(c1 == Seq(0.0, 0.0)) // kept its seed
   }
 
+  test("kmeansFit rejects a ragged vector with a descriptive error") {
+    // one 3-d vector among 4-d ones; under a non-ANSI session element_at
+    // reads past it as null (a null per-dim sum, once a driver NPE)
+    val df = clustered().union(Seq((7L, Seq(10.0, 0.0, 0.0))).toDF("vec_id", "v"))
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(key)
+    for (ansi <- Seq("false", "true")) {
+      spark.conf.set(key, ansi)
+      try {
+        val e = intercept[Exception](Clustering.kmeansFit(df, k = 3, iters = 2))
+        assert(!e.isInstanceOf[NullPointerException], s"ansi=$ansi: $e")
+        if (ansi == "false") {
+          assert(e.isInstanceOf[IllegalArgumentException], s"$e")
+          assert(e.getMessage.contains("ragged vectors"), e.getMessage)
+        }
+      } finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("kmeansFit clamps k to the corpus size instead of crashing") {
     val df = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(5.0, 5.0))).toDF("vec_id", "v")
     val cents = Clustering.kmeansFit(df, k = 10, iters = 2)

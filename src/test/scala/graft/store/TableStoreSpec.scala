@@ -305,6 +305,64 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     assert(TableStore.read(spark, dir).count() === 150)
   }
 
+  test("append returns the distinct date values a collect of the batch " +
+    "would: empty batch, null date, escaped value") {
+    def collected(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select($"date".cast("string")).distinct().collect()
+        .map(_.getString(0)).toSet
+    val empty = mkBatch("2024-01-01", 0 until 0)
+    val withNull = Seq((1, Some(java.sql.Date.valueOf("2024-01-01"))),
+      (2, None), (3, None)).toDF("id", "date")
+    // '/', ':' and '%' are all escaped in the partition directory name
+    val escaped = Seq((1, "a/b:c%d"), (2, "a/b:c%d"), (3, "plain"))
+      .toDF("id", "date")
+    for ((name, df, want) <- Seq(("empty", empty, Set.empty[String]),
+        ("null", withNull, Set("2024-01-01", null)),
+        ("escaped", escaped, Set("a/b:c%d", "plain")))) {
+      val got = TableStore.append(df, tmpDir() + "/t")
+      assert(got.size === got.distinct.size, name)
+      assert(got.toSet === collected(df), name)
+      assert(got.toSet === want, name)
+    }
+  }
+
+  test("a crash between the sidecar refresh's write and its swap leaves " +
+    "readPruned on footers; vacuum drops the orphaned sibling") {
+    val dir = tmpDir() + "/swap"
+    def batch(day: String, ids: Range) =
+      ids.map(i => (i.toLong, java.sql.Date.valueOf(day))).toDF("id", "date")
+    TableStore.append(batch("2024-01-01", 0 until 50), dir)
+    TableStore.append(batch("2024-01-02", 1000 until 1050), dir)
+    TableStore.compact(spark, dir, targetFileBytes = 1024)
+    TableStore.append(batch("2024-01-02", 2000 until 2050), dir)
+    val ranges = Seq(TableStore.ColRange("id", 2000, 2049))
+    assert(TableStore.readPruned(spark, dir, ranges).statsSource === "sidecar")
+    TableStore.beforeSidecarSwapHook =
+      () => throw new RuntimeException("killed before the sidecar swap")
+    try intercept[RuntimeException](TableStore.compactDates(spark, dir,
+      Seq("2024-01-02"), targetFileBytes = 1024))
+    finally TableStore.beforeSidecarSwapHook = () => ()
+    val gen = new org.apache.hadoop.fs.Path(
+      TableStore.resolveDataDir(spark, dir)).getName
+    val f = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val orphan = new org.apache.hadoop.fs.Path(dir, s"stats_$gen.swap")
+    assert(f.exists(orphan), "the crash point left no sibling sidecar")
+    // the live sidecar predates the rewrite (it lists the replaced files,
+    // not the new ones), so readers must be back on footers
+    val pr = TableStore.readPruned(spark, dir, ranges)
+    assert(pr.statsSource === "footers")
+    assert(pr.df.filter($"id" >= 2000).count() === 50)
+    assert(TableStore.read(spark, dir).count() === 150)
+    // the next full compaction supersedes the generation; its vacuum
+    // removes the dead refresh's sibling along with nothing live
+    TableStore.compact(spark, dir, targetFileBytes = 1024)
+    assert(!f.exists(orphan), "vacuum left the orphaned sibling sidecar")
+    val after = TableStore.readPruned(spark, dir, ranges)
+    assert(after.statsSource === "sidecar")
+    assert(after.df.filter($"id" >= 2000).count() === 50)
+  }
+
   test("compactDates publish is crash-recoverable from the retained stage") {
     val dir = tmpDir() + "/crash"
     def batch(day: String, ids: Range) =
