@@ -3,40 +3,43 @@ package graft.ingest
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.graft.CoreBridge
 
-/** Concurrent per-table fan-out for the hourly tick — the Spark analog of
-  * the reference's `client.map` over independent work
-  * (`preprocess.py:260`). A tick's six per-table chains
-  * (append, compactDates) share nothing but the persisted parse, and each
-  * is a handful of small jobs separated by driver-only file-system work;
-  * run one after another, the cluster idles through every gap. Run
-  * side by side, one table's jobs fill another's gaps.
+/** Concurrent fan-out of a tick's independent write chains — the Spark
+  * analog of the reference's `client.map` over independent work
+  * (`preprocess.py:260`). Each chain (one table's append, one view's
+  * fold, one table's `compactDates`, one result overwrite) is a handful
+  * of small jobs separated by driver-only file-system work; run one after
+  * another, the cluster idles through every gap. Run side by side, one
+  * chain's jobs fill another's gaps. The hourly tick runs two fan-outs:
+  * the appends beside the view folds, then the compactions beside the
+  * result overwrites ([[GhaPipeline.incrementalRunWithViews]]).
   *
   * Contract:
-  *  - a fresh thread per table for every call (no shared pool, no knob);
+  *  - a fresh thread per task for every call (no shared pool, no knob);
   *  - every task runs under the caller's SparkContext local properties
   *    (job group, scheduler pool, tracing tags), plus the job description
-  *    `tick:<phase>:<table>`, so the event log names each job's table;
+  *    `tick:<phase>:<name>`, so the event log names each job's task;
+  *  - results come back in task order;
   *  - the call returns only after EVERY task has finished, then rethrows
-  *    the first failure in `tables` order (later ones attached as
-  *    suppressed): a failed table never leaves a sibling still writing
+  *    the first failure in task order (later ones attached as
+  *    suppressed): a failed task never leaves a sibling still writing
   *    when the caller's recovery runs.
   */
 private[ingest] object Fanout {
 
-  def apply[T](spark: SparkSession, phase: String, tables: Seq[String])(
-      work: String => T): Seq[T] = {
+  def apply[T](spark: SparkSession, phase: String,
+      tasks: Seq[(String, () => T)]): Seq[T] = {
     val sc = spark.sparkContext
-    val outcomes = new Array[Either[Throwable, T]](tables.size)
-    val threads = tables.zipWithIndex.map { case (t, i) =>
+    val outcomes = new Array[Either[Throwable, T]](tasks.size)
+    val threads = tasks.zipWithIndex.map { case ((name, work), i) =>
       val props = CoreBridge.localProperties(sc) // the caller's, per task
       val th = new Thread(() => {
         outcomes(i) =
           try {
             CoreBridge.setLocalProperties(sc, props)
-            sc.setJobDescription(s"tick:$phase:$t")
-            Right(work(t))
+            sc.setJobDescription(s"tick:$phase:$name")
+            Right(work())
           } catch { case e: Throwable => Left(e) }
-      }, s"tick-$phase-$t")
+      }, s"tick-$phase-$name")
       th.setDaemon(true)
       th.start()
       th

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.store.TableStore
 import graft.time.Increments
@@ -11,74 +11,130 @@ import graft.time.Increments
   *
   * Execution shape vs the reference: one declarative read replaces the
   * manual `client.map` fan-out over files (file-per-task falls out of gzip
-  * unsplittability); the six table appends off one persisted parse, and
-  * the six per-table compactions, each run concurrently ([[Fanout]], the
-  * `client.map` over tables); the partitions a batch touched come back
-  * from the append commits rather than from a scan; and the Prefect layer
-  * is this thin driver object.
+  * unsplittability); independent write chains run concurrently
+  * ([[Fanout]], the `client.map` over tables); the partitions a batch
+  * touched come back from the append commits rather than from a scan; and
+  * the Prefect layer is this thin driver object.
+  *
+  * The hourly tick with views ([[incrementalRunWithViews]]) is two
+  * fan-outs. Phase A ([[ingestWith]]): the six curated appends off one
+  * persisted parse, beside the four view folds, which read only the same
+  * batch frames. Phase B ([[compactTouched]]): the six per-table
+  * `compactDates` calls, beside the two result-table overwrites, which
+  * read only the views phase A finished. The batch path ([[workflow]])
+  * keeps three steps, because its results read the curated tables its
+  * compaction rewrites: appends, then the six full compactions, then the
+  * two result overwrites, each step one fan-out.
   */
 object GhaPipeline {
 
   /** Ingest a batch of NDJSON files into the curated store. */
   def ingest(spark: SparkSession, paths: Seq[String], storeDir: String): Unit =
-    ingestWith(spark, paths, storeDir)(_ => ())
+    ingestWith(spark, paths, storeDir)(_ => Nil)
 
   /** Test hook: named crash-injection points inside a tick. A spec that
     * throws from it simulates the process dying at exactly that point
     * (ChaosPipelineSpec sweeps every point and proves the resumed run is
-    * byte-identical to a never-crashed one). Production no-op. The
-    * per-table points (`post-append:<t>`, `post-compact:<t>`) fire on the
-    * fan-out's threads.
+    * byte-identical to a never-crashed one). Production no-op.
+    *
+    * Order within one [[incrementalRunWithViews]] tick:
+    *  - `post-inflight-marker`;
+    *  - `pre-views`, just before phase A starts: no append or fold of the
+    *    batch has written yet;
+    *  - on phase A's threads, after each task's write: `post-append:<t>`
+    *    per curated table and `post-view:<v>` per view, in any order;
+    *  - `post-ingest`, once every phase A task finished;
+    *  - on phase B's threads, after each task's write: `post-compact:<t>`
+    *    per curated table and `post-result:commits` /
+    *    `post-result:comments`, in any order;
+    *  - `post-compact` then `post-results`, both once every phase B task
+    *    finished (the compactions and the publish end together);
+    *  - `post-hwm`.
     */
   @volatile private[ingest] var chaosHook: String => Unit = _ => ()
 
-  /** [[ingest]] plus a hook over the batch's curated frames while the
-    * parsed raw is still persisted — the views path folds the SAME batch
-    * the appends wrote, without re-parsing. The six appends run
-    * concurrently; `f` runs after all of them committed. Returns the
-    * distinct `date` values the batch wrote across all tables (null for
-    * the default partition, sorted first).
+  /** [[ingest]] plus tasks over the batch's curated frames — phase A of
+    * the hourly tick. `besides` receives the frames while the parsed raw
+    * is persisted and returns named tasks (the views path: the view folds
+    * of the SAME batch the appends write, without re-parsing); they run in
+    * one [[Fanout]] with the six appends, so they must not read the
+    * curated store. Returns, once every task finished, the distinct `date`
+    * values the batch wrote across all tables (null for the default
+    * partition, sorted first).
     */
   def ingestWith(spark: SparkSession, paths: Seq[String], storeDir: String)(
-      f: Map[String, DataFrame] => Unit): Seq[String] = {
+      besides: Map[String, DataFrame] => Seq[(String, () => Unit)])
+      : Seq[String] = {
     val (raw, tables) = Ingest.extractAll(spark, paths)
     try {
-      val touched = Fanout(spark, "append", tables.keys.toSeq) { name =>
-        val dates = TableStore.append(tables(name), s"$storeDir/$name")
-        chaosHook(s"post-append:$name")
-        dates
+      // load the parse cache before the fan-out: a task whose plan has a
+      // shuffle (an aggregating fold), planned while the cache is still
+      // unloaded, starts one more job of its own just to load it
+      raw.foreachPartition((_: Iterator[Row]) => ())
+      val appends = tables.toSeq.map { case (name, df) =>
+        name -> { () =>
+          val dates = TableStore.append(df, s"$storeDir/$name")
+          chaosHook(s"post-append:$name")
+          dates
+        }
+      }
+      val others = besides(tables).map { case (name, run) =>
+        name -> { () => run(); Seq.empty[String] }
       }
       chaosHook("pre-views")
-      f(tables)
-      touched.flatten.distinct.sortBy(Option(_))
+      Fanout(spark, "append", appends ++ others)
+        .flatten.distinct.sortBy(Option(_))
     } finally raw.unpersist()
   }
 
   /** Bulk maintenance: compact + vacuum every curated table in full
     * (`preprocess.py:199-206`) — the backfill/OPTIMIZE-everything path.
+    * The six tables compact concurrently ([[Fanout]]).
     */
   def compactAll(spark: SparkSession, storeDir: String): Unit =
-    graft.schema.GhaSchemas.tableNames.foreach { t =>
-      TableStore.compact(spark, s"$storeDir/$t",
-        Some(graft.schema.GhaSchemas.curated(t)))
-    }
+    Fanout(spark, "compact", graft.schema.GhaSchemas.tableNames.map { t =>
+      t -> (() => TableStore.compact(spark, s"$storeDir/$t",
+        Some(graft.schema.GhaSchemas.curated(t))))
+    })
 
   /** Hourly maintenance: bin-pack only the date partitions the tick's
     * batch touched. The full-table compact rewrites ALL of history into a
     * new generation — O(table) every hour, which at 100 TB dwarfs the
     * O(batch) tick it rides on (Delta's OPTIMIZE, the reference's analog
     * at `preprocess.py:199-206`, only rewrites under-target file groups
-    * for the same reason). The six tables compact concurrently
-    * ([[Fanout]]); a failure in one surfaces only after the others have
+    * for the same reason).
+    *
+    * Phase B of the hourly tick: the six tables compact concurrently, in
+    * one [[Fanout]] with the named tasks `besides` (the views path: the
+    * two result overwrites), which therefore must not read the curated
+    * tables. A failure in any task surfaces only after every other has
     * finished, so no `compact_stage.tmp` is mid-write when recovery runs.
     */
   def compactTouched(spark: SparkSession, storeDir: String,
-      dates: Seq[String]): Unit =
-    Fanout(spark, "compact", graft.schema.GhaSchemas.tableNames) { t =>
-      TableStore.compactDates(spark, s"$storeDir/$t", dates,
-        Some(graft.schema.GhaSchemas.curated(t)))
-      chaosHook(s"post-compact:$t")
+      dates: Seq[String], besides: Seq[(String, () => Unit)]): Unit =
+    Fanout(spark, "compact", graft.schema.GhaSchemas.tableNames.map { t =>
+      t -> { () =>
+        TableStore.compactDates(spark, s"$storeDir/$t", dates,
+          Some(graft.schema.GhaSchemas.curated(t)))
+        chaosHook(s"post-compact:$t")
+      }
+    } ++ besides)
+
+  /** The two result overwrites as named tasks (`results/commits`,
+    * `results/comments`), each firing `post-result:<commits|comments>`
+    * after its write. `results` is built once, on the first task's thread
+    * (its file listings and analysis then overlap the task's siblings).
+    */
+  private def publishTasks(storeDir: String,
+      results: => (DataFrame, DataFrame)): Seq[(String, () => Unit)] = {
+    lazy val frames = results
+    Seq("commits" -> (() => frames._1), "comments" -> (() => frames._2)).map {
+      case (name, df) => s"results/$name" -> { () =>
+        TableStore.overwrite(df(), s"$storeDir/results/$name")
+        chaosHook(s"post-result:$name")
+      }
     }
+  }
 
   /** The `query_data` analytics (`preprocess.py:209-244`), parameterized by
     * keyword (reference hardcodes " dask"). Returns (commits, comments)
@@ -120,15 +176,14 @@ object GhaPipeline {
   }
 
   /** Full workflow parity (`preprocess.py:247-266`): ingest → compact →
-    * query → overwrite result tables.
+    * query → overwrite result tables (the two overwrites concurrently).
     */
   def workflow(spark: SparkSession, paths: Seq[String], storeDir: String,
       keyword: String = " dask"): Unit = {
     ingest(spark, paths, storeDir)
     compactAll(spark, storeDir)
-    val (commits, comments) = queryData(spark, storeDir, keyword)
-    TableStore.overwrite(commits, s"$storeDir/results/commits")
-    TableStore.overwrite(comments, s"$storeDir/results/comments")
+    Fanout(spark, "publish",
+      publishTasks(storeDir, queryData(spark, storeDir, keyword)))
   }
 
   // ---- exactly-once bookkeeping -------------------------------------------
@@ -303,14 +358,6 @@ object GhaPipeline {
       .toSeq
   }
 
-  /** [[incrementalRun]] with incremental `query_data` maintenance
-    * ([[IncrementalViews]]): same exactly-once bookkeeping, but each tick
-    * folds the batch into the materialized views and serves the result
-    * tables from them, instead of recomputing the analytics over full
-    * history. A recovery that rolled curated tables back rebuilds the
-    * views from the recovered store before the tick proceeds (full
-    * recompute as the recovery path; the happy path never scans history).
-    */
   /** Crash-atomic recovery for the views path. `recoverInflight` consumes
     * the inflight marker, so "views need a rebuild" must be recorded
     * DURABLY before the rollback starts: a crash between marker deletion
@@ -333,6 +380,23 @@ object GhaPipeline {
     }
   }
 
+  /** [[incrementalRun]] with incremental `query_data` maintenance
+    * ([[IncrementalViews]]): same exactly-once bookkeeping, but each tick
+    * folds the batch into the materialized views and serves the result
+    * tables from them, instead of recomputing the analytics over full
+    * history. A recovery that rolled curated tables back rebuilds the
+    * views from the recovered store before the tick proceeds (full
+    * recompute as the recovery path; the happy path never scans history).
+    *
+    * The tick is two fan-outs, each returning only after all its tasks
+    * finished: phase A appends the batch to the six curated tables beside
+    * the four view folds ([[ingestWith]]); phase B bin-packs the touched
+    * partitions of the six tables beside the two result overwrites
+    * ([[compactTouched]]). Every write of both phases sits inside the
+    * `_ingest_inflight` scope, so a crash in any task leaves `_mv_stale`
+    * to be set by the next tick's recovery, which rolls the curated
+    * tables back and rebuilds the views.
+    */
   def incrementalRunWithViews(spark: SparkSession, landingDir: String,
       storeDir: String, mvDir: String, now: java.time.Instant,
       backfillStart: java.time.Instant,
@@ -349,15 +413,18 @@ object GhaPipeline {
       // partition value) can fall on the previous UTC date at an
       // hour-file boundary
       val touched = ingestWith(spark, hourly.map(_._2), storeDir) { tables =>
-        IncrementalViews.maintainTick(spark, tables, mvDir, keyword)
+        IncrementalViews.maintainTick(spark, tables, mvDir, keyword).map {
+          case (view, fold) => view -> { () =>
+            fold()
+            chaosHook(s"post-view:$view")
+          }
+        }
       }
       chaosHook("post-ingest")
       // maintenance stays O(batch): bin-pack only the touched partitions
-      compactTouched(spark, storeDir, touched)
+      compactTouched(spark, storeDir, touched, publishTasks(storeDir,
+        IncrementalViews.queryData(spark, mvDir, keyword)))
       chaosHook("post-compact")
-      val (commits, comments) = IncrementalViews.queryData(spark, mvDir, keyword)
-      TableStore.overwrite(commits, s"$storeDir/results/commits")
-      TableStore.overwrite(comments, s"$storeDir/results/comments")
       chaosHook("post-results")
       writeMarker(spark, s"$storeDir/_ingest_hwm", lastHour.toString)
       chaosHook("post-hwm")

@@ -31,12 +31,14 @@ import graft.store.TableStore
   * tick), while scanning keyword-survivors + the counts table instead of
   * everything.
   *
-  * Crash contract: [[maintainTick]] is NOT idempotent (counts would
-  * double-merge, appends would duplicate) — it must run inside the same
-  * `_ingest_inflight` marker scope as the curated appends, and a recovery
-  * that rolled curated tables back must [[rebuild]] the views from them
-  * (full recompute as the RECOVERY path only; the happy path stays
-  * incremental). [[GhaPipeline.incrementalRunWithViews]] wires both.
+  * Crash contract: [[maintainTick]]'s folds are NOT idempotent (counts
+  * would double-merge, appends would duplicate) — they must run inside
+  * the same `_ingest_inflight` marker scope as the curated appends, and a
+  * recovery that rolled curated tables back must [[rebuild]] the views
+  * from them (full recompute as the RECOVERY path only; the happy path
+  * stays incremental). [[GhaPipeline.incrementalRunWithViews]] wires
+  * both: the folds run beside the curated appends, and the result tables
+  * are published from [[queryData]] beside the compactions.
   */
 object IncrementalViews {
 
@@ -64,16 +66,39 @@ object IncrementalViews {
     .filter(lower(col("comment")).contains(keyword.toLowerCase))
     .filter(!col("repo").startsWith(keyword.trim + "/"))
 
-  /** Fold one ingested batch into the views. `batch` is
-    * `Ingest.extractAll`'s curated frames for the tick (already persisted
-    * by the caller — each view reads it once more, narrow, no shuffle
-    * beyond the counts merge).
+  /** The folds of one ingested batch into the views, as named tasks — one
+    * per view (`repo_counts`, `watcher_sketches`, `kw_commits`,
+    * `kw_comments`), each writing only its own directory under `mvDir`.
+    * `batch` is `Ingest.extractAll`'s curated frames for the tick, still
+    * persisted while the tasks run: a fold reads the batch (and its own
+    * view), never the curated store, so the tasks may run in any order or
+    * side by side with the curated appends ([[GhaPipeline.ingestWith]]
+    * runs them in the appends' fan-out).
     */
   def maintainTick(spark: SparkSession, batch: Map[String, DataFrame],
-      mvDir: String, keyword: String = " dask"): Unit = {
-    // counts merge: stored totals ∪ batch partials → sum by repo, into a
-    // new generation (the read of g<N> feeds the write of g<N+1>)
-    val partial = batch("watch").groupBy("repo")
+      mvDir: String, keyword: String = " dask"): Seq[(String, () => Unit)] =
+    Seq(
+      "repo_counts" -> (() => maintainCounts(spark, batch("watch"), mvDir)),
+      "watcher_sketches" ->
+        (() => maintainDistinctWatchers(spark, batch("watch"), mvDir)),
+      // keyword survivors append (date-partitioned, same layout as curated)
+      "kw_commits" -> { () =>
+        TableStore.append(commitFilter(batch("commit"), keyword),
+          s"$mvDir/kw_commits")
+        ()
+      },
+      "kw_comments" -> { () =>
+        TableStore.append(commentFilter(batch("comment"), keyword),
+          s"$mvDir/kw_comments")
+        ()
+      })
+
+  /** Counts merge: stored totals ∪ batch partials → sum by repo, into a
+    * new generation (the read of g<N> feeds the write of g<N+1>).
+    */
+  private def maintainCounts(spark: SparkSession, batchWatch: DataFrame,
+      mvDir: String): Unit = {
+    val partial = batchWatch.groupBy("repo")
       .agg(count(lit(1)).cast(LongType).as("count"))
     val merged = readCounts(spark, mvDir) match {
       case Some(cur) => cur.unionByName(partial)
@@ -81,12 +106,6 @@ object IncrementalViews {
       case None => partial
     }
     TableStore.overwriteVersioned(merged, s"$mvDir/repo_counts")
-    maintainDistinctWatchers(spark, batch("watch"), mvDir)
-    // keyword survivors append (date-partitioned, same layout as curated)
-    TableStore.append(commitFilter(batch("commit"), keyword),
-      s"$mvDir/kw_commits")
-    TableStore.append(commentFilter(batch("comment"), keyword),
-      s"$mvDir/kw_comments")
   }
 
   private def readCounts(spark: SparkSession, mvDir: String): Option[DataFrame] = {

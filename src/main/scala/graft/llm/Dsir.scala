@@ -17,9 +17,13 @@ import graft.query.Tables
   * Features are unigram + bigram occurrences. `hashBuckets > 0` hashes
   * them into a fixed bucket space (the paper's form — model state is
   * O(buckets) regardless of corpus vocabulary, the 100 TB path);
-  * `hashBuckets = 0` keeps exact string features, which is what the
-  * DuckDB oracle restates (no cross-engine xxhash — the same
-  * fixture-vs-production split as nCells=16 in the IVF keys).
+  * `hashBuckets = 0` keeps exact string features in both models, which
+  * is what the DuckDB oracle restates. Its scoring join, however, keys
+  * on `xxhash64(f)`, not on the string: two distinct grams whose hashes
+  * collide merge their log-ratio terms. That is an accepted risk of
+  * 2⁻⁶⁴ per pair of features, so about V²/2⁶⁵ for any collision among
+  * V features: nil at fixture vocabularies, no longer negligible near
+  * 2³² features.
   *
   * Scale shape: featurization is a ROW-LOCAL counting kernel
   * ([[graft.functions.UnibiCounts]]) — the (doc, f, c) frame is a pure

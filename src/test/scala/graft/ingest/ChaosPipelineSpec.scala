@@ -8,18 +8,20 @@ import graft.store.TableStore
 
 /** Chaos sweep over the continuous pipeline (the round-7 verdict's item 6):
   * for EVERY named crash point inside a tick — after the inflight marker,
-  * after each of the six curated-table appends, before the view folds,
-  * after ingest, after each table's compaction and after all of them,
-  * after the result publish, after the hwm — kill tick 2 of a 3-tick run
-  * at that point, resume, and prove the final store, result tables, and
-  * views are CONTENT-IDENTICAL to a never-crashed 3-tick run. One golden
-  * run, eighteen deaths, eighteen equivalence proofs — the exactly-once
-  * claim as a sweep instead of a single hand-picked crash
-  * (ContinuousPipelineSpec keeps the original worst-point case).
+  * before the first fan-out, after each of the six curated-table appends
+  * and each of the four view folds, after that fan-out, after each
+  * table's compaction and each result overwrite, after the second
+  * fan-out (`post-compact`, `post-results`), after the hwm — kill tick 2
+  * of a 3-tick run at that point, resume, and prove the final store,
+  * result tables, and views are CONTENT-IDENTICAL to a never-crashed
+  * 3-tick run. One golden run, twenty-four deaths, twenty-four
+  * equivalence proofs — the exactly-once claim as a sweep instead of a
+  * single hand-picked crash (ContinuousPipelineSpec keeps the original
+  * worst-point case).
   *
-  * The per-table points fire on the concurrent fan-out's threads; a
-  * second test pins the fan-out's crash contract — a kill in one table
-  * surfaces only after every sibling's write has finished.
+  * The per-task points fire on the concurrent fan-outs' threads; a third
+  * test pins the fan-out's crash contract — a kill in one task surfaces
+  * only after every sibling's write has finished.
   *
   * The kill is an exception thrown from `GhaPipeline.chaosHook`
   * (everything the process wrote up to that point stays on disk, exactly
@@ -95,11 +97,11 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   /** Run tick 1 clean, then tick 2 with `hook` armed (it must kill the
-    * tick), run `check` on the dead store, resume tick 2 and run tick 3,
-    * and compare everything with the golden run.
+    * tick), run `check` on the dead store and views, resume tick 2 and
+    * run tick 3, and compare everything with the golden run.
     */
   private def killAndResume(tag: String, hook: String => Unit,
-      resumedHours: Int)(check: String => Unit): Unit = {
+      resumedHours: Int)(check: (String, String) => Unit): Unit = {
     val (l, s, m) = mkDirs(tag.replace(":", "_").replace("-", "_"))
     land(l, 1); assert(tick(l, s, m, 1).size === 1)
     land(l, 2)
@@ -110,7 +112,7 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
         true }
       finally resetHook()
     assert(died, s"$tag never fired — a renamed hook point breaks the sweep")
-    check(s)
+    check(s, m)
     // resume: re-run tick 2 (recovery + re-ingest), then tick 3
     val resumed = tick(l, s, m, 2)
     assert(resumed.size === resumedHours,
@@ -122,49 +124,79 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   private val tables = graft.schema.GhaSchemas.tableNames
+  private val views = Seq("repo_counts", "watcher_sketches", "kw_commits",
+    "kw_comments")
+  /** The tasks of the two fan-outs, by their chaos points. */
+  private val phaseA =
+    tables.map(t => s"post-append:$t") ++ views.map(v => s"post-view:$v")
+  private val phaseB = tables.map(t => s"post-compact:$t") ++
+    Seq("commits", "comments").map(r => s"post-result:$r")
+  private val killPoints = Seq("post-inflight-marker", "pre-views") ++
+    phaseA ++ Seq("post-ingest") ++ phaseB ++
+    Seq("post-compact", "post-results", "post-hwm")
+
+  test("every chaos point fires once per tick, each fan-out's points " +
+    "between the points that bracket it") {
+    val (l, s, m) = mkDirs("order")
+    land(l, 1); assert(tick(l, s, m, 1).size === 1)
+    land(l, 2)
+    val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    GhaPipeline.chaosHook = name => fired.add(name)
+    try assert(tick(l, s, m, 2).size === 1) finally resetHook()
+    import scala.jdk.CollectionConverters._
+    val order = fired.asScala.toSeq
+    assert(order.sorted === killPoints.sorted)
+    def at(p: String) = order.indexOf(p)
+    for (p <- phaseA)
+      assert(at("pre-views") < at(p) && at(p) < at("post-ingest"), p)
+    for (p <- phaseB)
+      assert(at("post-ingest") < at(p) && at(p) < at("post-compact"), p)
+    assert(order.take(2) === Seq("post-inflight-marker", "pre-views"))
+    assert(order.takeRight(3) === Seq("post-compact", "post-results", "post-hwm"))
+  }
 
   test("kill tick 2 at EVERY chaos point: the resumed run is " +
     "content-identical to the never-crashed run") {
-    val killPoints = Seq("post-inflight-marker") ++
-      tables.map(t => s"post-append:$t") ++ Seq("pre-views", "post-ingest") ++
-      tables.map(t => s"post-compact:$t") ++
-      Seq("post-compact", "post-results", "post-hwm")
     for (kp <- killPoints)
       // post-hwm death already counted the hour; every earlier death re-runs it
       killAndResume(kp, name => if (name == kp) {
         resetHook() // one-shot: the resume must run clean
         throw new RuntimeException(s"chaos kill @ $kp")
-      }, resumedHours = if (kp == "post-hwm") 0 else 1)(_ => ())
+      }, resumedHours = if (kp == "post-hwm") 0 else 1)((_, _) => ())
   }
 
   test("a kill in one table's append or compaction returns from the tick " +
     "only after every sibling table's write has finished") {
-    for (phase <- Seq("post-append", "post-compact")) {
-      val victim = s"$phase:${tables.head}"
+    // victims: a curated append and a view fold (phase A), a compaction
+    // and a result overwrite (phase B)
+    for ((victim, phase) <- Seq(phaseA.head -> phaseA,
+        s"post-view:${views.head}" -> phaseA, phaseB.head -> phaseB,
+        phaseB.last -> phaseB)) {
       val finished = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       // the victim dies at once; every sibling is still busy for a while
       // after its own write, so a fan-out that did not wait would return
       // before they record themselves
-      killAndResume(phase, name =>
+      killAndResume(victim, name =>
         if (name == victim) throw new RuntimeException(s"chaos kill @ $name")
-        else if (name.startsWith(s"$phase:")) {
+        else if (phase.contains(name)) {
           Thread.sleep(300)
           finished.add(name)
-        }, resumedHours = 1) { store =>
-        assert(finished.size === tables.size - 1,
-          s"$phase: siblings still running when the tick returned: " +
+        }, resumedHours = 1) { (store, mv) =>
+        import scala.jdk.CollectionConverters._
+        assert(finished.asScala.toSet === phase.filterNot(_ == victim).toSet,
+          s"$victim: siblings still running when the tick returned: " +
             s"only $finished had finished")
         val f = new org.apache.hadoop.fs.Path(store)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        for (t <- tables) {
-          val staging = new org.apache.hadoop.fs.Path(s"$store/$t/.staging")
+        for (dir <- tables.map(t => s"$store/$t") ++ views.map(v => s"$mv/$v")) {
+          val staging = new org.apache.hadoop.fs.Path(s"$dir/.staging")
           val inFlight = if (!f.exists(staging)) Nil
             else f.listStatus(staging).toSeq.map(_.getPath.getName)
               .filter(_.startsWith("append-"))
-          assert(inFlight.isEmpty, s"$phase: $t has staged appends $inFlight")
+          assert(inFlight.isEmpty, s"$victim: $dir has staged appends $inFlight")
           assert(!f.exists(new org.apache.hadoop.fs.Path(
-            s"$store/$t/compact_stage.tmp")),
-            s"$phase: $t has a compaction stage left")
+            s"$dir/compact_stage.tmp")),
+            s"$victim: $dir has a compaction stage left")
         }
       }
     }
