@@ -17,7 +17,9 @@ import org.apache.spark.graft.CoreBridge
   *  - a fresh thread per task for every call (no shared pool, no knob);
   *  - every task runs under the caller's SparkContext local properties
   *    (job group, scheduler pool, tracing tags), plus the job description
-  *    `tick:<phase>:<name>`, so the event log names each job's task;
+  *    `tick:<phase>:<name>`, so the event log names each job's task (a
+  *    task takes the phase of the fan-out it runs in: the views tick's
+  *    result overwrites read `tick:compact:results/<name>`);
   *  - results come back in task order;
   *  - the call returns only after EVERY task has finished, then rethrows
   *    the first failure in task order (later ones attached as

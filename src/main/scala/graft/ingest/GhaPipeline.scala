@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.store.TableStore
 import graft.time.Increments
@@ -22,9 +22,9 @@ import graft.time.Increments
   * batch frames. Phase B ([[compactTouched]]): the six per-table
   * `compactDates` calls, beside the two result-table overwrites, which
   * read only the views phase A finished. The batch path ([[workflow]])
-  * keeps three steps, because its results read the curated tables its
-  * compaction rewrites: appends, then the six full compactions, then the
-  * two result overwrites, each step one fan-out.
+  * fans out only its appends; its six full compactions and its two
+  * result overwrites, which read the compacted curated tables, run one
+  * after another.
   */
 object GhaPipeline {
 
@@ -61,16 +61,18 @@ object GhaPipeline {
     * curated store. Returns, once every task finished, the distinct `date`
     * values the batch wrote across all tables (null for the default
     * partition, sorted first).
+    *
+    * Whichever task's job reaches the unloaded parse cache first loads
+    * it. A task whose plan has a shuffle (an aggregating fold) and is
+    * planned before that happened adds a job of its own that waits on the
+    * load (AQE's table-cache stage), so the views tick runs 40 to 42 jobs
+    * depending on thread timing.
     */
   def ingestWith(spark: SparkSession, paths: Seq[String], storeDir: String)(
       besides: Map[String, DataFrame] => Seq[(String, () => Unit)])
       : Seq[String] = {
     val (raw, tables) = Ingest.extractAll(spark, paths)
     try {
-      // load the parse cache before the fan-out: a task whose plan has a
-      // shuffle (an aggregating fold), planned while the cache is still
-      // unloaded, starts one more job of its own just to load it
-      raw.foreachPartition((_: Iterator[Row]) => ())
       val appends = tables.toSeq.map { case (name, df) =>
         name -> { () =>
           val dates = TableStore.append(df, s"$storeDir/$name")
@@ -89,13 +91,12 @@ object GhaPipeline {
 
   /** Bulk maintenance: compact + vacuum every curated table in full
     * (`preprocess.py:199-206`) — the backfill/OPTIMIZE-everything path.
-    * The six tables compact concurrently ([[Fanout]]).
     */
   def compactAll(spark: SparkSession, storeDir: String): Unit =
-    Fanout(spark, "compact", graft.schema.GhaSchemas.tableNames.map { t =>
-      t -> (() => TableStore.compact(spark, s"$storeDir/$t",
-        Some(graft.schema.GhaSchemas.curated(t))))
-    })
+    graft.schema.GhaSchemas.tableNames.foreach { t =>
+      TableStore.compact(spark, s"$storeDir/$t",
+        Some(graft.schema.GhaSchemas.curated(t)))
+    }
 
   /** Hourly maintenance: bin-pack only the date partitions the tick's
     * batch touched. The full-table compact rewrites ALL of history into a
@@ -120,10 +121,13 @@ object GhaPipeline {
       }
     } ++ besides)
 
-  /** The two result overwrites as named tasks (`results/commits`,
-    * `results/comments`), each firing `post-result:<commits|comments>`
-    * after its write. `results` is built once, on the first task's thread
-    * (its file listings and analysis then overlap the task's siblings).
+  /** The views tick's two result overwrites as named tasks
+    * (`results/commits`, `results/comments`), each firing
+    * `post-result:<commits|comments>` after its write. They run in phase
+    * B's fan-out, so their jobs are described `tick:compact:results/<name>`;
+    * [[workflow]]'s overwrites run on the caller's thread, undescribed.
+    * `results` is built once, on the first task's thread (its file
+    * listings and analysis then overlap the task's siblings).
     */
   private def publishTasks(storeDir: String,
       results: => (DataFrame, DataFrame)): Seq[(String, () => Unit)] = {
@@ -176,14 +180,15 @@ object GhaPipeline {
   }
 
   /** Full workflow parity (`preprocess.py:247-266`): ingest → compact →
-    * query → overwrite result tables (the two overwrites concurrently).
+    * query → overwrite result tables.
     */
   def workflow(spark: SparkSession, paths: Seq[String], storeDir: String,
       keyword: String = " dask"): Unit = {
     ingest(spark, paths, storeDir)
     compactAll(spark, storeDir)
-    Fanout(spark, "publish",
-      publishTasks(storeDir, queryData(spark, storeDir, keyword)))
+    val (commits, comments) = queryData(spark, storeDir, keyword)
+    TableStore.overwrite(commits, s"$storeDir/results/commits")
+    TableStore.overwrite(comments, s"$storeDir/results/comments")
   }
 
   // ---- exactly-once bookkeeping -------------------------------------------
