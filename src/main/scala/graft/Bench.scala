@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each query is fully materialized through the noop
   * sink (computes every output column; `.count()` would let Catalyst prune
@@ -10,61 +8,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
-    // task-level byte counters: shuffle volume is the number that predicts
-    // 100 TB behavior (wall-clock on a shared 32-core box mostly measures
-    // ambient load). Deltas are read per query after draining the async
-    // listener bus, so each query's bytes are exactly its own.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val inputBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            inputBytes.addAndGet(m.inputMetrics.bytesRead)
-          }
-        }
-      })
-
-    def runOnce(name: String): (Double, Long, Long) = {
-      val fn = SparkEntry.queries(name)
-      // queries that persist() intermediates would otherwise hand their
-      // cache to the second run and min-of-two would report warm-cache time
-      spark.catalog.clearCache()
-      // localCheckpoint blocks are NOT released by clearCache — they live
-      // until their RDD is garbage-collected and the ContextCleaner drops
-      // the blocks. Across 100+ queries the leaked blocks fill the unified
-      // memory pool and the later (shuffle-heavy) queries run against
-      // starved execution memory: measured 2.4 s -> 25 s for
-      // q_dedup_resolve at position ~90 of the run. An explicit GC between
-      // queries keeps each measurement independent of its predecessors.
-      System.gc()
-      org.apache.spark.graft.CoreBridge.drainListenerBus(spark.sparkContext)
-      val sh0 = shuffleBytes.get(); val in0 = inputBytes.get()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+    val runner = new KeyRunner(spark, sfDir)
+    def runOnce(name: String): (Double, Long, Long) =
+      try {
+        val r = runner.run(name)
+        (r.secs, r.shuffleBytes, r.inputBytes)
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return (-1.0, 0L, 0L)
+        (-1.0, 0L, 0L)
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.CoreBridge.drainListenerBus(spark.sparkContext)
-      (dt, shuffleBytes.get() - sh0, inputBytes.get() - in0)
-    }
 
     // best-of-N (default 2): the box is shared with the driver harness and
     // ambient load spikes swing single runs 2-3x; min-of-N reports the
@@ -90,26 +45,12 @@ object Bench {
     // untimed warmup: JIT + classloading + parquet footer caches for every
     // table (otherwise the first query touching each table absorbs its
     // footer-read + codec-init cost and the per-query numbers skew)
-    for (t <- Seq("lineitem", "orders", "customer", "supplier", "part",
-        "nation", "region", "events", "documents", "embeddings"))
-      try graft.query.Tables(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+    runner.warmUp()
 
     // SPARK_GRAFT_ONLY=a,b,c times a subset in isolation — the regression-
     // pinning loop (memory: isolated numbers beat in-suite numbers; compare
-    // like with like)
-    val names = sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty) match {
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val known = SparkEntry.registry.map(_.name)
-        val unknown = want -- known.toSet
-        // a typo'd name must fail loudly — silently dropping it records a
-        // truncated (or 0-query) bench as a valid regression-pin number
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.mkString(", ")}")
-        known.filter(want)
-      case None => SparkEntry.registry.map(_.name)
-    }
+    // like with like); an unknown name fails the run
+    val names = KeyRunner.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val results = names.map(n => n -> run(n))
     val qs = results.map { case (k, (v, sh, in)) =>
       f""""$k":{"sec":$v,"shuffle_mb":${sh / 1e6}%.2f,"input_mb":${in / 1e6}%.2f}"""

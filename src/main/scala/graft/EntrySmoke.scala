@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object EntrySmoke {
   def main(a: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong","true")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())

@@ -108,11 +108,15 @@ object IncrementalViews {
     TableStore.overwriteVersioned(merged, s"$mvDir/repo_counts")
   }
 
+  /** The stored counts, or None before the first fold. Resolves and lists
+    * the current generation once and reads exactly the listed files (the
+    * table is unpartitioned), instead of listing it again through
+    * `TableStore.read`.
+    */
   private def readCounts(spark: SparkSession, mvDir: String): Option[DataFrame] = {
-    val dir = s"$mvDir/repo_counts"
-    if (TableStore.dataFiles(spark, dir).nonEmpty)
-      Some(TableStore.read(spark, dir, countsSchema))
-    else None
+    val files = TableStore.dataFiles(spark, s"$mvDir/repo_counts")
+    if (files.isEmpty) None
+    else Some(spark.read.schema(countsSchema).parquet(files: _*))
   }
 
   /** `query_data` over the views: identical output to

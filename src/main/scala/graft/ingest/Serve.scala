@@ -97,14 +97,8 @@ object Serve {
     val keyword = if (args.length > 3) args(3) else " dask"
     val baseUrl = if (args.length > 4) Some(args(4)) else None
     val ticks = if (args.length > 5) args(5).toInt else -1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = sys.env.get("SPARK_MASTER")
+      .fold(graft.LocalSession(ui = true))(graft.LocalSession(_, ui = true))
     spark.sparkContext.setLogLevel("WARN")
     configure(spark)
     loop(spark, landingDir, storeDir, backfillStart, keyword, ticks = ticks,

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization-mode knob for the engine's "snap" pattern — the eager
@@ -35,6 +36,11 @@ import org.apache.spark.storage.StorageLevel
   * `ColumnBridge.releaseLocalCheckpoint` so the `finally` blocks stay
   * correct under every mode.
   *
+  * The knob covers the snap sites only. pageRank's per-round
+  * `localCheckpoint(eager = false)` (`Graph.pageRank`) stays a local
+  * checkpoint whatever the knob says, so pageRank requires static
+  * executors under every mode.
+  *
   * Do NOT snap O(dataset) frames in `local` mode on a real cluster: the
   * dataset itself lands in executor block storage with no way back. The
   * disk-backed modes (`persist`/`reliable`) are the 100 TB contract for
@@ -64,18 +70,19 @@ object Snap {
   }
 
   /** Deterministically release a [[snap]]'d frame's storage once every
-    * consumer has materialized. `local` frees the checkpoint blocks (the
-    * frame becomes unrecomputable — never run it again); `persist`
-    * unpersists (recomputable); `reliable` is a no-op (checkpoint files
-    * belong to the checkpoint dir's lifecycle, or to
-    * `spark.cleaner.referenceTracking.cleanCheckpoints`).
+    * consumer has materialized. Dispatches on what the frame IS, never on
+    * the live conf (a mode changed between snap and release would
+    * otherwise misroute: `releaseLocalCheckpoint` throws on a persisted
+    * frame). A persisted frame is unpersisted (recomputable); a reliable
+    * checkpoint is left alone (its files belong to the checkpoint dir's
+    * lifecycle, or to `spark.cleaner.referenceTracking.cleanCheckpoints`);
+    * a local checkpoint has its blocks freed (the frame becomes
+    * unrecomputable — never run it again).
     */
-  def release(df: DataFrame): Unit = mode(df) match {
-    case "local" =>
-      org.apache.spark.sql.graft.ColumnBridge.releaseLocalCheckpoint(df)
-    case "persist" => df.unpersist(blocking = false); ()
-    case "reliable" => ()
-    case other => throw new IllegalArgumentException(
-      s"$ModeKey must be local | persist | reliable, got '$other'")
-  }
+  def release(df: DataFrame): Unit =
+    if (df.storageLevel != StorageLevel.NONE) { df.unpersist(blocking = false); () }
+    else df.queryExecution.analyzed match {
+      case l: LogicalRDD if l.rdd.getCheckpointFile.isDefined => ()
+      case _ => org.apache.spark.sql.graft.ColumnBridge.releaseLocalCheckpoint(df)
+    }
 }

@@ -72,6 +72,15 @@ class SnapSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("release follows the frame, not a conf changed since the snap") {
+    val s = withMode(Some("persist"))(Snap.snap(input))
+    assert(s.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
+    withMode(Some("local")) {
+      Snap.release(s)
+      assert(s.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    }
+  }
+
   test("unknown mode fails loudly") {
     withMode(Some("nope")) {
       intercept[IllegalArgumentException](Snap.snap(input))

@@ -3,6 +3,7 @@
 # Usage: tools/jrun.sh <MainClass> [args...]   (env vars pass through)
 # e.g. SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_ONLY=q_topk \
 #        SPARK_GRAFT_RUNS=3 tools/jrun.sh graft.Bench
+#      tools/jrun.sh graft.Probe "$SF" jobs q_pagerank --replicate 3   (README: Dev probes)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 exec java -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
