@@ -7,7 +7,7 @@ import graft.time.Increments
 
 /** The production flow, end to end (SURVEY.md §3.1): NDJSON hourly files →
   * six curated date-partitioned tables → compaction → the two analytics
-  * result tables (`/root/reference/preprocess.py:247-266`).
+  * result tables (`preprocess.py:247-266`).
   *
   * Execution shape vs the reference: one declarative read replaces the
   * manual `client.map` fan-out over files (file-per-task falls out of gzip
@@ -16,21 +16,18 @@ import graft.time.Increments
   * touched come back from the append commits rather than from a scan; and
   * the Prefect layer is this thin driver object.
   *
-  * The hourly tick with views ([[incrementalRunWithViews]]) is two
+  * There is one tick, [[incrementalRunWithViews]]: a catch-up over many
+  * hours and the steady hourly run take the same path. It is two
   * fan-outs. Phase A ([[ingestWith]]): the six curated appends off one
   * persisted parse, beside the four view folds, which read only the same
   * batch frames. Phase B ([[compactTouched]]): the six per-table
   * `compactDates` calls, beside the two result-table overwrites, which
-  * read only the views phase A finished. The batch path ([[workflow]])
-  * fans out only its appends; its six full compactions and its two
-  * result overwrites, which read the compacted curated tables, run one
-  * after another.
+  * read only the views phase A finished. The results come from the views
+  * ([[IncrementalViews.queryData]]), never from a full-history recompute;
+  * [[queryData]] is that recompute, kept as the reference the views are
+  * tested against.
   */
 object GhaPipeline {
-
-  /** Ingest a batch of NDJSON files into the curated store. */
-  def ingest(spark: SparkSession, paths: Seq[String], storeDir: String): Unit =
-    ingestWith(spark, paths, storeDir)(_ => Nil)
 
   /** Test hook: named crash-injection points inside a tick. A spec that
     * throws from it simulates the process dying at exactly that point
@@ -53,10 +50,11 @@ object GhaPipeline {
     */
   @volatile private[ingest] var chaosHook: String => Unit = _ => ()
 
-  /** [[ingest]] plus tasks over the batch's curated frames — phase A of
-    * the hourly tick. `besides` receives the frames while the parsed raw
-    * is persisted and returns named tasks (the views path: the view folds
-    * of the SAME batch the appends write, without re-parsing); they run in
+  /** Append a batch of NDJSON files to the six curated tables, beside
+    * tasks over the batch's curated frames — phase A of the hourly tick.
+    * `besides` receives the frames while the parsed raw is persisted and
+    * returns named tasks (the tick's view folds of the SAME batch the
+    * appends write, without re-parsing); they run in
     * one [[Fanout]] with the six appends, so they must not read the
     * curated store. Returns, once every task finished, the distinct `date`
     * values the batch wrote across all tables (null for the default
@@ -65,7 +63,7 @@ object GhaPipeline {
     * Whichever task's job reaches the unloaded parse cache first loads
     * it. A task whose plan has a shuffle (an aggregating fold) and is
     * planned before that happened adds a job of its own that waits on the
-    * load (AQE's table-cache stage), so the views tick runs 40 to 42 jobs
+    * load (AQE's table-cache stage), so the tick runs 40 to 42 jobs
     * depending on thread timing.
     */
   def ingestWith(spark: SparkSession, paths: Seq[String], storeDir: String)(
@@ -89,15 +87,6 @@ object GhaPipeline {
     } finally raw.unpersist()
   }
 
-  /** Bulk maintenance: compact + vacuum every curated table in full
-    * (`preprocess.py:199-206`) — the backfill/OPTIMIZE-everything path.
-    */
-  def compactAll(spark: SparkSession, storeDir: String): Unit =
-    graft.schema.GhaSchemas.tableNames.foreach { t =>
-      TableStore.compact(spark, s"$storeDir/$t",
-        Some(graft.schema.GhaSchemas.curated(t)))
-    }
-
   /** Hourly maintenance: bin-pack only the date partitions the tick's
     * batch touched. The full-table compact rewrites ALL of history into a
     * new generation — O(table) every hour, which at 100 TB dwarfs the
@@ -106,8 +95,8 @@ object GhaPipeline {
     * for the same reason).
     *
     * Phase B of the hourly tick: the six tables compact concurrently, in
-    * one [[Fanout]] with the named tasks `besides` (the views path: the
-    * two result overwrites), which therefore must not read the curated
+    * one [[Fanout]] with the named tasks `besides` (the tick's two
+    * result overwrites), which therefore must not read the curated
     * tables. A failure in any task surfaces only after every other has
     * finished, so no `compact_stage.tmp` is mid-write when recovery runs.
     */
@@ -121,12 +110,10 @@ object GhaPipeline {
       }
     } ++ besides)
 
-  /** The views tick's two result overwrites as named tasks
-    * (`results/commits`, `results/comments`), each firing
-    * `post-result:<commits|comments>` after its write. They run in phase
-    * B's fan-out, so their jobs are described `tick:compact:results/<name>`;
-    * [[workflow]]'s overwrites run on the caller's thread, undescribed.
-    * `results` is built once, on the first task's thread (its file
+  /** The tick's two result overwrites as named tasks (`results/commits`,
+    * `results/comments`), each firing `post-result:<commits|comments>`
+    * after its write. They run in phase B's fan-out, so their jobs are
+    * described `tick:compact:results/<name>`. `results` is built once, on the first task's thread (its file
     * listings and analysis then overlap the task's siblings).
     */
   private def publishTasks(storeDir: String,
@@ -141,8 +128,11 @@ object GhaPipeline {
   }
 
   /** The `query_data` analytics (`preprocess.py:209-244`), parameterized by
-    * keyword (reference hardcodes " dask"). Returns (commits, comments)
-    * result frames; popular = repos with more than `minWatches` watchers.
+    * keyword (reference hardcodes " dask"), recomputed over the curated
+    * store's full history. Returns (commits, comments) result frames;
+    * popular = repos with more than `minWatches` watchers. The tick serves
+    * [[IncrementalViews.queryData]] instead; this is the reference it must
+    * equal on the same store.
     */
   def queryData(spark: SparkSession, storeDir: String,
       keyword: String = " dask", minWatches: Long = 5)
@@ -163,8 +153,8 @@ object GhaPipeline {
 
     // commits mentioning the keyword in popular non-self repos (218-230).
     // Row-local predicates are IncrementalViews' — the single definition
-    // both the batch and the view-maintenance paths share (they commute
-    // with the inner popularity join).
+    // this recompute and the view folds share (they commute with the inner
+    // popularity join).
     val commitsOut = IncrementalViews.commitFilter(commit, keyword)
       .join(repos, Seq("repo"))
       .select("username", "repo", "message", "count")
@@ -179,18 +169,6 @@ object GhaPipeline {
     (commitsOut, commentsOut)
   }
 
-  /** Full workflow parity (`preprocess.py:247-266`): ingest → compact →
-    * query → overwrite result tables.
-    */
-  def workflow(spark: SparkSession, paths: Seq[String], storeDir: String,
-      keyword: String = " dask"): Unit = {
-    ingest(spark, paths, storeDir)
-    compactAll(spark, storeDir)
-    val (commits, comments) = queryData(spark, storeDir, keyword)
-    TableStore.overwrite(commits, s"$storeDir/results/commits")
-    TableStore.overwrite(comments, s"$storeDir/results/comments")
-  }
-
   // ---- exactly-once bookkeeping -------------------------------------------
   // Two tiny marker files play the role of the Delta tx log the reference
   // leans on (`preprocess.py:169-186`):
@@ -202,6 +180,12 @@ object GhaPipeline {
   //                        mid-append, and the covered hours must be rolled
   //                        back before re-ingesting (appends alone would
   //                        duplicate them — Delta gets this from ACID).
+  // Two more live beside the views (see [[recover]]):
+  //  - `<mvDir>/_mv_stale`  : the views must be rebuilt from the curated
+  //                           store before the next fold;
+  //  - `<mvDir>/_mv_keyword`: the keyword the views were built for
+  //                           (URL-encoded: a keyword may start with a
+  //                           space, and markers are read trimmed).
 
   private def markerFs(spark: SparkSession, p: String) =
     new org.apache.hadoop.fs.Path(p)
@@ -243,20 +227,53 @@ object GhaPipeline {
     readMarker(spark, s"$storeDir/_ingest_hwm")
       .map(java.time.Instant.parse)
 
-  /** Roll back the half-written batch a dead run left behind: for every
-    * curated table, rewrite the date partitions the batch touched WITHOUT
-    * its rows (dynamic partition overwrite — `TableStore.upsertPartitions`),
-    * and drop partitions whose every row came from the batch. Hour-grained
-    * events inside date-grained partitions are why plain dynamic overwrite
-    * can't be the ingest path itself: overwriting date D with only hour H
-    * would erase D's other hours.
+  /** Start-of-tick recovery, run before the range is read. Two jobs, in
+    * this order:
+    *
+    *  - Curated tables: roll back the half-written batch a dead run left
+    *    behind (`_ingest_inflight` present, hwm short of its last hour).
+    *    For every curated table, rewrite the date partitions the batch
+    *    touched WITHOUT its rows (dynamic partition overwrite —
+    *    `TableStore.upsertPartitions`), and drop partitions whose every row
+    *    came from the batch. Hour-grained events inside date-grained
+    *    partitions are why plain dynamic overwrite can't be the ingest
+    *    path itself: overwriting date D with only hour H would erase D's
+    *    other hours.
+    *  - Views: the folds are not idempotent, so views that saw a
+    *    rolled-back batch — or that never saw the store's history — are
+    *    rebuilt from the recovered store ([[IncrementalViews.rebuild]]).
+    *    "Rebuild pending" is recorded DURABLY in `_mv_stale` before the
+    *    rollback starts, while the inflight marker still exists, and
+    *    cleared only after a COMPLETED rebuild: a crash between marker
+    *    deletion and rebuild would otherwise leave the views silently
+    *    diverged forever (the next tick would see no marker and re-fold
+    *    the replayed hour into double-counted views).
+    *
+    * Adoption: a store that has ingested hours (`_ingest_hwm`) but whose
+    * `mvDir` holds no committed `repo_counts` (views added to an existing
+    * store, or deleted) is marked stale too, so its first fold starts
+    * from the store's history rather than from the batch alone. So are
+    * views built for another keyword (a daemon restarted with a new
+    * `keyword`): the keyword slices hold only their keyword's rows. The
+    * checks are marker reads and one listing; an empty store and a store
+    * whose views exist for this keyword never rebuild. Views that predate
+    * the keyword marker are taken to match.
     */
-  def recoverInflight(spark: SparkSession, storeDir: String): Boolean = {
+  private def recover(spark: SparkSession, storeDir: String, mvDir: String,
+      keyword: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     val marker = s"$storeDir/_ingest_inflight"
+    val stale = s"$mvDir/_mv_stale"
+    val kwMarker = s"$mvDir/_mv_keyword"
+    val kw = java.net.URLEncoder.encode(keyword, "UTF-8")
+    val built = readMarker(spark, kwMarker)
     readMarker(spark, marker) match {
-      case None => false
+      case None =>
+        if (built.exists(_ != kw) || (readHwm(spark, storeDir).isDefined &&
+            TableStore.currentGeneration(spark, s"$mvDir/repo_counts").isEmpty))
+          writeMarker(spark, stale, "rebuild-pending")
       case Some(v) =>
+        writeMarker(spark, stale, "rebuild-pending")
         // a corrupt marker must fail ACTIONABLY: an unhandled MatchError /
         // parse error here would escape every tick forever (the marker is
         // never cleared and Serve just backs off) with no hint at the cause
@@ -307,39 +324,12 @@ object GhaPipeline {
           }
         }
         deleteMarker(spark, marker)
-        !hwmOk
     }
-  }
-
-  /** The self-driving hourly run (`workflow(start=None, stop=None)` parity,
-    * `preprocess.py:178-196, 247-266`): recover any half-written batch,
-    * derive the range from the store's own high-watermark, ingest only the
-    * landing files inside it, then compact + query. Returns the ingested
-    * paths (empty when already caught up). Re-running the same tick is a
-    * no-op; dying mid-tick and re-running replaces rather than duplicates.
-    *
-    * Resume point: the `_ingest_hwm` marker (O(1)); stores predating the
-    * marker fall back to the max data watermark across ALL six tables (the
-    * reference reads only the comment tx log, `preprocess.py:181` — an hour
-    * whose file has commits but no comments would then be re-ingested and
-    * duplicated). File naming follows GH Archive: `YYYY-MM-DD-H.json`
-    * (hour unpadded).
-    */
-  def incrementalRun(spark: SparkSession, landingDir: String,
-      storeDir: String, now: java.time.Instant,
-      backfillStart: java.time.Instant,
-      keyword: String = " dask"): Seq[String] = {
-    recoverInflight(spark, storeDir)
-    val hourly = pendingHours(spark, landingDir, storeDir, now, backfillStart)
-    if (hourly.nonEmpty) {
-      val lastHour = hourly.last._1
-      writeMarker(spark, s"$storeDir/_ingest_inflight",
-        s"${hourly.head._1}|$lastHour")
-      workflow(spark, hourly.map(_._2), storeDir, keyword)
-      writeMarker(spark, s"$storeDir/_ingest_hwm", lastHour.toString)
-      deleteMarker(spark, s"$storeDir/_ingest_inflight")
-    }
-    hourly.map(_._2)
+    if (readMarker(spark, stale).isDefined) {
+      IncrementalViews.rebuild(spark, storeDir, mvDir, keyword)
+      writeMarker(spark, kwMarker, kw)
+      deleteMarker(spark, stale)
+    } else if (!built.contains(kw)) writeMarker(spark, kwMarker, kw)
   }
 
   /** The contiguous run of landed, not-yet-ingested hours: STRICTLY halts
@@ -363,35 +353,21 @@ object GhaPipeline {
       .toSeq
   }
 
-  /** Crash-atomic recovery for the views path. `recoverInflight` consumes
-    * the inflight marker, so "views need a rebuild" must be recorded
-    * DURABLY before the rollback starts: a crash between marker deletion
-    * and rebuild completion would otherwise leave the views silently
-    * diverged forever (the next tick sees no marker, skips the rebuild,
-    * and re-folds the replayed hour into double-counted views). The
-    * `_mv_stale` marker is written while the inflight marker still
-    * exists and cleared only after a COMPLETED rebuild — any crash in
-    * between re-enters the rebuild on the next tick.
-    */
-  private def recoverWithViews(spark: SparkSession, storeDir: String,
-      mvDir: String, keyword: String): Unit = {
-    val stale = s"$mvDir/_mv_stale"
-    if (readMarker(spark, s"$storeDir/_ingest_inflight").isDefined)
-      writeMarker(spark, stale, "rebuild-pending")
-    recoverInflight(spark, storeDir)
-    if (readMarker(spark, stale).isDefined) {
-      IncrementalViews.rebuild(spark, storeDir, mvDir, keyword)
-      deleteMarker(spark, stale)
-    }
-  }
-
-  /** [[incrementalRun]] with incremental `query_data` maintenance
-    * ([[IncrementalViews]]): same exactly-once bookkeeping, but each tick
-    * folds the batch into the materialized views and serves the result
-    * tables from them, instead of recomputing the analytics over full
-    * history. A recovery that rolled curated tables back rebuilds the
-    * views from the recovered store before the tick proceeds (full
-    * recompute as the recovery path; the happy path never scans history).
+  /** The hourly tick (parity with the reference's `workflow(start=None,
+    * stop=None)`, `preprocess.py:178-196, 247-266`): [[recover]], derive
+    * the range from the store's own high-watermark, ingest only the
+    * landing files inside it, fold the batch into the materialized views
+    * ([[IncrementalViews]]) and serve the result tables from them. Returns
+    * the ingested paths (empty when already caught up). Re-running the
+    * same tick is a no-op; dying mid-tick and re-running replaces rather
+    * than duplicates.
+    *
+    * Resume point: the `_ingest_hwm` marker (O(1)); stores predating the
+    * marker fall back to the max data watermark across ALL six tables (the
+    * reference reads only the comment tx log, `preprocess.py:181` — an hour
+    * whose file has commits but no comments would then be re-ingested and
+    * duplicated). File naming follows GH Archive: `YYYY-MM-DD-H.json`
+    * (hour unpadded).
     *
     * The tick is two fan-outs, each returning only after all its tasks
     * finished: phase A appends the batch to the six curated tables beside
@@ -400,13 +376,14 @@ object GhaPipeline {
     * ([[compactTouched]]). Every write of both phases sits inside the
     * `_ingest_inflight` scope, so a crash in any task leaves `_mv_stale`
     * to be set by the next tick's recovery, which rolls the curated
-    * tables back and rebuilds the views.
+    * tables back and rebuilds the views. The happy path never scans
+    * history.
     */
   def incrementalRunWithViews(spark: SparkSession, landingDir: String,
       storeDir: String, mvDir: String, now: java.time.Instant,
       backfillStart: java.time.Instant,
       keyword: String = " dask"): Seq[String] = {
-    recoverWithViews(spark, storeDir, mvDir, keyword)
+    recover(spark, storeDir, mvDir, keyword)
     val hourly = pendingHours(spark, landingDir, storeDir, now, backfillStart)
     if (hourly.nonEmpty) {
       val lastHour = hourly.last._1
@@ -475,15 +452,15 @@ object GhaPipeline {
       .find(p => f.exists(new Path(p)))
   }
 
-  /** Full remote-source parity with `workflow(start=None, stop=None)` +
-    * `process_file`'s HTTP fetch (`preprocess.py:144-147, 247-266`): derive
-    * the resume range, DOWNLOAD the missing hourly `.json.gz` files from
-    * `baseUrl` (distributed, retried — `Fetch.download`), then run the
-    * normal incremental tick over the landing dir. Hours whose download
-    * fails after retry exhaustion are retried next tick (the hwm only
-    * advances through ingested hours, and an ingested batch never spans a
-    * gap: it stops at the first missing hour so a late-published file can
-    * never be skipped).
+  /** Full remote-source parity with the reference's `workflow(start=None,
+    * stop=None)` + `process_file`'s HTTP fetch (`preprocess.py:144-147,
+    * 247-266`): derive the resume range, DOWNLOAD the missing hourly
+    * `.json.gz` files from `baseUrl` (distributed, retried —
+    * `Fetch.download`), then run [[incrementalRunWithViews]] over the
+    * landing dir. Hours whose download fails after retry exhaustion are
+    * retried next tick (the hwm only advances through ingested hours, and
+    * an ingested batch never spans a gap: it stops at the first missing
+    * hour so a late-published file can never be skipped).
     *
     * Two failure policies on top:
     *  - PERMANENT GAPS: real archives have hours that will never exist
@@ -498,18 +475,14 @@ object GhaPipeline {
     *    look like a clean idle tick and hot-spin the hourly loop).
     */
   def fetchAndRun(spark: SparkSession, baseUrl: String, landingDir: String,
-      storeDir: String, now: java.time.Instant,
+      storeDir: String, mvDir: String, now: java.time.Instant,
       backfillStart: java.time.Instant, keyword: String = " dask",
-      retries: Int = 10, gapGraceHours: Int = 48,
-      mvDir: Option[String] = None): Seq[String] = {
-    mvDir match {
-      case Some(mv) => recoverWithViews(spark, storeDir, mv, keyword)
-      case None => recoverInflight(spark, storeDir); ()
-    }
+      retries: Int = 10, gapGraceHours: Int = 48): Seq[String] = {
+    recover(spark, storeDir, mvDir, keyword)
     // recovery must precede the range read (its rollback affects the
-    // data-watermark fallback); incrementalRun's own recover/resume repeat
-    // is then a pair of O(1) marker reads — only a marker-less legacy
-    // store's first tick ever pays the table-scan fallback twice.
+    // data-watermark fallback); the tick's own recover/resume repeat is
+    // then a few O(1) marker reads and one listing — only a marker-less
+    // legacy store's first tick ever pays the table-scan fallback twice.
     val (start, stop) = resumeRange(spark, storeDir, now, backfillStart)
     val missing: Seq[(java.time.Instant, String)] =
       Iterator.iterate(start)(_.plusSeconds(3600))
@@ -545,12 +518,8 @@ object GhaPipeline {
             s"$landingDir/${hourStem(h)}.json"), true).close()
         }
     }
-    val ingested = mvDir match {
-      case Some(mv) => incrementalRunWithViews(spark, landingDir, storeDir,
-        mv, now, backfillStart, keyword)
-      case None =>
-        incrementalRun(spark, landingDir, storeDir, now, backfillStart, keyword)
-    }
+    val ingested = incrementalRunWithViews(spark, landingDir, storeDir,
+      mvDir, now, backfillStart, keyword)
     // STALLED TICK: nothing ingested and the earliest missing hour's
     // download failed — whether every download failed (dead upstream) or
     // later hours succeeded around a persistently failing first hour

@@ -414,8 +414,8 @@ object IncrementalViews {
       keyword: String = " dask"): Unit = {
     import GhaSchemas.curated
     // a first-tick crash can leave some curated tables never created; the
-    // views still need a consistent (empty) rebuild — same guard
-    // recoverInflight applies per table
+    // views still need a consistent (empty) rebuild — the same guard the
+    // tick's rollback applies per table
     def readOrEmpty(name: String): DataFrame = {
       val dir = s"$storeDir/$name"
       try TableStore.read(spark, dir, curated(name))

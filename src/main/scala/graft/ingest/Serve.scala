@@ -4,10 +4,12 @@ import java.time.Instant
 import org.apache.spark.sql.SparkSession
 
 /** The hourly serve loop — parity with Prefect's
-  * `workflow.serve(interval=timedelta(hours=1))`
-  * (`/root/reference/preprocess.py:277-280`): run `incrementalRun` once per
-  * hour, forever, resuming from the store's own watermark so restarts and
-  * crashes pick up exactly where the last completed tick stopped.
+  * `workflow.serve(interval=timedelta(hours=1))` (`preprocess.py:277-280`):
+  * run the tick (`GhaPipeline.incrementalRunWithViews`) once per hour,
+  * forever, resuming from the store's own watermark so restarts and
+  * crashes pick up exactly where the last completed tick stopped. A first
+  * tick over a store with a backlog catches up every landed hour in one
+  * batch through the same path.
   *
   * `loop` is the testable core: clock and sleeper are injected, tick count
   * is bounded, failures back off exponentially (a dead upstream shouldn't
@@ -35,7 +37,8 @@ object Serve {
     * the total number of ingested files across all ticks. With `baseUrl`
     * set, each tick first downloads its missing hours from that remote
     * (full `process_file` fetch parity via `GhaPipeline.fetchAndRun`);
-    * without it, ticks consume pre-landed files only.
+    * without it, ticks consume pre-landed files only. The materialized
+    * views live in `mvDir`, by default `<storeDir>/mv`.
     */
   def loop(spark: SparkSession, landingDir: String, storeDir: String,
       backfillStart: Instant, keyword: String = " dask", ticks: Int = -1,
@@ -43,18 +46,17 @@ object Serve {
       sleeper: Long => Unit = Thread.sleep,
       baseUrl: Option[String] = None,
       mvDir: Option[String] = None): Long = {
+    val views = mvDir.getOrElse(s"$storeDir/mv")
     var ingested = 0L
     var failures = 0
     var i = 0
     while (ticks < 0 || i < ticks) {
       try {
-        ingested += ((baseUrl, mvDir) match {
-          case (Some(b), _) => GhaPipeline.fetchAndRun(spark, b, landingDir,
-            storeDir, now(), backfillStart, keyword, mvDir = mvDir).size
-          case (None, Some(mv)) => GhaPipeline.incrementalRunWithViews(spark,
-            landingDir, storeDir, mv, now(), backfillStart, keyword).size
-          case (None, None) => GhaPipeline.incrementalRun(spark, landingDir,
-            storeDir, now(), backfillStart, keyword).size
+        ingested += (baseUrl match {
+          case Some(b) => GhaPipeline.fetchAndRun(spark, b, landingDir,
+            storeDir, views, now(), backfillStart, keyword).size
+          case None => GhaPipeline.incrementalRunWithViews(spark, landingDir,
+            storeDir, views, now(), backfillStart, keyword).size
         })
         failures = 0
       } catch {
@@ -89,6 +91,8 @@ object Serve {
     * real object store validates with `ticks=1` — one fetch + ingest +
     * publish cycle, then exit 0 — before being left as a daemon. Paths
     * may be any Hadoop filesystem URI (`file://`, `s3a://bucket/...`).
+    * The views live under `<storeDir>/mv`; a store that has none yet gets
+    * them rebuilt from its history on the first tick.
     */
   def main(args: Array[String]): Unit = {
     val landingDir = args(0)

@@ -107,15 +107,3 @@ object GhaSchemas {
     "commit" -> commit, "create" -> create, "pr" -> pr,
     "comment" -> comment, "watch" -> watch, "fork" -> fork)
 }
-
-/** Typed views of the curated tables for `Dataset[T]` use at module
-  * boundaries (SURVEY.md §7.1).
-  */
-object Curated {
-  case class Commit(username: String, repo: String, sha: String,
-      message: String, created_at: java.sql.Timestamp, date: java.sql.Date)
-  case class Watch(username: String, repo: String, action: String,
-      created_at: java.sql.Timestamp, date: java.sql.Date)
-  case class Fork(username: String, repo: String,
-      created_at: java.sql.Timestamp, date: java.sql.Date)
-}

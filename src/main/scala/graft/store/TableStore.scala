@@ -528,7 +528,7 @@ object TableStore {
 
   /** Idempotent per-partition overwrite — re-writing the same dates replaces
     * rather than duplicates them (dynamic partition overwrite; the building
-    * block of the pipeline's crash recovery, `GhaPipeline.recoverInflight`).
+    * block of the pipeline's crash recovery, `GhaPipeline.recover`).
     */
   def upsertPartitions(spark: SparkSession, df: DataFrame, dir: String): Unit = {
     val genBefore = currentGenNumber(spark, dir)

@@ -71,8 +71,12 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
       val rows = st.collect()
       assert(rows.length === 2 && rows.forall(_.getAs[Boolean]("ok")))
       // landed files are valid gzip NDJSON for the unchanged ingest path
-      GhaPipeline.workflow(spark,
-        rows.map(_.getAs[String]("path")).toSeq, s"$dir/store")
+      val ingested = GhaPipeline.incrementalRunWithViews(spark,
+        s"$dir/landing", s"$dir/store", s"$dir/mv",
+        java.time.Instant.parse("2024-02-29T04:10:00Z"),
+        java.time.Instant.parse("2024-02-29T01:00:00Z"))
+      assert(ingested.map(_.split('/').last) ===
+        Seq("2024-02-29-1.json.gz", "2024-02-29-2.json.gz"))
       for (t <- graft.schema.GhaSchemas.tableNames)
         assert(TableStore.read(spark, s"$dir/store/$t",
           graft.schema.GhaSchemas.curated(t)).count() >= 0)
@@ -140,7 +144,8 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
       "/2024-02-29-3.json.gz" -> gzip(commentLine("u3", 3)))) { base =>
       val dir = tmpDir()
       val run1 = GhaPipeline.fetchAndRun(spark, base, s"$dir/landing",
-        s"$dir/store", Instant.parse("2024-02-29T05:10:00Z"), backfill,
+        s"$dir/store", s"$dir/mv",
+        Instant.parse("2024-02-29T05:10:00Z"), backfill,
         retries = 1)
       assert(run1.map(_.split('/').last) === Seq("2024-02-29-1.json.gz"))
       assert(TableStore.read(spark, s"$dir/store/comment").count() === 1)
@@ -149,7 +154,8 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
       val run2Server = Map("/2024-02-29-2.json.gz" -> gzip(commentLine("u2", 2)))
       withServer(run2Server) { base2 =>
         val run2 = GhaPipeline.fetchAndRun(spark, base2, s"$dir/landing",
-          s"$dir/store", Instant.parse("2024-02-29T05:10:00Z"), backfill,
+          s"$dir/store", s"$dir/mv",
+          Instant.parse("2024-02-29T05:10:00Z"), backfill,
           retries = 1)
         assert(run2.map(_.split('/').last) ===
           Seq("2024-02-29-2.json.gz", "2024-02-29-3.json.gz"))
@@ -173,7 +179,8 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
       "/2024-02-29-3.json.gz" -> gzip(commentLine("u3", 3)))) { base =>
       val dir = tmpDir()
       val run = GhaPipeline.fetchAndRun(spark, base, s"$dir/landing",
-        s"$dir/store", Instant.parse("2024-02-29T07:10:00Z"),
+        s"$dir/store", s"$dir/mv",
+        Instant.parse("2024-02-29T07:10:00Z"),
         Instant.parse("2024-02-29T01:00:00Z"), retries = 1,
         gapGraceHours = 2) // cutoff = 05:10 -> hours 2 and 4 are past grace
       // gap hours 2 and 4 became empty tombstones, so the contiguous batch
@@ -202,7 +209,8 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
       val dir = tmpDir()
       val e = intercept[java.io.IOException] {
         GhaPipeline.fetchAndRun(spark, base, s"$dir/landing",
-          s"$dir/store", Instant.parse("2024-02-29T03:10:00Z"),
+          s"$dir/store", s"$dir/mv",
+          Instant.parse("2024-02-29T03:10:00Z"),
           Instant.parse("2024-02-29T01:00:00Z"), retries = 2)
       }
       assert(e.getMessage.contains("downloads failed"))
@@ -210,7 +218,8 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
       // hour 2 DID land; hour 1's 503 streak ends (flakyFailures exhausted)
       // so the next tick downloads it and ingests both hours in order
       val ok = GhaPipeline.fetchAndRun(spark, base, s"$dir/landing",
-        s"$dir/store", Instant.parse("2024-02-29T03:10:00Z"),
+        s"$dir/store", s"$dir/mv",
+        Instant.parse("2024-02-29T03:10:00Z"),
         Instant.parse("2024-02-29T01:00:00Z"), retries = 2)
       assert(ok.map(_.split('/').last) ===
         Seq("2024-02-29-1.json.gz", "2024-02-29-2.json.gz"))
@@ -223,7 +232,8 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
       val dir = tmpDir()
       val e = intercept[java.io.IOException] {
         GhaPipeline.fetchAndRun(spark, base, s"$dir/landing",
-          s"$dir/store", Instant.parse("2024-02-29T03:10:00Z"),
+          s"$dir/store", s"$dir/mv",
+          Instant.parse("2024-02-29T03:10:00Z"),
           Instant.parse("2024-02-29T01:00:00Z"), retries = 1)
       }
       assert(e.getMessage.contains("downloads failed"))

@@ -1,12 +1,14 @@
 package graft.ingest
 
 import java.nio.file.{Files, Paths}
+import java.time.Instant
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.store.TableStore
 
-/** GHA-shaped e2e (SURVEY.md §5.2 item 3): NDJSON fixtures → ingest → six
-  * parquet tables → compaction → query_data → golden rows.
+/** GHA-shaped e2e (SURVEY.md §5.2 item 3): NDJSON fixtures → the hourly
+  * tick (ingest → six parquet tables → compaction → query_data over the
+  * views) → golden rows, plus the tick's resume and crash bookkeeping.
   */
 class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
@@ -34,14 +36,36 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
         comment("gina", "org/quiet", "try dask"))
   }
 
-  test("workflow: ingest → compact → query_data matches golden results") {
-    val base = Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val dir = Files.createTempDirectory(base, "gha_e2e").toString
-    val ndjson = s"$dir/2024-02-29-1.json"
-    Files.write(Paths.get(ndjson), corpus.mkString("\n").getBytes)
+  private def commentLine(user: String, h: Int) =
+    s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:30:00Z","payload":{"issue":{"number":1,"title":"t","created_at":"2024-02-29T01:00:00Z","user":{"login":"x"}},"comment":{"body":"b","author_association":"NONE"}}}"""
 
-    GhaPipeline.workflow(spark, Seq(ndjson), s"$dir/store", keyword = " dask")
+  /** A fresh directory with an empty `landing/` (store and views beside). */
+  private def tmp(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    Files.createDirectories(Paths.get(s"$dir/landing"))
+    dir
+  }
+
+  private def land(dir: String, h: Int, lines: Seq[String]): String = {
+    val f = s"$dir/landing/2024-02-29-$h.json"
+    Files.write(Paths.get(f), lines.mkString("\n").getBytes)
+    f
+  }
+
+  /** One hourly tick at `now` over `dir`'s landing, store and views. */
+  private def tick(dir: String, now: String): Seq[String] =
+    GhaPipeline.incrementalRunWithViews(spark, s"$dir/landing",
+      s"$dir/store", s"$dir/mv", Instant.parse(now),
+      Instant.parse("2024-02-29T01:00:00Z"))
+
+  private def comments(dir: String): Seq[String] =
+    TableStore.read(spark, s"$dir/store/comment")
+      .select("username").as[String].collect().toSeq.sorted
+
+  test("workflow: ingest → compact → query_data matches golden results") {
+    val dir = tmp("gha_e2e")
+    land(dir, 1, corpus)
+    assert(tick(dir, "2024-02-29T03:10:00Z").size === 1)
 
     // six curated tables written, date-partitioned
     for (t <- graft.schema.GhaSchemas.tableNames)
@@ -108,128 +132,83 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
       _._2 == "serve-tick"), s"fan-out jobs lost the job group: $described")
   }
 
-  test("incrementalRun: watermark-driven resume ingests only new hours (§3.1 parity)") {
-    import java.time.Instant
-    val base = Paths.get("/root/repo/target/tmp")
-    val dir = Files.createTempDirectory(base, "gha_wm").toString
-    Files.createDirectories(Paths.get(s"$dir/landing"))
-    def commentLine(user: String, h: Int) =
-      s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:30:00Z","payload":{"issue":{"number":1,"title":"t","created_at":"2024-02-29T01:00:00Z","user":{"login":"x"}},"comment":{"body":"b","author_association":"NONE"}}}"""
-    Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
-      commentLine("u1", 1).getBytes)
-    Files.write(Paths.get(s"$dir/landing/2024-02-29-2.json"),
-      commentLine("u2", 2).getBytes)
+  test("watermark-driven resume ingests only new hours (§3.1 parity)") {
+    val dir = tmp("gha_wm")
+    land(dir, 1, Seq(commentLine("u1", 1)))
+    land(dir, 2, Seq(commentLine("u2", 2)))
 
-    val backfill = Instant.parse("2024-02-29T01:00:00Z")
     // now = 04:10 -> stop = 03:00 floor minus 1h lag = hours 1..3 eligible
-    val run1 = GhaPipeline.incrementalRun(spark, s"$dir/landing",
-      s"$dir/store", Instant.parse("2024-02-29T04:10:00Z"), backfill)
+    val run1 = tick(dir, "2024-02-29T04:10:00Z")
     assert(run1.map(_.split('/').last).sorted ===
       Seq("2024-02-29-1.json", "2024-02-29-2.json"))
 
     // caught up: watermark 02:30 -> start 03:00; no 03:00 file yet
-    val run2 = GhaPipeline.incrementalRun(spark, s"$dir/landing",
-      s"$dir/store", Instant.parse("2024-02-29T04:10:00Z"), backfill)
-    assert(run2.isEmpty)
+    assert(tick(dir, "2024-02-29T04:10:00Z").isEmpty)
 
     // hour 3 lands + clock advances -> ONLY hour 3 is ingested
-    Files.write(Paths.get(s"$dir/landing/2024-02-29-3.json"),
-      commentLine("u3", 3).getBytes)
-    val run3 = GhaPipeline.incrementalRun(spark, s"$dir/landing",
-      s"$dir/store", Instant.parse("2024-02-29T05:10:00Z"), backfill)
+    land(dir, 3, Seq(commentLine("u3", 3)))
+    val run3 = tick(dir, "2024-02-29T05:10:00Z")
     assert(run3.map(_.split('/').last) === Seq("2024-02-29-3.json"))
     assert(TableStore.read(spark, s"$dir/store/comment").count() === 3)
   }
 
   test("a missing middle hour halts the batch; the late file is never skipped") {
-    import java.time.Instant
-    val base = Paths.get("/root/repo/target/tmp")
-    val dir = Files.createTempDirectory(base, "gha_gap").toString
-    Files.createDirectories(Paths.get(s"$dir/landing"))
-    def commentLine(user: String, h: Int) =
-      s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:30:00Z","payload":{"issue":{"number":1,"title":"t","created_at":"2024-02-29T01:00:00Z","user":{"login":"x"}},"comment":{"body":"b","author_association":"NONE"}}}"""
+    val dir = tmp("gha_gap")
     // hours 1 and 3 landed, hour 2 late: the tick must stop AT the gap —
     // ingesting hour 3 would advance the hwm past hour 2 and lose it forever
-    Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
-      commentLine("u1", 1).getBytes)
-    Files.write(Paths.get(s"$dir/landing/2024-02-29-3.json"),
-      commentLine("u3", 3).getBytes)
-    val backfill = Instant.parse("2024-02-29T01:00:00Z")
-    val run1 = GhaPipeline.incrementalRun(spark, s"$dir/landing",
-      s"$dir/store", Instant.parse("2024-02-29T05:10:00Z"), backfill)
+    land(dir, 1, Seq(commentLine("u1", 1)))
+    land(dir, 3, Seq(commentLine("u3", 3)))
+    val run1 = tick(dir, "2024-02-29T05:10:00Z")
     assert(run1.map(_.split('/').last) === Seq("2024-02-29-1.json"))
     // hour 2 publishes late; the next tick picks up 2 AND the waiting 3
-    Files.write(Paths.get(s"$dir/landing/2024-02-29-2.json"),
-      commentLine("u2", 2).getBytes)
-    val run2 = GhaPipeline.incrementalRun(spark, s"$dir/landing",
-      s"$dir/store", Instant.parse("2024-02-29T05:10:00Z"), backfill)
+    land(dir, 2, Seq(commentLine("u2", 2)))
+    val run2 = tick(dir, "2024-02-29T05:10:00Z")
     assert(run2.map(_.split('/').last) ===
       Seq("2024-02-29-2.json", "2024-02-29-3.json"))
     assert(TableStore.read(spark, s"$dir/store/comment").count() === 3)
   }
 
   test("crash mid-batch: inflight marker rolls back half-written hours (T4)") {
-    import java.time.Instant
-    val base = Paths.get("/root/repo/target/tmp")
-    val dir = Files.createTempDirectory(base, "gha_crash").toString
-    Files.createDirectories(Paths.get(s"$dir/landing"))
-    def commentLine(user: String, h: Int) =
-      s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:30:00Z","payload":{"issue":{"number":1,"title":"t","created_at":"2024-02-29T01:00:00Z","user":{"login":"x"}},"comment":{"body":"b","author_association":"NONE"}}}"""
-    Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
-      commentLine("u1", 1).getBytes)
-    val backfill = Instant.parse("2024-02-29T01:00:00Z")
+    val dir = tmp("gha_crash")
+    land(dir, 1, Seq(commentLine("u1", 1)))
 
     // clean run through hour 1 (stop = floor(02:10) - 1h = hour 1 only)
-    GhaPipeline.incrementalRun(spark, s"$dir/landing", s"$dir/store",
-      Instant.parse("2024-02-29T02:10:00Z"), backfill)
-    assert(TableStore.read(spark, s"$dir/store/comment").count() === 1)
+    tick(dir, "2024-02-29T02:10:00Z")
+    assert(comments(dir) === Seq("u1"))
 
     // simulate a run that appended hour 2 but DIED before advancing the hwm:
     // data is in, inflight marker is still there
-    Files.write(Paths.get(s"$dir/landing/2024-02-29-2.json"),
-      commentLine("u2", 2).getBytes)
-    GhaPipeline.ingest(spark, Seq(s"$dir/landing/2024-02-29-2.json"),
-      s"$dir/store")
+    val hour2 = land(dir, 2, Seq(commentLine("u2", 2)))
+    GhaPipeline.ingestWith(spark, Seq(hour2), s"$dir/store")(_ => Nil)
     Files.write(Paths.get(s"$dir/store/_ingest_inflight"),
       "2024-02-29T02:00:00Z|2024-02-29T02:00:00Z".getBytes)
-    assert(TableStore.read(spark, s"$dir/store/comment").count() === 2)
+    assert(comments(dir) === Seq("u1", "u2"))
 
     // next tick: recovery rolls hour 2 back, then re-ingests it exactly once
-    GhaPipeline.incrementalRun(spark, s"$dir/landing", s"$dir/store",
-      Instant.parse("2024-02-29T04:10:00Z"), backfill)
-    val users = TableStore.read(spark, s"$dir/store/comment")
-      .select("username").as[String].collect().toSeq.sorted
-    assert(users === Seq("u1", "u2")) // no duplicate u2
+    assert(tick(dir, "2024-02-29T04:10:00Z").size === 1)
+    assert(comments(dir) === Seq("u1", "u2")) // no duplicate u2
   }
 
   test("crash after commit, before marker cleanup: no rollback, no re-ingest") {
-    import java.time.Instant
-    val base = Paths.get("/root/repo/target/tmp")
-    val dir = Files.createTempDirectory(base, "gha_crash2").toString
-    Files.createDirectories(Paths.get(s"$dir/landing"))
-    def commentLine(user: String, h: Int) =
-      s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:30:00Z","payload":{"issue":{"number":1,"title":"t","created_at":"2024-02-29T01:00:00Z","user":{"login":"x"}},"comment":{"body":"b","author_association":"NONE"}}}"""
-    Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
-      commentLine("u1", 1).getBytes)
-    val backfill = Instant.parse("2024-02-29T01:00:00Z")
-    GhaPipeline.incrementalRun(spark, s"$dir/landing", s"$dir/store",
-      Instant.parse("2024-02-29T03:10:00Z"), backfill)
+    val dir = tmp("gha_crash2")
+    land(dir, 1, Seq(commentLine("u1", 1)))
+    tick(dir, "2024-02-29T03:10:00Z")
     // hwm says hour 1 is committed; a stale marker for hour 1 must be a no-op
     Files.write(Paths.get(s"$dir/store/_ingest_inflight"),
       "2024-02-29T01:00:00Z|2024-02-29T01:00:00Z".getBytes)
-    assert(!GhaPipeline.recoverInflight(spark, s"$dir/store")) // no rollback
-    assert(TableStore.read(spark, s"$dir/store/comment").count() === 1)
+    assert(tick(dir, "2024-02-29T03:10:00Z").isEmpty) // no re-ingest
+    // a rollback would have removed u1 for good: the hwm is past hour 1
+    assert(comments(dir) === Seq("u1"))
     assert(!Files.exists(Paths.get(s"$dir/store/_ingest_inflight")))
   }
 
   test("corrupt inflight marker fails actionably, naming the marker path") {
-    val base = Paths.get("/root/repo/target/tmp")
-    val dir = Files.createTempDirectory(base, "gha_badmark").toString
+    val dir = tmp("gha_badmark")
     Files.createDirectories(Paths.get(s"$dir/store"))
     for (bad <- Seq("not-a-range", "a|b|c", "2024-02-29T01:00:00Z|garbage")) {
       Files.write(Paths.get(s"$dir/store/_ingest_inflight"), bad.getBytes)
       val e = intercept[java.io.IOException] {
-        GhaPipeline.recoverInflight(spark, s"$dir/store")
+        tick(dir, "2024-02-29T03:10:00Z")
       }
       // MatchError/DateTimeParseException here would wedge every later tick
       // with no hint; the error must say where the marker is and what to do
@@ -242,13 +221,11 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ingest is re-runnable: append accumulates per batch (storage union-all)") {
-    val base = Paths.get("/root/repo/target/tmp")
-    val dir = Files.createTempDirectory(base, "gha_inc").toString
-    val f = s"$dir/h1.json"
-    Files.write(Paths.get(f), corpus.mkString("\n").getBytes)
-    GhaPipeline.ingest(spark, Seq(f), s"$dir/store")
+    val dir = tmp("gha_inc")
+    val f = land(dir, 1, corpus)
+    GhaPipeline.ingestWith(spark, Seq(f), s"$dir/store")(_ => Nil)
     val n1 = TableStore.read(spark, s"$dir/store/commit").count()
-    GhaPipeline.ingest(spark, Seq(f), s"$dir/store")
+    GhaPipeline.ingestWith(spark, Seq(f), s"$dir/store")(_ => Nil)
     assert(TableStore.read(spark, s"$dir/store/commit").count() === 2 * n1)
   }
 }

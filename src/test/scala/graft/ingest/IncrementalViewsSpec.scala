@@ -32,11 +32,22 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
   private def collectResults(dir: String): (Seq[(String, String, Long)], Seq[(String, String, Long)]) = {
     val commits = TableStore.read(spark, s"$dir/results/commits")
       .select("username", "repo", "count").as[(String, String, Long)]
-      .collect().toSeq
+      .collect().toSeq.sorted
     val comments = TableStore.read(spark, s"$dir/results/comments")
       .select("username", "repo", "count").as[(String, String, Long)]
-      .collect().toSeq
+      .collect().toSeq.sorted
     (commits, comments)
+  }
+
+  /** [[GhaPipeline.queryData]] over the store's full history, in the
+    * shape of [[collectResults]].
+    */
+  private def recompute(storeDir: String, keyword: String = " dask"): (Seq[(String, String, Long)], Seq[(String, String, Long)]) = {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("username", "repo", "count").as[(String, String, Long)]
+        .collect().toSeq.sorted
+    val (commits, comments) = GhaPipeline.queryData(spark, storeDir, keyword)
+    (rows(commits), rows(comments))
   }
 
   // Three ticks; org/late crosses the popularity threshold only on tick 3,
@@ -61,21 +72,16 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
 
   test("3 ticks of view maintenance ≡ full recompute, including late-crossing repos") {
     val incDir = tmp("mv_inc")
-    val fullDir = tmp("mv_full")
     Files.createDirectories(Paths.get(s"$incDir/landing"))
-    Files.createDirectories(Paths.get(s"$fullDir/landing"))
     val start = Instant.parse(s"${d}T01:00:00Z")
     for ((lines, h) <- Seq(tick1 -> 1, tick2 -> 2, tick3 -> 3)) {
       land(s"$incDir/landing", d, h, lines)
-      land(s"$fullDir/landing", d, h, lines)
       val now = Instant.parse(s"${d}T0${h + 2}:00:00Z")
       val ingestedInc = GhaPipeline.incrementalRunWithViews(spark,
         s"$incDir/landing", s"$incDir/store", s"$incDir/mv", now, start)
-      val ingestedFull = GhaPipeline.incrementalRun(spark,
-        s"$fullDir/landing", s"$fullDir/store", now, start)
-      assert(ingestedInc.size == 1 && ingestedFull.size == 1, s"tick $h")
+      assert(ingestedInc.size == 1, s"tick $h")
       val (ci, mi) = collectResults(s"$incDir/store")
-      val (cf, mf) = collectResults(s"$fullDir/store")
+      val (cf, mf) = recompute(s"$incDir/store")
       assert(ci == cf, s"commits diverge at tick $h")
       assert(mi == mf, s"comments diverge at tick $h")
     }
@@ -105,6 +111,51 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
       case (c, m) => (c.collect().toSeq, m.collect().toSeq)
     }
     assert(c1 == c2 && m1 == m2)
+  }
+
+  test("views adopted over a store with history start from that history") {
+    val dir = tmp("mv_adopt")
+    Files.createDirectories(Paths.get(s"$dir/landing"))
+    val start = Instant.parse(s"${d}T01:00:00Z")
+    // hours 1-2 ingested with no views (curated appends plus the hwm)
+    land(s"$dir/landing", d, 1, tick1)
+    land(s"$dir/landing", d, 2, tick2)
+    GhaPipeline.ingestWith(spark,
+      Seq(s"$dir/landing/$d-1.json", s"$dir/landing/$d-2.json"),
+      s"$dir/store")(_ => Nil)
+    Files.write(Paths.get(s"$dir/store/_ingest_hwm"),
+      s"${d}T02:00:00Z".getBytes)
+    // the first views tick, hour 3: org/late's six watches span all three
+    // hours, so views that counted only this batch would drop zoe and alice
+    land(s"$dir/landing", d, 3, tick3)
+    assert(GhaPipeline.incrementalRunWithViews(spark, s"$dir/landing",
+      s"$dir/store", s"$dir/mv", Instant.parse(s"${d}T05:00:00Z"),
+      start).size === 1)
+    val (commits, comments) = collectResults(s"$dir/store")
+    assert((commits, comments) == recompute(s"$dir/store"))
+    assert(commits.toSet == Set(("alice", "org/hot", 6L),
+      ("zoe", "org/late", 6L)), commits.toString)
+    assert(!Files.exists(Paths.get(s"$dir/mv/_mv_stale")))
+  }
+
+  test("a tick with another keyword rebuilds the views for that keyword") {
+    val dir = tmp("mv_kw")
+    Files.createDirectories(Paths.get(s"$dir/landing"))
+    val start = Instant.parse(s"${d}T01:00:00Z")
+    def tick(h: Int, keyword: String) =
+      GhaPipeline.incrementalRunWithViews(spark, s"$dir/landing",
+        s"$dir/store", s"$dir/mv", Instant.parse(s"${d}T0${h + 2}:00:00Z"),
+        start, keyword)
+    land(s"$dir/landing", d, 1, tick1)
+    land(s"$dir/landing", d, 2, tick2)
+    assert(tick(2, " dask").size === 2)
+    // restarted with " here": zoe's "try dask experiment" must drop out,
+    // alice's "adopt dask here" stays
+    land(s"$dir/landing", d, 3, tick3)
+    assert(tick(3, " here").size === 1)
+    val (commits, comments) = collectResults(s"$dir/store")
+    assert((commits, comments) == recompute(s"$dir/store", " here"))
+    assert(commits == Seq(("alice", "org/hot", 6L)), commits.toString)
   }
 
   test("distinct-watcher sketches union across ticks (sets, not sums)") {

@@ -12,6 +12,10 @@ import graft.store.TableStore
   */
 class ServeSpec extends AnyFunSuite with SparkFixture {
 
+  private def watchLine(user: String, h: Int) =
+    s"""{"type":"WatchEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:10:00Z","payload":{"action":"started"}}"""
+  private def pushLine(user: String, h: Int) =
+    s"""{"type":"PushEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:20:00Z","payload":{"commits":[{"sha":"s$h","message":"use dask"}]}}"""
   private def commentLine(user: String, h: Int) =
     s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:30:00Z","payload":{"issue":{"number":1,"title":"t","created_at":"2024-02-29T01:00:00Z","user":{"login":"x"}},"comment":{"body":"b","author_association":"NONE"}}}"""
 
@@ -61,10 +65,6 @@ class ServeSpec extends AnyFunSuite with SparkFixture {
     Files.createDirectories(base)
     val dir = Files.createTempDirectory(base, "serve_mv").toString
     Files.createDirectories(Paths.get(s"$dir/landing"))
-    def watchLine(user: String, h: Int) =
-      s"""{"type":"WatchEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:10:00Z","payload":{"action":"started"}}"""
-    def pushLine(user: String, h: Int) =
-      s"""{"type":"PushEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:20:00Z","payload":{"commits":[{"sha":"s$h","message":"use dask"}]}}"""
     Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
       ((1 to 6).map(i => watchLine(s"w$i", 1)) :+ pushLine("alice", 1))
         .mkString("\n").getBytes)
@@ -89,11 +89,44 @@ class ServeSpec extends AnyFunSuite with SparkFixture {
     assert(commits === Set(("alice", 6L), ("bob", 6L)))
   }
 
+  test("without mvDir the views live under the store and results equal " +
+    "the full recompute") {
+    val dir = Files.createTempDirectory("serve_main").toString
+    Files.createDirectories(Paths.get(s"$dir/landing"))
+    Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
+      ((1 to 6).map(i => watchLine(s"w$i", 1)) :+ pushLine("alice", 1))
+        .mkString("\n").getBytes)
+    var t = Instant.parse("2024-02-29T03:10:00Z")
+    // Serve.main's call: no mvDir
+    val n = Serve.loop(spark, s"$dir/landing", s"$dir/store",
+      Instant.parse("2024-02-29T01:00:00Z"), ticks = 2,
+      now = () => t,
+      sleeper = _ => {
+        Files.write(Paths.get(s"$dir/landing/2024-02-29-2.json"),
+          (pushLine("bob", 2) +: (7 to 8).map(i => watchLine(s"w$i", 2)))
+            .mkString("\n").getBytes)
+        t = Instant.parse("2024-02-29T04:10:00Z")
+      })
+    assert(n === 2)
+    assert(Files.exists(Paths.get(s"$dir/store/mv/repo_counts")))
+    val spark2 = spark
+    import spark2.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("username", "repo", "message", "count")
+        .as[(String, String, String, Long)].collect().toSeq.sorted
+    val (commits, comments) = GhaPipeline.queryData(spark, s"$dir/store")
+    val served = rows(TableStore.read(spark, s"$dir/store/results/commits"))
+    assert(served === rows(commits))
+    assert(served.map(r => (r._1, r._4)) === Seq(("alice", 8L), ("bob", 8L)))
+    assert(TableStore.read(spark, s"$dir/store/results/comments").count() ===
+      comments.count())
+  }
+
   test("a failing tick is absorbed; failure count feeds the backoff") {
     val base = Paths.get("/root/repo/target/tmp")
     val dir = Files.createTempDirectory(base, "serve_f").toString
     // landingDir path exists but store root is an unwritable file -> the
-    // tick throws inside incrementalRun; the loop must survive both ticks
+    // tick throws; the loop must survive both ticks
     Files.createDirectories(Paths.get(s"$dir/landing"))
     Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
       "not json but present".getBytes)

@@ -217,6 +217,7 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
     NonAtomicRenameFs.reset()
     val dir = mockDir("objstore_tick_")
     val store = s"$dir/store"
+    val mv = s"$dir/mv"
     // landing stays on the plain local FS (a separate system in production)
     val landingBase = Paths.get("/root/repo/target/tmp")
     val landing = Files.createTempDirectory(landingBase, "objstore_land_")
@@ -226,7 +227,7 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
     val backfill = Instant.parse("2024-02-29T01:00:00Z")
 
     // tick 1 commits hour 1 through the mock store
-    GhaPipeline.incrementalRun(spark, landing, store,
+    GhaPipeline.incrementalRunWithViews(spark, landing, store, mv,
       Instant.parse("2024-02-29T02:10:00Z"), backfill)
     assert(TableStore.read(spark, s"$store/comment",
       graft.schema.GhaSchemas.curated("comment")).count() === 1)
@@ -238,13 +239,13 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
     NonAtomicRenameFs.failPathContains = "_ingest_hwm"
     NonAtomicRenameFs.failMode = "before-copy"
     intercept[java.io.IOException] {
-      GhaPipeline.incrementalRun(spark, landing, store,
+      GhaPipeline.incrementalRunWithViews(spark, landing, store, mv,
         Instant.parse("2024-02-29T03:10:00Z"), backfill)
     }
     // the dead tick left its inflight marker; data for hour 2 is in but
     // unacknowledged. The retry must roll back and re-ingest exactly once.
     NonAtomicRenameFs.reset()
-    GhaPipeline.incrementalRun(spark, landing, store,
+    GhaPipeline.incrementalRunWithViews(spark, landing, store, mv,
       Instant.parse("2024-02-29T03:10:00Z"), backfill)
     val spark2 = spark
     import spark2.implicits._
@@ -261,11 +262,11 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
     NonAtomicRenameFs.failPathContains = "_ingest_hwm"
     NonAtomicRenameFs.failMode = "after-copy"
     intercept[java.io.IOException] {
-      GhaPipeline.incrementalRun(spark, landing, store,
+      GhaPipeline.incrementalRunWithViews(spark, landing, store, mv,
         Instant.parse("2024-02-29T04:10:00Z"), backfill)
     }
     NonAtomicRenameFs.reset()
-    GhaPipeline.incrementalRun(spark, landing, store,
+    GhaPipeline.incrementalRunWithViews(spark, landing, store, mv,
       Instant.parse("2024-02-29T04:10:00Z"), backfill)
     assert(TableStore.read(spark, s"$store/comment",
         graft.schema.GhaSchemas.curated("comment"))
