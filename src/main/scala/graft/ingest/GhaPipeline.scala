@@ -19,7 +19,7 @@ import graft.time.Increments
   * There is one tick, [[incrementalRunWithViews]]: a catch-up over many
   * hours and the steady hourly run take the same path. It is two
   * fan-outs. Phase A ([[ingestWith]]): the six curated appends off one
-  * persisted parse, beside the four view folds, which read only the same
+  * persisted parse, beside the three view folds, which read only the same
   * batch frames. Phase B ([[compactTouched]]): the six per-table
   * `compactDates` calls, beside the two result-table overwrites, which
   * read only the views phase A finished. The results come from the views
@@ -47,6 +47,10 @@ object GhaPipeline {
     *  - `post-compact` then `post-results`, both once every phase B task
     *    finished (the compactions and the publish end together);
     *  - `post-hwm`.
+    *
+    * A tick whose recovery rebuilds the views also fires
+    * `post-result:commits` / `post-result:comments` there, before
+    * `post-inflight-marker`, when it publishes the rebuilt views.
     */
   @volatile private[ingest] var chaosHook: String => Unit = _ => ()
 
@@ -61,10 +65,10 @@ object GhaPipeline {
     * partition, sorted first).
     *
     * Whichever task's job reaches the unloaded parse cache first loads
-    * it. A task whose plan has a shuffle (an aggregating fold) and is
-    * planned before that happened adds a job of its own that waits on the
-    * load (AQE's table-cache stage), so the tick runs 40 to 42 jobs
-    * depending on thread timing.
+    * it. A task whose plan has a shuffle (the aggregating `repo_counts`
+    * fold) and is planned before that happened adds a job of its own that
+    * waits on the load (AQE's table-cache stage), so the tick runs 37 or
+    * 38 jobs depending on thread timing.
     */
   def ingestWith(spark: SparkSession, paths: Seq[String], storeDir: String)(
       besides: Map[String, DataFrame] => Seq[(String, () => Unit)])
@@ -113,8 +117,10 @@ object GhaPipeline {
   /** The tick's two result overwrites as named tasks (`results/commits`,
     * `results/comments`), each firing `post-result:<commits|comments>`
     * after its write. They run in phase B's fan-out, so their jobs are
-    * described `tick:compact:results/<name>`. `results` is built once, on the first task's thread (its file
-    * listings and analysis then overlap the task's siblings).
+    * described `tick:compact:results/<name>` (`tick:recover:results/<name>`
+    * when [[recover]] publishes rebuilt views). `results` is built once,
+    * on the first task's thread (its file listings and analysis then
+    * overlap the task's siblings).
     */
   private def publishTasks(storeDir: String,
       results: => (DataFrame, DataFrame)): Seq[(String, () => Unit)] = {
@@ -247,7 +253,9 @@ object GhaPipeline {
     *    cleared only after a COMPLETED rebuild: a crash between marker
     *    deletion and rebuild would otherwise leave the views silently
     *    diverged forever (the next tick would see no marker and re-fold
-    *    the replayed hour into double-counted views).
+    *    the replayed hour into double-counted views). The rebuilt views
+    *    are published to the result tables before the marker is
+    *    cleared, since a tick with no new hour publishes nothing else.
     *
     * Adoption: a store that has ingested hours (`_ingest_hwm`) but whose
     * `mvDir` holds no committed `repo_counts` (views added to an existing
@@ -327,6 +335,11 @@ object GhaPipeline {
     }
     if (readMarker(spark, stale).isDefined) {
       IncrementalViews.rebuild(spark, storeDir, mvDir, keyword)
+      // a tick that ingests nothing publishes nothing, so the rebuilt
+      // views must reach `results/*` here; before the markers change, so
+      // a crash mid-publish leaves the rebuild (and publish) pending
+      Fanout(spark, "recover", publishTasks(storeDir,
+        IncrementalViews.queryData(spark, mvDir, keyword)))
       writeMarker(spark, kwMarker, kw)
       deleteMarker(spark, stale)
     } else if (!built.contains(kw)) writeMarker(spark, kwMarker, kw)
@@ -371,7 +384,7 @@ object GhaPipeline {
     *
     * The tick is two fan-outs, each returning only after all its tasks
     * finished: phase A appends the batch to the six curated tables beside
-    * the four view folds ([[ingestWith]]); phase B bin-packs the touched
+    * the three view folds ([[ingestWith]]); phase B bin-packs the touched
     * partitions of the six tables beside the two result overwrites
     * ([[compactTouched]]). Every write of both phases sits inside the
     * `_ingest_inflight` scope, so a crash in any task leaves `_mv_stale`

@@ -36,55 +36,27 @@ object PhraseIndex {
   /** One postings row per (distinct word n-gram, doc): map-only hashing +
     * a bucket-partitioned write. `nBuckets` bounds per-search read fan-out;
     * at 100 TB make it large (e.g. 4096) so one bucket is a small fraction
-    * of the postings.
-    *
-    * On a FRESH dir this is the flat layout. On a dir that already carries
-    * generations or live append batches, a rebuild is a GENERATION SWAP
-    * (the [[VectorOps.writeIvfIndex]] contract): readers resolve the
-    * newest committed generation, so a flat re-write would be silently
-    * ignored forever — instead the new postings land under `g<N+1>/grams`
-    * and commit with a fold watermark covering every append batch present,
-    * because the rebuild indexed the CURRENT corpus and pre-rebuild
-    * appends must not union back in.
-    *
-    * Rebuilds need appender QUIESCENCE (a stronger contract than
-    * compaction's): an append racing the rebuild can land AFTER the
-    * watermark listing with the OLD (n, nBuckets) — it stays live, but
-    * its postings are bucketed mod a modulus the new searchers no longer
-    * probe (a silent recall hole, the exact mismatch `_meta` guards
-    * against between sessions). Pause the index's maintainer across a
-    * rebuild; plain compaction stays append-safe.
+    * of the postings. A rebuild over an existing index overwrites it.
     */
   def buildPhraseIndex(docs: DataFrame, dir: String, n: Int = 3,
       nBuckets: Int = 64): Unit = {
-    val spark = docs.sparkSession
-    val G = graft.store.IndexGenerations
-    val prev = G.current(spark, dir)
-    val appendIds = G.batches(spark, dir, "appends").map(_._1)
-    val fresh = prev.gen < 0 && appendIds.isEmpty
-    val tgt = if (fresh) dir else s"$dir/g${prev.gen + 1}"
-    postingsOf(docs, n, nBuckets)
+    docs.select(col("doc_id"),
+        explode(array_distinct(TextOps.ngramHashes(col("text"), n)))
+          .as("gh"))
+      .withColumn("bucket", pmod(col("gh"), lit(nBuckets)))
       .write.mode("overwrite").partitionBy("bucket")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
-        fresh.toString) // generation visibility is G.commit's _SUCCESS
-      .parquet(s"$tgt/grams")
-    if (!fresh)
-      G.commit(spark, dir, prev.gen + 1, (prev.maxFolded +: appendIds).max)
-    // meta AFTER the commit: a rebuild may CHANGE (n, nBuckets), and the
-    // root sidecar must never advertise parameters the live generation
-    // does not serve (validators racing the swap would spuriously reject)
-    writeMeta(spark, dir, n, nBuckets)
-    if (!fresh)
-      G.gc(spark, dir, prev.gen + 1, prev, Seq("appends"), Seq("grams"))
+      .parquet(s"$dir/grams")
+    // meta AFTER the postings: a rebuild may CHANGE (n, nBuckets), and the
+    // sidecar must never advertise parameters the postings do not serve
+    writeMeta(docs.sparkSession, dir, n, nBuckets)
   }
 
-  /** The index's (n, nBuckets) sidecar. Appenders, searchers and the
-    * stream maintainer each take their own n/nBuckets arguments, and a
-    * silent mismatch with the built index is a recall hole, not an error
-    * (postings land in mod-nBuckets′ buckets the searcher's mod-nBuckets
-    * partition filter prunes away) — so the build records its parameters
-    * and every later entry point validates against them. Absent sidecar
-    * (pre-existing index) skips the check.
+  /** The index's (n, nBuckets) sidecar. Searchers take their own
+    * n/nBuckets arguments, and a silent mismatch with the built index is a
+    * recall hole, not an error (postings live in mod-nBuckets′ buckets the
+    * searcher's mod-nBuckets partition filter prunes away) — so the build
+    * records its parameters and every search validates against them.
+    * Absent sidecar (pre-existing index) skips the check.
     */
   private def writeMeta(spark: SparkSession, dir: String, n: Int,
       nBuckets: Int): Unit = {
@@ -117,99 +89,9 @@ object PhraseIndex {
     }
   }
 
-  /** One batch's postings rows: (doc_id, gh, bucket) — the shared
-    * projection of [[buildPhraseIndex]] and [[phraseIndexAppend]].
-    */
-  private def postingsOf(docs: DataFrame, n: Int, nBuckets: Int): DataFrame =
-    docs.select(col("doc_id"),
-        explode(array_distinct(TextOps.ngramHashes(col("text"), n)))
-          .as("gh"))
-      .withColumn("bucket", pmod(col("gh"), lit(nBuckets)))
-
-  /** IDEMPOTENT batch-keyed append of a new doc batch to a stored phrase
-    * index — the [[Retrieval.bm25IndexAppend]] discipline: batch
-    * `batchId`'s postings land under `appends/batch=<id>/bucket=...` with
-    * OVERWRITE of that batch directory, so an at-least-once replay
-    * rewrites the same files instead of duplicating them.
-    * [[phraseSearch]] unions base + live appends (bucket stays a
-    * partition-filter level on both layouts), and because a candidate is
-    * "holds ALL phrase grams" via countDistinct over the union, a search
-    * after an append equals a from-scratch build of the union exactly.
-    * The phrase index has NO stats sidecar to maintain — gram postings
-    * are self-contained. The motivating cadence is the reference's
-    * hourly serve loop (preprocess.py:277–280): its flagship substring
-    * analytic (preprocess.py:221–237) stays queryable as hours land,
-    * without ever rebuilding the index.
-    *
-    * Precondition (the whole stored-index family's): [[buildPhraseIndex]]
-    * ran first — the readers and the compactor resolve the flat base, so
-    * an appends-only dir is not a valid index. n/nBuckets must match the
-    * build's; the `_meta` sidecar enforces this (a mismatch is a silent
-    * recall hole otherwise).
-    */
-  def phraseIndexAppend(spark: SparkSession, dir: String, batchId: Long,
-      docs: DataFrame, n: Int = 3, nBuckets: Int = 64): Unit = {
-    checkMeta(spark, dir, n, nBuckets)
-    if (docs.isEmpty) return // a file-less batch dir poisons later reads
-    postingsOf(docs, n, nBuckets)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dir/appends/batch=$batchId")
-  }
-
-  /** Fold the live append batches into a new committed generation
-    * ([[graft.store.IndexGenerations]] — the same generation-swap +
-    * one-cycle-GC-grace layout as BM25/IVF/IVF-PQ), keeping the search's
-    * read a 2-leg union forever instead of base + one dir per streamed
-    * batch. Search results are identical before and after because
-    * postings rows are disjoint across base and batches (a doc arrives
-    * whole in one batch) and the candidate test is a countDistinct over
-    * the union. Single-compactor contract; concurrent appends stay above
-    * the new watermark and remain live.
-    */
-  def compactPhraseIndex(spark: SparkSession, dir: String,
-      maxFoldRows: Long = 64L * 1024 * 1024): Unit = {
-    val G = graft.store.IndexGenerations
-    val prev = G.current(spark, dir)
-    val toFold = G.batches(spark, dir, "appends").filter(_._1 > prev.maxFolded)
-    if (toFold.isEmpty && prev.gen >= 0) return // nothing new to fold
-    val newMax = (prev.maxFolded +: toFold.map(_._1)).max
-    val cols = Seq("doc_id", "gh", "bucket")
-    val grams = {
-      val b = spark.read.parquet(prev.sub(dir, "grams")).selectExpr(cols: _*)
-      if (toFold.isEmpty) b
-      else b.unionByName(spark.read.option("basePath", s"$dir/appends")
-        .parquet(toFold.map(_._2): _*).selectExpr(cols: _*))
-    }
-    // one shuffle keyed by bucket: every bucket lands whole in one task,
-    // so each bucket dir collapses to a single file — UNLESS the bucket
-    // exceeds maxFoldRows, where it splits into sub-files instead of
-    // putting 1/nBuckets of a 100 TB posting set in one task
-    // ([[graft.store.IndexGenerations.boundedFold]]; sub-key varies
-    // within a bucket — gh itself is constant mod nBuckets)
-    G.boundedFold(grams, "bucket", xxhash64(col("doc_id"), col("gh")),
-        maxFoldRows)
-      .write.mode("overwrite").partitionBy("bucket")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$dir/g${prev.gen + 1}/grams")
-    G.commit(spark, dir, prev.gen + 1, newMax)
-    G.gc(spark, dir, prev.gen + 1, prev, Seq("appends"), Seq("grams"))
-  }
-
-  /** The postings layer a search reads: the current generation's base ∪
-    * the live append batches (batches at or below the fold watermark are
-    * already IN the base and are excluded — the replay/GC-grace
-    * semantics of [[graft.store.IndexGenerations]]).
-    */
-  private def readGrams(spark: SparkSession, dir: String): DataFrame = {
-    val G = graft.store.IndexGenerations
-    val base = G.current(spark, dir)
-    val b = spark.read.parquet(base.sub(dir, "grams"))
-      .selectExpr("doc_id", "gh", "bucket")
-    val live = G.liveBatches(spark, dir, "appends", base)
-    if (live.isEmpty) b
-    else b.unionByName(spark.read.option("basePath", s"$dir/appends")
-      .parquet(live: _*).selectExpr("doc_id", "gh", "bucket"))
-  }
+  /** The postings layer a search reads. */
+  private def readGrams(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/grams").selectExpr("doc_id", "gh", "bucket")
 
   /** The phrase's rolling n-gram hashes, derived with the SAME native
     * kernel the build used (driver-side, one tiny local projection — hash
@@ -238,7 +120,7 @@ object PhraseIndex {
     val buckets = grams.map(g => ((g % nBuckets) + nBuckets) % nBuckets)
       .distinct
     val candidates = readGrams(spark, dir)
-      .filter(col("bucket").isin(buckets: _*)) // partition pruning, both legs
+      .filter(col("bucket").isin(buckets: _*)) // partition pruning
       .filter(col("gh").isin(grams: _*))
       .groupBy("doc_id").agg(countDistinct("gh").as("__nh"))
       .filter(col("__nh") === grams.size)

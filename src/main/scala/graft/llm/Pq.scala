@@ -303,104 +303,32 @@ object Pq {
     */
   def writeIvfPqIndex(index: IvfPqIndex, dir: String): Unit = {
     import index.assignments.sparkSession.implicits._
-    val spark = index.assignments.sparkSession
-    val G = graft.store.IndexGenerations
-    val prev = G.current(spark, dir)
-    val appendIds = G.batches(spark, dir, "appends").map(_._1)
-    val fresh = prev.gen < 0 && appendIds.isEmpty
-    // a rebuild over a live (generational or appended-to) index is a
-    // generation swap: both quantizers may have retrained, so the commit's
-    // fold watermark covers every append batch present — the rebuilt index
-    // REPLACES history. Appender QUIESCENCE required across a rebuild,
-    // per [[VectorOps.writeIvfIndex]] (a racing append would stay live
-    // with codes from the superseded quantizers)
-    val tgt = if (fresh) dir else s"$dir/g${prev.gen + 1}"
     index.assignments.write.mode("overwrite").partitionBy("cell")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/assignments")
+      .parquet(s"$dir/assignments")
     index.centroids.toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/centroids")
+      .parquet(s"$dir/centroids")
     Seq((index.model.m, index.model.dsub, index.model.ksub,
       index.model.flat))
       .toDF("m", "dsub", "ksub", "flat")
       .coalesce(1).write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/codebooks")
-    if (!fresh) {
-      G.commit(spark, dir, prev.gen + 1, (prev.maxFolded +: appendIds).max)
-      G.gc(spark, dir, prev.gen + 1, prev, Seq("appends"),
-        Seq("assignments", "centroids", "codebooks"))
-    }
+      .parquet(s"$dir/codebooks")
   }
 
   def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): IvfPqIndex = {
     import spark.implicits._
-    val G = graft.store.IndexGenerations
-    val b = G.current(spark, dir)
-    val cents = spark.read.parquet(b.sub(dir, "centroids"))
+    val cents = spark.read.parquet(s"$dir/centroids")
       .as[(Int, Seq[Double])].collect().toSeq.sortBy(_._1)
-    val mdl = spark.read.parquet(b.sub(dir, "codebooks"))
+    val mdl = spark.read.parquet(s"$dir/codebooks")
       .as[(Int, Int, Int, Seq[Double])].head()
-    val base = spark.read.parquet(b.sub(dir, "assignments"))
+    val assigned = spark.read.parquet(s"$dir/assignments")
       .select(col("neighbor_id"), col("codes"),
         col("cell").cast("int").as("cell"))
-    // streaming appends (ivfPqAppendBatch) live under appends/batch=N/
-    // cell=M; `cell` stays a partition-filter level on both layouts. Only
-    // batches above the generation's fold watermark union in.
-    val live = G.liveBatches(spark, dir, "appends", b)
-    val assigned = if (live.isEmpty) base else {
-      base.unionByName(spark.read.option("basePath", s"$dir/appends")
-        .parquet(live: _*)
-        .select(col("neighbor_id"), col("codes"),
-          col("cell").cast("int").as("cell")))
-    }
     IvfPqIndex(cents, PqModel(mdl._1, mdl._2, mdl._3, mdl._4), assigned)
-  }
-
-  /** Fold live append batches into a new committed generation — the
-    * IVF-PQ twin of [[VectorOps.compactIvfIndex]]: quantizers are FIXED
-    * under appends, so the fold rewrites the code table only (centroids +
-    * codebooks copy into the generation); query results are bit-identical
-    * before and after (law-tested). Same visibility/GC/single-compactor
-    * contract as [[graft.store.IndexGenerations]].
-    */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxFoldRows: Long = 64L * 1024 * 1024): Unit = {
-    val G = graft.store.IndexGenerations
-    val prev = G.current(spark, dir)
-    val toFold = G.batches(spark, dir, "appends").filter(_._1 > prev.maxFolded)
-    if (toFold.isEmpty && prev.gen >= 0) return
-    val assigned = {
-      val b = spark.read.parquet(prev.sub(dir, "assignments"))
-        .select(col("neighbor_id"), col("codes"),
-          col("cell").cast("int").as("cell"))
-      if (toFold.isEmpty) b
-      else b.unionByName(spark.read.option("basePath", s"$dir/appends")
-        .parquet(toFold.map(_._2): _*)
-        .select(col("neighbor_id"), col("codes"),
-          col("cell").cast("int").as("cell")))
-    }
-    val tgt = s"$dir/g${prev.gen + 1}"
-    // fat cells split into bounded sub-files instead of one 1/nCells-of-
-    // the-corpus fold task ([[graft.store.IndexGenerations.boundedFold]])
-    graft.store.IndexGenerations.boundedFold(assigned, "cell",
-        xxhash64(col("neighbor_id")), maxFoldRows)
-      .write.mode("overwrite").partitionBy("cell")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/assignments")
-    Seq("centroids", "codebooks").foreach { sub =>
-      spark.read.parquet(prev.sub(dir, sub))
-        .coalesce(1).write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(s"$tgt/$sub")
-    }
-    G.commit(spark, dir, prev.gen + 1,
-      (prev.maxFolded +: toFold.map(_._1)).max)
-    G.gc(spark, dir, prev.gen + 1, prev, Seq("appends"),
-      Seq("assignments", "centroids", "codebooks"))
   }
 
   /** Probe + ADC + exact rerank against a built (possibly store-loaded)
@@ -538,34 +466,15 @@ object Pq {
     * the cell partitions. With both quantizers fixed, post-append query
     * results EQUAL a from-scratch encode of the union (law-tested);
     * recall drifts only as data drifts from the trained quantizers —
-    * the retrain trigger is a rebuild + [[writeIvfPqIndex]] generation
-    * swap. Delivery semantics are the caller's, as with ivfAppend.
+    * the retrain trigger is a rebuild + [[writeIvfPqIndex]]. Delivery
+    * semantics are the caller's, as with ivfAppend.
     */
   def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
       newVectors: DataFrame): Unit = {
     val idx = readIvfPqIndex(spark, dir)
-    // lands in the CURRENT generation's code table (additive new files)
-    val tgt = graft.store.IndexGenerations.current(spark, dir)
-      .sub(dir, "assignments")
+    // additive new files in the code table's cell dirs
     encodeAssign(newVectors, idx.centroids, idx.model)
-      .write.mode("append").partitionBy("cell").parquet(tgt)
-  }
-
-  /** IDEMPOTENT batch-keyed append for streaming IVF-PQ maintenance —
-    * [[VectorOps.ivfAppendBatch]]'s replay discipline on the code store:
-    * batch `batchId`'s encoded assignments OVERWRITE their own
-    * `appends/batch=<id>` directory, so a foreachBatch crash-replay
-    * rewrites the same files instead of duplicating index rows.
-    */
-  def ivfPqAppendBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-      batchId: Long, newVectors: DataFrame): Unit = {
-    // an empty micro-batch must not write a file-less batch directory —
-    // parquet schema inference over it would poison later index reads
-    if (newVectors.isEmpty) return
-    val idx = readIvfPqIndex(spark, dir)
-    encodeAssign(newVectors, idx.centroids, idx.model)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/appends/batch=$batchId")
+      .write.mode("append").partitionBy("cell").parquet(s"$dir/assignments")
   }
 
   /** Session-scoped stored IVF-PQ demo indexes, keyed by sfDir — built

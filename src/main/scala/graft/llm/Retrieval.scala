@@ -122,13 +122,12 @@ object Retrieval {
     *    BY `bucket = pmod(th, nBuckets)`. Terms ride as 8-byte hashes,
     *    never strings (hash-grain ≡ string-grain up to 2⁻⁶⁴ — the
     *    engine-wide accepted identity, same as SubstringDedup).
-    *  - `stats/` — one row (n, dl_sum). ADDITIVE components (not avgdl),
-    *    so incremental appends compose by summing rows.
+    *  - `stats/` — one row (n, dl_sum).
     *
     * There is deliberately NO stored df sidecar: a term's corpus-wide df
     * IS the row count of its probed postings (the same identity the
     * ad-hoc [[bm25]] exploits), so the query derives df from data it
-    * already read — one less structure to maintain under appends.
+    * already read — one less structure to build and store.
     *
     * The build is one tokenize + one (th, doc) partial-agg shuffle —
     * the same work the ad-hoc form pays PER BATCH, amortized over every
@@ -146,129 +145,6 @@ object Retrieval {
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
     base.agg(Tables.cnt.as("n"), sum(size(col("ws"))).as("dl_sum"))
       .write.mode("overwrite").parquet(s"$dir/stats")
-  }
-
-  /** IDEMPOTENT batch-keyed append of a new doc batch to a stored BM25
-    * index — the [[VectorOps.ivfAppendBatch]] discipline: batch
-    * `batchId`'s postings land under `appends/batch=<id>/bucket=...` and
-    * its stats row under `stats_appends/batch=<id>/`, both with OVERWRITE
-    * of that batch directory, so an at-least-once replay rewrites the
-    * same files instead of duplicating them. [[bm25Stored]] unions base +
-    * appends (bucket stays a partition-filter level on both layouts) and
-    * SUMS the stats rows, so a query after an append equals a
-    * from-scratch build of the union bit-for-bit (law-tested) — df needs
-    * no maintenance at all (derived from probed postings). Caller
-    * contract: a doc's text arrives whole in ONE batch (re-sending a doc
-    * double-counts it, same as ivfAppend).
-    */
-  def bm25IndexAppend(spark: SparkSession, dir: String, batchId: Long,
-      docs: DataFrame, nBuckets: Int = 64): Unit = {
-    if (docs.isEmpty) return // a file-less batch dir poisons later reads
-    val base = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
-    base
-      .select(col("doc_id"), size(col("ws")).as("dl"),
-        explode(col("ws")).as("term"))
-      .groupBy(xxhash64(col("term")).as("th"), col("doc_id"))
-      .agg(Tables.cnt.as("tf"), first(col("dl")).as("dl"))
-      .withColumn("bucket", pmod(col("th"), lit(nBuckets)))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dir/appends/batch=$batchId")
-    base.agg(Tables.cnt.as("n"), sum(size(col("ws"))).as("dl_sum"))
-      .write.mode("overwrite").parquet(s"$dir/stats_appends/batch=$batchId")
-  }
-
-  /** One logical layer of the stored index (postings or stats): the
-    * CURRENT generation's base ∪ the live append batches — batches at or
-    * below the generation's fold watermark are already IN the base and are
-    * excluded, so a folded-but-not-yet-GC'd dir (or one resurrected by an
-    * at-least-once replay of a folded batch) never double-counts
-    * ([[graft.store.IndexGenerations]]).
-    */
-  private def readLayer(spark: SparkSession, dir: String,
-      base: graft.store.IndexGenerations.Base, sub: String,
-      appendsSub: String, cols: Seq[String]): DataFrame = {
-    val baseDf = spark.read.parquet(base.sub(dir, sub)).selectExpr(cols: _*)
-    val live = graft.store.IndexGenerations
-      .liveBatches(spark, dir, appendsSub, base)
-    if (live.isEmpty) baseDf
-    else baseDf.unionByName(spark.read
-      .option("basePath", s"$dir/$appendsSub").parquet(live: _*)
-      .selectExpr(cols: _*))
-  }
-
-  /** Fold the live append batches into a new committed generation — the
-    * maintenance step that keeps [[bm25Stored]]'s read a 2-leg union
-    * forever instead of base + one dir per streamed batch (at the
-    * reference's hourly cadence that is 8,760 legs/year of file listing
-    * and footer reads). Generation-swap visibility: the fold writes to
-    * `g<N+1>/` and becomes readable only at the `_SUCCESS` commit; GC then
-    * drops what the PREVIOUS generation had already folded (one full
-    * cycle of grace for in-flight readers). Query results are
-    * bit-identical before and after (law-tested) because postings rows
-    * are disjoint across base and batches (a doc arrives whole in one
-    * batch) and the stats rows SUM — the same identities the live-union
-    * read path relies on. Single-compactor contract per
-    * [[graft.store.IndexGenerations]]; concurrent appends stay above the
-    * new watermark and remain live.
-    */
-  def compactBm25Index(spark: SparkSession, dir: String,
-      maxFoldRows: Long = 64L * 1024 * 1024): Unit = {
-    val G = graft.store.IndexGenerations
-    val prev = G.current(spark, dir)
-    val pAll = G.batches(spark, dir, "appends").filter(_._1 > prev.maxFolded)
-    val sAll = G.batches(spark, dir, "stats_appends")
-      .filter(_._1 > prev.maxFolded)
-    // BM25 is the one two-write appender (postings THEN stats), so a crash
-    // between the writes leaves a HALF-LANDED batch: one side committed,
-    // the other absent. Folding the visible half and advancing the
-    // watermark past its id would exclude the replayed other half forever
-    // (ids <= watermark mean "already in the base"). A batch is therefore
-    // foldable only when BOTH sides committed AND no half-landed batch
-    // sits at or below it — the watermark never crosses a half-landed id;
-    // the at-least-once replay completes that batch and the NEXT
-    // compaction folds it (IndexCompactionSpec pins both directions).
-    val pIds = pAll.map(_._1).toSet
-    val sIds = sAll.map(_._1).toSet
-    val half = (pIds union sIds) diff (pIds intersect sIds)
-    val cap = if (half.isEmpty) Long.MaxValue else half.min - 1
-    val toFold = pAll.filter(_._1 <= cap)
-    if (toFold.isEmpty && prev.gen >= 0) return // nothing new to fold
-    val statsFold = sAll.filter(_._1 <= cap)
-    val newMax = (prev.maxFolded +: toFold.map(_._1)).max
-    val tgt = s"$dir/g${prev.gen + 1}"
-    val pCols = Seq("th", "doc_id", "tf", "dl", "bucket")
-    val postings = {
-      val b = spark.read.parquet(prev.sub(dir, "postings"))
-        .selectExpr(pCols: _*)
-      if (toFold.isEmpty) b
-      else b.unionByName(spark.read.option("basePath", s"$dir/appends")
-        .parquet(toFold.map(_._2): _*).selectExpr(pCols: _*))
-    }
-    // one shuffle keyed by bucket: every bucket lands whole in one task,
-    // so each bucket dir collapses to a single file — fat buckets split
-    // into bounded sub-files instead ([[graft.store.IndexGenerations
-    // .boundedFold]]; th is constant mod nBuckets within a bucket, so the
-    // sub-key hashes (doc_id, th))
-    graft.store.IndexGenerations.boundedFold(postings, "bucket",
-        xxhash64(col("doc_id"), col("th")), maxFoldRows)
-      .write.mode("overwrite").partitionBy("bucket")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/postings")
-    val sCols = Seq("n", "dl_sum")
-    val st = {
-      val b = spark.read.parquet(prev.sub(dir, "stats")).selectExpr(sCols: _*)
-      if (statsFold.isEmpty) b
-      else b.unionByName(spark.read
-        .option("basePath", s"$dir/stats_appends")
-        .parquet(statsFold.map(_._2): _*).selectExpr(sCols: _*))
-    }
-    st.agg(sum(col("n")).as("n"), sum(col("dl_sum")).as("dl_sum"))
-      .coalesce(1).write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/stats")
-    G.commit(spark, dir, prev.gen + 1, newMax)
-    G.gc(spark, dir, prev.gen + 1, prev, Seq("appends", "stats_appends"),
-      Seq("postings", "stats"))
   }
 
   /** BM25 top-`k` per query through the stored index — no corpus scan.
@@ -292,11 +168,10 @@ object Retrieval {
     // bounded query batch — it is what compiles into partition filters
     val ths = qterms.select("th").distinct().collect().map(_.getLong(0))
     val buckets = ths.map(h => ((h % nBuckets) + nBuckets) % nBuckets).distinct
-    // the bucket filter pushes through the base∪appends union to BOTH
-    // parquet scans as a partition filter (plan-asserted in RetrievalSpec)
-    val base = graft.store.IndexGenerations.current(spark, dir)
-    val tf = readLayer(spark, dir, base, "postings", "appends",
-        Seq("th", "doc_id", "tf", "dl", "bucket"))
+    // the bucket filter reaches the parquet scan as a partition filter
+    // (plan-asserted in RetrievalSpec)
+    val tf = spark.read.parquet(s"$dir/postings")
+      .select("th", "doc_id", "tf", "dl", "bucket")
       .filter(col("bucket").isin(buckets.toSeq: _*)) // partition pruning
       .filter(col("th").isin(ths.toSeq: _*))
     // NOT snapped (unlike the ad-hoc form's corpus-scan tf): both consumers
@@ -305,12 +180,10 @@ object Retrieval {
     // executed plan (the RetrievalSpec scale-law assert)
     // df is DERIVED from the probed postings (a term's matched-posting
     // count IS its corpus-wide df — the ad-hoc form's identity); no
-    // stored sidecar to maintain under appends
+    // stored sidecar
     val dfs = tf.groupBy("th").agg(Tables.cnt.as("df"))
-    // stats rows (base + any appends) SUM into the one true corpus row;
     // the global Aggregate is PROVABLY single-row (the PlanLint shape)
-    val stats = readLayer(spark, dir, base, "stats", "stats_appends",
-        Seq("n", "dl_sum"))
+    val stats = spark.read.parquet(s"$dir/stats")
       .agg(sum(col("n")).as("n"),
         (sum(col("dl_sum")) / sum(col("n"))).as("avgdl"))
     val idf = log(lit(1.0) +

@@ -160,50 +160,6 @@ object TextOps {
     regexp_replace(regexp_replace(text, lit(EmailRe), lit("<EMAIL>")),
       lit(UrlRe), lit("<URL>"))
 
-  /** U∅ custom aggregate (SURVEY.md §2.10): per-group MinHash-union
-    * signature as a typed `Aggregator` — the elementwise min of member
-    * signatures IS the minhash signature of the union of the members'
-    * shingle sets, so group-level signatures compose from row-level ones
-    * with a fixed-size buffer (nPerm longs, associative + commutative:
-    * partial-aggregates map-side like any sum).
-    *
-    * Use case: composing STORED per-doc/per-day signatures into
-    * group-level ones (the incremental-view shape — same contract as
-    * `hll_union_agg`/`kllMergeAgg`), e.g. estimating shingle-set Jaccard
-    * between whole sources from an existing signature table without ever
-    * re-shingling. The in-query contamination path no longer uses it —
-    * [[perSourceSig]] computes the identical values from single-hash
-    * signatures inside whole-stage codegen (TextOpsSpec pins the
-    * equality) — but stored-signature composition is exactly where the
-    * aggregator form remains the right tool: there the per-doc signature
-    * IS the input, and min-union is the only distributable combine.
-    */
-  class MinHashUnionAgg(nPerm: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (String, Seq[Long]), Array[Long], Array[Long]] {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    override def zero: Array[Long] = Array.fill(nPerm)(Long.MaxValue)
-    override def reduce(b: Array[Long], row: (String, Seq[Long])): Array[Long] = {
-      val sig = row._2
-      var i = 0
-      while (i < nPerm && i < sig.size) {
-        if (sig(i) < b(i)) b(i) = sig(i)
-        i += 1
-      }
-      b
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < nPerm) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-      a
-    }
-    override def finish(b: Array[Long]): Array[Long] = b
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      ExpressionEncoder()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      ExpressionEncoder()
-  }
-
   /** Cross-source contamination: estimated Jaccard between each pair of
     * sources' full shingle-union sets, from composed group signatures.
     * Signature construction mirrors `VectorOps.minhashPairsNative` (shared
@@ -237,7 +193,7 @@ object TextOps {
   /** Per-source minhash signature from a DISTINCT `(source, h)` frame.
     *
     * Identical values to the per-doc signature union (the
-    * [[VectorOps.sigColumn]] + [[MinHashUnionAgg]] form — min is
+    * [[VectorOps.sigColumn]] + typed min-union aggregator form — min is
     * associative, so the min over a source's distinct hash set equals the
     * elementwise min over its docs' signatures; drift-guarded in
     * TextOpsSpec), but computed as single-hash signatures + `nPerm` plain
@@ -521,7 +477,7 @@ object TextOps {
   def qualityRules(df: DataFrame, textCol: String = "text"): DataFrame = {
     val s = qualitySignals(textCol)
     df.select(col("doc_id") +: s.map { case (n, c) => c.as(n) }: _*)
-      .withColumn("keep", keepPredicate(name => col(name)))
+      .withColumn("keep", keepPredicate)
   }
 
   /** The rounded per-doc signal expressions behind [[qualityRules]]. */
@@ -568,23 +524,13 @@ object TextOps {
       .agg(round(max(col("c")).cast("double") / sum(col("c")), 4)
         .as("top_ngram_frac"))
 
-  /** The gate verdict over named signals (columns or inline expressions). */
-  private def keepPredicate(sig: String => Column): Column =
-    sig("n_words").between(30, 100000) &&
-    sig("mean_word_len").between(2, 12) &&
-    sig("dup_word_frac") <= 0.9 &&
-    sig("dup_trigram_frac") <= 0.35 &&
-    sig("symbol_frac") <= 0.05
-
-  /** [[qualityRules]]'s keep verdict as ONE boolean column — a stateless,
-    * schema-preserving filter usable anywhere a `Column` is (including
-    * Structured Streaming, where the select-shaped [[qualityRules]] would
-    * drop the caller's event-time/payload columns).
-    */
-  def qualityKeep(textCol: String = "text"): Column = {
-    val s = qualitySignals(textCol).toMap
-    keepPredicate(s)
-  }
+  /** The gate verdict over the signal columns [[qualityRules]] selects. */
+  private def keepPredicate: Column =
+    col("n_words").between(30, 100000) &&
+    col("mean_word_len").between(2, 12) &&
+    col("dup_word_frac") <= 0.9 &&
+    col("dup_trigram_frac") <= 0.35 &&
+    col("symbol_frac") <= 0.05
 
   /** L1 at paragraph grain: corpus-level exact chunk dedup (C4/CCNet-style
     * boilerplate removal one level below whole-document dedup). Documents

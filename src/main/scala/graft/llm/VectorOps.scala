@@ -615,112 +615,29 @@ object VectorOps {
   }
 
   /** Persist an index: assignments partitioned by cell (probing = partition
-    * pruning), centroids as one tiny parquet. On a FRESH dir this is the
-    * flat layout; on a dir that already carries generations or streaming
-    * appends, a rebuild is a GENERATION SWAP ([[graft.store
-    * .IndexGenerations]]): the new assignments+centroids land under
-    * `g<N+1>/` and commit atomically with a fold watermark covering every
-    * append batch present — the rebuilt index REPLACES history, so
-    * pre-rebuild appends must not union back in — while in-flight readers
-    * keep the generation they resolved.
-    *
-    * Rebuilds need appender QUIESCENCE (stronger than compaction's
-    * append-safety): an append racing the rebuild can land after the
-    * watermark listing, assigned with the OLD centroids — it stays live
-    * but probes against the retrained centroids no longer find it in the
-    * right cells (silent recall loss). Pause the index's maintainer
-    * across a rebuild ([[PhraseIndex.buildPhraseIndex]] has the same
-    * contract); plain compaction stays append-safe.
+    * pruning), centroids as one tiny parquet. A rebuild over an existing
+    * index overwrites both.
     */
   def writeIvfIndex(index: IvfIndex, dir: String): Unit = {
     import index.assignments.sparkSession.implicits._
-    val spark = index.assignments.sparkSession
-    val G = graft.store.IndexGenerations
-    val prev = G.current(spark, dir)
-    val appendIds = G.batches(spark, dir, "appends").map(_._1)
-    val fresh = prev.gen < 0 && appendIds.isEmpty
-    val tgt = if (fresh) dir else s"$dir/g${prev.gen + 1}"
     index.assignments.write.mode("overwrite").partitionBy("cell")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/assignments")
+      .parquet(s"$dir/assignments")
     index.centroids.toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/centroids")
-    if (!fresh) {
-      G.commit(spark, dir, prev.gen + 1,
-        (prev.maxFolded +: appendIds).max)
-      G.gc(spark, dir, prev.gen + 1, prev, Seq("appends"),
-        Seq("assignments", "centroids"))
-    }
+      .parquet(s"$dir/centroids")
   }
 
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): IvfIndex = {
     import spark.implicits._
-    val G = graft.store.IndexGenerations
-    val b = G.current(spark, dir)
-    val cents = spark.read.parquet(b.sub(dir, "centroids"))
+    val cents = spark.read.parquet(s"$dir/centroids")
       .as[(Int, Seq[Double])].collect().toSeq.sortBy(_._1)
     // normalize the partition column's position/type back to the built shape
-    val base = spark.read.parquet(b.sub(dir, "assignments"))
+    val assigned = spark.read.parquet(s"$dir/assignments")
       .select(col("neighbor_id"), col("tv"), col("cell").cast("int").as("cell"))
-    // streaming appends (ivfAppendBatch) live under appends/batch=N/cell=M;
-    // `cell` remains a partition filter level there too, so probes prune
-    // files on both layouts. Only batches ABOVE the generation's fold
-    // watermark union in — folded dirs awaiting GC (or resurrected by an
-    // at-least-once replay) never double-count.
-    val live = G.liveBatches(spark, dir, "appends", b)
-    val assigned = if (live.isEmpty) base else {
-      base.unionByName(spark.read.option("basePath", s"$dir/appends")
-        .parquet(live: _*)
-        .select(col("neighbor_id"), col("tv"),
-          col("cell").cast("int").as("cell")))
-    }
     IvfIndex(cents, assigned)
-  }
-
-  /** Fold live append batches into a new committed generation — bounds
-    * [[readIvfIndex]]'s union width under sustained [[ivfAppendBatch]]
-    * maintenance (without it, every micro-batch is a read-time union leg
-    * forever). Centroids are FIXED under appends, so the fold rewrites
-    * assignments only (centroids copy into the generation for
-    * self-contained reads); query results are bit-identical before and
-    * after (law-tested). Same visibility/GC/single-compactor contract as
-    * [[Retrieval.compactBm25Index]].
-    */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxFoldRows: Long = 64L * 1024 * 1024): Unit = {
-    val G = graft.store.IndexGenerations
-    val prev = G.current(spark, dir)
-    val toFold = G.batches(spark, dir, "appends").filter(_._1 > prev.maxFolded)
-    if (toFold.isEmpty && prev.gen >= 0) return
-    val assigned = {
-      val b = spark.read.parquet(prev.sub(dir, "assignments"))
-        .select(col("neighbor_id"), col("tv"),
-          col("cell").cast("int").as("cell"))
-      if (toFold.isEmpty) b
-      else b.unionByName(spark.read.option("basePath", s"$dir/appends")
-        .parquet(toFold.map(_._2): _*)
-        .select(col("neighbor_id"), col("tv"),
-          col("cell").cast("int").as("cell")))
-    }
-    val tgt = s"$dir/g${prev.gen + 1}"
-    // keyed by cell: each cell dir collapses to one file; fat cells split
-    // into bounded sub-files ([[graft.store.IndexGenerations.boundedFold]])
-    graft.store.IndexGenerations.boundedFold(assigned, "cell",
-        xxhash64(col("neighbor_id")), maxFoldRows)
-      .write.mode("overwrite").partitionBy("cell")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/assignments")
-    spark.read.parquet(prev.sub(dir, "centroids"))
-      .coalesce(1).write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(s"$tgt/centroids")
-    G.commit(spark, dir, prev.gen + 1,
-      (prev.maxFolded +: toFold.map(_._1)).max)
-    G.gc(spark, dir, prev.gen + 1, prev, Seq("appends"),
-      Seq("assignments", "centroids"))
   }
 
   /** L18+: incremental maintenance of a stored IVF index — add a vector
@@ -731,47 +648,21 @@ object VectorOps {
     * and new files alike. With centroids held fixed, query results after an
     * append EQUAL a from-scratch assignment of the union (law-tested) —
     * recall drifts only as the DATA drifts from the trained quantizer,
-    * which is the caller's retrain trigger (rebuild + writeIvfIndex, a
-    * generation swap at the store layer). Delivery semantics are the
-    * caller's: appending the same batch twice duplicates it (wrap in the
-    * TableStore tick markers for exactly-once).
+    * which is the caller's retrain trigger (rebuild + writeIvfIndex).
+    * Delivery semantics are the caller's: appending the same batch twice
+    * duplicates it (wrap in the TableStore tick markers for exactly-once).
     */
   def ivfAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
       newVectors: DataFrame): Unit = {
     val idx = readIvfIndex(spark, dir)
     val (flat, dim) = flatCents(idx.centroids)
     val v = toDouble(col("embedding"))
-    // lands in the CURRENT generation's assignments (new files in existing
-    // cell dirs — additive, so in-flight readers are unaffected)
-    val tgt = graft.store.IndexGenerations.current(spark, dir)
-      .sub(dir, "assignments")
+    // new files in existing cell dirs — additive, so in-flight readers are
+    // unaffected
     newVectors.select(col("vec_id").as("neighbor_id"), v.as("tv"),
       graft.functions.GraftFunctions
         .nearestCentroid(v, flat, dim, euclidean = false).as("cell"))
-      .write.mode("append").partitionBy("cell").parquet(tgt)
-  }
-
-  /** IDEMPOTENT batch-keyed append for streaming index maintenance: batch
-    * `batchId`'s assignments land under `appends/batch=<id>/cell=...` with
-    * OVERWRITE of that batch directory, so a foreachBatch replay after a
-    * crash rewrites the same files instead of duplicating them —
-    * exactly-once index contents from an at-least-once sink, the same
-    * replay discipline as the ingest tick markers. [[readIvfIndex]] unions
-    * the appends in; cell stays a partition filter level on both layouts.
-    */
-  def ivfAppendBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-      batchId: Long, newVectors: DataFrame): Unit = {
-    // an empty micro-batch must not write a file-less batch directory —
-    // parquet schema inference over it would poison every later index read
-    if (newVectors.isEmpty) return
-    val idx = readIvfIndex(spark, dir)
-    val (flat, dim) = flatCents(idx.centroids)
-    val v = toDouble(col("embedding"))
-    newVectors.select(col("vec_id").as("neighbor_id"), v.as("tv"),
-      graft.functions.GraftFunctions
-        .nearestCentroid(v, flat, dim, euclidean = false).as("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/appends/batch=$batchId")
+      .write.mode("append").partitionBy("cell").parquet(s"$dir/assignments")
   }
 
   /** Native signed-random-projection LSH for cosine near-dup pairs — pure

@@ -145,11 +145,11 @@ object Relational {
     // Unlike approx_count_distinct's opaque internal state, hll_sketch_agg
     // emits a portable binary that composes across ticks/partitions with
     // hll_union_agg — the building block of incremental distinct views
-    // (`IncrementalViews.maintainDistinctWatchers`). The raw estimate is
-    // engine-defined, so the oracle pins the LAW instead: the estimate must
-    // land within 5% of the exact distinct (trivially true on the oracle
-    // side, true on the Spark side only if the sketch math is right — the
-    // same drift-proof boolean-law pattern as q_quantize_embed).
+    // (fold each batch's per-key sketches into the stored ones). The raw
+    // estimate is engine-defined, so the oracle pins the LAW instead: the
+    // estimate must land within 5% of the exact distinct (trivially true on
+    // the oracle side, true on the Spark side only if the sketch math is
+    // right — the same drift-proof boolean-law pattern as q_quantize_embed).
     Q("q_distinct_sketch", Some(
       """SELECT event_type,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS exact_n,

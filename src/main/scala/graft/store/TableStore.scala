@@ -219,7 +219,7 @@ object TableStore {
 
   /** Test hook: runs after a generation writer finishes its staged data
     * write and before it enters the commit critical section — the window
-    * concurrent appends/commits land in. Production no-op.
+    * concurrent appends and commits land in. Production no-op.
     */
   private[store] var beforeCommitHook: () => Unit = () => ()
 
@@ -851,43 +851,27 @@ object TableStore {
   def transactVersioned(spark: SparkSession, dir: String,
       partitionCols: Seq[String] = Nil,
       retries: Int = 10,
-      retainGenerations: Int = 2)(compute: => DataFrame): Unit =
-    transactVersionedOpt(spark, dir, partitionCols, retries,
-      retainGenerations)(Some(compute))
-
-  /** [[transactVersioned]] whose body may ABORT: returning None commits
-    * nothing and ends the transaction (the replay-skip shape the
-    * incremental-view maintainers need — "this batch is already folded"
-    * must be re-decided against the CURRENT generation on every retry,
-    * not once against a stale read). Returns true iff a commit happened.
-    */
-  def transactVersionedOpt(spark: SparkSession, dir: String,
-      partitionCols: Seq[String] = Nil,
-      retries: Int = 10,
-      retainGenerations: Int = 2)(compute: => Option[DataFrame]): Boolean = {
+      retainGenerations: Int = 2)(compute: => DataFrame): Unit = {
     var attempt = 0
-    while (true) {
+    var committed = false
+    while (!committed) {
       val base = currentGenNumber(spark, dir)
-      compute match {
-        case None => return false
-        case Some(next) =>
-          try {
-            overwriteVersioned(next, dir, partitionCols,
-              retainGenerations = retainGenerations, expectedGen = base)
-            return true
-          } catch {
-            case e: ConcurrentWriteException =>
-              attempt += 1
-              if (attempt > retries) throw e
-              // bounded backoff with jitter: the winner's commit section is
-              // milliseconds, but its data write (which holds the claim) can
-              // be long — wait out claims, not just commits
-              Thread.sleep(math.min(2000L, 50L << math.min(attempt, 5)) +
-                scala.util.Random.nextInt(50))
-          }
+      val next = compute
+      try {
+        overwriteVersioned(next, dir, partitionCols,
+          retainGenerations = retainGenerations, expectedGen = base)
+        committed = true
+      } catch {
+        case e: ConcurrentWriteException =>
+          attempt += 1
+          if (attempt > retries) throw e
+          // bounded backoff with jitter: the winner's commit section is
+          // milliseconds, but its data write (which holds the claim) can
+          // be long — wait out claims, not just commits
+          Thread.sleep(math.min(2000L, 50L << math.min(attempt, 5)) +
+            scala.util.Random.nextInt(50))
       }
     }
-    false // unreachable
   }
 
   def read(spark: SparkSession, dir: String): DataFrame =

@@ -9,12 +9,12 @@ import graft.store.TableStore
 /** Chaos sweep over the continuous pipeline (the round-7 verdict's item 6):
   * for EVERY named crash point inside a tick — after the inflight marker,
   * before the first fan-out, after each of the six curated-table appends
-  * and each of the four view folds, after that fan-out, after each
+  * and each of the three view folds, after that fan-out, after each
   * table's compaction and each result overwrite, after the second
   * fan-out (`post-compact`, `post-results`), after the hwm — kill tick 2
   * of a 3-tick run at that point, resume, and prove the final store,
   * result tables, and views are CONTENT-IDENTICAL to a never-crashed
-  * 3-tick run. One golden run, twenty-four deaths, twenty-four
+  * 3-tick run. One golden run, twenty-three deaths, twenty-three
   * equivalence proofs — the exactly-once claim as a sweep instead of a
   * single hand-picked crash (ContinuousPipelineSpec keeps the original
   * worst-point case).
@@ -124,8 +124,7 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   private val tables = graft.schema.GhaSchemas.tableNames
-  private val views = Seq("repo_counts", "watcher_sketches", "kw_commits",
-    "kw_comments")
+  private val views = Seq("repo_counts", "kw_commits", "kw_comments")
   /** The tasks of the two fan-outs, by their chaos points. */
   private val phaseA =
     tables.map(t => s"post-append:$t") ++ views.map(v => s"post-view:$v")

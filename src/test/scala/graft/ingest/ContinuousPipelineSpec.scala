@@ -107,9 +107,5 @@ class ContinuousPipelineSpec extends AnyFunSuite with SparkFixture {
       .as[(String, Long)].collect().toSet
     assert(counts(mv) === counts(mvRebuilt))
     assert(counts(mv) === Set(("r/x", 9L)))
-    // sketch view survives the crash path too: estimate == exact distinct
-    val est = IncrementalViews.distinctWatchers(spark, mv)
-      .as[(String, Double)].collect().toMap
-    assert(math.round(est("r/x")) === 9L)
   }
 }

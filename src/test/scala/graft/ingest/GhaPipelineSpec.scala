@@ -121,7 +121,7 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
     // compactions'.
     for (t <- graft.schema.GhaSchemas.tableNames)
       assert(described.exists(_._1 == s"tick:append:$t"), s"append of $t")
-    for (v <- Seq("repo_counts", "watcher_sketches", "kw_commits", "kw_comments"))
+    for (v <- Seq("repo_counts", "kw_commits", "kw_comments"))
       assert(described.exists(_._1 == s"tick:append:$v"), s"fold of $v")
     for (t <- Seq("watch", "commit", "comment"))
       assert(described.exists(_._1 == s"tick:compact:$t"), s"compact of $t")

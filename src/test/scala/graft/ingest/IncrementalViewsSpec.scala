@@ -2,7 +2,6 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths}
 import java.time.Instant
-import org.apache.spark.sql.functions.countDistinct
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.store.TableStore
@@ -158,37 +157,61 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
     assert(commits == Seq(("alice", "org/hot", 6L)), commits.toString)
   }
 
-  test("distinct-watcher sketches union across ticks (sets, not sums)") {
-    val dir = tmp("mv_hll")
-    // overlapping user sets across two batches: a sum of per-batch
-    // distincts would say 6; the sketch union must say 4
-    val b1 = Seq(("r1", "a"), ("r1", "b"), ("r1", "c"), ("r2", "x"))
-      .toDF("repo", "username")
-    val b2 = Seq(("r1", "b"), ("r1", "c"), ("r1", "d"), ("r2", "x"))
-      .toDF("repo", "username")
-    IncrementalViews.maintainDistinctWatchers(spark, b1, dir)
-    IncrementalViews.maintainDistinctWatchers(spark, b2, dir)
-    val got = IncrementalViews.distinctWatchers(spark, dir)
-      .as[(String, Double)].collect().toMap
-    assert(math.round(got("r1")) === 4L, got.toString)
-    assert(math.round(got("r2")) === 1L, got.toString)
-  }
-
-  test("pipeline-maintained sketches match exact distincts from the store") {
-    val dir = tmp("mv_hll2")
+  /** Three " dask" ticks, one with a " fix" commit in a popular repo;
+    * returns the tick function for the same store.
+    */
+  private def threeDaskTicks(dir: String): String => Seq[String] = {
     Files.createDirectories(Paths.get(s"$dir/landing"))
     val start = Instant.parse(s"${d}T01:00:00Z")
-    for ((lines, h) <- Seq(tick1 -> 1, tick2 -> 2, tick3 -> 3)) {
-      land(s"$dir/landing", d, h, lines)
+    def tick(h: Int, keyword: String) =
       GhaPipeline.incrementalRunWithViews(spark, s"$dir/landing",
-        s"$dir/store", s"$dir/mv", Instant.parse(s"${d}T0${h + 2}:00:00Z"), start)
-    }
-    val est = IncrementalViews.distinctWatchers(spark, s"$dir/mv")
-      .as[(String, Double)].collect().toMap.view.mapValues(math.round).toMap
-    val exact = TableStore.read(spark, s"$dir/store/watch")
-      .groupBy("repo").agg(countDistinct("username").as("n"))
-      .as[(String, Long)].collect().toMap
-    assert(est === exact.view.mapValues(identity).toMap, s"est=$est exact=$exact")
+        s"$dir/store", s"$dir/mv", Instant.parse(s"${d}T0${h + 2}:00:00Z"),
+        start, keyword)
+    land(s"$dir/landing", d, 1,
+      tick1 :+ push("carl", "org/hot", "a quick fix", "c1", d, 1))
+    land(s"$dir/landing", d, 2, tick2)
+    land(s"$dir/landing", d, 3, tick3)
+    assert(tick(3, " dask").size === 3)
+    assert(collectResults(s"$dir/store")._1.map(_._1).toSet ===
+      Set("alice", "zoe"))
+    keyword => tick(3, keyword)
+  }
+
+  test("a keyword change with no new hour republishes the results for " +
+    "the new keyword") {
+    val dir = tmp("mv_kw_idle")
+    val tick = threeDaskTicks(dir)
+    // restarted with " fix" and nothing new landed: the tick ingests
+    // nothing, yet the results must be " fix"'s, not the old " dask" rows
+    assert(tick(" fix").isEmpty)
+    val (commits, comments) = collectResults(s"$dir/store")
+    assert((commits, comments) == recompute(s"$dir/store", " fix"))
+    assert(commits == Seq(("carl", "org/hot", 6L)), commits.toString)
+    assert(!Files.exists(Paths.get(s"$dir/mv/_mv_stale")))
+  }
+
+  test("a kill while the rebuilt views publish leaves the rebuild pending; " +
+    "the next tick serves the same rows") {
+    val dir = tmp("mv_kw_kill")
+    val tick = threeDaskTicks(dir)
+    GhaPipeline.chaosHook = name =>
+      if (name == "post-result:commits") {
+        GhaPipeline.chaosHook = _ => () // one-shot
+        throw new RuntimeException("chaos kill @ post-result:commits")
+      }
+    val died =
+      try { tick(" fix"); false }
+      catch { case e: RuntimeException if e.getMessage.contains("chaos") =>
+        true }
+      finally GhaPipeline.chaosHook = _ => ()
+    assert(died, "the rebuild's publish never fired post-result:commits")
+    assert(Files.exists(Paths.get(s"$dir/mv/_mv_stale")),
+      "a publish that died must leave the rebuild pending")
+    assert(tick(" fix").isEmpty)
+    val (commits, comments) = collectResults(s"$dir/store")
+    assert((commits, comments) == recompute(s"$dir/store", " fix"))
+    assert(commits == Seq(("carl", "org/hot", 6L)), commits.toString)
+    assert(!Files.exists(Paths.get(s"$dir/mv/_mv_stale")))
   }
 
   test("a crash between rollback and rebuild re-enters the rebuild (_mv_stale)") {
@@ -211,107 +234,6 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
       .as[(String, Long)].collect().toMap
     assert(counts == Map("org/hot" -> 6L, "org/late" -> 2L), counts.toString)
     assert(!Files.exists(Paths.get(s"$dir/mv/_mv_stale")))
-  }
-
-  test("quantile sketches fold across ticks: merged view tracks the all-history percentiles") {
-    val dir = tmp("mv_kll")
-    // 3 ticks × 4000 values per key; the merged view must answer p50/p90
-    // over ALL 12000 values, not the last batch — within KLL's rank band
-    val rnd = new scala.util.Random(7)
-    def batch(tick: Int) = (1 to 4000).map { _ =>
-      ("k" + (rnd.nextInt(2) + 1), rnd.nextDouble() * 100 + tick * 1000.0)
-    }.toDF("key", "v") // tick offset shifts each batch's range
-    val batches = (0 until 3).map(batch)
-    batches.foreach(b =>
-      IncrementalViews.maintainQuantileSketches(spark, b, dir, "key", "v"))
-    val got = IncrementalViews.quantileView(spark, dir, Seq(0.5, 0.9))
-      .as[(String, Seq[Double])].collect().toMap
-    val all = batches.reduce(_ unionAll _)
-    for (k <- Seq("k1", "k2")) {
-      val exact = all.filter($"key" === k)
-        .select(org.apache.spark.sql.functions
-          .expr("percentile(v, array(0.45, 0.55, 0.85, 0.95))"))
-        .as[Seq[Double]].head()
-      assert(got(k)(0) >= exact(0) && got(k)(0) <= exact(1),
-        s"$k p50=${got(k)(0)} outside [${exact(0)}, ${exact(1)}]")
-      assert(got(k)(1) >= exact(2) && got(k)(1) <= exact(3),
-        s"$k p90=${got(k)(1)} outside [${exact(2)}, ${exact(3)}]")
-    }
-    // the last batch alone lives in [2000, 2100]: an all-history p50 must
-    // NOT (a last-batch-snapshot bug would put it there)
-    assert(got("k1")(0) < 2000.0)
-  }
-
-  test("freq sketches fold across ticks: merged view bounds the all-history counts") {
-    val dir = tmp("mv_freq")
-    // 3 ticks; item "hot" appears 300x/tick under key k1, the long tail
-    // is unique per tick — the merged view must see hot ≈ 900 all-history
-    def batch(tick: Int) = (
-      (1 to 300).map(_ => ("k1", "hot")) ++
-      (1 to 200).map(i => ("k1", s"tail_${tick}_$i")) ++
-      (1 to 100).map(_ => ("k2", "other"))).toDF("key", "item")
-    val batches = (0 until 3).map(batch)
-    batches.foreach(b =>
-      IncrementalViews.maintainFreqSketches(spark, b, dir, "key", "item"))
-    val top = IncrementalViews.freqView(spark, dir)
-      .selectExpr("key", "explode(top) AS t")
-      .selectExpr("key", "t.item", "t.lb", "t.ub")
-      .as[(String, String, Long, Long)].collect()
-    val hot = top.find(r => r._1 == "k1" && r._2 == "hot").get
-    // bounds contain the true all-history count — NOT the last-batch 300
-    assert(hot._3 <= 900 && 900 <= hot._4, s"hot bounds [${hot._3},${hot._4}]")
-    assert(hot._3 > 300, "lower bound stuck at a single batch's count")
-    val other = top.find(r => r._1 == "k2" && r._2 == "other").get
-    assert(other._3 <= 300 && 300 <= other._4)
-  }
-
-  test("empty first micro-batches and pre-guard empty generations never " +
-    "poison the KLL/freq/histogram views") {
-    val dir = tmp("mv_guard")
-    // (1) an empty first micro-batch is SKIPPED, not written as a
-    // schema-only generation that would poison every later max(batch_id)
-    val emptyKV = Seq.empty[(String, String)].toDF("key", "item")
-    assert(!IncrementalViews.maintainFreqSketches(
-      spark, emptyKV, dir, "key", "item", batchId = 0L))
-    assert(TableStore.dataFiles(spark, s"$dir/freq_sketches").isEmpty)
-    val emptyKD = Seq.empty[(String, Double)].toDF("key", "v")
-    assert(!IncrementalViews.maintainQuantileSketches(
-      spark, emptyKD, dir, "key", "v", batchId = 0L))
-    assert(!IncrementalViews.maintainHistogram(
-      spark, emptyKD, dir, "v", 0.0, 10.0, 4, batchId = 0L))
-    // (2) a pre-guard schema-only generation already on disk makes
-    // max(batch_id) NULL: folding over it must not NPE/crash-loop, and the
-    // replay watermark must still engage afterwards
-    TableStore.overwriteVersioned(
-      Seq.empty[(String, Array[Byte], Long)].toDF("key", "sk", "batch_id"),
-      s"$dir/freq_sketches")
-    val b1 = Seq(("k1", "hot"), ("k1", "hot"), ("k2", "x")).toDF("key", "item")
-    assert(IncrementalViews.maintainFreqSketches(
-      spark, b1, dir, "key", "item", batchId = 1L))
-    assert(!IncrementalViews.maintainFreqSketches(
-      spark, b1, dir, "key", "item", batchId = 1L), "replay must skip")
-    val hot = IncrementalViews.freqView(spark, dir)
-      .selectExpr("key", "explode(top) AS t")
-      .selectExpr("key", "t.item", "t.lb", "t.ub")
-      .as[(String, String, Long, Long)].collect()
-      .find(r => r._1 == "k1" && r._2 == "hot").get
-    assert(hot._3 <= 2 && 2 <= hot._4, s"hot bounds [${hot._3},${hot._4}]")
-    TableStore.overwriteVersioned(
-      Seq.empty[(String, Array[Byte], Long)].toDF("key", "sk", "batch_id"),
-      s"$dir/quantile_sketches")
-    val q1 = Seq(("k", 1.0), ("k", 3.0)).toDF("key", "v")
-    assert(IncrementalViews.maintainQuantileSketches(
-      spark, q1, dir, "key", "v", batchId = 1L))
-    assert(!IncrementalViews.maintainQuantileSketches(
-      spark, q1, dir, "key", "v", batchId = 1L), "replay must skip")
-    TableStore.overwriteVersioned(
-      Seq.empty[(Int, Long, Long)].toDF("bucket", "n", "batch_id"),
-      s"$dir/histogram")
-    val h1 = Seq(("k", 1.0), ("k", 15.0)).toDF("key", "v")
-    assert(IncrementalViews.maintainHistogram(
-      spark, h1, dir, "v", 0.0, 10.0, 4, batchId = 1L))
-    assert(!IncrementalViews.maintainHistogram(
-      spark, h1, dir, "v", 0.0, 10.0, 4, batchId = 1L), "replay must skip")
   }
 
   test("counts view is a merged total, not a last-batch snapshot") {

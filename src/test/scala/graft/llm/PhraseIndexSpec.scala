@@ -112,29 +112,44 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
-  test("buildPhraseIndex over a live index is a GENERATION SWAP: readers " +
-    "see the rebuilt corpus only, stale appends never union back in") {
+  test("buildPhraseIndex over an existing index replaces it: readers see " +
+    "the rebuilt corpus only") {
     val v1 = crafted()
     val dir = java.nio.file.Files.createTempDirectory("phrasegen").toString
     PhraseIndex.buildPhraseIndex(v1, dir)
-    // a streamed append the rebuild must supersede
-    PhraseIndex.phraseIndexAppend(spark, dir, 1L,
-      Seq((100L, "stale appended alpha beta gamma doc")).toDF("doc_id", "text"))
-    assert(PhraseIndex.phraseSearch(spark, dir, v1.unionByName(
-        Seq((100L, "stale appended alpha beta gamma doc"))
-          .toDF("doc_id", "text")), "alpha beta gamma")
-      .as[Long].collect().toSet === Set(1L, 2L, 100L))
-    // rebuild over a DIFFERENT corpus: doc 100 is gone, doc 200 arrives
+    assert(PhraseIndex.phraseSearch(spark, dir, v1, "alpha beta gamma")
+      .as[Long].collect().toSet === Set(1L, 2L))
+    // rebuild over a DIFFERENT corpus: docs 1 and 2 are gone, doc 200 arrives
     val v2 = Seq((200L, "fresh alpha beta gamma corpus"),
       (201L, "no match here at all")).toDF("doc_id", "text")
     PhraseIndex.buildPhraseIndex(v2, dir)
-    val got = PhraseIndex.phraseSearch(spark, dir, v2, "alpha beta gamma")
+    val got = PhraseIndex.phraseSearch(spark, dir, v1.unionByName(v2),
+        "alpha beta gamma")
       .as[Long].collect().toSet
     assert(got === Set(200L),
-      s"rebuild must replace history (got $got — flat write ignored or " +
-        "stale append resurrected)")
-    // and the rebuilt index is a committed generation, not the flat base
-    assert(graft.store.IndexGenerations.current(spark, dir).gen >= 0)
+      s"rebuild must replace history (got $got — old postings survived)")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("phrase index _meta rejects an n/nBuckets mismatch instead of " +
+    "silently losing matches") {
+    val docs = Seq((0L, "the quick brown fox")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("phrasemeta").toString
+    PhraseIndex.buildPhraseIndex(docs, dir, n = 3, nBuckets = 8)
+    val e1 = intercept[IllegalArgumentException] {
+      PhraseIndex.phraseSearch(spark, dir, docs, "the quick brown",
+        n = 3, nBuckets = 16)
+    }
+    assert(e1.getMessage.contains("nBuckets"))
+    // the pruned search validates before it touches the doc store
+    val e2 = intercept[IllegalArgumentException] {
+      PhraseIndex.phraseSearchPruned(spark, dir, s"$dir/no_docs",
+        "the quick brown", n = 2, nBuckets = 8)
+    }
+    assert(e2.getMessage.contains("built with"))
+    // matching parameters pass
+    assert(PhraseIndex.phraseSearch(spark, dir, docs, "the quick brown",
+      n = 3, nBuckets = 8).count() === 1)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 

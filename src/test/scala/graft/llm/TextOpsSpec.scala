@@ -141,7 +141,7 @@ class TextOpsSpec extends AnyFunSuite with SparkFixture {
       .select($"source", VectorOps.sigColumn($"hs", 64).as("sig"))
       .as[(String, Seq[Long])]
       .groupByKey(_._1)
-      .agg(new TextOps.MinHashUnionAgg(64).toColumn.name("sig"))
+      .agg(new MinHashUnionAgg(64).toColumn.name("sig"))
       .collect().toMap
     val viaCodegen = TextOps.perSourceSig(
         hsDf.select($"source", explode($"hs").as("h")).distinct(), 64)
@@ -238,7 +238,7 @@ class TextOpsSpec extends AnyFunSuite with SparkFixture {
     val hsDf = TextOps.shingleHashes(docs, Seq("source"), 3).localCheckpoint()
     val est = TextOps.contaminationEstimate(hsDf, 64)
     est.collect()
-    // the expensive side (64-perm signature pass + MinHashUnionAgg partials)
+    // the expensive side (64-perm signature pass + per-source min partials)
     // sits below ONE hash exchange; the a×b self-join's second reference must
     // resolve to a ReusedExchange, not a second signature pass
     val plan = est.queryExecution.executedPlan.toString

@@ -165,6 +165,33 @@ class VectorOpsSpec extends AnyFunSuite with SparkFixture {
       new java.io.File(dir).getParentFile)
   }
 
+  test("ivf: a rebuild over an index that took appends replaces it, and " +
+    "queries read the rebuilt index") {
+    val emb = graft.query.Tables(spark, sf("sf0.001"), "embeddings")
+    val dir = java.nio.file.Files.createTempDirectory("ivfrb").toString + "/idx"
+    VectorOps.writeIvfIndex(
+      VectorOps.buildIvfIndex(emb.filter(col("vec_id") < 300)), dir)
+    VectorOps.ivfAppend(spark, dir,
+      emb.filter(col("vec_id") >= 300).select("vec_id", "embedding"))
+    assert(VectorOps.readIvfIndex(spark, dir).assignments.count()
+      === emb.count())
+    val rebuilt = VectorOps.buildIvfIndex(emb)
+    VectorOps.writeIvfIndex(rebuilt, dir)
+    val loaded = VectorOps.readIvfIndex(spark, dir)
+    assert(loaded.assignments.count() === emb.count(),
+      "rebuild must replace history, not add to it")
+    def query(idx: VectorOps.IvfIndex) =
+      VectorOps.ivfQuery(idx, emb.filter(col("vec_id") < 5), k = 5,
+          nProbe = 16)
+        .select("query_id", "neighbor_id")
+        .as[(Long, Long)].collect().toSeq.sorted
+    val got = query(loaded)
+    assert(got.nonEmpty)
+    assert(got === query(rebuilt))
+    org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(dir).getParentFile)
+  }
+
   test("signature-store ticks: dedupIncrement + TableStore compose across batches (L17 e2e)") {
     import graft.store.TableStore
     val dir = java.nio.file.Files.createTempDirectory("sigstore").toString + "/sigs"

@@ -170,38 +170,35 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
     assert(open.values.forall(_ === 1L), s"torn dimension: $open")
   }
 
-  test("two view maintainers racing the same sketch view lose neither fold " +
-    "(transactVersionedOpt re-derives on CAS conflict)") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target/tmp"), "cw_mv").toString
-    // two distinct BATCH-mode folds (batchId = -1: the backfill form —
-    // the replay watermark deliberately only orders ids within ONE
-    // sequential stream, so concurrent folders use batch mode) racing
-    // into one freq view: before the round-8 transaction wrap, the
-    // loser's commit silently DROPPED the winner's fold (both derived
-    // from the same base generation)
-    val b1 = Seq.fill(300)(("k", "alpha")).toDF("key", "item")
-    val b2 = Seq.fill(200)(("k", "beta")).toDF("key", "item")
+  test("two read-modify-write transactions racing one table lose neither " +
+    "update (transactVersioned re-derives on CAS conflict)") {
+    val dir = tmpDir() + "/counts"
+    TableStore.overwriteVersioned(Seq(("k", 0L)).toDF("key", "n"), dir)
+    def add(delta: Long)(derived: () => Unit): Unit =
+      TableStore.transactVersioned(spark, dir) {
+        derived()
+        TableStore.read(spark, dir).select($"key", ($"n" + delta).as("n"))
+      }
+    // B derives from the same base as A inside A's pre-commit window, so
+    // its first commit must lose the CAS and its retry must re-derive from
+    // A's committed state; a lost update would leave n at 1 or 10
+    val bDerived = new java.util.concurrent.atomic.AtomicInteger()
+    val bFirstRead = new java.util.concurrent.CountDownLatch(1)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = Seq(b1, b2).map { b =>
-      new Thread(() =>
-        try graft.ingest.IncrementalViews.maintainFreqSketches(
-          spark, b, dir, "key", "item")
-        catch { case t: Throwable => errs.add(t) })
+    val b = new Thread(() =>
+      try add(10L) { () => bDerived.incrementAndGet(); bFirstRead.countDown() }
+      catch { case t: Throwable => errs.add(t) })
+    TableStore.beforeCommitHook = () => {
+      resetHook()
+      b.start()
+      assert(bFirstRead.await(60, java.util.concurrent.TimeUnit.SECONDS))
     }
-    threads.foreach(_.start()); threads.foreach(_.join(120000))
-    assert(errs.isEmpty, s"maintainer failed: ${Option(errs.peek())}")
-    val top = graft.ingest.IncrementalViews.freqView(spark, dir)
-      .selectExpr("key", "explode(top) AS t")
-      .selectExpr("t.item", "t.lb", "t.ub")
-      .as[(String, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    // BOTH folds present with exact counts (vocab of 2 — no purge, bounds
-    // are tight); a lost fold would zero one item out entirely
-    assert(top.contains("alpha") && top("alpha")._1 <= 300 && 300 <= top("alpha")._2,
-      s"alpha fold lost or skewed: $top")
-    assert(top.contains("beta") && top("beta")._1 <= 200 && 200 <= top("beta")._2,
-      s"beta fold lost or skewed: $top")
+    try add(1L)(() => ()) finally resetHook()
+    b.join(120000)
+    assert(errs.isEmpty, s"transaction failed: ${Option(errs.peek())}")
+    assert(bDerived.get() >= 2, "the losing transaction never re-derived")
+    assert(TableStore.read(spark, dir).as[(String, Long)].collect().toSeq ===
+      Seq(("k", 11L)))
   }
 
   test("disjoint-date merges run in parallel: per-date claims do not " +
