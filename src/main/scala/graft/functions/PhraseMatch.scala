@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the PqEncode codebook discipline); transitions are per-node hash maps
   * so memory is O(total phrase bytes), not O(nodes × 256).
   */
-final class AhoCorasick(val phrases: Seq[String]) extends Serializable {
+final class AhoCorasick(phrases: Seq[String]) extends Serializable {
   require(phrases.nonEmpty && phrases.forall(_.nonEmpty),
     "AhoCorasick needs a nonempty list of nonempty phrases")
 

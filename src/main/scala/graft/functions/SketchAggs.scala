@@ -66,11 +66,6 @@ object SketchAggs {
     ColumnBridge.column(
       ThetaSketchAgg(ColumnBridge.expression(c)).toAggregateExpression())
 
-  /** Union of stored Theta sketch bytes → merged compact sketch bytes. */
-  def thetaUnionAgg(c: Column): Column =
-    ColumnBridge.column(
-      ThetaUnionAgg(ColumnBridge.expression(c)).toAggregateExpression())
-
   /** Distinct-count estimate of Theta sketch bytes. */
   def thetaEstimate(bytes: Column): Column =
     ColumnBridge.column(ThetaEstimate(ColumnBridge.expression(bytes)))
@@ -80,12 +75,6 @@ object SketchAggs {
     ColumnBridge.column(
       ThetaSetEstimate(ColumnBridge.expression(a),
         ColumnBridge.expression(b), op))
-
-  /** Frequent-items sketch of a string column → sketch bytes (mergeable). */
-  def freqAgg(c: Column, maxMapSize: Int = 256): Column =
-    ColumnBridge.column(
-      FreqItemsAgg(ColumnBridge.expression(c), maxMapSize)
-        .toAggregateExpression())
 
   /** Weighted frequent-items sketch: `(item, count)` rows, bit-identical
     * to `count` unweighted updates — lets the sketch build from a vocab-
@@ -108,10 +97,6 @@ object SketchAggs {
   def freqBounds(bytes: Column, item: Column): Column =
     ColumnBridge.column(FreqItemBounds(
       ColumnBridge.expression(bytes), ColumnBridge.expression(item)))
-
-  /** Top items (NO_FALSE_NEGATIVES) with est/lb/ub from sketch bytes. */
-  def freqTopItems(bytes: Column): Column =
-    ColumnBridge.column(FreqTopItems(ColumnBridge.expression(bytes)))
 
   private[functions] def newUnion(): Union =
     SetOperation.builder().buildUnion()

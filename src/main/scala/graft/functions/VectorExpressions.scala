@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -136,21 +136,14 @@ object GraftFunctions {
     ColumnBridge.column(
       SdcScore(ColumnBridge.expression(a), ColumnBridge.expression(b),
         tables, ksub))
-
-  /** Register the whole graft SQL function family on an existing session
-    * (no extensions needed at build time) — see [[GraftFunctionRegistry]].
-    */
-  def register(spark: SparkSession): Unit =
-    GraftFunctionRegistry.registerTemp(spark)
 }
 
 /** The SQL-callable surface of the native expression + sketch-aggregate
   * family: every kernel a `queries()` operator runs is equally available
   * to `spark.sql` users — `SELECT graft_minhash_sig(hs, 64)`,
-  * `SELECT graft_kll_agg(v, 200) ... GROUP BY k`, etc. One builder table
-  * feeds both registration paths (temp functions on a live session;
-  * `SparkSessionExtensions` injection at session build), so the two
-  * can't drift.
+  * `SELECT graft_kll_agg(v, 200) ... GROUP BY k`, etc. [[GraftExtensions]]
+  * injects the one builder table at session build; the test suites
+  * register the same table as temp functions, so the two can't drift.
   *
   * Constructor parameters that shape GENERATED CODE or aggregation-buffer
   * layout (permutation counts, n-gram sizes, sketch k, the theta set op)
@@ -269,13 +262,6 @@ object GraftFunctionRegistry {
       arity("graft_freq_merge", es, 1, 2)
       if (es.length == 1) FreqMergeAgg(es(0))
       else FreqMergeAgg(es(0), foldI("graft_freq_merge", "maxMapSize", es(1))) })
-
-  /** Temp-function registration on a live session. */
-  def registerTemp(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "scala_udf")
-    }
 
   private[functions] def inject(e: SparkSessionExtensions): Unit =
     builders.foreach { case (name, b) =>

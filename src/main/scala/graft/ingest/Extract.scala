@@ -28,14 +28,6 @@ object Extract {
       .filter(col("e").isNotNull && col("e.type").isNotNull)
       .select("e.*")
 
-  /** Count of undecodable lines — notebook `bad.count()` (`gha.ipynb:90`).
-    * `from_json` in PERMISSIVE mode yields an all-null row (not a null
-    * struct) for malformed input, so validity is probed with
-    * `try_parse_json`, which is null exactly when the line isn't JSON.
-    */
-  def corruptCount(lines: DataFrame): Long =
-    lines.filter(try_parse_json(col("value")).isNull).count()
-
   // shared projections (preprocess.py:44-46 equivalents)
   private val username = col("actor.login").as("username")
   private val repo     = col("repo.name").as("repo")

@@ -1,7 +1,6 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.time.Increments
 
 /** S1 completion: the remote HTTP(S) gzip source. The reference's very
   * first operator streams `https://data.gharchive.org/YYYY-MM-DD-H.json.gz`
@@ -61,15 +60,6 @@ object Fetch {
       }
       .collect()
     statuses.toSeq.toDF()
-  }
-
-  /** URL list for [start, stop] hours → download → status frame. The URL
-    * template is the reference's own (`Increments.hourlyUrls`).
-    */
-  def downloadHours(spark: SparkSession, start: String, stop: String,
-      landingDir: String, retries: Int = 10): DataFrame = {
-    val urls = Increments.urlList(spark, start, stop)
-    download(spark, urls, landingDir, retries)
   }
 
   /** A response that retrying cannot fix: 4xx other than request-timeout

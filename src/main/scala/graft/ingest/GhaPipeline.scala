@@ -24,7 +24,7 @@ import graft.time.Increments
   * `compactDates` calls, beside the two result-table overwrites, which
   * read only the views phase A finished. The results come from the views
   * ([[IncrementalViews.queryData]]), never from a full-history recompute;
-  * [[queryData]] is that recompute, kept as the reference the views are
+  * the test tree keeps that recompute as the reference the views are
   * tested against.
   */
 object GhaPipeline {
@@ -131,48 +131,6 @@ object GhaPipeline {
         chaosHook(s"post-result:$name")
       }
     }
-  }
-
-  /** The `query_data` analytics (`preprocess.py:209-244`), parameterized by
-    * keyword (reference hardcodes " dask"), recomputed over the curated
-    * store's full history. Returns (commits, comments) result frames;
-    * popular = repos with more than `minWatches` watchers. The tick serves
-    * [[IncrementalViews.queryData]] instead; this is the reference it must
-    * equal on the same store.
-    */
-  def queryData(spark: SparkSession, storeDir: String,
-      keyword: String = " dask", minWatches: Long = 5)
-      : (DataFrame, DataFrame) = {
-    import graft.schema.GhaSchemas.curated
-    val watch = TableStore.read(spark, s"$storeDir/watch", curated("watch"))
-    val commit = TableStore.read(spark, s"$storeDir/commit", curated("commit"))
-    val comment =
-      TableStore.read(spark, s"$storeDir/comment", curated("comment"))
-
-    // repos = watches.repo.value_counts(); repos[repos > 5]  (215-216)
-    // No broadcast() hint: distinct repos grow with data, so the forced
-    // broadcast the reference hand-rolls (repartition(npartitions=1),
-    // preprocess.py:216) OOMs at 100x scale. AQE broadcasts when the
-    // aggregate is actually small and shuffles when it isn't.
-    val repos = watch.groupBy("repo").agg(count(lit(1)).as("count"))
-      .filter(col("count") > minWatches)
-
-    // commits mentioning the keyword in popular non-self repos (218-230).
-    // Row-local predicates are IncrementalViews' — the single definition
-    // this recompute and the view folds share (they commute with the inner
-    // popularity join).
-    val commitsOut = IncrementalViews.commitFilter(commit, keyword)
-      .join(repos, Seq("repo"))
-      .select("username", "repo", "message", "count")
-      .orderBy(desc("count"), asc("username"), asc("message"))
-
-    // comments mentioning the keyword (233-244)
-    val commentsOut = IncrementalViews.commentFilter(comment, keyword)
-      .join(repos, Seq("repo"))
-      .select("username", "repo", "comment", "count")
-      .orderBy(desc("count"), asc("username"), asc("comment"))
-
-    (commitsOut, commentsOut)
   }
 
   // ---- exactly-once bookkeeping -------------------------------------------

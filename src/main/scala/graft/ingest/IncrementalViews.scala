@@ -26,10 +26,10 @@ import graft.store.TableStore
   *    is resolved at read time against the CURRENT counts, over the
   *    keyword-matching slice only (a tiny fraction of history).
   *
-  * [[queryData]] therefore returns exactly what [[GhaPipeline.queryData]]
-  * returns on the same ingested history (equivalence is tested tick by
-  * tick), while scanning keyword-survivors + the counts table instead of
-  * everything.
+  * [[queryData]] therefore returns exactly what a full-history recompute
+  * of `query_data` returns on the same ingested history (equivalence is
+  * tested tick by tick), while scanning keyword-survivors + the counts
+  * table instead of everything.
   *
   * Crash contract: [[maintainTick]]'s folds are NOT idempotent (counts
   * would double-merge, appends would duplicate) — they must run inside
@@ -47,8 +47,9 @@ object IncrementalViews {
     StructField("count", LongType)))
 
   /** Row-local commit-side predicates (`preprocess.py:218-230` minus the
-    * popularity join). PUBLIC and shared with `GhaPipeline.queryData` —
-    * one definition, so the tested batch≡views equivalence cannot drift.
+    * popularity join). PUBLIC and shared with the tests' full-history
+    * recompute — one definition, so the tested batch≡views equivalence
+    * cannot drift.
     * The keyword lowers once here (the message side is lowercased per
     * row; an uppercase keyword argument would otherwise match nothing,
     * silently); the repo-prefix self-exclusion stays case-exact, matching
@@ -60,7 +61,7 @@ object IncrementalViews {
     .filter(!col("repo").startsWith(keyword.trim + "/"))
 
   /** Row-local comment-side predicates (`preprocess.py:233-244`); shared
-    * with `GhaPipeline.queryData` like [[commitFilter]].
+    * with the tests' full-history recompute like [[commitFilter]].
     */
   def commentFilter(df: DataFrame, keyword: String): DataFrame = df
     .filter(lower(col("comment")).contains(keyword.toLowerCase))
@@ -117,9 +118,9 @@ object IncrementalViews {
     else Some(spark.read.schema(countsSchema).parquet(files: _*))
   }
 
-  /** `query_data` over the views: identical output to
-    * [[GhaPipeline.queryData]] on the same history — the scans are just
-    * proportional to keyword survivors instead of full history.
+  /** `query_data` (`preprocess.py:209-244`) over the views: identical
+    * output to a full-history recompute on the same history — the scans
+    * are just proportional to keyword survivors instead of full history.
     */
   def queryData(spark: SparkSession, mvDir: String,
       keyword: String = " dask", minWatches: Long = 5)

@@ -12,8 +12,7 @@ import org.apache.spark.storage.StorageLevel
   * one task per file, uncompressed files are block-split (the notebook's
   * `blocksize="50 MiB"`, `gha.ipynb:145`, is
   * `spark.sql.files.maxPartitionBytes`). At 100 TB the scan parallelism is
-  * therefore #files for gzip; `repartitionAfterRead` exists to re-spread
-  * skewed hours before wide downstream ops.
+  * therefore #files for gzip.
   */
 object Ingest {
 
@@ -23,12 +22,6 @@ object Ingest {
     */
   def readLines(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.text(paths: _*)
-
-  /** Gzip-skew mitigation: after an unsplittable read, spread rows before
-    * wide operators (SURVEY.md §7.5 "Gzip skew"). No-op when n <= 0.
-    */
-  def repartitionAfterRead(df: DataFrame, n: Int): DataFrame =
-    if (n > 0) df.repartition(n) else df
 
   /** Parse + extract all six curated frames in one shared pass.
     * The raw parsed frame is persisted so the (expensive) JSON parse runs

@@ -34,7 +34,7 @@ object Clustering {
     * ||v-c||^2 = argmax (v.c - ||c||^2/2), evaluated by the native
     * [[graft.functions.NearestCentroid]] kernel — ONE codegen'd loop over a
     * flat k x dim matrix, constant code size in K. The composed form (K
-    * literal-dot struct subtrees + `array_max`) is kept below as the
+    * literal-dot struct subtrees + `array_max`) is ClusteringSpec's
     * drift-guard reference: it collapses once K grows past the IVF default
     * (measured: minutes instead of seconds at K=80 on 10k rows — codegen
     * size scales with K and the fallback is interpreted struct
@@ -48,20 +48,6 @@ object Clustering {
     val dim = ordered.head._2.length
     graft.functions.GraftFunctions.nearestCentroid(
       v, ordered.flatMap(_._2), dim, euclidean = true)
-  }
-
-  /** The composed-expression reference form of [[clusterOf]] — K struct
-    * subtrees under `array_max`, ties to lowest index via the negated-index
-    * field. Semantically the definition; kept for the drift-guard spec.
-    */
-  private[llm] def clusterOfReference(cents: Seq[(Int, Seq[Double])])(
-      v: Column): Column = {
-    val scored = array(cents.map { case (i, c) =>
-      val negHalfNorm = -c.map(x => x * x).sum / 2
-      struct((VectorOps.dot(v, typedLit(c)) + lit(negHalfNorm)).as("s"),
-        lit(-i).as("negc"))
-    }: _*)
-    -array_max(scored).getField("negc")
   }
 
   /** Distributed Lloyd k-means over (idCol, vecCol: array<double>).

@@ -10,7 +10,7 @@ import graft.query.Tables
   * selector: fit two smoothed bag-of-features models (target p, raw q)
   * over hashed n-gram features, weight every raw doc by its
   * log-likelihood ratio `Σ_f c_f · (ln p_f − ln q_f)`, and keep the
-  * top-weighted (or Gumbel-resampled) docs. This is the principled form
+  * top-weighted docs. This is the principled form
   * of "quality filtering toward a reference corpus", complementing the
   * absolute quality gates (L10/L11/L26) with a DISTRIBUTIONAL target.
   *
@@ -46,30 +46,13 @@ object Dsir {
     * r11 note here anticipated this ("a true one-pass fix needs a
     * counting aggregate, not a fused explode") — per-ROW counting is
     * even cheaper than a DeclarativeAggregate: nothing crosses rows at
-    * all. [[featuresReference]] keeps the HOF explode form as the
-    * drift-guard definition (DsirSpec parity law, both key modes).
+    * all. DsirSpec keeps the HOF explode form as the drift-guard
+    * reference (parity law, both key modes).
     */
   private def docFeatureCounts(docs: DataFrame, hashBuckets: Int): DataFrame =
     docs.select(col("doc_id"),
       explode(graft.functions.UnibiCounts
         .unibiCounts(col("text"), hashBuckets)).as(Seq("f", "c")))
-
-  /** The composed-HOF reference form: per-doc unigram+bigram occurrence
-    * ROWS (doc_id, f), one row per occurrence — `groupBy(doc_id, f)
-    * .count()` over it restates [[docFeatureCounts]] by definition.
-    * Kept for the DsirSpec drift-guard.
-    */
-  private[llm] def featuresReference(docs: DataFrame,
-      hashBuckets: Int): DataFrame = {
-    val uni = docs.select(col("doc_id"),
-      explode(TextOps.words(col("text"))).as("f"))
-    val bi = docs.select(col("doc_id"),
-      explode(TextOps.ngramsAll(col("text"), 2)).as("f"))
-    val all = uni.union(bi)
-    if (hashBuckets <= 0) all
-    else all.select(col("doc_id"),
-      pmod(xxhash64(col("f")), lit(hashBuckets.toLong)).as("f"))
-  }
 
   /** Per-raw-doc DSIR log importance weight `round(Σ c·lr, 6)` —
     * rounded so downstream selection orders identically cross-engine
@@ -108,26 +91,6 @@ object Dsir {
     docFJ.join(ratioJ.hint("shuffle_hash"), Seq("f"))
       .groupBy("doc_id")
       .agg(round(sum(col("c") * col("lr")), 6).as("logw"))
-  }
-
-  /** DSIR's actual sampler: importance RESAMPLING without replacement via
-    * the Gumbel-top-k trick — `argtop_k(logw + g_i)` with standard Gumbel
-    * noise is an exact sample from softmax(logw) without replacement.
-    * The noise here is DETERMINISTIC (inverse-CDF of a per-doc hash
-    * uniform), so re-runs/backfills select identical docs — the same
-    * no-RNG stance as the engine's other samplers. Plain top-k is the
-    * temperature→0 limit (and the oracle-able form).
-    */
-  def gumbelSelect(docs: DataFrame, isTarget: Column, k: Int,
-      hashBuckets: Int = 0): DataFrame = {
-    val u = (pmod(xxhash64(col("doc_id")), lit(1000000L)).cast("double") +
-      lit(0.5)) / lit(1000000.0)
-    val gumbel = -log(-log(u))
-    importanceWeights(docs, isTarget, hashBuckets)
-      .withColumn("key", col("logw") + gumbel)
-      .orderBy(col("key").desc, col("doc_id").asc)
-      .limit(k)
-      .select("doc_id", "logw")
   }
 
   val all: Seq[Q] = Seq(

@@ -39,17 +39,11 @@ object Multimodal {
   case class MediaFeatures(doc_id: Long, n_bytes: Long, width: Int,
       height: Int, channels: Int, mean_luma: Double, decode_ok: Boolean)
 
-  /** Attach a binary media payload column: a real PNG rendered per doc
+  /** The (doc_id, media) image fixture: a real PNG rendered per doc
     * (deterministic pixels from doc_id), so the decode path exercises an
-    * actual codec. `mapPartitions` because encoding is a per-row kernel,
-    * not a column expression.
-    */
-  def withImagePayload(spark: SparkSession, docs: DataFrame): DataFrame =
-    docs.join(imagePayload(spark, docs), "doc_id")
-
-  /** The (doc_id, media) image fixture alone, parallelism-spread BEFORE the
-    * bytes exist: ids (8 bytes/row) shuffle, PNG payloads are generated
-    * post-shuffle in the partitions that will decode them. Kernels fed from
+    * actual codec. Parallelism-spread BEFORE the bytes exist: ids (8
+    * bytes/row) shuffle, PNG payloads are generated post-shuffle in the
+    * partitions that will decode them. Kernels fed from
     * this frame move no media across the wire at all — the shape a 100 TB
     * pipeline gets from a partitioned media-column scan, where the bytes
     * are born distributed.

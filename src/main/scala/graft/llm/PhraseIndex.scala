@@ -66,7 +66,7 @@ object PhraseIndex {
     try out.write(s"$n $nBuckets".getBytes("UTF-8")) finally out.close()
   }
 
-  private def checkMeta(spark: SparkSession, dir: String, n: Int,
+  private[llm] def checkMeta(spark: SparkSession, dir: String, n: Int,
       nBuckets: Int): Unit = {
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -90,7 +90,7 @@ object PhraseIndex {
   }
 
   /** The postings layer a search reads. */
-  private def readGrams(spark: SparkSession, dir: String): DataFrame =
+  private[llm] def readGrams(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/grams").selectExpr("doc_id", "gh", "bucket")
 
   /** The phrase's rolling n-gram hashes, derived with the SAME native
@@ -105,54 +105,30 @@ object PhraseIndex {
       .head().getSeq[Long](0).distinct
   }
 
-  /** Exact word-aligned phrase search through the stored index. Phrases
-    * shorter than `n` words cannot probe an n-gram index and fall back to
-    * the direct verify scan (documented contract — pick n at or below the
-    * shortest phrase you serve).
-    */
-  def phraseSearch(spark: SparkSession, dir: String, docs: DataFrame,
-      phrase: String, n: Int = 3, nBuckets: Int = 64): DataFrame = {
-    checkMeta(spark, dir, n, nBuckets)
-    val verify = concat(lit(" "), col("text"), lit(" "))
-      .contains(s" $phrase ")
-    val grams = phraseGramHashes(spark, phrase, n)
-    if (grams.isEmpty) return docs.filter(verify).select("doc_id")
-    val buckets = grams.map(g => ((g % nBuckets) + nBuckets) % nBuckets)
-      .distinct
-    val candidates = readGrams(spark, dir)
-      .filter(col("bucket").isin(buckets: _*)) // partition pruning
-      .filter(col("gh").isin(grams: _*))
-      .groupBy("doc_id").agg(countDistinct("gh").as("__nh"))
-      .filter(col("__nh") === grams.size)
-      .select("doc_id")
-    docs.join(candidates, Seq("doc_id"), "left_semi")
-      .filter(verify)
-      .select("doc_id")
-  }
-
-  /** Exact phrase search with a PRUNED candidate fetch — the 100 TB read
-    * path. [[phraseSearch]]'s verify leg is correct but probes the FULL
-    * documents table (a broadcast semi-join whose probe side is the whole
-    * corpus text column): per query it re-reads the very bytes the index
-    * exists to avoid. This form collects the candidate id set — bounded by
-    * construction: a doc qualifies only by holding ALL the phrase's grams,
-    * so candidates are the word-aligned matches plus hash collisions — and
-    * fetches text through [[graft.store.BloomSkip.readPrunedEq]] on a doc
-    * store carrying a `doc_id` Bloom sidecar: the verify reads ONLY files
-    * that can hold a candidate (files-read-bounded, asserted in
-    * PhraseIndexSpec), plus the kilobyte sidecar.
+  /** Exact word-aligned phrase search through the stored index, with a
+    * PRUNED candidate fetch — the 100 TB read path. Verifying candidates by
+    * a semi-join against the FULL documents table is correct but probes
+    * the whole corpus text column: per query it re-reads the very bytes
+    * the index exists to avoid. This form collects the candidate id set —
+    * bounded by construction: a doc qualifies only by holding ALL the
+    * phrase's grams, so candidates are the word-aligned matches plus hash
+    * collisions — and fetches text through
+    * [[graft.store.BloomSkip.readPrunedEq]] on a doc store carrying a
+    * `doc_id` Bloom sidecar: the verify reads ONLY files that can hold a
+    * candidate (files-read-bounded, asserted in PhraseIndexSpec), plus the
+    * kilobyte sidecar.
     *
     * `docsDir` is the document store (flat parquet dir or generation
     * store; build its sidecar once with `BloomSkip.write(spark, docsDir,
     * Seq("doc_id"))` — files appended after the sidecar are kept
     * conservatively, never wrongly skipped). Degenerate regimes fall back
     * LOUDLY-DOCUMENTED rather than breaking the bound silently: a phrase
-    * shorter than `n` words cannot probe the index (direct verify scan,
-    * the [[phraseSearch]] contract), and a stop-phrase matching more than
-    * `maxFetch` docs verifies via the semi-join scan — at that selectivity
-    * the fetch is corpus-scale whichever way it is expressed, and a
-    * >maxFetch literal probe would blow up both the Bloom verdict
-    * expression and the row filter's IN-set. `onFetch` receives
+    * shorter than `n` words cannot probe the index (direct verify scan —
+    * pick n at or below the shortest phrase you serve), and a stop-phrase
+    * matching more than `maxFetch` docs verifies via the semi-join scan —
+    * at that selectivity the fetch is corpus-scale whichever way it is
+    * expressed, and a >maxFetch literal probe would blow up both the Bloom
+    * verdict expression and the row filter's IN-set. `onFetch` receives
     * (filesKept, filesTotal) when the pruned fetch ran — the monitoring
     * hook a production pipeline alerts on.
     */

@@ -56,7 +56,7 @@ object Pq {
   /** Unit-normalized double vector as a column; zero vectors pass through
     * (norm floor). The norm is staged as its own attribute so it is not a
     * lambda-captured aggregate re-evaluated per ELEMENT (the
-    * [[VectorOps.quantize]] lesson — measured ~40x there).
+    * `q_quantize_embed` lesson — measured ~40x there).
     */
   private def unitCol(v: Column): (Column, Column) = {
     val d = VectorOps.toDouble(v)
@@ -281,10 +281,10 @@ object Pq {
     IvfPqIndex(cents, model, encodeAssign(corpus, cents, model))
   }
 
-  /** The shared one-scan projection both build and append run: coarse cell
-    * + PQ codes from FIXED quantizers (both kernels in one select).
+  /** The build's one-scan projection: coarse cell + PQ codes from FIXED
+    * quantizers (both kernels in one select).
     */
-  def encodeAssign(corpus: DataFrame, cents: Seq[(Int, Seq[Double])],
+  private def encodeAssign(corpus: DataFrame, cents: Seq[(Int, Seq[Double])],
       model: PqModel): DataFrame = {
     val (flat, dim) = flatCents(cents)
     val (d, n) = unitCol(col("embedding"))
@@ -331,43 +331,24 @@ object Pq {
     IvfPqIndex(cents, PqModel(mdl._1, mdl._2, mdl._3, mdl._4), assigned)
   }
 
-  /** Probe + ADC + exact rerank against a built (possibly store-loaded)
-    * index. Per query, the nProbe nearest cells are computed driver-side
-    * from the collected query batch, so the probed-cell union reaches the
-    * stored code table as ONE `cell IN (...)` partition filter — unprobed
-    * cells are never read. Scoring then rides the one AdcScores pass with
-    * a tiny broadcast (query_id, cell) join keeping each query's scores
-    * restricted to the cells IT probed; shortlist + rerank as [[pqTopK]].
+  /** The probe + ADC + shortlist stage of [[ivfPqQueryPruned]] (and of
+    * the full-scan rerank form PqSpec pins it to): returns the collected
+    * raw query rows and the per-query ADC shortlist frame
+    * (query_id, neighbor_id). Per query, the nProbe nearest cells are
+    * computed driver-side from the collected query batch, so the
+    * probed-cell union reaches the stored code table as ONE `cell IN (...)`
+    * partition filter — unprobed cells are never read. Scoring then rides
+    * the one AdcScores pass with a tiny broadcast (query_id, cell) join
+    * keeping each query's scores restricted to the cells IT probed.
     */
-  def ivfPqQuery(index: IvfPqIndex, corpus: DataFrame, queries: DataFrame,
-      k: Int, nProbe: Int = 2, shortlist: Int = 64): DataFrame = {
-    val (_, short) = adcShortlist(index, queries, nProbe, shortlist)
-    val tv = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorOps.toDouble(col("embedding")).as("tv"))
-    val qv = queries.select(col("vec_id").as("query_id"),
-      VectorOps.toDouble(col("embedding")).as("qv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    tv.join(broadcast(short.select("query_id", "neighbor_id")), Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("cos", VectorOps.cosine(col("qv"), col("tv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
-  }
-
-  /** The shared probe + ADC + shortlist stage of [[ivfPqQuery]] and
-    * [[ivfPqQueryPruned]]: returns the collected raw query rows and the
-    * per-query ADC shortlist frame (query_id, neighbor_id).
-    */
-  private def adcShortlist(index: IvfPqIndex, queries: DataFrame,
+  private[llm] def adcShortlist(index: IvfPqIndex, queries: DataFrame,
       nProbe: Int, shortlist: Int)
       : (Array[(Long, Array[Double])], DataFrame) = {
     val qRows = queries.orderBy("vec_id")
       .select(col("vec_id"), VectorOps.toDouble(col("embedding")))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(qRows.nonEmpty, "ivfPqQuery needs a nonempty query batch")
+    require(qRows.nonEmpty, "an IVF-PQ query needs a nonempty query batch")
     val ids: Array[Long] = qRows.map(_._1)
     // driver-side probe: nProbe best cells per query by the same spherical
     // dot metric the assignment used (queries are a bounded batch)
@@ -406,8 +387,9 @@ object Pq {
       Seq(col("adc").desc, col("neighbor_id").asc), shortlist))
   }
 
-  /** [[ivfPqQuery]] with a PRUNED exact-rerank fetch — the 100 TB read
-    * path for a STORE-BACKED corpus. The exact form's rerank re-attaches
+  /** Probe + ADC + exact rerank against a built (possibly store-loaded)
+    * index, with a PRUNED exact-rerank fetch — the 100 TB read path for a
+    * STORE-BACKED corpus. A full-scan rerank re-attaches
     * float vectors by an id probe whose scan side is the FULL corpus
     * vector column: correct, but per query batch it re-reads the very
     * bytes the 8-byte code table exists to avoid (stored-IVF dodges this
@@ -418,8 +400,8 @@ object Pq {
     * corpus store carrying a `vec_id` Bloom sidecar — the rerank reads
     * only files that can hold a shortlisted vector (files-read-bounded,
     * asserted in PqSpec). Query vectors re-use the already-collected
-    * batch (zero extra corpus reads). Results are bit-identical to
-    * [[ivfPqQuery]] on the same index (law-tested).
+    * batch (zero extra corpus reads). Results are bit-identical to the
+    * full-scan rerank on the same index (law-tested in PqSpec).
     *
     * Build the sidecar once with `BloomSkip.write(spark, corpusDir,
     * Seq("vec_id"))`; vectors appended after the sidecar are kept
@@ -457,24 +439,6 @@ object Pq {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank", "cos")
-  }
-
-  /** Incremental maintenance of a stored IVF-PQ index — add a vector
-    * batch WITHOUT rebuild ([[VectorOps.ivfAppend]]'s contract extended
-    * to both quantizers): centroids AND codebooks stay fixed, the batch
-    * is encoded + assigned in ONE scan and lands `mode("append")` into
-    * the cell partitions. With both quantizers fixed, post-append query
-    * results EQUAL a from-scratch encode of the union (law-tested);
-    * recall drifts only as data drifts from the trained quantizers —
-    * the retrain trigger is a rebuild + [[writeIvfPqIndex]]. Delivery
-    * semantics are the caller's, as with ivfAppend.
-    */
-  def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
-      newVectors: DataFrame): Unit = {
-    val idx = readIvfPqIndex(spark, dir)
-    // additive new files in the code table's cell dirs
-    encodeAssign(newVectors, idx.centroids, idx.model)
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/assignments")
   }
 
   /** Session-scoped stored IVF-PQ demo indexes, keyed by sfDir — built

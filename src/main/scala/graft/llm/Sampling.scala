@@ -21,15 +21,6 @@ import graft.query.Tables
   */
 object Sampling {
 
-  /** Stable bucket in [0, nBuckets) from a key column + salt — the
-    * production split function (train/val/test = bucket ranges). xxhash64
-    * keeps buckets uniform for ANY key distribution, including clustered
-    * ids; changing `salt` re-deals every assignment independently of
-    * earlier splits.
-    */
-  def splitBucket(key: Column, nBuckets: Int, salt: Long = 0L): Column =
-    pmod(xxhash64(key, lit(salt)), lit(nBuckets))
-
   /** Deterministic per-stratum sample: the `perStratum` lowest-ranked rows
     * of each stratum under an explicit stable ordering. With `orderKey` =
     * a hash of the id this is a uniform stratified sample; with a quality
@@ -51,48 +42,10 @@ object Sampling {
     // SortOrder (unevaluable, and semantically bottom-k)
     graft.plans.TopK.perKey(df, Seq(stratum), Seq(orderKey), perStratum)
 
-  /** L23: deterministic global shuffle into training shards — the ordering
-    * step between curation and training. Every row gets a shard (hash
-    * bucket) and a position within its shard (rank under a scrambled-but-
-    * deterministic order), so the training stream is pseudo-random yet
-    * bit-reproducible across re-runs, backfills, and engines — no RNG
-    * state, no `rand()`.
-    *
-    * Scale shape: ONE shuffle keyed on the shard + a per-shard sort — which
-    * is exactly the physical layout of the training-shard WRITE
-    * (`repartition(shard).sortWithinPartitions(ord)` → one sorted file per
-    * shard); at 100 TB each shard sorts independently, nothing global.
-    */
-  def shardShuffle(df: org.apache.spark.sql.DataFrame, key: Column,
-      nShards: Int, salt: Long = 0L): org.apache.spark.sql.DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("shard").orderBy(col("__ord"), key)
-    df.withColumn("shard", splitBucket(key, nShards, salt))
-      .withColumn("__ord", xxhash64(key, lit(salt + 1)))
-      .withColumn("pos", row_number().over(w).cast("long"))
-      .drop("__ord")
-  }
-
-  /** Materialize the [[shardShuffle]] order as on-disk training shards —
-    * the artifact a trainer actually reads: `shard=<s>/` parquet
-    * directories whose rows are ALREADY in training order (one writer task
-    * per shard via the shard-keyed repartition, rows sorted by `pos`
-    * within it), so the reader streams each shard file sequentially with
-    * no sort. Deterministic end to end: re-running the write produces the
-    * identical layout.
-    */
-  def writeTrainingShards(df: org.apache.spark.sql.DataFrame, key: Column,
-      nShards: Int, dir: String, salt: Long = 0L): Unit =
-    shardShuffle(df, key, nShards, salt)
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-      .write.mode("overwrite").partitionBy("shard").parquet(dir)
-
   // Oracle-twinned arithmetic bucket: DuckDB has no xxhash64, so the
   // SQL-verified query pins the split SEMANTICS (deterministic, disjoint,
   // covering, re-run stable) through a multiplicative hash both engines
-  // compute identically in 64-bit-safe range. Production callers use
-  // splitBucket above; the laws are the same.
+  // compute identically in 64-bit-safe range.
   private def arithBucket(id: Column): Column =
     (id % 1000003L) * 31L % 100L
 
@@ -214,8 +167,7 @@ object Sampling {
     // its target rate (here src0 fully, src1-src3 at 50%, the rest at 20%)
     // by the same deterministic per-row bucket as the split — no RNG, no
     // shuffle, re-run/backfill stable, and the mix is reproducible from the
-    // code alone. Production callers use splitBucket(key, 100) < rate with
-    // xxhash64; the oracle twin pins the semantics via the arithmetic hash.
+    // code alone.
     Q("q_mix_weighted", Some(
       """SELECT source, count(*) AS n_kept, min(doc_id) AS min_id
         |FROM documents
@@ -235,8 +187,10 @@ object Sampling {
         .orderBy("source")),
 
     // ---- deterministic training-shard shuffle ----------------------------------
-    // The oracle-twinned form of [[shardShuffle]] (arithmetic hash for
-    // cross-engine parity, 8 shards): per shard, the doc count, the doc
+    // Every row gets a shard (hash bucket) and a position within it under a
+    // scrambled-but-deterministic order, so the training stream is
+    // pseudo-random yet bit-reproducible — no RNG state. Arithmetic hash for
+    // cross-engine parity, 8 shards: per shard, the doc count, the doc
     // that leads the shard's training order, and a position-weighted
     // checksum — equal checksums prove BOTH engines derive the identical
     // full permutation, not just the same membership.

@@ -33,9 +33,7 @@ import graft.query.Tables
   *    the corpus never re-groups token-by-token.
   *
   * One-pass semantics: cutting can juxtapose new k-grams; like the
-  * reference implementations, [[clean]] does not re-examine those —
-  * [[cleanFixpoint]] iterates the operator to quiescence when the
-  * stronger guarantee is required.
+  * reference implementations, [[clean]] does not re-examine those.
   */
 object SubstringDedup {
 
@@ -93,61 +91,6 @@ object SubstringDedup {
     */
   def clean(docs: DataFrame, k: Int): DataFrame =
     rebuild(docs, cutPositions(docs, k))
-
-  /** Iterate [[clean]] to quiescence: one pass can juxtapose previously
-    * non-adjacent tokens into NEW duplicated k-grams, which the next pass
-    * then sees. Stops when a round cuts zero token positions or after
-    * `maxRounds` (real corpora converge in 2–3 rounds: each round only
-    * re-examines text that the previous round rewrote, and the cut set
-    * shrinks monotonically toward the canonical occurrences).
-    *
-    * Returns the final (doc_id, kept_tokens, clean_text) frame — persisted,
-    * caller may `unpersist()` — and the per-round cut-position counts (the
-    * convergence log; a trailing 0 means quiescence was OBSERVED, a
-    * non-zero final entry means `maxRounds` stopped the loop first).
-    *
-    * Scale note: each round is one full [[clean]] (gram agg + two
-    * shuffle-hash joins); rounds are materialized (persist + count) so
-    * lineage stays one round deep instead of stacking `maxRounds` plans.
-    */
-  def cleanFixpoint(docs: DataFrame, k: Int,
-      maxRounds: Int = 4): (DataFrame, Seq[Long]) = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var cur = docs.select(col("doc_id"), col("text")).persist()
-    cur.count()
-    var prev: DataFrame = null
-    val roundCuts = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      val cutDocs = cutPositions(cur, k).persist()
-      val nCut = cutDocs
-        .agg(coalesce(sum(size(col("cutpos"))), lit(0L)).as("n"))
-        .head.getLong(0)
-      roundCuts += nCut
-      if (nCut == 0) converged = true
-      else {
-        val next = rebuild(cur, cutDocs)
-          .select(col("doc_id"), col("clean_text").as("text")).persist()
-        next.count()
-        if (prev != null) prev.unpersist()
-        prev = cur
-        cur = next
-      }
-      cutDocs.unpersist()
-      round += 1
-    }
-    // empty text splits to [""] — guard so a fully-cut doc reports 0 tokens
-    val out = cur.select(col("doc_id"),
-      when(length(col("text")) === 0, lit(0L))
-        .otherwise(size(split(col("text"), " ")).cast("long"))
-        .as("kept_tokens"),
-      col("text").as("clean_text")).persist()
-    out.count()
-    if (prev != null) prev.unpersist()
-    cur.unpersist()
-    (out, roundCuts.toSeq)
-  }
 
   val all: Seq[Q] = Seq(
 

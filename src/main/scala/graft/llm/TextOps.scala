@@ -25,21 +25,15 @@ object TextOps {
     df.groupBy(key.as("dedup_key"))
       .agg(min(id).as("keep_id"), cnt.as("n_copies"))
 
-  /** Word n-gram shingles, distinct. Empty array when the document has
-    * fewer than n words (Spark's `sequence(1,0)` would descend).
-    */
-  def shingles(text: Column, n: Int): Column =
-    array_distinct(ngramsAll(text, n))
-
   /** Per-row distinct 64-bit shingle hashes WITHOUT materializing shingle
     * strings: a native single pass off the text bytes
     * ([[graft.functions.ShingleHashes]]; bit-for-bit parity with the HOF
     * slice-chain it replaced — element order included — is pinned in
     * SignatureExpressionsSpec, because these values are upstream of every
     * STORED MinHash signature). Skipping the `concat_ws` string build +
-    * string distinct is ~3x on the shingling stage; use [[shingles]] only
-    * where the strings themselves are needed (exact-Jaccard verify,
-    * q_ngram_jaccard).
+    * string distinct is ~3x on the shingling stage; build gram strings
+    * with [[ngramsAll]] only where the strings themselves are needed
+    * (q_ngram_jaccard).
     *
     * The old HOF form needed a persisted word-hash barrier per call site
     * (CollapseProject would inline the word-hash transform into the
@@ -60,7 +54,7 @@ object TextOps {
 
   /** Jaccard similarity of two pre-distinct string arrays — exact, for
     * verification and small candidate sets. The 100 TB path is MinHash LSH
-    * (`VectorOps.minhashPairs`) which only ever compares within-bucket
+    * (`VectorOps.minhashPairsNative`) which only ever compares within-bucket
     * candidates; this exact form is its verifier.
     */
   def jaccard(a: Column, b: Column): Column =
@@ -160,36 +154,6 @@ object TextOps {
     regexp_replace(regexp_replace(text, lit(EmailRe), lit("<EMAIL>")),
       lit(UrlRe), lit("<URL>"))
 
-  /** Cross-source contamination: estimated Jaccard between each pair of
-    * sources' full shingle-union sets, from composed group signatures.
-    * Signature construction mirrors `VectorOps.minhashPairsNative` (shared
-    * [[shingleHashes]] stage; the second persist below is the barrier that
-    * keeps the shingle-hash pass out of the 64-permutation lambda).
-    */
-  def sourceContamination(spark: org.apache.spark.sql.SparkSession,
-      docs: DataFrame, nPerm: Int = 64): DataFrame = {
-    // ONE shingle pass, stored before the plan branches: an eager
-    // localCheckpoint writes the blocks up front AND cuts lineage, so the
-    // estimate's self-join sides physically cannot re-run the scan (a lazy
-    // persist lets concurrently-ready branches race the cache and each
-    // recompute it — the minhashPairsNative lesson).
-    val hsDf = shingleHashes(docs, Seq("source"), 3).localCheckpoint()
-    val out = contaminationEstimate(hsDf, nPerm).localCheckpoint()
-    // the corpus-sized snapshot is released deterministically — long-lived
-    // sessions must not carry a checkpoint block per invocation until GC
-    org.apache.spark.sql.graft.ColumnBridge.releaseLocalCheckpoint(hsDf)
-    out
-  }
-
-  /** The estimate stage of [[sourceContamination]] over an already-built
-    * (source, hs) frame — split out so [[sourceContaminationChecked]] can
-    * share one shingle pass between the estimate and its ground truth.
-    */
-  private[llm] def contaminationEstimate(hsDf: DataFrame, nPerm: Int): DataFrame =
-    estimatePairs(perSourceSig(
-      hsDf.select(col("source"), explode(col("hs")).as("h")).distinct(),
-      nPerm), nPerm)
-
   /** Per-source minhash signature from a DISTINCT `(source, h)` frame.
     *
     * Identical values to the per-doc signature union (the
@@ -216,25 +180,16 @@ object TextOps {
         array((0 until nPerm).map(p => col(s"__m$p")): _*).as("sig"))
   }
 
-  /** Signature-estimate Jaccard for every source pair: the a×b self-join
-    * references `perSource` twice; its aggregate sits BELOW one exchange,
-    * which ReuseExchange dedups (plan-asserted in TextOpsSpec).
-    */
-  private def estimatePairs(perSource: DataFrame, nPerm: Int): DataFrame = {
-    val a = perSource.select(col("source").as("src_a"), col("sig").as("sig_a"))
-    val b = perSource.select(col("source").as("src_b"), col("sig").as("sig_b"))
-    a.join(b, col("src_a") < col("src_b"))
-      .select(col("src_a"), col("src_b"), estJaccard(nPerm).as("est_jaccard"))
-  }
-
   private def estJaccard(nPerm: Int): Column =
     round(aggregate(zip_with(col("sig_a"), col("sig_b"),
       (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / nPerm, 4)
 
-  /** [[sourceContamination]] WITH its ground truth, from ONE shingle pass:
-    * each source pair carries the signature estimate next to the EXACT
-    * shingle-set Jaccard and the estimator-law verdict `|est − exact| ≤ tol`.
+  /** Cross-source contamination WITH its ground truth, from ONE shingle
+    * pass: each source pair carries the MinHash estimate of the Jaccard
+    * between the two sources' full shingle-union sets (composed per-source
+    * signatures, [[perSourceSig]]) next to the EXACT shingle-set Jaccard and
+    * the estimator-law verdict `|est − exact| ≤ tol`.
     *
     * The exact side never self-joins the corpus: the distinct
     * (source, shingle-hash) space is built by a single hash-shuffle on the
@@ -248,9 +203,11 @@ object TextOps {
     */
   def sourceContaminationChecked(spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame, nPerm: Int = 64, tol: Double = 0.15): DataFrame = {
-    // ONE shingle pass, stored before the plan branches (see
-    // [[sourceContamination]]): the eager checkpoint makes re-running the
-    // scan impossible instead of merely unlikely. Everything downstream
+    // ONE shingle pass, stored before the plan branches: an eager
+    // localCheckpoint writes the blocks up front AND cuts lineage, so the
+    // branches physically cannot re-run the scan (a lazy persist lets
+    // concurrently-ready branches race the cache and each recompute it —
+    // the minhashPairsNative lesson). Everything downstream
     // rides byHash's single groupBy(h) exchange — the round-7 fusion:
     // the estimate's per-source signatures are computed from byHash's
     // own re-exploded distinct (source, h) rows (see [[perSourceSig]]),
@@ -410,8 +367,8 @@ object TextOps {
       .drop("_ws")
   }
 
-  /** All word n-gram occurrences, NON-distinct (unlike [[shingles]]) —
-    * for corpus-frequency counting, where each occurrence counts once.
+  /** All word n-gram occurrences, NON-distinct — for corpus-frequency
+    * counting, where each occurrence counts once.
     */
   def ngramsAll(text: Column, n: Int): Column = {
     val w = words(text)
@@ -432,38 +389,15 @@ object TextOps {
   /** 64-bit n-gram hashes (one per occurrence, order-preserved) WITHOUT
     * materializing n-gram strings: a native single-pass rolling hash off
     * the text bytes ([[graft.functions.NgramHashes]]; bit-for-bit parity
-    * with [[ngramHashesHof]] is pinned in SignatureExpressionsSpec — gram
-    * values feed stored decontamination state, so the two forms must
-    * never drift). Hash-distinct equals string-distinct up to 2^-64
-    * collisions (words cannot contain the split character, so the n-word
-    * window is injective). Rows with < n words yield an empty array.
+    * with the built-in-HOF form it replaced is pinned in
+    * SignatureExpressionsSpec — gram values feed stored decontamination
+    * state, so the two forms must never drift). Hash-distinct equals
+    * string-distinct up to 2^-64 collisions (words cannot contain the
+    * split character, so the n-word window is injective). Rows with < n
+    * words yield an empty array.
     */
   def ngramHashes(text: Column, n: Int): Column =
     graft.functions.GraftFunctions.ngramHashesNative(text, n)
-
-  /** The built-in-HOF definition [[ngramHashes]] replaces, kept as the
-    * drift-guard reference: the word hashes fold through n-1 shifted
-    * `zip_with`s, where every array is a zip ARGUMENT — evaluated once per
-    * row — never an expression captured inside a HOF lambda (which Spark
-    * re-evaluates per element; that re-execution trap is why the old HOF
-    * [[shingleHashes]] needed a persisted barrier). ~8x cheaper than the string
-    * form, but still interpreted: nested-HOF arguments defeat
-    * subexpression elimination, so the plan re-derives the split + word
-    * hashing for each of the n-1 zips — the native form is one pass.
-    */
-  def ngramHashesHof(text: Column, n: Int): Column = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val wh = transform(words(text), w => xxhash64(w))
-    // after the fold, element i is hash(word i .. word i+n-1); the last
-    // n-1 elements are junk (they hashed past-the-end nulls) and the
-    // final slice drops them
-    val folded = (2 to n).foldLeft(wh) { (acc, j) =>
-      zip_with(acc,
-        slice(wh, lit(j), greatest(size(wh) - (j - 1), lit(1))),
-        (a, b) => xxhash64(a, b))
-    }
-    slice(folded, lit(1), greatest(size(wh) - (n - 1), lit(0)))
-  }
 
   /** L5: Gopher-style quality-rule battery — the per-document repetition /
     * shape signals LLM cleaning pipelines gate on (Rae et al. 2021 §A1.1):
@@ -1096,15 +1030,18 @@ object TextOps {
 
     // ---- L5: document fingerprint, oracled via its LAWS -------------------------
     // The 64-bit value is engine-defined; its CONTRACT is not: equal token
-    // sequences <=> equal fingerprints. fp_unique pins injectivity on the
-    // fixture (all 500 texts distinct => all 500 fingerprints distinct — a
-    // collision or nondeterminism breaks the hash match); order_sensitive
+    // sequences <=> equal fingerprints. fp_unique pins that in both
+    // directions against ground truth from the texts: a fingerprint is
+    // shared exactly when its text is (the space split is injective, so
+    // equal texts <=> equal token sequences; sf0.1 holds 4,992 distinct
+    // texts of 5,000, and its 16 duplicated rows read false) — a collision
+    // or nondeterminism breaks the hash match; order_sensitive
     // pins the <= direction per row against ground truth DuckDB computes
     // from the token sequences themselves: the fingerprint of the REVERSED
     // token stream differs exactly when reversal changes the sequence
     // (single-word and palindromic docs must collide, nothing else may).
     Q("q_fingerprint", Some(
-      """SELECT doc_id, true AS fp_unique,
+      """SELECT doc_id, count(*) OVER (PARTITION BY text) = 1 AS fp_unique,
         |  list_reverse(string_split(text, ' ')) <> string_split(text, ' ')
         |    AS order_sensitive
         |FROM documents ORDER BY doc_id""".stripMargin),

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, HashingTF, MinHashLSH}
+import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
 import graft.Q
 import graft.functions.GraftFunctions
@@ -44,12 +44,6 @@ object VectorOps {
     * and allocates, which dominates LSH verify stages).
     */
   def dot(a: Column, b: Column): Column = GraftFunctions.dotNative(a, b)
-
-  /** Reference HOF form of [[dot]] — kept as the independent semantics
-    * oracle for the native expression in tests.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def l2norm(a: Column): Column = sqrt(GraftFunctions.dotNative(a, a))
 
@@ -117,20 +111,6 @@ object VectorOps {
     out
   }
 
-  /** The LAZY plan of [[minhashPairsNative]] — `(sig, verified)` with no
-    * cache/checkpoint barriers, so FanoutSortLintSpec can assert the
-    * physical shape of the whole pipeline (the re-attach joins must never
-    * SORT the candidate stream — the round-8 ×100 cliff) without running
-    * it. The public entry point adds the materialization discipline.
-    */
-  private[graft] def minhashPairsPlan(docs: DataFrame, threshold: Double,
-      nBands: Int, rowsPerBand: Int,
-      exactVerify: Boolean, maxBucket: Int): (DataFrame, DataFrame) = {
-    val sig = minhashSigPlan(docs, nBands * rowsPerBand)
-    (sig, minhashVerifyPlan(sig, threshold, nBands, rowsPerBand, exactVerify,
-      maxBucket, graft.plans.Reattach.shuffleHash))
-  }
-
   /** `hs` = per-doc distinct 64-bit shingle hashes. The nPerm permutations
     * re-hash these 8-byte longs, never the text — and the exact verify
     * intersects them too (Jaccard over distinct hash sets == Jaccard over
@@ -140,11 +120,11 @@ object VectorOps {
     * map stage (native ShingleHashes + MinHashSig); the one persist is the
     * plan-branch barrier in the public entry.
     */
-  private def minhashSigPlan(docs: DataFrame, nPerm: Int): DataFrame =
+  private[llm] def minhashSigPlan(docs: DataFrame, nPerm: Int): DataFrame =
     TextOps.shingleHashes(docs, Seq("doc_id"), 3)
       .select(col("doc_id"), col("hs"), sigColumn(col("hs"), nPerm).as("sig"))
 
-  private def minhashVerifyPlan(sig: DataFrame, threshold: Double,
+  private[llm] def minhashVerifyPlan(sig: DataFrame, threshold: Double,
       nBands: Int, rowsPerBand: Int, exactVerify: Boolean, maxBucket: Int,
       reattach: DataFrame => DataFrame): DataFrame = {
     val nPerm = nBands * rowsPerBand
@@ -182,37 +162,6 @@ object VectorOps {
           round(sigJaccard(col("sig_a"), col("sig_b"), nPerm), 4)
             .as("jaccard"))
         .filter(col("jaccard") >= threshold)
-  }
-
-  /** MLlib cross-check variant of [[minhashPairsNative]] (HashingTF +
-    * MinHashLSH `approxSimilarityJoin`); kept as the independent oracle for
-    * the native path's recall in tests.
-    */
-  def minhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val sh = docs.select(col("doc_id"),
-      TextOps.shingles(col("text"), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val tf = new HashingTF().setInputCol("sh").setOutputCol("features")
-      .setNumFeatures(1 << 18).setBinary(true)
-    val featured = tf.transform(sh)
-    val mh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(8).setSeed(42L)
-    val model = mh.fit(featured)
-    // signatures are computed once and persisted: the self-join would
-    // otherwise re-shingle + re-hash the corpus for each side (and at 100 TB
-    // the signature table, not the corpus, is what you want shuffling).
-    val signed = model.transform(featured)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = model
-      .approxSimilarityJoin(signed, signed, threshold, "jaccard_dist")
-      .select(
-        col("datasetA.doc_id").as("id_a"),
-        col("datasetB.doc_id").as("id_b"),
-        round(lit(1.0) - col("jaccard_dist"), 4).as("est_jaccard"))
-      .filter(col("id_a") < col("id_b"))
-      .localCheckpoint()
-    signed.unpersist()
-    out
   }
 
   // ---- L2 incremental: near-dup state as a STORED signature table ----------
@@ -382,13 +331,6 @@ object VectorOps {
     .setInputCol("features").setOutputCol("hashes")
     .setBucketLength(0.5).setNumHashTables(4).setSeed(42L)
 
-  private def annSelect(joined: DataFrame): DataFrame = joined
-    .select(
-      col("datasetA.vec_id").as("query_id"),
-      col("datasetB.vec_id").as("neighbor_id"),
-      round(lit(1.0) - col("dist") * col("dist") / 2.0, 4).as("est_cos"))
-    .filter(col("query_id") =!= col("neighbor_id"))
-
   def annCosine(corpus: DataFrame, queries: DataFrame, cosThreshold: Double)
       : DataFrame = {
     val corpusU = unitFeatures(corpus)
@@ -397,26 +339,16 @@ object VectorOps {
     // hashed on its own — don't pay the full corpus transform twice.
     val corpusH = model.transform(corpusU)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = annSelect(model.approxSimilarityJoin(
-      model.transform(unitFeatures(queries)), corpusH,
-      math.sqrt(2.0 * (1.0 - cosThreshold)), "dist").toDF())
+    val out = model.approxSimilarityJoin(
+        model.transform(unitFeatures(queries)), corpusH,
+        math.sqrt(2.0 * (1.0 - cosThreshold)), "dist")
+      .select(
+        col("datasetA.vec_id").as("query_id"),
+        col("datasetB.vec_id").as("neighbor_id"),
+        round(lit(1.0) - col("dist") * col("dist") / 2.0, 4).as("est_cos"))
+      .filter(col("query_id") =!= col("neighbor_id"))
       .localCheckpoint()
     corpusH.unpersist()
-    out
-  }
-
-  /** All-pairs variant: hash the corpus exactly once and self-join the
-    * persisted signature table (the shape an LSH dedup sweep has at scale).
-    */
-  def annCosineSelf(corpus: DataFrame, cosThreshold: Double): DataFrame = {
-    val corpusU = unitFeatures(corpus)
-    val model = brpLsh.fit(corpusU)
-    val signed = model.transform(corpusU)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = annSelect(model.approxSimilarityJoin(signed, signed,
-      math.sqrt(2.0 * (1.0 - cosThreshold)), "dist").toDF())
-      .localCheckpoint()
-    signed.unpersist()
     out
   }
 
@@ -424,32 +356,6 @@ object VectorOps {
     val n = math.sqrt(c.map(x => x * x).sum)
     if (n == 0.0) c else c.map(_ / n)
   }
-
-  /** L4/L3 storage path: per-vector int8 scalar quantization — at corpus
-    * scale embeddings dominate storage (float32 = 4 bytes/dim) and uint8
-    * codes + two floats of scale metadata cut that 4x with a bounded
-    * reconstruction error (≤ scale/2 per component, scale = range/255).
-    * Pure column expressions, one scan, no shuffle; [[dequantize]] inverts
-    * it for similarity work that can't run on codes directly.
-    *
-    * PERF: convenient for small frames, but the aggregate subexpressions
-    * (min/max/scale) sit inside the codes lambda and evaluate per ELEMENT
-    * — on hot paths stage zero/scale as attributes first and keep them
-    * multi-referenced so CollapseProject can't inline them back (see the
-    * q_quantize_embed registration; measured ~40x at sf0.1).
-    */
-  def quantize(v: Column): Column = {
-    val lo = array_min(v)
-    // constant vectors have zero range; the floor keeps the scale positive
-    val scale = greatest((array_max(v) - lo) / 255.0d, lit(1e-12))
-    struct(lo.as("zero"), scale.as("scale"),
-      transform(v, x => round((x - lo) / scale).cast("int")).as("codes"))
-  }
-
-  /** Reconstruct `zero + code * scale` from a [[quantize]] struct. */
-  def dequantize(q: Column): Column =
-    transform(q.getField("codes"),
-      c => q.getField("zero") + c * q.getField("scale"))
 
   /** Candidate pairs from banded LSH buckets, with a skew guard. Buckets at
     * or under `maxBucket` emit all pairs (id_a < id_b). Oversized buckets —
@@ -718,8 +624,7 @@ object VectorOps {
 
   /** The LAZY plan of [[cosinePairsNative]] — `(withSig, verified)` minus
     * the cache/checkpoint barriers, for FanoutSortLintSpec's standing
-    * no-sort-over-the-candidate-stream assertion (see
-    * [[minhashPairsPlan]]).
+    * no-sort-over-the-candidate-stream assertion.
     */
   private[graft] def cosinePairsPlan(corpus: DataFrame, cosThreshold: Double,
       nBands: Int, bitsPerBand: Int, dim: Int,
@@ -832,7 +737,7 @@ object VectorOps {
     * negatives — the false-negative poison in contrastive objectives) and
     * (b) chosen by a DETERMINISTIC per-(anchor, candidate) hash priority,
     * no RNG: re-runs, backfills, and resumed jobs draw the SAME
-    * negatives, and so does the DuckDB oracle (the `splitBucket`
+    * negatives, and so does the DuckDB oracle (the `q_train_test_split`
     * arithmetic-hash stance — production callers swap in `xxhash64` with
     * identical structure).
     *
@@ -1291,7 +1196,7 @@ object VectorOps {
         |      FROM embeddings)))
         |ORDER BY vec_id""".stripMargin),
       (s, d) => {
-        // staged, not quantize(v) one-shot: aggregate exprs referenced
+        // staged, not one-shot: aggregate exprs referenced
         // inside a transform lambda evaluate PER ELEMENT (no loop-invariant
         // hoisting), so zero/scale must be real attributes before the code
         // lambda reads them. Each stage re-exports them alongside their

@@ -47,36 +47,16 @@ object Cdc {
       .select(keyCols.map(col) :+ col("change"): _*)
   }
 
-  /** Order-independent table checksum: one number that equals iff two
-    * tables hold the same multiset of rows — the cheap cross-system
-    * equality check a migration (like the one this engine implements)
-    * runs before cutover, without moving either table. Row hash =
-    * `xxhash64` over the canonicalized columns, combined with a plain
-    * SUM — commutative, so partitioning/order never matter; map-side
-    * partials make the exchange one value per partition. Collisions are
-    * 2^-64-grade, the standard anti-entropy trade. The sum runs as
-    * DECIMAL(38,0): full-range int64 hashes overflow a long sum, which
-    * ANSI mode (on in Spark 4) correctly refuses — decimal addition is
-    * exact, order-independent, and holds ~10^19 rows of headroom.
-    */
-  def tableChecksum(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.agg(
-      coalesce(sum(xxhash64(cols.map(col): _*)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-        lit(0L).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-        .as("checksum"),
-      count(lit(1)).as("n_rows"))
-
   val all: Seq[Q] = Seq(
 
     // ---- S15: order-independent table checksum ---------------------------------
-    // The production form hashes with xxhash64 (engine-defined; DuckDB
-    // can't reproduce it), so the ORACLE pins the operator's laws through
-    // an arithmetic row hash both engines compute identically — same
-    // contract as the train/test-split bucket. The Spark side computes
-    // BOTH: the arithmetic checksum hash-matches DuckDB exactly, and the
-    // xxhash64 checksum's invariance laws (row-order independence,
-    // one-row sensitivity) are pinned in CdcSpec.
+    // One number that equals iff two tables hold the same multiset of rows
+    // (up to hash collisions) — the cheap cross-system equality check a
+    // migration runs before cutover. The row hash is arithmetic, so DuckDB
+    // computes it identically (the train/test-split bucket's stance), and
+    // the plain SUM is commutative: partitioning and row order never
+    // matter, and map-side partials make the exchange one value per
+    // partition.
     Q("q_table_checksum", Some(
       """SELECT CAST(sum((l_orderkey * 31 + l_linenumber) % 1000003
         |                * 7 % 999983) AS BIGINT) AS checksum,

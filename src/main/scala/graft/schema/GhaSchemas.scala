@@ -60,11 +60,6 @@ object GhaSchemas {
     )))
   ))
 
-  /** Event types the engine curates (dispatch set at `preprocess.py:112-119`). */
-  val handledTypes: Seq[String] = Seq(
-    "PushEvent", "CreateEvent", "PullRequestEvent",
-    "IssueCommentEvent", "WatchEvent", "ForkEvent")
-
   /** Curated-table names, in reference order (`preprocess.py:152-159`). */
   val tableNames: Seq[String] =
     Seq("commit", "create", "pr", "comment", "watch", "fork")

@@ -84,10 +84,10 @@ object TableStore {
   final class ConcurrentWriteException(msg: String)
     extends RuntimeException(msg)
 
-  private def fs(spark: SparkSession, p: String): FileSystem =
+  private[store] def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private val GenName = "^g(\\d+)$".r
+  private[store] val GenName = "^g(\\d+)$".r
 
   /** TRULY atomic create-exclusive — the primitive every claim/lock here
     * stands on (`_commit.lock`, `g<N>.claim`, `_claims/date=*.claim`).
@@ -876,44 +876,6 @@ object TableStore {
 
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(resolveDataDir(spark, dir))
-
-  /** Generations present for this table, oldest first (committed only). */
-  def generations(spark: SparkSession, dir: String): Seq[Int] = {
-    val f = fs(spark, dir)
-    val root = new Path(dir)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).iterator
-      .filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName match {
-        case GenName(n) if f.exists(new Path(s.getPath, "_SUCCESS")) =>
-          Some(n.toInt)
-        case _ => None
-      })
-      .toSeq.sorted
-  }
-
-  /** Time travel (Delta `VERSION AS OF` parity, bounded by retention):
-    * read a specific generation. By default the store keeps the current
-    * generation plus the one it superseded; [[compact]] and
-    * [[overwriteVersioned]] take `retainGenerations` (Delta's
-    * `delta.logRetentionDuration` analog, counted in rewrites rather than
-    * hours — rewrites are the only events that create versions here) to
-    * hold a deeper window: retention N keeps the current plus N−1
-    * predecessors, each fully readable, so
-    * reprocess-after-a-bad-compaction and compare-to-previous-result
-    * workflows can look as far back as the writer chose to pay storage
-    * for; generations outside the window are vacuumed.
-    */
-  def readGeneration(spark: SparkSession, dir: String, generation: Int,
-      schema: Option[StructType] = None): DataFrame = {
-    val gens = generations(spark, dir)
-    require(gens.contains(generation),
-      s"generation $generation not present for $dir (retained: " +
-        s"${gens.mkString(", ")}) — older generations are vacuumed")
-    val reader = schema.orElse(declaredSchema(spark, dir))
-      .fold(spark.read)(s => spark.read.schema(s))
-    reader.parquet(s"$dir/g$generation")
-  }
 
   /** Schema-declared read: required for tables that may hold zero rows (an
     * ingested batch with no events of some type writes only `_SUCCESS`, so

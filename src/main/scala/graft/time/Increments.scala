@@ -121,11 +121,4 @@ object Increments {
         date_format(col("h"), "yyyy-MM-dd-"),
         hour(col("h")).cast("string"),
         lit(".json.gz")).as("url"))
-
-  /** [[hourlyUrls]] gathered to the driver in hour order — the work list for
-    * the distributed fetch stage (`Fetch.download`). One string per hour:
-    * bounded by the range, never by data size.
-    */
-  def urlList(spark: SparkSession, start: String, stop: String): Seq[String] =
-    hourlyUrls(spark, start, stop).collect().map(_.getString(0)).toSeq
 }

@@ -163,30 +163,66 @@ class EntryPointLintSpec extends AnyFunSuite {
     reached.toSet
   }
 
-  /** The source definition a class compiles from — a class and its
-    * companion share one, nested definitions get their own — or None for
-    * compiler-made classes (anonymous classes, type tags).
+  /** Whether a main class is a `scala.Product`: a case class, or one of
+    * its library supertypes (a Catalyst node) makes it one.
     */
-  private def definition(cls: String): Option[String] = {
-    val simple = cls.substring(cls.lastIndexOf('/') + 1)
-    if (Seq("$anon", "$typecreator", "$$Lambda").exists(simple.contains)) None
-    else Some(cls.stripSuffix("$").replace('/', '.').replace('$', '.'))
+  private def isProduct(name: String): Boolean =
+    try classOf[Product].isAssignableFrom(
+      Class.forName(name.replace('/', '.'), false, getClass.getClassLoader))
+    catch { case _: ClassNotFoundException | _: LinkageError => false }
+
+  /** Members the compiler writes, which no source line can delete: bridges
+    * and synthetic members, lambda bodies, default-argument getters, type-tag
+    * creators, the static forwarders of an object's mirror class, and the
+    * synthetics of a case class and of its companion (whose constructor runs
+    * only when a synthetic is called).
+    */
+  private def compilerMade(c: ClassNode, m: MethodNode): Boolean = {
+    val caseSynthetics = Set("copy", "canEqual", "equals", "hashCode",
+      "toString", "apply", "unapply", "readResolve", "writeReplace")
+    val base = c.name.stripSuffix("$")
+    val companion = c.name.endsWith("$") && isProduct(base)
+    (m.access & (Opcodes.ACC_SYNTHETIC | Opcodes.ACC_BRIDGE)) != 0 ||
+      Seq("$anonfun$", "$default$").exists(m.name.contains) ||
+      c.name.contains("$typecreator") ||
+      ((m.access & Opcodes.ACC_STATIC) != 0 && classes.contains(c.name + "$")) ||
+      ((companion || isProduct(c.name)) &&
+        (m.name.startsWith("product") || caseSynthetics(m.name))) ||
+      (companion && m.name.startsWith("<"))
   }
 
-  test("every definition in src/main is reachable from the five mains") {
+  /** `Owner.method` as a reader names it: objects and nested classes lose
+    * their `$` marks.
+    */
+  private def sourceName(cls: String, method: String): String =
+    cls.stripSuffix("$").replace('/', '.').replace('$', '.') + "." + method
+
+  test("every method in src/main is reachable from the five mains") {
     // the one entry point a main does not call: Spark instantiates it from
     // the `spark.sql.extensions` conf string
     val confOnly = Seq("graft/functions/GraftExtensions")
     (mains ++ confOnly).foreach(m =>
       assert(classes.contains(m), s"$m moved; update the roots"))
+    // the only methods tests may reach alone: setters of fault-injection
+    // seams that production code reads but never sets
+    val seams = Map(
+      "graft.ingest.GhaPipeline.chaosHook_$eq" ->
+        "crash-window tests throw from a named point of the tick",
+      "graft.store.TableStore.beforeCommitHook_$eq" ->
+        "concurrent-writer tests act between a write and its commit",
+      "graft.store.TableStore.beforeSidecarSwapHook_$eq" ->
+        "crash tests act between a stats sidecar's write and its swap")
     val reached = reachedMethods(
       mains.map(_ -> "main([Ljava/lang/String;)V") ++
-        confOnly.map(_ -> "<init>()V")).map(_._1)
-    val defs = classes.keys.toSeq.flatMap(c => definition(c).map(_ -> c))
-      .groupMap(_._1)(_._2)
-    val unreached = defs.collect {
-      case (d, cs) if !cs.exists(reached) => d
-    }.toSeq.sorted
-    assert(unreached === Nil, "reached from no main: wire it to one or delete it")
+        confOnly.map(_ -> "<init>()V"))
+    val unreached = (for {
+      c <- classes.values
+      m <- c.methods.asScala
+      if !reached(c.name -> (m.name + m.desc)) && !compilerMade(c, m)
+    } yield sourceName(c.name, m.name)).toSeq.distinct.sorted
+    assert(seams.keys.forall(unreached.contains),
+      "a test seam is reached or gone; update the list")
+    assert(unreached.filterNot(seams.contains) === Nil,
+      "reached from no main: wire it to one, move it to src/test or delete it")
   }
 }

@@ -25,7 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * vacuous passes if a pipeline is rewritten without joins.
   *
   * Pipelines are linted through their LAZY plan builders
-  * ([[graft.llm.VectorOps.minhashPairsPlan]] /
+  * ([[graft.llm.References.minhashPairsPlan]] /
   * [[graft.llm.VectorOps.cosinePairsPlan]]) because the public entry
   * points materialize through `localCheckpoint`, which truncates the
   * plan the registry-level PlanLintSpec can see.
@@ -69,18 +69,18 @@ class FanoutSortLintSpec extends AnyFunSuite with SparkFixture {
     // entry points — minhashSignatures itself checkpoints, which would
     // hide its callers' plans from the lint
     def lazySigs: DataFrame =
-      graft.llm.VectorOps.minhashPairsPlan(docs, 0.5, 16, 4,
+      graft.llm.References.minhashPairsPlan(docs, 0.5, 16, 4,
         exactVerify = false, maxBucket = 0)._1.select("doc_id", "sig")
 
     val pipelines: Seq[(String, () => DataFrame)] = Seq(
       "minhashPairs(estimate)" -> (() =>
-        graft.llm.VectorOps.minhashPairsPlan(docs, 0.5, 16, 4,
+        graft.llm.References.minhashPairsPlan(docs, 0.5, 16, 4,
           exactVerify = false, maxBucket = 0)._2),
       "minhashPairs(exact)" -> (() =>
-        graft.llm.VectorOps.minhashPairsPlan(docs, 0.5, 16, 4,
+        graft.llm.References.minhashPairsPlan(docs, 0.5, 16, 4,
           exactVerify = true, maxBucket = 0)._2),
       "minhashPairs(capped)" -> (() =>
-        graft.llm.VectorOps.minhashPairsPlan(docs, 0.5, 16, 4,
+        graft.llm.References.minhashPairsPlan(docs, 0.5, 16, 4,
           exactVerify = false, maxBucket = 100)._2),
       "cosinePairs" -> (() =>
         graft.llm.VectorOps.cosinePairsPlan(emb, 0.9, 8, 8, 0,

@@ -132,7 +132,7 @@ class SignatureExpressionsSpec extends AnyFunSuite with SparkFixture {
     for (n <- Seq(1, 2, 3, 8)) {
       val rows = df.select(
         graft.llm.TextOps.ngramHashes(col("text"), n).as("native"),
-        graft.llm.TextOps.ngramHashesHof(col("text"), n).as("ref"))
+        graft.llm.References.ngramHashesHof(col("text"), n).as("ref"))
         .as[(Seq[Long], Seq[Long])].collect()
       rows.foreach { case (nat, ref) => assert(nat === ref, s"n=$n") }
     }
@@ -169,7 +169,7 @@ class SignatureExpressionsSpec extends AnyFunSuite with SparkFixture {
     val df = Seq(Some("a b c"), None).toDF("text")
     val got = df.select(
       graft.llm.TextOps.ngramHashes(col("text"), 2).as("native"),
-      graft.llm.TextOps.ngramHashesHof(col("text"), 2).as("ref"))
+      graft.llm.References.ngramHashesHof(col("text"), 2).as("ref"))
       .collect()
     got.foreach { r => assert(r.isNullAt(0) === r.isNullAt(1)) }
     assert(got.count(_.isNullAt(0)) === 1)

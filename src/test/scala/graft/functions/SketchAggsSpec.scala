@@ -110,12 +110,13 @@ class SketchAggsSpec extends AnyFunSuite with SparkFixture {
 
   test("Theta: union of stored sketch bytes ≡ sketch of the union of rows") {
     import spark.implicits._
+    SqlFunctions.register(spark)
     val df = (1 to 3000).map(i => (i.toLong, i % 3)).toDF("id", "g")
       .repartition(4)
     val whole = df.agg(thetaAgg(col("id")).as("sk"))
       .select(thetaEstimate(col("sk"))).head().getDouble(0)
     val merged = df.groupBy("g").agg(thetaAgg(col("id")).as("sk"))
-      .agg(thetaUnionAgg(col("sk")).as("sk"))
+      .agg(expr("graft_theta_union(sk)").as("sk"))
       .select(thetaEstimate(col("sk"))).head().getDouble(0)
     assert(whole == 3000.0)
     assert(merged == whole) // disjoint groups, sub-threshold: both exact
@@ -133,16 +134,17 @@ class SketchAggsSpec extends AnyFunSuite with SparkFixture {
   test("FreqItems: bounds contain the true count under partial/merge; " +
     "heavy hitter survives the purge pressure of a wide tail") {
     import spark.implicits._
+    SqlFunctions.register(spark)
     // 64-counter sketch vs 5000 distinct tail items: purges are forced,
     // yet lb ≤ true ≤ ub must hold and "hot" must be reported
     val df = ((1 to 2000).map(_ => "hot") ++
       (1 to 5000).map(i => s"tail_$i")).toDF("w").repartition(8)
-    val sk = df.agg(freqAgg(col("w"), 64).as("sk"))
+    val sk = df.agg(expr("graft_freq_agg(w, 64)").as("sk"))
     val b = sk.select(freqBounds(col("sk"), lit("hot")).as("b"))
       .selectExpr("b.est", "b.lb", "b.ub")
       .as[(Long, Long, Long)].head()
     assert(b._2 <= 2000 && 2000 <= b._3, s"bounds [$b]")
-    val top = sk.select(freqTopItems(col("sk")).as("t"))
+    val top = sk.select(expr("graft_freq_top_items(sk)").as("t"))
       .selectExpr("explode(t) AS r").selectExpr("r.item")
       .as[String].collect()
     assert(top.contains("hot"))
@@ -150,6 +152,7 @@ class SketchAggsSpec extends AnyFunSuite with SparkFixture {
 
   test("FreqItems: weighted (item, count) updates ≡ per-occurrence feeding") {
     import spark.implicits._
+    SqlFunctions.register(spark)
     // Below maxMapSize no purge can fire, so estimates are EXACT and
     // deterministic — weighted build from the (item, count) aggregate must
     // equal both the exact counts and the per-occurrence build (which is
@@ -158,7 +161,7 @@ class SketchAggsSpec extends AnyFunSuite with SparkFixture {
     val occ = ((1 to 900).map(_ => "hot") ++ (1 to 40).map(i => s"t${i % 20}"))
       .toDF("w").repartition(6)
     val counts = occ.groupBy("w").agg(count(lit(1)).as("cnt"))
-    val viaOcc = occ.agg(freqAgg(col("w"), 64).as("sk"))
+    val viaOcc = occ.agg(expr("graft_freq_agg(w, 64)").as("sk"))
     val viaCnt = counts.agg(freqAggWeighted(col("w"), col("cnt"), 64).as("sk"))
     for ((sk, label) <- Seq(viaOcc -> "occ", viaCnt -> "weighted")) {
       val b = sk.select(freqBounds(col("sk"), lit("hot")).as("b"))
@@ -178,7 +181,7 @@ class SketchAggsSpec extends AnyFunSuite with SparkFixture {
   test("FreqItems: merge of stored per-group sketches preserves the bound " +
     "guarantee; SQL surface registers") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
+    SqlFunctions.register(spark)
     ((1 to 900).map(_ => ("g1", "x")) ++ (1 to 600).map(_ => ("g2", "x")) ++
       (1 to 300).map(i => ("g1", s"t$i"))).toDF("g", "w")
       .createOrReplaceTempView("freq_rows")
@@ -189,7 +192,7 @@ class SketchAggsSpec extends AnyFunSuite with SparkFixture {
     assert(merged._1 <= 1500 && 1500 <= merged._2, s"bounds $merged")
     // constructor validation: non-power-of-2 map size fails loudly
     val e = intercept[Exception] {
-      Seq("a").toDF("w").agg(freqAgg(col("w"), 100)).collect()
+      Seq("a").toDF("w").agg(expr("graft_freq_agg(w, 100)")).collect()
     }
     assert(e.getMessage.contains("power of 2"))
   }

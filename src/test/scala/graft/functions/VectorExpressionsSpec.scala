@@ -16,7 +16,7 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkFixture {
 
   test("native dot matches the HOF reference implementation bit-for-bit") {
     val got = vecs.select($"id", GraftFunctions.dotNative($"a", $"b").as("n"),
-      VectorOps.dotHof($"a", $"b").as("h"))
+      graft.llm.References.dotHof($"a", $"b").as("h"))
       .as[(Long, Double, Double)].collect()
     got.foreach { case (id, n, h) => assert(n === h, s"id=$id") }
     assert(got.find(_._1 == 1L).get._2 === 32.0)
@@ -33,7 +33,7 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("graft_dot registers for SQL use") {
-    GraftFunctions.register(spark)
+    SqlFunctions.register(spark)
     vecs.createOrReplaceTempView("vx")
     val r = spark.sql("SELECT graft_dot(a, b) AS d FROM vx WHERE id = 1")
       .as[Double].head()
@@ -60,7 +60,7 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("the full SQL function family registers and matches the Column API") {
-    GraftFunctions.register(spark)
+    SqlFunctions.register(spark)
     Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs"))
       .toDF("doc_id", "text").createOrReplaceTempView("fam_docs")
@@ -103,7 +103,7 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("non-literal shape parameters are rejected with the argument named") {
-    GraftFunctions.register(spark)
+    SqlFunctions.register(spark)
     spark.range(3).selectExpr("id", "cast(id AS int) AS n")
       .createOrReplaceTempView("fam_bad")
     val e = intercept[Exception] {

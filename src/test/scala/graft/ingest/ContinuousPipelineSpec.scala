@@ -89,7 +89,7 @@ class ContinuousPipelineSpec extends AnyFunSuite with SparkFixture {
       (1 to 9).map(i => s"w$i").toSet)
 
     // ---- served results == the batch recompute over the same store --------
-    val (batchCommits, _) = GhaPipeline.queryData(spark, store)
+    val (batchCommits, _) = Recompute.queryData(spark, store)
     val served = TableStore.read(spark, s"$store/results/commits")
       .select("username", "repo", "message", "count")
       .as[(String, String, String, Long)].collect().toSeq

@@ -40,9 +40,9 @@ class ExtractSpec extends AnyFunSuite with SparkFixture {
   lazy val raw = Extract.parseRaw(lines(Fixture.all)).cache()
 
   test("corrupt line is skipped and counted (S3)") {
-    assert(Extract.corruptCount(lines(Fixture.all)) === 1)
-    // parse keeps everything else
+    // parse skips exactly the one corrupt line and keeps everything else
     assert(raw.count() === Fixture.all.size - 1)
+    assert(Extract.parseRaw(lines(Seq(Fixture.corrupt))).count() === 0)
   }
 
   test("unknown event type is dropped by dispatch (P1)") {

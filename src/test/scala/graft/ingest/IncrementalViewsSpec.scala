@@ -38,14 +38,14 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
     (commits, comments)
   }
 
-  /** [[GhaPipeline.queryData]] over the store's full history, in the
+  /** [[Recompute.queryData]] over the store's full history, in the
     * shape of [[collectResults]].
     */
   private def recompute(storeDir: String, keyword: String = " dask"): (Seq[(String, String, Long)], Seq[(String, String, Long)]) = {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("username", "repo", "count").as[(String, String, Long)]
         .collect().toSeq.sorted
-    val (commits, comments) = GhaPipeline.queryData(spark, storeDir, keyword)
+    val (commits, comments) = Recompute.queryData(spark, storeDir, keyword)
     (rows(commits), rows(comments))
   }
 

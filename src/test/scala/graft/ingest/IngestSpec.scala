@@ -54,10 +54,4 @@ class IngestSpec extends AnyFunSuite with SparkFixture {
       assert(df.count() === lines.size)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", old)
   }
-
-  test("repartitionAfterRead re-spreads an unsplittable read (gzip skew)") {
-    val df = Seq("a", "b", "c", "d").toDF("value").coalesce(1)
-    assert(Ingest.repartitionAfterRead(df, 4).rdd.getNumPartitions === 4)
-    assert(Ingest.repartitionAfterRead(df, 0).rdd.getNumPartitions === 1)
-  }
 }

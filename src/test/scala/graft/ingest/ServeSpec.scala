@@ -114,7 +114,7 @@ class ServeSpec extends AnyFunSuite with SparkFixture {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("username", "repo", "message", "count")
         .as[(String, String, String, Long)].collect().toSeq.sorted
-    val (commits, comments) = GhaPipeline.queryData(spark, s"$dir/store")
+    val (commits, comments) = Recompute.queryData(spark, s"$dir/store")
     val served = rows(TableStore.read(spark, s"$dir/store/results/commits"))
     assert(served === rows(commits))
     assert(served.map(r => (r._1, r._4)) === Seq(("alice", 8L), ("bob", 8L)))

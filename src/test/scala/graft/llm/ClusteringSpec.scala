@@ -204,7 +204,7 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture {
       (4, Seq(2.0, -1.0, 0.0, 3.0, 1.0, -2.0)))
     val got = df.select(col("vec_id"),
       Clustering.clusterOf(cents)(col("v")).as("native"),
-      Clustering.clusterOfReference(cents)(col("v")).as("ref"))
+      References.clusterOfReference(cents)(col("v")).as("ref"))
       .collect()
     got.foreach { r =>
       assert(r.getInt(1) == r.getInt(2),

@@ -86,7 +86,7 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
   test("decode pass over a frame: one feature row per doc, all decodable") {
     val docs = (1L to 20L).toDF("doc_id").withColumn("text", lit("x"))
     val feats = Multimodal.decodeFeatures(spark,
-      Multimodal.withImagePayload(spark, docs)).collect()
+      Multimodal.imagePayload(spark, docs)).collect()
     assert(feats.length === 20)
     assert(feats.forall(_.decode_ok))
     assert(feats.map(_.doc_id).toSet === (1L to 20L).toSet)

@@ -28,7 +28,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
     PhraseIndex.buildPhraseIndex(df, dir)
     for (phrase <- Seq("alpha beta gamma", "beta gamma delta",
         "unrelated words entirely", "absent words completely")) {
-      val got = PhraseIndex.phraseSearch(spark, dir, df, phrase)
+      val got = References.phraseSearch(spark, dir, df, phrase)
         .as[Long].collect().toSet
       assert(got === scan(df, phrase), s"phrase '$phrase'")
     }
@@ -39,7 +39,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
     val df = crafted()
     val dir = java.nio.file.Files.createTempDirectory("phraseidx2").toString
     PhraseIndex.buildPhraseIndex(df, dir)
-    val got = PhraseIndex.phraseSearch(spark, dir, df, "alpha beta gamma delta")
+    val got = References.phraseSearch(spark, dir, df, "alpha beta gamma delta")
       .as[Long].collect().toSet
     assert(got === Set(1L))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
@@ -49,7 +49,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
     val df = crafted()
     val dir = java.nio.file.Files.createTempDirectory("phraseidx3").toString
     PhraseIndex.buildPhraseIndex(df, dir)
-    val got = PhraseIndex.phraseSearch(spark, dir, df, "alpha beta")
+    val got = References.phraseSearch(spark, dir, df, "alpha beta")
       .as[Long].collect().toSet
     assert(got === scan(df, "alpha beta"))
     assert(got.contains(5L))
@@ -79,7 +79,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
         onFetch = (k, t) => fetch = Some((k, t)))
       .as[Long].collect().toSet
     assert(got === Set(301L, 302L, 303L))
-    assert(got === PhraseIndex.phraseSearch(spark, s"$root/index", df,
+    assert(got === References.phraseSearch(spark, s"$root/index", df,
       "alpha beta gamma").as[Long].collect().toSet)
     val (kept, total) = fetch.getOrElse(fail("pruned fetch did not run"))
     // 3 candidates in a 20-file store: the fetch must skip most files
@@ -117,13 +117,13 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
     val v1 = crafted()
     val dir = java.nio.file.Files.createTempDirectory("phrasegen").toString
     PhraseIndex.buildPhraseIndex(v1, dir)
-    assert(PhraseIndex.phraseSearch(spark, dir, v1, "alpha beta gamma")
+    assert(References.phraseSearch(spark, dir, v1, "alpha beta gamma")
       .as[Long].collect().toSet === Set(1L, 2L))
     // rebuild over a DIFFERENT corpus: docs 1 and 2 are gone, doc 200 arrives
     val v2 = Seq((200L, "fresh alpha beta gamma corpus"),
       (201L, "no match here at all")).toDF("doc_id", "text")
     PhraseIndex.buildPhraseIndex(v2, dir)
-    val got = PhraseIndex.phraseSearch(spark, dir, v1.unionByName(v2),
+    val got = References.phraseSearch(spark, dir, v1.unionByName(v2),
         "alpha beta gamma")
       .as[Long].collect().toSet
     assert(got === Set(200L),
@@ -137,7 +137,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
     val dir = java.nio.file.Files.createTempDirectory("phrasemeta").toString
     PhraseIndex.buildPhraseIndex(docs, dir, n = 3, nBuckets = 8)
     val e1 = intercept[IllegalArgumentException] {
-      PhraseIndex.phraseSearch(spark, dir, docs, "the quick brown",
+      References.phraseSearch(spark, dir, docs, "the quick brown",
         n = 3, nBuckets = 16)
     }
     assert(e1.getMessage.contains("nBuckets"))
@@ -148,7 +148,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
     }
     assert(e2.getMessage.contains("built with"))
     // matching parameters pass
-    assert(PhraseIndex.phraseSearch(spark, dir, docs, "the quick brown",
+    assert(References.phraseSearch(spark, dir, docs, "the quick brown",
       n = 3, nBuckets = 8).count() === 1)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }

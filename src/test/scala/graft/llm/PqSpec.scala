@@ -108,14 +108,14 @@ class PqSpec extends AnyFunSuite with SparkFixture {
     "prune partitions; the stored table holds codes, never floats") {
     val queries = emb.filter($"vec_id" < 5)
     val built = Pq.buildIvfPqIndex(emb)
-    val direct = Pq.ivfPqQuery(built, emb, queries, k = 5,
+    val direct = References.ivfPqQuery(built, emb, queries, k = 5,
       nProbe = 8, shortlist = 256)
       .as[(Long, Long, Long, Double)].collect().toSet
     val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString + "/idx"
     Pq.writeIvfPqIndex(built, dir)
     val loaded = Pq.readIvfPqIndex(spark, dir)
     assert(loaded.model == built.model)
-    val viaStore = Pq.ivfPqQuery(loaded, emb, queries, k = 5,
+    val viaStore = References.ivfPqQuery(loaded, emb, queries, k = 5,
       nProbe = 8, shortlist = 256)
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(viaStore === direct)
@@ -137,7 +137,7 @@ class PqSpec extends AnyFunSuite with SparkFixture {
     "reads a BOUNDED file set of the corpus store, never the whole table") {
     val queries = emb.filter($"vec_id" < 5)
     val built = Pq.buildIvfPqIndex(emb)
-    val exact = Pq.ivfPqQuery(built, emb, queries, k = 5,
+    val exact = References.ivfPqQuery(built, emb, queries, k = 5,
       nProbe = 8, shortlist = 8)
       .as[(Long, Long, Long, Double)].collect().toSet
     val root = java.nio.file.Files.createTempDirectory("ivfpqpr").toString
@@ -158,34 +158,6 @@ class PqSpec extends AnyFunSuite with SparkFixture {
     // MATERIAL slice of the store is skipped (≥ 15 files at 50)
     assert(kept <= total - 15, s"fetch kept $kept of $total files")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-  }
-
-  test("ivfPqAppend: build-on-half + append-half EQUALS encoding the union " +
-    "under fixed quantizers (the add-to-trained-index law)") {
-    val low = emb.filter($"vec_id" < 250)
-    val high = emb.filter($"vec_id" >= 250)
-    val queries = emb.filter($"vec_id" < 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpqapp").toString + "/idx"
-    val built = Pq.buildIvfPqIndex(low)
-    Pq.writeIvfPqIndex(built, dir)
-    Pq.ivfPqAppend(spark, dir, high)
-    val grown = Pq.readIvfPqIndex(spark, dir)
-    // the whole corpus is indexed — append lost nothing
-    assert(grown.assignments.count() === emb.count())
-    // with BOTH quantizers fixed at the low-trained state, the grown
-    // stored index answers exactly like a from-scratch encode of the
-    // union under those same quantizers
-    val viaAppend = Pq.ivfPqQuery(grown, emb, queries, k = 5,
-      nProbe = 16, shortlist = 256)
-      .as[(Long, Long, Long, Double)].collect().toSet
-    val expected = Pq.ivfPqQuery(
-      Pq.IvfPqIndex(built.centroids, built.model,
-        Pq.encodeAssign(emb, built.centroids, built.model)),
-      emb, queries, k = 5, nProbe = 16, shortlist = 256)
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(viaAppend === expected)
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(dir).getParentFile)
   }
 
   test("q_ann_ivfpq law holds on the fixture") {

@@ -7,70 +7,6 @@ import graft.SparkFixture
 class SamplingSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  test("splitBucket: deterministic, disjoint-covering, roughly uniform") {
-    val df = spark.range(10000).toDF("id")
-    val b1 = df.select(Sampling.splitBucket($"id", 10).as("b"))
-    val b2 = df.select(Sampling.splitBucket($"id", 10).as("b"))
-    // re-run stability: identical assignment both times
-    assert(b1.collect().map(_.getLong(0)).toSeq
-      === b2.collect().map(_.getLong(0)).toSeq)
-    val counts = b1.groupBy("b").count().as[(Long, Long)].collect().toMap
-    assert(counts.keySet === (0L until 10L).toSet) // covering
-    // uniformity: every bucket within 20% of the expected 1000
-    assert(counts.values.forall(n => n > 800 && n < 1200), counts.toString)
-    // a different salt re-deals the assignment
-    val b3 = df.select(Sampling.splitBucket($"id", 10, salt = 7L).as("b"))
-      .collect().map(_.getLong(0)).toSeq
-    assert(b3 !== b1.collect().map(_.getLong(0)).toSeq)
-  }
-
-  test("shardShuffle: total permutation — every row once, contiguous " +
-    "positions per shard, bit-stable across re-runs, salt re-deals") {
-    val df = spark.range(1000).toDF("id")
-    val s1 = Sampling.shardShuffle(df, $"id", 8)
-      .select("id", "shard", "pos").as[(Long, Long, Long)].collect()
-    // totality: every input id appears exactly once
-    assert(s1.map(_._1).sorted.toSeq === (0L until 1000L).toSeq)
-    // per shard: positions are exactly 1..n (a permutation, no gaps/dupes)
-    for ((_, rows) <- s1.groupBy(_._2))
-      assert(rows.map(_._3).sorted.toSeq === (1L to rows.length).toSeq)
-    // re-run stability: identical (shard, pos) for every id
-    val s2 = Sampling.shardShuffle(df, $"id", 8)
-      .select("id", "shard", "pos").as[(Long, Long, Long)].collect()
-    assert(s1.sortBy(_._1).toSeq === s2.sortBy(_._1).toSeq)
-    // the shard-local order is scrambled, not id order
-    val shard0 = s1.filter(_._2 == s1.head._2).sortBy(_._3).map(_._1)
-    assert(shard0.toSeq !== shard0.sorted.toSeq)
-    // a different salt produces a different permutation
-    val s3 = Sampling.shardShuffle(df, $"id", 8, salt = 9L)
-      .select("id", "shard", "pos").as[(Long, Long, Long)].collect()
-    assert(s3.sortBy(_._1).toSeq !== s1.sortBy(_._1).toSeq)
-  }
-
-  test("writeTrainingShards: one pre-sorted file per shard; reading a " +
-    "shard streams the training order with no sort") {
-    val df = spark.range(500).toDF("id")
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString + "/t"
-    Sampling.writeTrainingShards(df, $"id", 4, dir)
-    val want = Sampling.shardShuffle(df, $"id", 4)
-      .select("shard", "pos", "id").as[(Long, Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
-    val shardDirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("shard=")).sortBy(_.getName)
-    assert(shardDirs.length == 4)
-    for (sd <- shardDirs) {
-      val files = sd.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length == 1, s"${sd.getName}: expected one file per shard")
-      val shard = sd.getName.stripPrefix("shard=").toLong
-      // file order IS training order: no sort on read
-      val got = spark.read.parquet(files.head.toString)
-        .select("id").as[Long].collect().toSeq
-      assert(got == want(shard), s"shard $shard order mismatch")
-    }
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(dir).getParentFile)
-  }
-
   test("stratifiedTake: exactly k per stratum, stable, honors the order key") {
     val df = (1L to 100L).map(i => (i, if (i % 2 == 0) "even" else "odd"))
       .toDF("id", "parity")
@@ -154,24 +90,5 @@ class SamplingSpec extends AnyFunSuite with SparkFixture {
       .select("doc_id", "source", "epoch").as[(Long, String, Long)].collect()
     assert(out.sortBy(r => (r._1, r._3)).toSeq
       === out2.sortBy(r => (r._1, r._3)).toSeq)
-  }
-
-  test("weighted mixing via splitBucket: rates hold and re-runs are identical") {
-    val df = (1L to 9000L)
-      .map(i => (i, s"src${i % 3}")).toDF("id", "source")
-    def mix() = df
-      .withColumn("rate", when(col("source") === "src0", 100)
-        .when(col("source") === "src1", 50).otherwise(20))
-      .filter(Sampling.splitBucket(col("id"), 100) < col("rate"))
-    val counts = mix().groupBy("source").count()
-      .as[(String, Long)].collect().toMap
-    assert(counts("src0") === 3000L) // rate 100 keeps everything
-    // hash-uniform rates: within 15% of target on 3000 rows/source
-    assert(math.abs(counts("src1") - 1500L) < 225, counts.toString)
-    assert(math.abs(counts("src2") - 600L) < 90, counts.toString)
-    // determinism: the sampled ID SET is identical across runs
-    val ids1 = mix().select("id").as[Long].collect().toSet
-    val ids2 = mix().select("id").as[Long].collect().toSet
-    assert(ids1 === ids2)
   }
 }

@@ -49,49 +49,6 @@ class SubstringDedupSpec extends AnyFunSuite with SparkFixture {
     assert(out(0L) == "a b c" && out(1L) == "a b c")
   }
 
-  test("fixpoint: a cut-created juxtaposition converges in 2 cutting rounds") {
-    // round 1: "x y" is duplicated (doc0 canonical) -> doc1 "p x y q"
-    // loses positions 1,2 and becomes "p q" — a NEW 2-gram that did not
-    // exist in the original corpus. round 2: "p q" is now duplicated
-    // (doc1 canonical, doc1 < doc2) -> doc2 "p q r" loses positions 0,1.
-    // round 3: nothing left to cut.
-    val docs = Seq(
-      0L -> "x y z",
-      1L -> "p x y q",
-      2L -> "p q r").toDF("doc_id", "text")
-    val (out, rounds) = SubstringDedup.cleanFixpoint(docs, k = 2, maxRounds = 5)
-    val m = out.collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(m == Map(0L -> "x y z", 1L -> "p q", 2L -> "r"))
-    assert(rounds == Seq(2L, 2L, 0L),
-      s"expected two cutting rounds then quiescence, got $rounds")
-    // single-pass clean misses the juxtaposed gram — doc2 keeps "p q r"
-    val onePass = SubstringDedup.clean(docs, k = 2)
-      .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(onePass(2L) == "p q r")
-    out.unpersist()
-  }
-
-  test("fixpoint: kept_tokens of a fully-cut doc is 0, not split-of-empty 1") {
-    val docs = Seq(0L -> "a b c d", 1L -> "a b c d").toDF("doc_id", "text")
-    val (out, rounds) = SubstringDedup.cleanFixpoint(docs, k = 2, maxRounds = 3)
-    val byId = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .sortBy(_._1)
-    assert(byId(0) == ((0L, 4L, "a b c d")))
-    assert(byId(1) == ((1L, 0L, "")))
-    assert(rounds.last == 0L)
-    out.unpersist()
-  }
-
-  test("fixpoint on the oracle fixture converges (trailing zero-cut round)") {
-    val docs = spark.read.parquet(sf("sf0.001/documents.parquet"))
-      .select("doc_id", "text")
-    val (out, rounds) = SubstringDedup.cleanFixpoint(docs, k = 8, maxRounds = 6)
-    assert(rounds.last == 0L,
-      s"fixture did not reach quiescence within 6 rounds: $rounds")
-    assert(out.count() == docs.count())
-    out.unpersist()
-  }
-
   test("DropIndices kernel == the O(len x cuts) HOF filter it replaced") {
     import org.apache.spark.sql.functions._
     val rows = Seq(

@@ -9,7 +9,7 @@ class TextOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("shingles: n-grams, distinct, short-doc guard") {
     val df = Seq("a b c d", "a b", "x x x x").toDF("text")
-    val got = df.select(TextOps.shingles($"text", 3)).as[Seq[String]]
+    val got = df.select(References.shingles($"text", 3)).as[Seq[String]]
       .collect().toSeq
     assert(got(0) === Seq("a b c", "b c d"))
     assert(got(1) === Seq.empty)           // < n words -> empty, not crash
@@ -126,14 +126,16 @@ class TextOpsSpec extends AnyFunSuite with SparkFixture {
       ("s2", sharedA),                          // s2 shares a whole doc with s1
       ("s3", "totally different content nothing shared here at all everywhere")
     ).toDF("source", "text")
-    val got = TextOps.sourceContamination(spark, docs)
-      .as[(String, String, Double)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    assert(got(("s1", "s2")) > got(("s1", "s3")))
-    assert(got(("s1", "s2")) > 0.3)   // shared doc drives union overlap
-    assert(got(("s2", "s3")) < 0.2)
+    val got = TextOps.sourceContaminationChecked(spark, docs)
+      .as[(String, String, Double, Boolean)].collect()
+      .map(r => (r._1, r._2) -> r).toMap
+    assert(got(("s1", "s2"))._3 > got(("s1", "s3"))._3)
+    assert(got(("s1", "s2"))._3 > 0.3)   // shared doc drives union overlap
+    assert(got(("s2", "s3"))._3 < 0.2)
+    // the signature estimate lands within tolerance of the exact Jaccard
+    assert(got.values.forall(_._4), got.toString)
     // drift guard: the codegen'd single-hash-signature path the estimate
-    // now runs on must reproduce the typed MinHashUnionAgg union of
+    // runs on must reproduce the typed MinHashUnionAgg union of
     // per-doc sigColumn signatures BIT FOR BIT (min is associative —
     // same set, same mins; any perm/seed drift flips a component)
     val hsDf = TextOps.shingleHashes(docs, Seq("source"), 3)
@@ -235,14 +237,31 @@ class TextOpsSpec extends AnyFunSuite with SparkFixture {
       ("s2", "one two three four nine ten eleven twelve"),
       ("s3", "alpha beta gamma delta epsilon zeta eta theta")
     ).toDF("source", "text")
-    val hsDf = TextOps.shingleHashes(docs, Seq("source"), 3).localCheckpoint()
-    val est = TextOps.contaminationEstimate(hsDf, 64)
-    est.collect()
+    // the operator materializes its output, so its plan is read off the
+    // execution that listeners see (the output frame's own plan is a scan
+    // of the checkpoint)
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      TextOps.sourceContaminationChecked(spark, docs).collect()
+      org.apache.spark.graft.CoreBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
     // the expensive side (64-perm signature pass + per-source min partials)
     // sits below ONE hash exchange; the a×b self-join's second reference must
     // resolve to a ReusedExchange, not a second signature pass
-    val plan = est.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedExchange"), s"no exchange reuse in:\n$plan")
+    val joined = plans.synchronized(plans.toList).filter(_.contains("sig_a"))
+    assert(joined.nonEmpty, s"no self-join execution captured:\n$plans")
+    assert(joined.exists(_.contains("ReusedExchange")),
+      s"no exchange reuse in:\n${joined.mkString("\n")}")
   }
 
   test("minhash LSH finds the planted near-duplicate pair (L2 scale path)") {
@@ -250,7 +269,7 @@ class TextOpsSpec extends AnyFunSuite with SparkFixture {
     val near = (1 to 48).map(i => s"tok$i").mkString(" ") + " x y"
     val far = (200 to 250).map(i => s"tok$i").mkString(" ")
     val docs = Seq((1L, base), (2L, near), (3L, far)).toDF("doc_id", "text")
-    val pairs = VectorOps.minhashPairs(docs, threshold = 0.6)
+    val pairs = References.minhashPairs(docs, threshold = 0.6)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.contains((1L, 3L)))
@@ -452,7 +471,7 @@ class TextOpsSpec extends AnyFunSuite with SparkFixture {
         size(TextOps.ngramHashes($"text", 3)).as("n_occ"),
         size(array_distinct(TextOps.ngramHashes($"text", 3))).as("n_dist"),
         size(TextOps.ngramsAll($"text", 3)).as("s_occ"),
-        size(TextOps.shingles($"text", 3)).as("s_dist"))
+        size(References.shingles($"text", 3)).as("s_dist"))
       .collect()
     for (r <- got) {
       assert(r.getInt(0) === math.max(r.getInt(2), 0), r.toString)
@@ -467,7 +486,7 @@ class TextOpsSpec extends AnyFunSuite with SparkFixture {
   test("ngramsAll counts occurrences (non-distinct), unlike shingles") {
     val df = Seq("x x x x").toDF("text")
     val all = df.select(TextOps.ngramsAll($"text", 3)).as[Seq[String]].head()
-    val dist = df.select(TextOps.shingles($"text", 3)).as[Seq[String]].head()
+    val dist = df.select(References.shingles($"text", 3)).as[Seq[String]].head()
     assert(all === Seq("x x x", "x x x"))
     assert(dist === Seq("x x x"))
   }

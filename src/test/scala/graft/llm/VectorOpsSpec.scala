@@ -233,7 +233,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkFixture {
     ).toDF("doc_id", "text")
     val native = VectorOps.minhashPairsNative(docs, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val mllib = VectorOps.minhashPairs(docs, 0.5)
+    val mllib = References.minhashPairs(docs, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(native === mllib)
     assert(native === Set((1L, 2L)))
@@ -310,30 +310,6 @@ class VectorOpsSpec extends AnyFunSuite with SparkFixture {
       .select("neighbor_id", "rank").as[(Long, Long)].collect().toSeq
     assert(ivf === brute)   // true neighbors live in the probed cell
     assert(ivf.map(_._1).forall(id => id >= 10 && id < 20))
-  }
-
-  test("quantize: exact codes on a crafted vector, bounded error, constant-vector guard") {
-    val df = Seq(
-      (1L, Seq(0f, 127.5f, 255f)),  // range 255 -> scale 1.0, codes 0/128/255
-      (2L, Seq(3f, 3f, 3f)))        // constant: zero range must not divide by 0
-      .toDF("vec_id", "embedding")
-    val q = df.select($"vec_id",
-      VectorOps.quantize(VectorOps.toDouble($"embedding")).as("q"))
-    val rows = q.select($"vec_id", $"q.zero", $"q.scale", $"q.codes")
-      .as[(Long, Double, Double, Seq[Int])].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-    val (z1, s1, c1) = rows(1L)
-    assert(z1 === 0.0 && s1 === 1.0)
-    assert(c1 === Seq(0, 128, 255)) // 127.5 rounds HALF_UP
-    val (z2, _, c2) = rows(2L)
-    assert(z2 === 3.0 && c2 === Seq(0, 0, 0))
-    // reconstruction error bounded by scale/2 everywhere
-    val err = df.select(VectorOps.quantize(VectorOps.toDouble($"embedding")).as("q"),
-      VectorOps.toDouble($"embedding").as("v"))
-      .select(array_max(zip_with($"v", VectorOps.dequantize($"q"),
-        (x, y) => abs(x - y))).as("e"), ($"q.scale" / 2).as("bound"))
-      .as[(Double, Double)].collect()
-    err.foreach { case (e, b) => assert(e <= b + 1e-9) }
   }
 
   test("oracle-parity: engine cosine equals explicit double-math (sf0.001)") {

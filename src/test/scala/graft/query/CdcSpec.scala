@@ -43,25 +43,6 @@ class CdcSpec extends AnyFunSuite with SparkFixture {
     assert(ba === Map(1L -> "added", 2L -> "removed"))
   }
 
-  test("tableChecksum: order-independent, one-row-sensitive, empty-safe") {
-    val a = snap((1L, "a", Some(1.0)), (2L, "b", None), (3L, "c", Some(3.0)))
-    val cols = Seq("id", "status", "score")
-    def sum(df: org.apache.spark.sql.DataFrame): (String, Long) = {
-      val r = Cdc.tableChecksum(df, cols).head()
-      (r.getDecimal(0).toPlainString, r.getLong(1))
-    }
-    val base = sum(a)
-    // row order / partitioning never matter
-    assert(sum(a.orderBy(org.apache.spark.sql.functions.desc("id"))) === base)
-    assert(sum(a.repartition(7)) === base)
-    // one changed value flips the checksum
-    val mutated = snap((1L, "a", Some(1.0)), (2L, "b", Some(0.0)),
-      (3L, "c", Some(3.0)))
-    assert(sum(mutated) !== base)
-    // empty table: checksum 0, not null
-    assert(sum(a.filter($"id" > 100)) === ("0", 0L))
-  }
-
   test("schema mismatch and key-only schemas are rejected") {
     val a = snap((1L, "a", Some(1.0)))
     intercept[IllegalArgumentException] {

@@ -120,15 +120,6 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(p.contains("BroadcastHashJoin"))
   }
 
-  test("splitBucket is a pure projection: no exchange anywhere in the plan") {
-    val spark2 = spark
-    import spark2.implicits._
-    val df = spark.range(100).toDF("id")
-      .select(graft.llm.Sampling.splitBucket(col("id"), 10).as("b"))
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"), s"split must not shuffle:\n$p")
-  }
-
   test("stratifiedTake shuffles exactly once, on the stratum key") {
     val spark2 = spark
     import spark2.implicits._

@@ -401,7 +401,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
     }
     assert(e.getMessage.contains("moved to g1"))
     // nothing was staged or committed past g1
-    assert(TableStore.generations(spark, dir).max === 1)
+    assert(Generations.list(spark, dir).max === 1)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!f.exists(new org.apache.hadoop.fs.Path(dir, "g2")))

@@ -59,7 +59,7 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
 
     // a second compact vacuums g0; the current generation serves reads
     TableStore.compact(spark, tbl)
-    assert(TableStore.generations(spark, tbl) === Seq(1, 2))
+    assert(Generations.list(spark, tbl) === Seq(1, 2))
     assert(TableStore.read(spark, tbl).count() === 800)
     // sanity: the mock FS actually handled this table's traffic
     assert(NonAtomicRenameFs.renames.get() > 0)

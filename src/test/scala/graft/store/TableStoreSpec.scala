@@ -159,15 +159,15 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     val dir = tmpDir() + "/tt"
     TableStore.overwriteVersioned(Seq((1, "v1")).toDF("k", "v"), dir) // g0
     TableStore.overwriteVersioned(Seq((2, "v2")).toDF("k", "v"), dir) // g1
-    assert(TableStore.generations(spark, dir) === Seq(0, 1))
+    assert(Generations.list(spark, dir) === Seq(0, 1))
     // current read sees g1; VERSION AS OF 0 still sees the old rows
     assert(TableStore.read(spark, dir).head().getString(1) === "v2")
-    assert(TableStore.readGeneration(spark, dir, 0).head().getString(1) === "v1")
+    assert(Generations.read(spark, dir, 0).head().getString(1) === "v1")
     // a third rewrite vacuums g0: time travel to it must fail actionably
     TableStore.overwriteVersioned(Seq((3, "v3")).toDF("k", "v"), dir) // g2
-    assert(TableStore.generations(spark, dir) === Seq(1, 2))
+    assert(Generations.list(spark, dir) === Seq(1, 2))
     val e = intercept[IllegalArgumentException] {
-      TableStore.readGeneration(spark, dir, 0)
+      Generations.read(spark, dir, 0)
     }
     assert(e.getMessage.contains("vacuumed"))
   }
@@ -177,22 +177,22 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     def ow(v: String) = TableStore.overwriteVersioned(
       Seq((1, v)).toDF("k", "v"), dir, retainGenerations = 3)
     ow("v1"); ow("v2"); ow("v3") // g0, g1, g2 — all inside the window
-    assert(TableStore.generations(spark, dir) === Seq(0, 1, 2))
-    assert(TableStore.readGeneration(spark, dir, 0).head().getString(1) === "v1")
-    assert(TableStore.readGeneration(spark, dir, 1).head().getString(1) === "v2")
+    assert(Generations.list(spark, dir) === Seq(0, 1, 2))
+    assert(Generations.read(spark, dir, 0).head().getString(1) === "v1")
+    assert(Generations.read(spark, dir, 1).head().getString(1) === "v2")
     assert(TableStore.read(spark, dir).head().getString(1) === "v3")
     ow("v4") // g3 vacuums g0 only: window slides, depth holds
-    assert(TableStore.generations(spark, dir) === Seq(1, 2, 3))
-    assert(TableStore.readGeneration(spark, dir, 1).head().getString(1) === "v2")
+    assert(Generations.list(spark, dir) === Seq(1, 2, 3))
+    assert(Generations.read(spark, dir, 1).head().getString(1) === "v2")
     val e = intercept[IllegalArgumentException] {
-      TableStore.readGeneration(spark, dir, 0)
+      Generations.read(spark, dir, 0)
     }
     assert(e.getMessage.contains("vacuumed"))
     // retention 1 = no history: the swap itself remains atomic, but the
     // superseded generation goes immediately
     TableStore.overwriteVersioned(Seq((1, "v5")).toDF("k", "v"), dir,
       retainGenerations = 1)
-    assert(TableStore.generations(spark, dir) === Seq(4))
+    assert(Generations.list(spark, dir) === Seq(4))
   }
 
   test("schema evolution: a declared read schema bridges old and new file layouts") {
@@ -235,7 +235,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     }
     // store untorn: same generation, same rows, no g1 debris
     assert(TableStore.read(spark, dir).count() === rows)
-    assert(TableStore.generations(spark, dir) === Seq(0))
+    assert(Generations.list(spark, dir) === Seq(0))
     // A crashed without committing: after the staleness window the claim
     // is reclaimable and compaction proceeds
     f.delete(new org.apache.hadoop.fs.Path(dir, "g1.claim"), false)
