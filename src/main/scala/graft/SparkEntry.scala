@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * The full inventory lives in per-module registries (`Seq[Q]`); this object
   * only flattens them into the driver's `queries` / `oracleSql` maps.

@@ -258,12 +258,6 @@ object Retrieval {
       Seq(col("rrf").desc, col("doc_id").asc), k)
   }
 
-  /** Session-scoped stored-index demos, keyed by sfDir (the PhraseIndex
-    * pattern): the index is built once, the timed path is the query.
-    */
-  private val demos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val all: Seq[Q] = Seq(
 
     // ---- L34: BM25 ranked retrieval, 5-query batch, full DuckDB twin.
@@ -305,8 +299,8 @@ object Retrieval {
     // ---- L34s: BM25 through the STORED posting index — same DuckDB twin
     // as q_bm25_topk (the oracle is the definition; hash equality proves
     // the bucket-pruned 8-byte-hash probe path loses nothing vs the
-    // one-pass string-grain scan). Index built once per session (the
-    // PhraseIndex demo pattern); the timed path is the probe.
+    // one-pass string-grain scan). Each run builds the index, then
+    // probes it.
     Q("q_bm25_stored", Some(
       """WITH base AS (SELECT doc_id, string_split(text, ' ') AS ws
         |              FROM documents),
@@ -333,11 +327,8 @@ object Retrieval {
         |ORDER BY query_id, rank""".stripMargin),
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val dir = demos.computeIfAbsent(d, _ => {
-          val t = graft.query.Pipelines.demoRoot("graft_bm25").toString
-          buildBm25Index(docs, t)
-          t
-        })
+        val dir = graft.query.Pipelines.demoRoot("graft_bm25").toString
+        buildBm25Index(docs, dir)
         val queries = docs.filter(col("doc_id") >= 5 && col("doc_id") < 10)
           .select(col("doc_id").as("query_id"),
             array_distinct(split(col("text"), " ")).as("terms"))

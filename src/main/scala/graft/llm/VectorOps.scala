@@ -25,15 +25,6 @@ import graft.query.Tables.cnt
   */
 object VectorOps {
 
-  /** Session-scoped stored-IVF demo indexes, keyed by sfDir — built once
-    * per JVM so repeated q_ann_ivf_stored runs time the stored-index QUERY
-    * path, not the build (same pattern as `Pipelines`' demo stores).
-    */
-  private val ivfDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfAppendDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Elementwise float→double, so arithmetic is double everywhere (matches
     * the oracle, avoids float32 summation drift).
     */
@@ -1061,16 +1052,10 @@ object VectorOps {
       (s, d) => {
         val emb = Tables(s, d, "embeddings")
         val queries = emb.filter(col("vec_id") < 10)
-        // the index is BUILT ONCE per (sfDir, JVM) — an index is written
-        // once and queried many times, so the timed path is the production
-        // read: partition-pruned cell probes against the stored index (the
-        // build+write round trip stays proven by the IVF store e2e test)
-        val idxDir = ivfDemos.computeIfAbsent(d, _ => {
-          val t = graft.query.Pipelines.demoRoot("graft_ivf")
-          writeIvfIndex(buildIvfIndex(emb, nCells = 16, kmeansIters = 2),
-            t.toString)
-          t.toString
-        })
+        // build and write the index, then query it the production way:
+        // partition-pruned cell probes against the stored index
+        val idxDir = graft.query.Pipelines.demoRoot("graft_ivf").toString
+        writeIvfIndex(buildIvfIndex(emb, nCells = 16, kmeansIters = 2), idxDir)
         val stored = readIvfIndex(s, idxDir)
         val exact = bruteForceTopK(emb, queries, 5).localCheckpoint()
         val approx = ivfQuery(stored, queries, 5, nProbe = 12)
@@ -1109,13 +1094,10 @@ object VectorOps {
         val emb = Tables(s, d, "embeddings")
         val half = emb.agg(expr("percentile(vec_id, 0.5)")).head().getDouble(0)
         val queries = emb.filter(col("vec_id") < 10)
-        val idxDir = ivfAppendDemos.computeIfAbsent(d, _ => {
-          val t = graft.query.Pipelines.demoRoot("graft_ivf_app").toString
-          writeIvfIndex(
-            buildIvfIndex(emb.filter(col("vec_id") <= half), nCells = 16), t)
-          ivfAppend(s, t, emb.filter(col("vec_id") > half))
-          t
-        })
+        val idxDir = graft.query.Pipelines.demoRoot("graft_ivf_app").toString
+        writeIvfIndex(buildIvfIndex(emb.filter(col("vec_id") <= half),
+          nCells = 16), idxDir)
+        ivfAppend(s, idxDir, emb.filter(col("vec_id") > half))
         val grown = readIvfIndex(s, idxDir)
         val exact = bruteForceTopK(emb, queries, 5)
         val approx = ivfQuery(grown, queries, 5, nProbe = 10)

@@ -28,41 +28,34 @@ import Tables.{cnt, sumMoney4}
   */
 object Bucketed {
 
-  /** Session-scoped bucketed builds, keyed by sfDir (the Pipelines demo
-    * pattern): a warehouse bucket layout is written once and joined many
-    * times, so the timed query is the JOIN path, not the one-off build.
-    */
-  private val demos =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private val nBuckets = 8
 
-  /** Write lineitem + orders bucketed and sorted on the order key (once
-    * per JVM x sfDir) and return the catalog table names. `coalesce(1)`
-    * keeps exactly one file per bucket so the reader can also elide the
-    * merge-join sort (many writers would produce one file per task per
-    * bucket — still co-located, but each side re-sorts within partitions).
+  /** Write lineitem + orders bucketed and sorted on the order key into a
+    * fresh directory, (re)register them in the catalog under names derived
+    * from `d`, and return the names. `coalesce(1)` keeps exactly one file
+    * per bucket so the reader can also elide the merge-join sort (many
+    * writers would produce one file per task per bucket — still
+    * co-located, but each side re-sorts within partitions).
     */
-  private[query] def bucketedTables(s: SparkSession, d: String): (String, String) =
-    demos.computeIfAbsent(d, _ => {
-      val suffix = java.lang.Integer.toHexString(d.hashCode & 0x7fffffff)
-      val li = s"graft_lineitem_b_$suffix"
-      val ord = s"graft_orders_b_$suffix"
-      val root = Pipelines.demoRoot("graft_bucket").toString
-      Tables(s, d, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-        .coalesce(1)
-        .write.mode("overwrite").option("path", s"$root/lineitem")
-        .bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable(li)
-      Tables(s, d, "orders")
-        .select("o_orderkey", "o_orderpriority")
-        .coalesce(1)
-        .write.mode("overwrite").option("path", s"$root/orders")
-        .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable(ord)
-      (li, ord)
-    })
+  private[query] def bucketedTables(s: SparkSession, d: String): (String, String) = {
+    val suffix = java.lang.Integer.toHexString(d.hashCode & 0x7fffffff)
+    val li = s"graft_lineitem_b_$suffix"
+    val ord = s"graft_orders_b_$suffix"
+    val root = Pipelines.demoRoot("graft_bucket").toString
+    Tables(s, d, "lineitem")
+      .select("l_orderkey", "l_extendedprice", "l_discount")
+      .coalesce(1)
+      .write.mode("overwrite").option("path", s"$root/lineitem")
+      .bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
+      .saveAsTable(li)
+    Tables(s, d, "orders")
+      .select("o_orderkey", "o_orderpriority")
+      .coalesce(1)
+      .write.mode("overwrite").option("path", s"$root/orders")
+      .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
+      .saveAsTable(ord)
+    (li, ord)
+  }
 
   val all: Seq[Q] = Seq(
 

@@ -1,7 +1,5 @@
 package graft.query
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Q
@@ -26,9 +24,6 @@ import graft.Q
   *    columnar sink+source pair the parquet-based store doesn't.
   */
 object Formats {
-
-  private val csvDemos = new ConcurrentHashMap[String, String]()
-  private val orcDemos = new ConcurrentHashMap[String, String]()
 
   // a string that CSV MUST quote correctly: embedded comma, double quote,
   // and backslash around real column content
@@ -101,22 +96,16 @@ object Formats {
     // ---- S18: CSV sink + scan (quoted, header, explicit schema) -------------
     Q("q_csv_roundtrip", Some(checksumSql),
       (s, d) => {
-        val dir = csvDemos.computeIfAbsent(d, _ => {
-          val t = Pipelines.demoRoot("graft_csv").toString + "/orders_csv"
-          ordersSlice(s, d).write.option("header", "true").csv(t)
-          t
-        })
+        val dir = Pipelines.demoRoot("graft_csv").toString + "/orders_csv"
+        ordersSlice(s, d).write.option("header", "true").csv(dir)
         checksum(s.read.schema(csvSchema).option("header", "true").csv(dir))
       }),
 
     // ---- S19: ORC sink + vectorized scan ------------------------------------
     Q("q_orc_roundtrip", Some(checksumSql),
       (s, d) => {
-        val dir = orcDemos.computeIfAbsent(d, _ => {
-          val t = Pipelines.demoRoot("graft_orc").toString + "/orders_orc"
-          ordersSlice(s, d).write.orc(t)
-          t
-        })
+        val dir = Pipelines.demoRoot("graft_orc").toString + "/orders_orc"
+        ordersSlice(s, d).write.orc(dir)
         checksum(s.read.orc(dir))
       })
   )

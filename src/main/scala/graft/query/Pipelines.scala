@@ -13,48 +13,12 @@ import Tables.cnt
   */
 object Pipelines {
 
-  /** Session-scoped demo stores: the storage-demo queries build their
-    * append+compact store ONCE per (sfDir, JVM) — a store is written once
-    * and queried many times, so the per-invocation cost is the QUERY path,
-    * not the demo's two write passes (which round 4 measured taxing every
-    * timed bench run at ~10 s combined). The write paths stay proven by
-    * TableStoreSpec / ZOrderSpec / ObjectStoreSemanticsSpec; stores live
-    * under target/tmp for the JVM's lifetime and are removed on exit.
-    */
-  private case class CompactDemo(dir: String, before: Long, after: Long)
-  private val compactDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, CompactDemo]()
-  private val zorderDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mergeDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val bloomDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val evolveDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val deleteDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val replaceDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val dppDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val quarantineDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val expectationDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val scd2Demos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val pitDemos =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Shared by every session-scoped demo store (compact/z-order here, the
-    * stored-IVF index in VectorOps): a temp dir under target/tmp, removed
-    * on JVM exit.
+  /** A fresh temp dir under `java.io.tmpdir` for a storage key's store,
+    * removed on JVM exit. Every call builds its store here, so a key
+    * always reads the data its directory holds now.
     */
   private[graft] def demoRoot(prefix: String): java.nio.file.Path = {
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val d = Files.createTempDirectory(base, prefix)
+    val d = Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       org.apache.commons.io.FileUtils.deleteQuietly(d.toFile); ()
     }))
@@ -139,30 +103,25 @@ object Pipelines {
         |FROM events""".stripMargin),
       (s, d) => {
         import s.implicits._
-        val demo = compactDemos.computeIfAbsent(d, _ => {
-          val tmp = demoRoot("graft_compact").toString + "/events_t"
-          val ev = Tables(s, d, "events")
-            .withColumn("date", to_date(col("ts")))
-            .repartition(4) // simulate 4 small per-batch appends per partition
-          TableStore.append(ev, tmp)
-          val (before, after) = TableStore.compact(s, tmp)
-          CompactDemo(tmp, before, after)
-        })
-        // the queried facts re-derive from the LIVE store each run — only
-        // the build (append + compact) is session-scoped
+        val dir = demoRoot("graft_compact").toString + "/events_t"
+        val ev = Tables(s, d, "events")
+          .withColumn("date", to_date(col("ts")))
+          .repartition(4) // simulate 4 small per-batch appends per partition
+        TableStore.append(ev, dir)
+        val (before, after) = TableStore.compact(s, dir)
         val nParts =
-          TableStore.read(s, demo.dir).select("date").distinct().count()
-        val rows = TableStore.read(s, demo.dir).count()
-        Seq((nParts, rows, demo.before > demo.after, demo.after == nParts))
+          TableStore.read(s, dir).select("date").distinct().count()
+        val rows = TableStore.read(s, dir).count()
+        Seq((nParts, rows, before > after, after == nParts))
           .toDF("n_partitions", "rows", "files_reduced",
             "one_file_per_partition")
       }),
 
     // ---- S15: schema evolution (widen-on-append, declared-schema read) ----------
-    // Builds once per session: v1 appends even-keyed orders WITHOUT the
-    // priority column, v2 appends odd-keyed orders WITH it (the evolved
-    // batch). The timed path reads the evolved table under the declared
-    // sidecar schema: historical rows surface the new column as NULL.
+    // v1 appends even-keyed orders WITHOUT the priority column, v2 appends
+    // odd-keyed orders WITH it (the evolved batch). The query reads the
+    // evolved table under the declared sidecar schema: historical rows
+    // surface the new column as NULL.
     // Oracle recomputes the same accounting from the source table — hash
     // equality proves no row lost its identity and exactly the v1 rows
     // read NULL.
@@ -177,23 +136,20 @@ object Pipelines {
         |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum
         |FROM orders""".stripMargin),
       (s, d) => {
-        val dir = evolveDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_evolve").toString + "/orders_e"
-          // month-grain partitions: orders spans ~2400 distinct days — raw
-          // to_date made the demo store 2 x 2400 one-row-ish partitions and
-          // the timed READ paid ~7 s of file listing + footer opens at
-          // sf0.1 (measured). ~80 month partitions keep the same evolution
-          // semantics (the oracle never reads `date`) at sane file counts.
-          val o = Tables(s, d, "orders")
-            .withColumn("date", to_date(date_trunc("month", col("o_orderdate"))))
-          TableStore.appendEvolving(
-            o.filter(col("o_orderkey") % 2 === 0)
-              .select("o_orderkey", "date"), t)
-          TableStore.appendEvolving(
-            o.filter(col("o_orderkey") % 2 === 1)
-              .select("o_orderkey", "o_orderpriority", "date"), t)
-          t
-        })
+        val dir = demoRoot("graft_evolve").toString + "/orders_e"
+        // month-grain partitions: orders spans ~2400 distinct days — raw
+        // to_date made the demo store 2 x 2400 one-row-ish partitions and
+        // the READ paid ~7 s of file listing + footer opens at sf0.1
+        // (measured). ~80 month partitions keep the same evolution
+        // semantics (the oracle never reads `date`) at sane file counts.
+        val o = Tables(s, d, "orders")
+          .withColumn("date", to_date(date_trunc("month", col("o_orderdate"))))
+        TableStore.appendEvolving(
+          o.filter(col("o_orderkey") % 2 === 0)
+            .select("o_orderkey", "date"), dir)
+        TableStore.appendEvolving(
+          o.filter(col("o_orderkey") % 2 === 1)
+            .select("o_orderkey", "o_orderpriority", "date"), dir)
         TableStore.readEvolved(s, dir)
           .agg(cnt.as("n_rows"),
             sum(when(col("o_orderpriority").isNull, 1L).otherwise(0L))
@@ -203,11 +159,10 @@ object Pipelines {
       }),
 
     // ---- S17: row-level DELETE (partition-pruned rewrite) ------------------------
-    // Builds once per session: append events, DELETE WHERE
-    // event_type='error'. The oracle recomputes deleted/surviving
-    // accounting from the source — hash equality proves the rewrite
-    // removed exactly the matching rows and nothing else (NULL-typed rows
-    // survive per SQL DELETE semantics).
+    // Append events, DELETE WHERE event_type='error', read the survivors.
+    // The oracle recomputes deleted/surviving accounting from the source —
+    // hash equality proves the rewrite removed exactly the matching rows
+    // and nothing else (NULL-typed rows survive per SQL DELETE semantics).
     Q("q_delete_where", Some(
       """SELECT
         |  CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT)
@@ -219,20 +174,16 @@ object Pipelines {
         |FROM events""".stripMargin),
       (s, d) => {
         import s.implicits._
-        val state = deleteDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_delete").toString + "/events_d"
-          val ev = Tables(s, d, "events")
-            .select(col("event_id"), col("event_type"),
-              to_date(col("ts")).as("date"))
-          TableStore.append(ev, t)
-          val n = TableStore.deleteWhere(s, t, col("event_type") === "error")
-          s"$t|$n"
-        })
-        val Array(dir, nDel) = state.split('|')
+        val dir = demoRoot("graft_delete").toString + "/events_d"
+        val ev = Tables(s, d, "events")
+          .select(col("event_id"), col("event_type"),
+            to_date(col("ts")).as("date"))
+        TableStore.append(ev, dir)
+        val nDel = TableStore.deleteWhere(s, dir, col("event_type") === "error")
         TableStore.read(s, dir)
           .agg(cnt.as("n_rows_after"),
             sum("event_id").as("id_sum_after"))
-          .select(lit(nDel.toLong).as("n_deleted"),
+          .select(lit(nDel).as("n_deleted"),
             col("n_rows_after"), col("id_sum_after"))
       }),
 
@@ -241,7 +192,7 @@ object Pipelines {
     // files — per-file [min,max] on event_id straddles every probe and the
     // stats sidecar can prune nothing; the 8 KiB-per-file Bloom sidecar
     // answers "can this file hold id v?" and drops the rest (skip evidence
-    // pinned in BloomSpec). The timed path is the point-lookup read: probe
+    // pinned in BloomSpec). The query is the point-lookup read: probe
     // the sidecar, read the surviving files, row-filter. Oracle = the
     // plain IN filter: pruning must be invisible to results.
     Q("q_bloom_scan", Some(
@@ -249,18 +200,15 @@ object Pipelines {
         |WHERE event_id IN (17, 251, 733)
         |ORDER BY event_id""".stripMargin),
       (s, d) => {
-        val dir = bloomDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_bloom").toString + "/events_b"
-          val ev = Tables(s, d, "events")
-            .select(col("event_id"), col("user_id"), col("value"),
-              to_date(col("ts")).as("date"))
-            .repartition(4)
-          TableStore.append(ev, t)
-          TableStore.compact(s, t, zorderBy = Seq("user_id", "value"),
-            targetFileBytes = 64L * 1024)
-          graft.store.BloomSkip.write(s, t, Seq("event_id"))
-          t
-        })
+        val dir = demoRoot("graft_bloom").toString + "/events_b"
+        val ev = Tables(s, d, "events")
+          .select(col("event_id"), col("user_id"), col("value"),
+            to_date(col("ts")).as("date"))
+          .repartition(4)
+        TableStore.append(ev, dir)
+        TableStore.compact(s, dir, zorderBy = Seq("user_id", "value"),
+          targetFileBytes = 64L * 1024)
+        graft.store.BloomSkip.write(s, dir, Seq("event_id"))
         val probes = Seq(17L, 251L, 733L)
         graft.store.BloomSkip.readPrunedEq(s, dir, "event_id", probes).df
           .filter(col("event_id").isin(probes: _*))
@@ -269,16 +217,14 @@ object Pipelines {
       }),
 
     // ---- S13: row-level MERGE (upsert-by-key) into the partitioned store --------
-    // Build the events store once (session-scoped), then the TIMED path is
-    // the merge itself: a batch of updates (value bump, type rewrite) and
-    // inserts (fresh keys) confined to the first 7 of 30 date partitions.
+    // Build the events store, then merge into it a batch of updates (value
+    // bump, type rewrite) and inserts (fresh keys) confined to the first 7
+    // of 30 date partitions.
     // Only those 7 partitions are read and rewritten (MergeSpec pins the
     // untouched-partition files byte-identical); the match is an anti-join
     // against the broadcast batch keys. The oracle recomputes the merged
     // state from the raw table (base minus matched keys, plus updates,
     // plus inserts) — hash equality proves Delta-MERGE row semantics.
-    // Re-merging the same deterministic batch is a state-level no-op, so
-    // bench reruns time a real merge against an already-merged store.
     Q("q_merge_upsert", Some(
       """WITH upd AS (
         |  SELECT event_id, user_id, 'updated' AS event_type, value + 1000 AS value,
@@ -302,11 +248,8 @@ object Pipelines {
         def ev = Tables(s, d, "events").select(
           col("event_id"), col("user_id"), col("event_type"), col("value"),
           to_date(col("ts")).as("date"))
-        val dir = mergeDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_merge").toString + "/events_m"
-          TableStore.append(ev.repartition(4), t)
-          t
-        })
+        val dir = demoRoot("graft_merge").toString + "/events_m"
+        TableStore.append(ev.repartition(4), dir)
         val cutoff = lit("2024-01-07").cast("date")
         val upd = ev.filter(col("event_id") % 37 === 0 && col("date") <= cutoff)
           .withColumn("event_type", lit("updated"))
@@ -336,30 +279,26 @@ object Pipelines {
         |  1 AS n_quarantined
         |FROM events WHERE CAST(ts AS DATE) <> DATE '2024-01-02'""".stripMargin),
       (s, d) => {
-        val state = quarantineDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_quarantine").toString + "/events_q"
-          val ev = Tables(s, d, "events")
-            .select(col("event_id"), to_date(col("ts")).as("date"))
-          // repartition BY date → every date's rows land in one task →
-          // exactly one file per partition, so truncating one file loses
-          // exactly one date (deterministic corruption)
-          TableStore.append(ev.repartition(col("date")), t)
-          val victim = TableStore.dataFiles(s, t)
-            .find(_.contains("date=2024-01-02"))
-            .getOrElse(sys.error("no 2024-01-02 file to corrupt"))
-          val ch = java.nio.channels.FileChannel.open(
-            java.nio.file.Paths.get(new java.net.URI(victim).getPath),
-            java.nio.file.StandardOpenOption.WRITE)
-          try ch.truncate(10) finally ch.close()
-          val quarantined = TableStore.quarantineCorrupt(s, t)
-          s"$t|${quarantined.size}"
-        })
-        val Array(dir, nQ) = state.split('|')
+        val dir = demoRoot("graft_quarantine").toString + "/events_q"
+        val ev = Tables(s, d, "events")
+          .select(col("event_id"), to_date(col("ts")).as("date"))
+        // repartition BY date → every date's rows land in one task →
+        // exactly one file per partition, so truncating one file loses
+        // exactly one date (deterministic corruption)
+        TableStore.append(ev.repartition(col("date")), dir)
+        val victim = TableStore.dataFiles(s, dir)
+          .find(_.contains("date=2024-01-02"))
+          .getOrElse(sys.error("no 2024-01-02 file to corrupt"))
+        val ch = java.nio.channels.FileChannel.open(
+          java.nio.file.Paths.get(new java.net.URI(victim).getPath),
+          java.nio.file.StandardOpenOption.WRITE)
+        try ch.truncate(10) finally ch.close()
+        val nQ = TableStore.quarantineCorrupt(s, dir).size
         TableStore.read(s, dir)
           .agg(cnt.as("n_rows"), sum("event_id").as("id_sum"),
             countDistinct("date").as("n_dates"))
           .select(col("n_rows"), col("id_sum"), col("n_dates"),
-            lit(nQ.toInt).as("n_quarantined"))
+            lit(nQ).as("n_quarantined"))
       }),
 
     // ---- S22: write-path expectations with reject routing -----------------------
@@ -384,19 +323,16 @@ object Pipelines {
         |SELECT status, count(*) AS n_rows FROM lab
         |GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, d) => {
-        val dir = expectationDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_expect").toString + "/lineitem_x"
-          val li = Tables(s, d, "lineitem")
-            .select(col("l_orderkey"), col("l_quantity"), col("l_discount"),
-              // month-grain partitions, the schema-evolution lesson:
-              // lineitem spans ~2400 distinct ship days
-              to_date(date_trunc("month", col("l_shipdate"))).as("date"))
-          val (nGood, nBad) = TableStore.appendWithExpectations(li, t, Seq(
-            Constraints.InRange("l_quantity", 1, 45),
-            Constraints.InRange("l_discount", 0, 0.05)))
-          require(nGood + nBad == li.count(), "routing lost rows")
-          t
-        })
+        val dir = demoRoot("graft_expect").toString + "/lineitem_x"
+        val li = Tables(s, d, "lineitem")
+          .select(col("l_orderkey"), col("l_quantity"), col("l_discount"),
+            // month-grain partitions, the schema-evolution lesson:
+            // lineitem spans ~2400 distinct ship days
+            to_date(date_trunc("month", col("l_shipdate"))).as("date"))
+        val (nGood, nBad) = TableStore.appendWithExpectations(li, dir, Seq(
+          Constraints.InRange("l_quantity", 1, 45),
+          Constraints.InRange("l_discount", 0, 0.05)))
+        require(nGood + nBad == li.count(), "routing lost rows")
         val ok = TableStore.read(s, dir)
           .agg(cnt.as("n_rows")).select(lit("ok").as("status"), col("n_rows"))
         val rejects = s.read.parquet(s"$dir/_rejects")
@@ -431,23 +367,20 @@ object Pipelines {
         |ORDER BY segment""".stripMargin),
       (s, d) => {
         import graft.store.Scd2
-        val dir = scd2Demos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_scd2").toString + "/cust_dim"
-          val c = Tables(s, d, "customer").select(col("c_custkey"),
-            col("c_mktsegment"), round(col("c_acctbal"), 2).as("c_acctbal"))
-          Scd2.init(c, t, java.sql.Date.valueOf("2024-01-01"))
-          val b1 = c.withColumn("c_mktsegment",
-            when(col("c_custkey") % 7 === 0, lit("MOVED"))
-              .otherwise(col("c_mktsegment")))
-          Scd2.apply(s, t, b1, Seq("c_custkey"),
-            java.sql.Date.valueOf("2024-02-01"))
-          val b2 = b1.withColumn("c_acctbal",
-            when(col("c_custkey") % 11 === 0,
-              round(col("c_acctbal") + 100, 2)).otherwise(col("c_acctbal")))
-          Scd2.apply(s, t, b2, Seq("c_custkey"),
-            java.sql.Date.valueOf("2024-03-01"))
-          t
-        })
+        val dir = demoRoot("graft_scd2").toString + "/cust_dim"
+        val c = Tables(s, d, "customer").select(col("c_custkey"),
+          col("c_mktsegment"), round(col("c_acctbal"), 2).as("c_acctbal"))
+        Scd2.init(c, dir, java.sql.Date.valueOf("2024-01-01"))
+        val b1 = c.withColumn("c_mktsegment",
+          when(col("c_custkey") % 7 === 0, lit("MOVED"))
+            .otherwise(col("c_mktsegment")))
+        Scd2.apply(s, dir, b1, Seq("c_custkey"),
+          java.sql.Date.valueOf("2024-02-01"))
+        val b2 = b1.withColumn("c_acctbal",
+          when(col("c_custkey") % 11 === 0,
+            round(col("c_acctbal") + 100, 2)).otherwise(col("c_acctbal")))
+        Scd2.apply(s, dir, b2, Seq("c_custkey"),
+          java.sql.Date.valueOf("2024-03-01"))
         def bySeg(df: org.apache.spark.sql.DataFrame, as: String) =
           df.groupBy(col("c_mktsegment").as("segment")).agg(cnt.as(as))
         val jan = bySeg(Scd2.asOf(s, dir, java.sql.Date.valueOf("2024-01-15")), "n_jan")
@@ -483,26 +416,23 @@ object Pipelines {
         |GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, d) => {
         import graft.store.Scd2
-        val dir = pitDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_pit").toString + "/cust_dim"
-          val c = Tables(s, d, "customer")
-            .select(col("c_custkey"), col("c_mktsegment"))
-          // Init at TPC-H's global date floor: pitJoin is INNER, so a fact
-          // dated before the first valid_from silently drops while the
-          // oracle counts every order — assert the coupling loudly instead
-          // of letting a fixture regen surface as an opaque hash mismatch.
-          val floor = java.sql.Date.valueOf("1992-01-01")
-          val minOrder = Tables(s, d, "orders")
-            .agg(min(col("o_orderdate").cast("date"))).head().getDate(0)
-          require(!minOrder.before(floor),
-            s"fixture orders start $minOrder, before the dimension floor $floor")
-          Scd2.init(c, t, floor)
-          Scd2.apply(s, t, c.withColumn("c_mktsegment",
-              when(col("c_custkey") % 7 === 0, lit("MOVED"))
-                .otherwise(col("c_mktsegment"))),
-            Seq("c_custkey"), java.sql.Date.valueOf("1998-01-01"))
-          t
-        })
+        val dir = demoRoot("graft_pit").toString + "/cust_dim"
+        val c = Tables(s, d, "customer")
+          .select(col("c_custkey"), col("c_mktsegment"))
+        // Init at TPC-H's global date floor: pitJoin is INNER, so a fact
+        // dated before the first valid_from silently drops while the
+        // oracle counts every order — assert the coupling loudly instead
+        // of letting a fixture regen surface as an opaque hash mismatch.
+        val floor = java.sql.Date.valueOf("1992-01-01")
+        val minOrder = Tables(s, d, "orders")
+          .agg(min(col("o_orderdate").cast("date"))).head().getDate(0)
+        require(!minOrder.before(floor),
+          s"fixture orders start $minOrder, before the dimension floor $floor")
+        Scd2.init(c, dir, floor)
+        Scd2.apply(s, dir, c.withColumn("c_mktsegment",
+            when(col("c_custkey") % 7 === 0, lit("MOVED"))
+              .otherwise(col("c_mktsegment"))),
+          Seq("c_custkey"), java.sql.Date.valueOf("1998-01-01"))
         val facts = Tables(s, d, "orders").select(
           col("o_custkey").as("c_custkey"),
           col("o_orderdate"), col("o_totalprice"))
@@ -529,13 +459,10 @@ object Pipelines {
         |FROM events WHERE day(CAST(ts AS DATE)) <= 5
         |GROUP BY 1 ORDER BY 1""".stripMargin),
       (s, d) => {
-        val dir = dppDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_dpp").toString + "/events_p"
-          TableStore.append(Tables(s, d, "events")
-            .select(col("event_id"), col("event_type"),
-              to_date(col("ts")).as("date")).repartition(4), t)
-          t
-        })
+        val dir = demoRoot("graft_dpp").toString + "/events_p"
+        TableStore.append(Tables(s, d, "events")
+          .select(col("event_id"), col("event_type"),
+            to_date(col("ts")).as("date")).repartition(4), dir)
         val fact = TableStore.read(s, dir)
         val dim = Tables(s, d, "events")
           .select(to_date(col("ts")).as("date")).distinct()
@@ -547,14 +474,13 @@ object Pipelines {
       }),
 
     // ---- S20: predicate-scoped overwrite (replaceWhere backfill) ----------------
-    // Build the events store once; the TIMED path is the replaceWhere
-    // itself: "rebuild 01-03..01-05 from the corrected (error-free)
-    // source" where the corrected batch produces NO rows for 01-05 — that
-    // partition must be DROPPED, the two repopulated, and everything
-    // outside the predicate slice stay byte-untouched. The oracle
+    // Build the events store, then run the replaceWhere: "rebuild
+    // 01-03..01-05 from the corrected (error-free) source" where the
+    // corrected batch produces NO rows for 01-05 — that partition must be
+    // DROPPED, the two repopulated, and everything outside the predicate
+    // slice stay byte-untouched. The oracle
     // recomputes the final state from the raw table; n_dates per type
-    // proves the emptied partition is gone. Re-running the same replace
-    // is a state-level no-op, so bench reruns time a real backfill.
+    // proves the emptied partition is gone.
     Q("q_replace_where", Some(
       """WITH final AS (
         |  SELECT event_id, event_type, CAST(ts AS DATE) AS date FROM events
@@ -573,11 +499,8 @@ object Pipelines {
       (s, d) => {
         def ev = Tables(s, d, "events").select(
           col("event_id"), col("event_type"), to_date(col("ts")).as("date"))
-        val dir = replaceDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_replace").toString + "/events_r"
-          TableStore.append(ev.repartition(4), t)
-          t
-        })
+        val dir = demoRoot("graft_replace").toString + "/events_r"
+        TableStore.append(ev.repartition(4), dir)
         val lo = lit("2024-01-03").cast("date")
         val hi = lit("2024-01-05").cast("date")
         val batch = ev
@@ -603,24 +526,21 @@ object Pipelines {
         |WHERE user_id BETWEEN 3 AND 9 AND value BETWEEN 20 AND 120
         |ORDER BY event_id""".stripMargin),
       (s, d) => {
-        val tmp = zorderDemos.computeIfAbsent(d, _ => {
-          val t = demoRoot("graft_zorder").toString + "/events_z"
-          // only the z-demo columns travel through the two write passes —
-          // hauling the bulky props JSON through append+compact would just
-          // tax the build without exercising anything new
-          val ev = Tables(s, d, "events")
-            .select(col("event_id"), col("user_id"), col("value"),
-              to_date(col("ts")).as("date"))
-            .repartition(4)
-          TableStore.append(ev, t)
-          TableStore.compact(s, t, zorderBy = Seq("user_id", "value"),
-            targetFileBytes = 64L * 1024)
-          t
-        })
-        // the timed path is the pruned 2-D range READ against the z-laid
-        // store (the store outlives the query, so no eager materialization
-        // or checkpoint block is needed)
-        val pruned = TableStore.readPruned(s, tmp, Seq(
+        val dir = demoRoot("graft_zorder").toString + "/events_z"
+        // only the z-demo columns travel through the two write passes —
+        // hauling the bulky props JSON through append+compact would just
+        // tax the build without exercising anything new
+        val ev = Tables(s, d, "events")
+          .select(col("event_id"), col("user_id"), col("value"),
+            to_date(col("ts")).as("date"))
+          .repartition(4)
+        TableStore.append(ev, dir)
+        TableStore.compact(s, dir, zorderBy = Seq("user_id", "value"),
+          targetFileBytes = 64L * 1024)
+        // the query is the pruned 2-D range READ against the z-laid store
+        // (the store outlives the query, so no eager materialization or
+        // checkpoint block is needed)
+        val pruned = TableStore.readPruned(s, dir, Seq(
           TableStore.ColRange("user_id", 3, 9),
           TableStore.ColRange("value", 20, 120)))
         pruned.df

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** S23: slowly-changing-dimension (type 2) maintenance — row-level
   * validity intervals, the warehouse capability BETWEEN table-grain time
-  * travel (`retainGenerations` answers "the whole table as of generation
+  * travel (a retained generation answers "the whole table as of generation
   * N") and row-grain MERGE (which overwrites history): every key keeps
   * its full attribute history as `[valid_from, valid_to)` versions, and
   * any past date is queryable with a plain predicate — no log replay, no

@@ -813,10 +813,7 @@ object TableStore {
   def overwriteVersioned(df: DataFrame, dir: String,
       partitionCols: Seq[String] = Nil,
       staleLockMs: Long = 30L * 60 * 1000,
-      retainGenerations: Int = 2,
       expectedGen: Int = CasUnchecked): Unit = {
-    require(retainGenerations >= 1,
-      s"retainGenerations must be >= 1, got $retainGenerations")
     val spark = df.sparkSession
     val f = fs(spark, dir)
     // claim = mutual exclusion among generation producers (and the CAS
@@ -835,7 +832,7 @@ object TableStore {
       withCommitLock(f, dir, staleLockMs) {
         f.create(new Path(tgt, "_SUCCESS"), true).close() // the commit point
       }
-      vacuum(spark, dir, keepFrom = nextN - (retainGenerations - 1))
+      vacuum(spark, dir, keepFrom = nextN - 1)
     } finally releaseClaim(f, dir, nextN)
   }
 
@@ -849,17 +846,15 @@ object TableStore {
     * in-flight `compute` reads a consistent snapshot even while losing.
     */
   def transactVersioned(spark: SparkSession, dir: String,
-      partitionCols: Seq[String] = Nil,
-      retries: Int = 10,
-      retainGenerations: Int = 2)(compute: => DataFrame): Unit = {
+      partitionCols: Seq[String] = Nil)(compute: => DataFrame): Unit = {
+    val retries = 10
     var attempt = 0
     var committed = false
     while (!committed) {
       val base = currentGenNumber(spark, dir)
       val next = compute
       try {
-        overwriteVersioned(next, dir, partitionCols,
-          retainGenerations = retainGenerations, expectedGen = base)
+        overwriteVersioned(next, dir, partitionCols, expectedGen = base)
         committed = true
       } catch {
         case e: ConcurrentWriteException =>
@@ -1390,13 +1385,9 @@ object TableStore {
       schema: Option[StructType] = None,
       targetFileBytes: Long = 512L * 1024 * 1024,
       zorderBy: Seq[String] = Nil,
-      zorderBits: Int = 6,
-      staleLockMs: Long = 30L * 60 * 1000,
-      retainGenerations: Int = 2): (Long, Long) = {
+      staleLockMs: Long = 30L * 60 * 1000): (Long, Long) = {
     import org.apache.spark.sql.functions._
     require(targetFileBytes > 0, s"targetFileBytes must be positive")
-    require(retainGenerations >= 1,
-      s"retainGenerations must be >= 1, got $retainGenerations")
     val cur = currentGeneration(spark, dir)
     val srcDir = cur.map(_._2).getOrElse(dir)
     val f = fs(spark, dir)
@@ -1490,7 +1481,7 @@ object TableStore {
         // targetFileBytes without the per-date bucket join. Explicit
         // partition count keeps AQE from coalescing the layout away.
         val zCol = "__graft_z"
-        df.withColumn(zCol, ZOrder.zvalue(df, zorderBy, zorderBits))
+        df.withColumn(zCol, ZOrder.zvalue(df, zorderBy, bits = 6))
           .repartitionByRange(totalBuckets.min(20000).toInt,
             col("date"), col(zCol))
           .sortWithinPartitions(col("date"), col(zCol))
@@ -1528,7 +1519,7 @@ object TableStore {
       }
       f.create(new Path(tgt, "_SUCCESS"), true).close() // the commit point
     }
-    vacuum(spark, dir, keepFrom = nextN - (retainGenerations - 1))
+    vacuum(spark, dir, keepFrom = nextN - 1)
     (before, listParquet(spark, tgt).size.toLong)
     } finally releaseClaim(f, dir, nextN)
   }

@@ -3,13 +3,14 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import org.apache.xbean.asm9.{ClassReader, Handle, Opcodes}
+import org.apache.xbean.asm9.{ClassReader, Handle, Opcodes, Type}
 import org.apache.xbean.asm9.tree.{ClassNode, FieldInsnNode,
   InvokeDynamicInsnNode, MethodInsnNode, MethodNode, TypeInsnNode}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lint for the entry-point design: one session factory, a fixed set of
-  * mains, and nothing in `src/main` that the mains cannot reach.
+  * mains, nothing in `src/main` that the mains cannot reach, and no
+  * mutable collection held per JVM.
   * `SparkSession.builder` may appear only in [[LocalSession]], so every
   * entry point runs the same configuration, and `def main` only in the
   * timing, correctness, smoke and daemon mains (`Bench`, `Verify`,
@@ -224,5 +225,40 @@ class EntryPointLintSpec extends AnyFunSuite {
       "a test seam is reached or gone; update the list")
     assert(unreached.filterNot(seams.contains) === Nil,
       "reached from no main: wire it to one, move it to src/test or delete it")
+  }
+
+  // ---- no per-JVM mutable state ---------------------------------------------
+
+  /** Whether a field of this type can hold mutable shared state: a
+    * `java.util` map or collection, any `java.util.concurrent` type, or a
+    * Scala mutable or concurrent collection.
+    */
+  private def mutableCollection(desc: String): Boolean = {
+    val t = Type.getType(desc)
+    t.getSort == Type.OBJECT && {
+      val n = t.getClassName
+      def javaCollection = try {
+        val k = Class.forName(n, false, getClass.getClassLoader)
+        classOf[java.util.Map[_, _]].isAssignableFrom(k) ||
+          classOf[java.util.Collection[_]].isAssignableFrom(k)
+      } catch { case _: ClassNotFoundException | _: LinkageError => false }
+      Seq("java.util.concurrent.", "scala.collection.mutable.",
+        "scala.collection.concurrent.").exists(n.startsWith) ||
+        (n.startsWith("java.util.") && javaCollection)
+    }
+  }
+
+  test("no object or static field holds a mutable collection") {
+    // a static field, or any field of an object's `X$` module class, lives
+    // as long as the JVM: state kept there outlives the session and the
+    // data it was built from. Per-instance fields of classes are fine.
+    val held = (for {
+      c <- classes.values
+      f <- c.fields.asScala
+      if ((f.access & Opcodes.ACC_STATIC) != 0 || c.name.endsWith("$")) &&
+        mutableCollection(f.desc)
+    } yield sourceName(c.name, f.name)).toSeq.distinct.sorted
+    assert(held === Nil,
+      "per-JVM mutable state: keep it in a class instance or build it per call")
   }
 }

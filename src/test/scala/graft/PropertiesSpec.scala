@@ -116,7 +116,7 @@ class PropertiesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("watermark monotonicity: appending newer data never lowers it (T1 law)") {
-    val dir = "/root/repo/target/tmp/wm_prop_" + System.nanoTime()
+    val dir = tmpDir("wm_prop_") + "/t"
     def write(h: Int) = Seq(s"2024-02-29 0$h:00:00").toDF("s")
       .select(to_timestamp($"s").as("created_at"))
       .write.mode("append").parquet(dir)

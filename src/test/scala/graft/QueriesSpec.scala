@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry-level invariants: every declared query runs on sf0.001 and
@@ -29,6 +31,35 @@ class QueriesSpec extends AnyFunSuite with SparkFixture {
 
   test("entry (flagship) returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("a storage key reads what its directory holds now, not an earlier build") {
+    // q_csv_roundtrip writes the orders it reads to a CSV store of its own;
+    // after the directory's orders change, the next call must see them
+    val key = SparkEntry.queries("q_csv_roundtrip")
+    def copySf(): String = {
+      val to = tmpDir("sf_copy")
+      val files = Files.list(Paths.get(sf("sf0.001")))
+      try files.iterator.asScala.foreach(f =>
+        Files.copy(f, Paths.get(to).resolve(f.getFileName)))
+      finally files.close()
+      to
+    }
+    def keepEvenOrders(dir: String): Unit = {
+      Files.delete(Paths.get(dir, "orders.parquet"))
+      spark.read.parquet(s"${sf("sf0.001")}/orders.parquet")
+        .filter("o_orderkey % 2 = 0")
+        .write.parquet(s"$dir/orders.parquet")
+    }
+    val dir = copySf()
+    val before = key(spark, dir).collect().toSeq
+    keepEvenOrders(dir)
+    val after = key(spark, dir).collect().toSeq
+    val fresh = copySf()
+    keepEvenOrders(fresh)
+    val expected = key(spark, fresh).collect().toSeq
+    assert(expected != before, "the filter must change the checksum")
+    assert(after == expected)
   }
 
   for (q <- SparkEntry.registry) {

@@ -6,6 +6,12 @@ import org.apache.spark.sql.SparkSession
 trait SparkFixture {
   lazy val spark: SparkSession = SparkFixture.session
   def sf(name: String) = s"/root/testdata/$name"
+
+  /** A new directory under `java.io.tmpdir` (which the build points at
+    * `target/tmp`), removed on JVM exit.
+    */
+  def tmpDir(prefix: String): String =
+    graft.query.Pipelines.demoRoot(prefix).toString
 }
 
 object SparkFixture {

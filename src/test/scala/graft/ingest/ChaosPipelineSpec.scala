@@ -48,9 +48,7 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
     Instant.parse(f"2024-02-29T0${h + 2}%d:10:00Z")
 
   private def mkDirs(tag: String): (String, String, String) = {
-    val base = Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val dir = Files.createTempDirectory(base, s"chaos_$tag").toString
+    val dir = tmpDir(s"chaos_$tag")
     val landing = s"$dir/landing"
     Files.createDirectories(Paths.get(landing))
     (landing, s"$dir/store", s"$dir/mv")

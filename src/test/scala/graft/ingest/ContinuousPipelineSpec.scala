@@ -34,9 +34,7 @@ class ContinuousPipelineSpec extends AnyFunSuite with SparkFixture {
 
   test("serve-driven multi-tick with a kill mid-tick: store, views and " +
       "results all converge to the batch truth") {
-    val base = Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val dir = Files.createTempDirectory(base, "cont_e2e").toString
+    val dir = tmpDir("cont_e2e")
     val (landing, store, mv) = (s"$dir/landing", s"$dir/store", s"$dir/mv")
     Files.createDirectories(Paths.get(landing))
     val backfill = Instant.parse("2024-02-29T01:00:00Z")

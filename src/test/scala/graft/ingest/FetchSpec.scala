@@ -24,11 +24,6 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
     bos.toByteArray
   }
 
-  private def tmpDir(): String = {
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    java.nio.file.Files.createDirectories(base)
-    java.nio.file.Files.createTempDirectory(base, "fetch").toString
-  }
 
   /** Serve `routes` (path -> gzipped body); `flakyFailures` first hits of a
     * path listed in `flaky` return 503 before succeeding. Paths in `chunked`
@@ -64,7 +59,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
     withServer(Map(
       "/2024-02-29-1.json.gz" -> gzip(corpus),
       "/2024-02-29-2.json.gz" -> gzip(Fixture.good.head))) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val st = Fetch.download(spark,
         Seq(s"$base/2024-02-29-1.json.gz", s"$base/2024-02-29-2.json.gz"),
         s"$dir/landing")
@@ -91,7 +86,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
   test("transient 5xx is retried to success; attempts recorded") {
     withServer(Map("/2024-02-29-3.json.gz" -> gzip(Fixture.good.head)),
       flaky = Set("/2024-02-29-3.json.gz"), flakyFailures = 2) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val st = Fetch.download(spark, Seq(s"$base/2024-02-29-3.json.gz"),
         s"$dir/landing", retries = 5, backoffMs = 10L).collect().head
       assert(st.getAs[Boolean]("ok"))
@@ -103,7 +98,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
 
   test("permanent 404 fails FAST (one attempt, deterministic error); no half file left behind") {
     withServer(Map.empty) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val st = Fetch.download(spark, Seq(s"$base/2024-02-29-4.json.gz"),
         s"$dir/landing", retries = 3, backoffMs = 1L).collect().head
       assert(!st.getAs[Boolean]("ok"))
@@ -122,7 +117,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
   test("transient 5xx exhaustion burns the full retry budget, recorded not thrown") {
     withServer(Map("/2024-02-29-6.json.gz" -> gzip(Fixture.good.head)),
       flaky = Set("/2024-02-29-6.json.gz"), flakyFailures = 99) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val st = Fetch.download(spark, Seq(s"$base/2024-02-29-6.json.gz"),
         s"$dir/landing", retries = 3, backoffMs = 1L).collect().head
       assert(!st.getAs[Boolean]("ok"))
@@ -142,7 +137,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
     withServer(Map(
       "/2024-02-29-1.json.gz" -> gzip(commentLine("u1", 1)),
       "/2024-02-29-3.json.gz" -> gzip(commentLine("u3", 3)))) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val run1 = GhaPipeline.fetchAndRun(spark, base, s"$dir/landing",
         s"$dir/store", s"$dir/mv",
         Instant.parse("2024-02-29T05:10:00Z"), backfill,
@@ -177,7 +172,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
     withServer(Map(
       "/2024-02-29-1.json.gz" -> gzip(commentLine("u1", 1)),
       "/2024-02-29-3.json.gz" -> gzip(commentLine("u3", 3)))) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val run = GhaPipeline.fetchAndRun(spark, base, s"$dir/landing",
         s"$dir/store", s"$dir/mv",
         Instant.parse("2024-02-29T07:10:00Z"),
@@ -206,7 +201,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
       "/2024-02-29-1.json.gz" -> gzip(commentLine("u1", 1)),
       "/2024-02-29-2.json.gz" -> gzip(commentLine("u2", 2))),
       flaky = Set("/2024-02-29-1.json.gz"), flakyFailures = 2) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val e = intercept[java.io.IOException] {
         GhaPipeline.fetchAndRun(spark, base, s"$dir/landing",
           s"$dir/store", s"$dir/mv",
@@ -229,7 +224,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
   test("dead upstream: all downloads fail, nothing ingested -> tick throws for backoff") {
     import java.time.Instant
     withServer(Map.empty) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val e = intercept[java.io.IOException] {
         GhaPipeline.fetchAndRun(spark, base, s"$dir/landing",
           s"$dir/store", s"$dir/mv",
@@ -248,7 +243,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
     withServer(
       Map("/2024-02-29-6.json.gz" -> cut, "/2024-02-29-7.json.gz" -> whole),
       chunked = Set("/2024-02-29-6.json.gz", "/2024-02-29-7.json.gz")) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val st = Fetch.download(spark,
         Seq(s"$base/2024-02-29-6.json.gz", s"$base/2024-02-29-7.json.gz"),
         s"$dir/landing", retries = 2, backoffMs = 1L)
@@ -266,7 +261,7 @@ class FetchSpec extends AnyFunSuite with SparkFixture {
 
   test("re-download overwrites idempotently (re-run safety)") {
     withServer(Map("/2024-02-29-5.json.gz" -> gzip(Fixture.good.head))) { base =>
-      val dir = tmpDir()
+      val dir = tmpDir("fetch")
       val url = s"$base/2024-02-29-5.json.gz"
       Fetch.download(spark, Seq(url), s"$dir/landing").collect()
       val st = Fetch.download(spark, Seq(url), s"$dir/landing").collect().head

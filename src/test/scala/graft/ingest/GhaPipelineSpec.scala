@@ -41,7 +41,7 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
 
   /** A fresh directory with an empty `landing/` (store and views beside). */
   private def tmp(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix).toString
+    val dir = tmpDir(prefix)
     Files.createDirectories(Paths.get(s"$dir/landing"))
     dir
   }
@@ -88,7 +88,7 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
 
   test("a tick's per-table jobs are described tick:<phase>:<table> and " +
     "keep the caller's job group") {
-    val dir = Files.createTempDirectory("gha_desc").toString
+    val dir = tmpDir("gha_desc")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
       corpus.mkString("\n").getBytes)

@@ -19,12 +19,6 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
   private def comment(user: String, repo: String, body: String, d: String, h: Int) =
     s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"$repo"},"created_at":"${d}T0$h:30:00Z","payload":{"issue":{"number":1,"title":"t","created_at":"${d}T01:00:00Z","user":{"login":"x"}},"comment":{"body":"$body","author_association":"NONE"}}}"""
 
-  private def tmp(prefix: String): String = {
-    val base = Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    Files.createTempDirectory(base, prefix).toString
-  }
-
   private def land(dir: String, d: String, h: Int, lines: Seq[String]): Unit =
     Files.write(Paths.get(s"$dir/$d-$h.json"), lines.mkString("\n").getBytes)
 
@@ -70,7 +64,7 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
     comment("gina", "org/late", "yes dask works", d, 3))
 
   test("3 ticks of view maintenance ≡ full recompute, including late-crossing repos") {
-    val incDir = tmp("mv_inc")
+    val incDir = tmpDir("mv_inc")
     Files.createDirectories(Paths.get(s"$incDir/landing"))
     val start = Instant.parse(s"${d}T01:00:00Z")
     for ((lines, h) <- Seq(tick1 -> 1, tick2 -> 2, tick3 -> 3)) {
@@ -94,7 +88,7 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("rebuild from the curated store equals the incrementally maintained views") {
-    val dir = tmp("mv_rb")
+    val dir = tmpDir("mv_rb")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     val start = Instant.parse(s"${d}T01:00:00Z")
     for ((lines, h) <- Seq(tick1 -> 1, tick2 -> 2, tick3 -> 3)) {
@@ -113,7 +107,7 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("views adopted over a store with history start from that history") {
-    val dir = tmp("mv_adopt")
+    val dir = tmpDir("mv_adopt")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     val start = Instant.parse(s"${d}T01:00:00Z")
     // hours 1-2 ingested with no views (curated appends plus the hwm)
@@ -138,7 +132,7 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a tick with another keyword rebuilds the views for that keyword") {
-    val dir = tmp("mv_kw")
+    val dir = tmpDir("mv_kw")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     val start = Instant.parse(s"${d}T01:00:00Z")
     def tick(h: Int, keyword: String) =
@@ -179,7 +173,7 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
 
   test("a keyword change with no new hour republishes the results for " +
     "the new keyword") {
-    val dir = tmp("mv_kw_idle")
+    val dir = tmpDir("mv_kw_idle")
     val tick = threeDaskTicks(dir)
     // restarted with " fix" and nothing new landed: the tick ingests
     // nothing, yet the results must be " fix"'s, not the old " dask" rows
@@ -192,7 +186,7 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
 
   test("a kill while the rebuilt views publish leaves the rebuild pending; " +
     "the next tick serves the same rows") {
-    val dir = tmp("mv_kw_kill")
+    val dir = tmpDir("mv_kw_kill")
     val tick = threeDaskTicks(dir)
     GhaPipeline.chaosHook = name =>
       if (name == "post-result:commits") {
@@ -215,7 +209,7 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a crash between rollback and rebuild re-enters the rebuild (_mv_stale)") {
-    val dir = tmp("mv_crash")
+    val dir = tmpDir("mv_crash")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     val start = Instant.parse(s"${d}T01:00:00Z")
     land(s"$dir/landing", d, 1, tick1)
@@ -237,7 +231,7 @@ class IncrementalViewsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("counts view is a merged total, not a last-batch snapshot") {
-    val dir = tmp("mv_cnt")
+    val dir = tmpDir("mv_cnt")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     val start = Instant.parse(s"${d}T01:00:00Z")
     for ((lines, h) <- Seq(tick1 -> 1, tick2 -> 2, tick3 -> 3)) {

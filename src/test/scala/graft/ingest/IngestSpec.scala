@@ -19,9 +19,7 @@ class IngestSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("gzip NDJSON reads transparently; one task per gz file (S1)") {
-    val base = Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val dir = Files.createTempDirectory(base, "gz_ingest").toString
+    val dir = tmpDir("gz_ingest")
     writeGz(s"$dir/2024-02-29-1.json.gz", Fixture.good)
     writeGz(s"$dir/2024-02-29-2.json.gz", Fixture.good)
 
@@ -38,8 +36,7 @@ class IngestSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("uncompressed NDJSON splits by block size (S2: blocksize='50 MiB' analog)") {
-    val base = Paths.get("/root/repo/target/tmp")
-    val dir = Files.createTempDirectory(base, "block_split").toString
+    val dir = tmpDir("block_split")
     // ~1 MiB plain-text file
     val line = Fixture.good.head
     val lines = Seq.fill((1 << 20) / (line.length + 1))(line)

@@ -34,9 +34,7 @@ class ServeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("two ticks: second tick ingests only the newly landed hour") {
-    val base = Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val dir = Files.createTempDirectory(base, "serve").toString
+    val dir = tmpDir("serve")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
       commentLine("u1", 1).getBytes)
@@ -61,9 +59,7 @@ class ServeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("mvDir ticks maintain the views and serve results from them") {
-    val base = Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val dir = Files.createTempDirectory(base, "serve_mv").toString
+    val dir = tmpDir("serve_mv")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
       ((1 to 6).map(i => watchLine(s"w$i", 1)) :+ pushLine("alice", 1))
@@ -91,7 +87,7 @@ class ServeSpec extends AnyFunSuite with SparkFixture {
 
   test("without mvDir the views live under the store and results equal " +
     "the full recompute") {
-    val dir = Files.createTempDirectory("serve_main").toString
+    val dir = tmpDir("serve_main")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     Files.write(Paths.get(s"$dir/landing/2024-02-29-1.json"),
       ((1 to 6).map(i => watchLine(s"w$i", 1)) :+ pushLine("alice", 1))
@@ -123,8 +119,7 @@ class ServeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a failing tick is absorbed; failure count feeds the backoff") {
-    val base = Paths.get("/root/repo/target/tmp")
-    val dir = Files.createTempDirectory(base, "serve_f").toString
+    val dir = tmpDir("serve_f")
     // landingDir path exists but store root is an unwritable file -> the
     // tick throws; the loop must survive both ticks
     Files.createDirectories(Paths.get(s"$dir/landing"))

@@ -24,7 +24,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
   test("phraseSearch == full-scan word-aligned contains, incl. the " +
     "mid-word and wrong-order traps") {
     val df = crafted()
-    val dir = java.nio.file.Files.createTempDirectory("phraseidx").toString
+    val dir = tmpDir("phraseidx")
     PhraseIndex.buildPhraseIndex(df, dir)
     for (phrase <- Seq("alpha beta gamma", "beta gamma delta",
         "unrelated words entirely", "absent words completely")) {
@@ -37,7 +37,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
 
   test("multi-gram phrases intersect postings (4+ words -> 2+ grams)") {
     val df = crafted()
-    val dir = java.nio.file.Files.createTempDirectory("phraseidx2").toString
+    val dir = tmpDir("phraseidx2")
     PhraseIndex.buildPhraseIndex(df, dir)
     val got = References.phraseSearch(spark, dir, df, "alpha beta gamma delta")
       .as[Long].collect().toSet
@@ -47,7 +47,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
 
   test("short phrase (< n words) falls back to the direct verify scan") {
     val df = crafted()
-    val dir = java.nio.file.Files.createTempDirectory("phraseidx3").toString
+    val dir = tmpDir("phraseidx3")
     PhraseIndex.buildPhraseIndex(df, dir)
     val got = References.phraseSearch(spark, dir, df, "alpha beta")
       .as[Long].collect().toSet
@@ -69,7 +69,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
   test("phraseSearchPruned == phraseSearch; the verify fetch reads a " +
     "BOUNDED file set (Bloom-pruned), never the whole doc store") {
     val df = planted()
-    val root = java.nio.file.Files.createTempDirectory("phrasepruned").toString
+    val root = tmpDir("phrasepruned")
     PhraseIndex.buildPhraseIndex(df, s"$root/index")
     df.repartitionByRange(20, col("doc_id")).write.parquet(s"$root/docs")
     graft.store.BloomSkip.write(spark, s"$root/docs", Seq("doc_id"))
@@ -92,7 +92,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
   test("phraseSearchPruned above maxFetch falls back to the semi-join " +
     "scan and stays exact; short phrases fall back to the direct scan") {
     val df = planted()
-    val root = java.nio.file.Files.createTempDirectory("phrasecap").toString
+    val root = tmpDir("phrasecap")
     PhraseIndex.buildPhraseIndex(df, s"$root/index")
     df.repartitionByRange(20, col("doc_id")).write.parquet(s"$root/docs")
     graft.store.BloomSkip.write(spark, s"$root/docs", Seq("doc_id"))
@@ -115,7 +115,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
   test("buildPhraseIndex over an existing index replaces it: readers see " +
     "the rebuilt corpus only") {
     val v1 = crafted()
-    val dir = java.nio.file.Files.createTempDirectory("phrasegen").toString
+    val dir = tmpDir("phrasegen")
     PhraseIndex.buildPhraseIndex(v1, dir)
     assert(References.phraseSearch(spark, dir, v1, "alpha beta gamma")
       .as[Long].collect().toSet === Set(1L, 2L))
@@ -134,7 +134,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
   test("phrase index _meta rejects an n/nBuckets mismatch instead of " +
     "silently losing matches") {
     val docs = Seq((0L, "the quick brown fox")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("phrasemeta").toString
+    val dir = tmpDir("phrasemeta")
     PhraseIndex.buildPhraseIndex(docs, dir, n = 3, nBuckets = 8)
     val e1 = intercept[IllegalArgumentException] {
       References.phraseSearch(spark, dir, docs, "the quick brown",
@@ -155,7 +155,7 @@ class PhraseIndexSpec extends AnyFunSuite with SparkFixture {
 
   test("the postings probe reaches the scan as a bucket PARTITION filter") {
     val df = crafted()
-    val dir = java.nio.file.Files.createTempDirectory("phraseidx4").toString
+    val dir = tmpDir("phraseidx4")
     PhraseIndex.buildPhraseIndex(df, dir)
     val grams = PhraseIndex.phraseGramHashes(spark, "alpha beta gamma", 3)
     val buckets = grams.map(g => ((g % 64) + 64) % 64).distinct

@@ -111,7 +111,7 @@ class PqSpec extends AnyFunSuite with SparkFixture {
     val direct = References.ivfPqQuery(built, emb, queries, k = 5,
       nProbe = 8, shortlist = 256)
       .as[(Long, Long, Long, Double)].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString + "/idx"
+    val dir = tmpDir("ivfpq") + "/idx"
     Pq.writeIvfPqIndex(built, dir)
     val loaded = Pq.readIvfPqIndex(spark, dir)
     assert(loaded.model == built.model)
@@ -140,7 +140,7 @@ class PqSpec extends AnyFunSuite with SparkFixture {
     val exact = References.ivfPqQuery(built, emb, queries, k = 5,
       nProbe = 8, shortlist = 8)
       .as[(Long, Long, Long, Double)].collect().toSet
-    val root = java.nio.file.Files.createTempDirectory("ivfpqpr").toString
+    val root = tmpDir("ivfpqpr")
     // 50 range-laid files over the 500-vector fixture: ~10 ids per file,
     // so a <=40-id shortlist leaves many files with no candidate to keep
     emb.repartitionByRange(50, $"vec_id").write.parquet(s"$root/corpus")

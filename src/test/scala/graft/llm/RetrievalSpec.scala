@@ -22,7 +22,7 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
     val queries = docs.filter($"doc_id".isin(0L, 3L, 4L))
       .select($"doc_id".as("query_id"),
         array_distinct(split($"text", " ")).as("terms"))
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = tmpDir("bm25idx")
     Retrieval.buildBm25Index(docs, dir, nBuckets = 8)
     val adhoc = Retrieval.bm25(docs, queries, k = 5)
       .orderBy("query_id", "rank")
@@ -41,7 +41,7 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
   test("bm25Stored: unseen query terms score zero everywhere (absent from " +
     "the index == absent from the corpus), seen terms unaffected") {
     val docs = fixtureDocs
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx2").toString
+    val dir = tmpDir("bm25idx2")
     Retrieval.buildBm25Index(docs, dir, nBuckets = 8)
     // a query mixing one corpus term with terms the corpus never saw
     val q = Seq((7L, Seq("turtle", "zzz_never_seen", "qqq_unknown")))
@@ -60,7 +60,7 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
   test("bm25Stored plan: the postings scan carries the bucket partition " +
     "filter — only the query terms' buckets are read") {
     val docs = fixtureDocs
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx3").toString
+    val dir = tmpDir("bm25idx3")
     Retrieval.buildBm25Index(docs, dir, nBuckets = 8)
     val q = Seq((0L, Seq("turtle"))).toDF("query_id", "terms")
     val plan = Retrieval.bm25Stored(spark, dir, q, k = 5, nBuckets = 8)

@@ -117,7 +117,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkFixture {
     val queries = emb.filter(col("vec_id") < 5)
     val direct = VectorOps.ivfTopK(emb, queries, k = 5)
       .as[(Long, Long, Long, Double)].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString + "/idx"
+    val dir = tmpDir("ivfidx") + "/idx"
     VectorOps.writeIvfIndex(VectorOps.buildIvfIndex(emb), dir)
     val loaded = VectorOps.readIvfIndex(spark, dir)
     val viaStore = VectorOps.ivfQuery(loaded, queries, k = 5)
@@ -141,7 +141,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkFixture {
     val low = emb.filter(col("vec_id") < 250)
     val high = emb.filter(col("vec_id") >= 250)
     val queries = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivfapp").toString + "/idx"
+    val dir = tmpDir("ivfapp") + "/idx"
     val built = VectorOps.buildIvfIndex(low)
     VectorOps.writeIvfIndex(built, dir)
     VectorOps.ivfAppend(spark, dir, high)
@@ -168,7 +168,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkFixture {
   test("ivf: a rebuild over an index that took appends replaces it, and " +
     "queries read the rebuilt index") {
     val emb = graft.query.Tables(spark, sf("sf0.001"), "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ivfrb").toString + "/idx"
+    val dir = tmpDir("ivfrb") + "/idx"
     VectorOps.writeIvfIndex(
       VectorOps.buildIvfIndex(emb.filter(col("vec_id") < 300)), dir)
     VectorOps.ivfAppend(spark, dir,
@@ -194,7 +194,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("signature-store ticks: dedupIncrement + TableStore compose across batches (L17 e2e)") {
     import graft.store.TableStore
-    val dir = java.nio.file.Files.createTempDirectory("sigstore").toString + "/sigs"
+    val dir = tmpDir("sigstore") + "/sigs"
     val textA = (1 to 50).map(i => s"tok$i").mkString(" ")
     val textB = (100 to 150).map(i => s"w$i").mkString(" ")
     val textC = (200 to 250).map(i => s"v$i").mkString(" ")

@@ -41,11 +41,4 @@ class BucketedSpec extends AnyFunSuite with SparkFixture {
       .limit(10).collect().toSeq
     assert(bucketed == plain)
   }
-
-  test("the build is session-scoped: second invocation reuses the tables") {
-    val t1 = Bucketed.bucketedTables(spark, dir)
-    val t2 = Bucketed.bucketedTables(spark, dir)
-    assert(t1 == t2)
-    assert(spark.catalog.tableExists(t1._1) && spark.catalog.tableExists(t1._2))
-  }
 }

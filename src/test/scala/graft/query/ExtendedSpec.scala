@@ -140,9 +140,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.functions._
     val spark2 = spark
     import spark2.implicits._
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    java.nio.file.Files.createDirectories(base)
-    val dir = java.nio.file.Files.createTempDirectory(base, "prune").toString
+    val dir = tmpDir("prune")
     val df = Seq(
       ("a", java.sql.Date.valueOf("2024-02-28")),
       ("b", java.sql.Date.valueOf("2024-02-29"))).toDF("v", "date")

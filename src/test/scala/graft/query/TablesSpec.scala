@@ -1,6 +1,5 @@
 package graft.query
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -14,11 +13,6 @@ import graft.SparkFixture
 class TablesSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val d = Files.createTempDirectory("tables_spec").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
 
   test("events.ts arrives as TimestampType from the live testdata") {
     val df = Tables(spark, sf("sf0.001"), "events")
@@ -27,7 +21,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("legacy nanos-as-long events encoding converts to the same wall clock") {
-    val dir = tmpDir()
+    val dir = tmpDir("tables_spec")
     // 2024-01-01 00:00:00 UTC in integer nanos — the shape nanosAsLong
     // delivers for parquet TIMESTAMP(NANOS)
     val nanos = 1704067200L * 1000000000L + 123456000L
@@ -42,7 +36,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("TIMESTAMP_NTZ columns normalize to session-TZ TimestampType") {
-    val dir = tmpDir()
+    val dir = tmpDir("tables_spec")
     spark.sql(
       """SELECT 1L AS event_id,
         |  TIMESTAMP_NTZ '2024-01-01 00:00:00.123456' AS ts,
@@ -59,7 +53,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("NTZ normalization refuses a non-UTC session (cast would shift the epoch)") {
-    val dir = tmpDir()
+    val dir = tmpDir("tables_spec")
     spark.sql(
       """SELECT 1L AS o_orderkey,
         |  TIMESTAMP_NTZ '2024-03-05 12:00:00' AS o_orderdate""".stripMargin)
@@ -77,7 +71,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("non-events tables also normalize NTZ time columns") {
-    val dir = tmpDir()
+    val dir = tmpDir("tables_spec")
     spark.sql(
       """SELECT 1L AS o_orderkey,
         |  TIMESTAMP_NTZ '2024-03-05 12:00:00' AS o_orderdate""".stripMargin)

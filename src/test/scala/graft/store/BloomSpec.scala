@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkFixture
@@ -9,18 +8,13 @@ import graft.SparkFixture
 class BloomSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    Files.createTempDirectory(base, "bloom").toString
-  }
 
   /** A store whose id space is SCATTERED across date partitions (id % 4
     * picks the date), so min/max covers everything and only the bloom can
     * prune.
     */
   private def scatteredStore(): String = {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("bloom") + "/t"
     val df = (0L until 4000L).map { i =>
       (i, s"p$i", java.sql.Date.valueOf(s"2024-01-0${i % 4 + 1}"))
     }.toDF("id", "payload", "date")
@@ -45,7 +39,7 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
 
   test("flat-table bloom sidecar lives INSIDE the table dir (no orphan " +
     "next to sibling tables) and prunes") {
-    val dir = tmpDir() + "/flatbloom"
+    val dir = tmpDir("bloom") + "/flatbloom"
     (0L until 400L).map { i =>
       (i, s"p$i", java.sql.Date.valueOf(s"2024-01-0${i % 4 + 1}"))
     }.toDF("id", "payload", "date")
@@ -74,7 +68,7 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("no bloom sidecar -> conservative keep-everything fallback") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("bloom") + "/t"
     val df = (0L until 100L).map(i =>
       (i, java.sql.Date.valueOf("2024-01-01"))).toDF("id", "date")
     TableStore.append(df, dir)
@@ -134,7 +128,7 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
     "table: sidecar lands inside it, not orphaned beside it") {
     // layout is decided by what currentGeneration RESOLVES, never by the
     // directory's name — the name-pattern trap this pins
-    val dir = tmpDir() + "/g5"
+    val dir = tmpDir("bloom") + "/g5"
     (0L until 400L).map { i =>
       (i, s"p$i", java.sql.Date.valueOf(s"2024-01-0${i % 4 + 1}"))
     }.toDF("id", "payload", "date")
@@ -156,7 +150,7 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
 
   test("a flat table's PRE-_bloom sidecar at the legacy sibling location " +
     "keeps being consulted until the next write rebuilds it in place") {
-    val dir = tmpDir() + "/legacy"
+    val dir = tmpDir("bloom") + "/legacy"
     (0L until 400L).map { i =>
       (i, s"p$i", java.sql.Date.valueOf(s"2024-01-0${i % 4 + 1}"))
     }.toDF("id", "payload", "date")

@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkFixture
@@ -30,11 +29,6 @@ import graft.SparkFixture
 class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    Files.createTempDirectory(base, "cw").toString
-  }
 
   private def mkBatch(day: String, ids: Range) =
     ids.map(i => (i, s"u$i", java.sql.Date.valueOf(day)))
@@ -43,7 +37,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
   private def resetHook(): Unit = TableStore.beforeCommitHook = () => ()
 
   test("two overlapping appenders both commit; both batches read back") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-01-01", 0 until 5), dir) // settle g0
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = Seq(
@@ -62,7 +56,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("an append landing during compaction is rebased into the new " +
     "generation; the swap is invisible until its _SUCCESS") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     (1 to 3).foreach(k =>
       TableStore.append(mkBatch("2024-02-01", k * 10 until k * 10 + 5), dir))
     val genBefore = TableStore.currentGenNumber(spark, dir)
@@ -91,7 +85,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("a partition rewrite during compaction is a true conflict: the " +
     "compactor aborts cleanly and a re-run converges") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-03-01", 0 until 10), dir)
     TableStore.append(mkBatch("2024-03-02", 10 until 20), dir)
     TableStore.beforeCommitHook = () => {
@@ -121,7 +115,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("a generation swap during a partition rewrite throws; the " +
     "idempotent re-run converges") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-04-01", 0 until 10), dir)
     val upd = mkBatch("2024-04-01", 0 until 3)
       .withColumn("user", lit("rewritten"))
@@ -142,7 +136,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("two overlapping SCD2 appliers both commit (optimistic retry — " +
     "the reference's Delta retries=10 loop)") {
-    val dir = tmpDir() + "/dim"
+    val dir = tmpDir("cw") + "/dim"
     Scd2.init(Seq((1L, "gold"), (2L, "silver"), (3L, "bronze"))
       .toDF("id", "tier"), dir, java.sql.Date.valueOf("2024-01-01"))
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -172,7 +166,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("two read-modify-write transactions racing one table lose neither " +
     "update (transactVersioned re-derives on CAS conflict)") {
-    val dir = tmpDir() + "/counts"
+    val dir = tmpDir("cw") + "/counts"
     TableStore.overwriteVersioned(Seq(("k", 0L)).toDF("key", "n"), dir)
     def add(delta: Long)(derived: () => Unit): Unit =
       TableStore.transactVersioned(spark, dir) {
@@ -203,7 +197,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("disjoint-date merges run in parallel: per-date claims do not " +
     "serialize them and both land") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-06-01", 0 until 10), dir)
     TableStore.append(mkBatch("2024-06-02", 10 until 20), dir)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -224,7 +218,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("same-date merges: one clean winner, one clean claim-loser, and the " +
     "retry converges — never a torn partition") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-07-01", 0 until 10), dir)
     val loserBatch = mkBatch("2024-07-01", 0 until 3)
       .withColumn("user", lit("B"))
@@ -258,7 +252,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a dead rewriter's date claim expires by age") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-08-01", 0 until 5), dir)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -277,7 +271,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
   test("claim expiry is one-deleter arbitrated: a contender that lost the " +
     "expiry marker race never deletes the claim (the check-then-delete " +
     "TOCTOU is closed)") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-08-02", 0 until 5), dir)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -316,7 +310,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("an append racing a live partition rewrite backs off at its commit " +
     "point instead of having its files silently deleted by the overwrite") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-08-03", 0 until 5), dir)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -344,7 +338,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("merge rejects a batch narrower than the table instead of " +
     "silently dropping columns from rewritten partitions") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-08-05", 0 until 5), dir)
     val narrow = Seq((1, java.sql.Date.valueOf("2024-08-05")))
       .toDF("id", "date")
@@ -359,7 +353,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
 
   test("stage recovery never resurrects a partition rewritten after the " +
     "crash; a partition whose only copy is staged IS restored") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-09-01", 0 until 6), dir)
     TableStore.append(mkBatch("2024-09-02", 6 until 12), dir)
     val f = new org.apache.hadoop.fs.Path(dir)
@@ -392,7 +386,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a stale expectedGen fails the CAS before any data is written") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     val df = Seq((1, "a")).toDF("k", "v")
     TableStore.overwriteVersioned(df, dir) // g0
     TableStore.overwriteVersioned(df, dir) // g1
@@ -408,7 +402,7 @@ class ConcurrentWriteSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a dead committer's _commit.lock expires by age") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("cw") + "/t"
     TableStore.append(mkBatch("2024-05-01", 0 until 5), dir)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -8,7 +8,7 @@ class DeleteWhereSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("delete").toString + "/t"
+    tmpDir("delete") + "/t"
 
   private def seed(dir: String): Unit =
     TableStore.append(

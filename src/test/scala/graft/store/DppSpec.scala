@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -17,9 +16,7 @@ class DppSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   test("a selective dim filter prunes fact partitions at runtime") {
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val dir = Files.createTempDirectory(base, "dpp").toString + "/t"
+    val dir = tmpDir("dpp") + "/t"
     // 20 date partitions x 50 rows
     val fact = (0 until 1000).map { i =>
       (i.toLong, s"u${i % 7}", java.sql.Date.valueOf(
@@ -30,7 +27,7 @@ class DppSpec extends AnyFunSuite with SparkFixture {
     // the dim must be a real datasource: a LocalRelation dim gets its
     // filter constant-folded away (ConvertToLocalRelation) and DPP sees
     // no selective predicate to subscribe to
-    val dimPath = Files.createTempDirectory(base, "dpp_dim").toString
+    val dimPath = tmpDir("dpp_dim")
     (0 until 20).map(dd => java.sql.Date.valueOf(
         java.time.LocalDate.of(2024, 3, 1).plusDays(dd)))
       .toDF("date").write.mode("overwrite").parquet(dimPath)

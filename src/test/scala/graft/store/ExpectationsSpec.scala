@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkFixture
@@ -27,7 +26,7 @@ class ExpectationsSpec extends AnyFunSuite with SparkFixture {
 
   test("clean rows land in the table, violators in _rejects with sorted " +
     "comma-joined reasons; counts account for every row") {
-    val dir = Files.createTempDirectory("expect").toString + "/t"
+    val dir = tmpDir("expect") + "/t"
     val (good, bad) = TableStore.appendWithExpectations(batch, dir, checks)
     assert(good == 2L && bad == 3L)
     // the table reads back ONLY the clean rows — rejects are invisible
@@ -46,7 +45,7 @@ class ExpectationsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("cross-row checks are refused loudly (they need corpus state)") {
-    val dir = Files.createTempDirectory("expect2").toString + "/t"
+    val dir = tmpDir("expect2") + "/t"
     val e = intercept[IllegalArgumentException] {
       TableStore.appendWithExpectations(batch, dir,
         Seq(Constraints.Unique(Seq("id"))))
@@ -55,7 +54,7 @@ class ExpectationsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("an all-clean batch writes no _rejects directory at all") {
-    val dir = Files.createTempDirectory("expect3").toString + "/t"
+    val dir = tmpDir("expect3") + "/t"
     val (good, bad) = TableStore.appendWithExpectations(
       batch.filter(col("id").isin(1L, 5L)), dir, checks)
     assert(good == 2L && bad == 0L)

@@ -5,9 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Inspection of a versioned table's retained generations: which `g<N>`
   * directories are committed, and the data of one of them. The store keeps
-  * the current generation plus `retainGenerations - 1` predecessors
-  * (default 2 in all); the specs read the old ones to check retention,
-  * vacuum and rollback.
+  * the current generation and the one it superseded; the specs read the
+  * old one to check retention, vacuum and rollback.
   */
 object Generations {
 

@@ -1,7 +1,6 @@
 package graft.store
 
 import java.io.File
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkFixture
@@ -13,18 +12,13 @@ import graft.SparkFixture
 class MergeSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    Files.createTempDirectory(base, "merge").toString
-  }
 
   private def mkRows(day: String, ids: Range, tag: String) =
     ids.map(i => (i.toLong, s"$tag$i", java.sql.Date.valueOf(day)))
       .toDF("id", "payload", "date")
 
   test("merge updates matched keys and inserts unmatched ones") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("merge") + "/t"
     TableStore.append(mkRows("2024-01-01", 0 until 10, "v0-"), dir)
     TableStore.append(mkRows("2024-01-02", 10 until 20, "v0-"), dir)
     // batch: update ids 3,4 on day 1; insert ids 100,101 on day 1
@@ -40,7 +34,7 @@ class MergeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("merge rewrites ONLY the partitions named by the batch") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("merge") + "/t"
     TableStore.append(mkRows("2024-01-01", 0 until 10, "v0-"), dir)
     TableStore.append(mkRows("2024-01-02", 10 until 20, "v0-"), dir)
     val dataDir = TableStore.resolveDataDir(spark, dir)
@@ -62,7 +56,7 @@ class MergeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("merge is idempotent: re-merging the same batch is a state no-op") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("merge") + "/t"
     TableStore.append(mkRows("2024-01-01", 0 until 10, "v0-"), dir)
     val batch = mkRows("2024-01-01", 3 until 5, "v1-")
       .unionByName(mkRows("2024-01-01", 100 until 102, "new-"))
@@ -76,7 +70,7 @@ class MergeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("keys are partition-local: same id on another date is an insert, not a move") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("merge") + "/t"
     TableStore.append(mkRows("2024-01-01", 0 until 5, "v0-"), dir)
     // id 3 arrives again under a DIFFERENT date: contract says this is an
     // insert into the new partition; the day-1 row stays (no cross-
@@ -87,7 +81,7 @@ class MergeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("merge validates its inputs") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("merge") + "/t"
     TableStore.append(mkRows("2024-01-01", 0 until 5, "v0-"), dir)
     val noDate = Seq((1L, "x")).toDF("id", "payload")
     intercept[IllegalArgumentException] {

@@ -19,9 +19,7 @@ import graft.ingest.GhaPipeline
 class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
 
   private def mockDir(prefix: String): String = {
-    val base = Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val d = Files.createTempDirectory(base, prefix).toString
+    val d = tmpDir(prefix)
     spark.sparkContext.hadoopConfiguration
       .set("fs.mock3.impl", classOf[NonAtomicRenameFs].getName)
     s"mock3://$d"
@@ -219,9 +217,7 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
     val store = s"$dir/store"
     val mv = s"$dir/mv"
     // landing stays on the plain local FS (a separate system in production)
-    val landingBase = Paths.get("/root/repo/target/tmp")
-    val landing = Files.createTempDirectory(landingBase, "objstore_land_")
-      .toString
+    val landing = tmpDir("objstore_land_")
     Files.write(Paths.get(s"$landing/2024-02-29-1.json"),
       commentLine("u1", 1).getBytes)
     val backfill = Instant.parse("2024-02-29T01:00:00Z")

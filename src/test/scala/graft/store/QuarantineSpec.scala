@@ -12,11 +12,6 @@ import graft.SparkFixture
 class QuarantineSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val base = Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    Files.createTempDirectory(base, "quar").toString
-  }
 
   private def build(dir: String): Unit = {
     val df = (0 until 300).map { i =>
@@ -36,7 +31,7 @@ class QuarantineSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a truncated file fails the direct read, quarantines, and the rest reads clean") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("quar") + "/t"
     build(dir)
     truncateFileOf(dir, "2024-05-02")
     // the torn file is fatal to a plain scan (no silent wrong answers)
@@ -63,7 +58,7 @@ class QuarantineSpec extends AnyFunSuite with SparkFixture {
     // while staying in the read path. Recreate that exact collision: sweep
     // a torn file, then put a NEW torn file at the same path so the next
     // sweep's rename target exists.
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("quar") + "/t"
     build(dir)
     val victim = truncateFileOf(dir, "2024-05-02")
     assert(TableStore.quarantineCorrupt(spark, dir).size === 1)
@@ -80,7 +75,7 @@ class QuarantineSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("clean store: the sweep is a no-op; sweeping twice finds nothing") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("quar") + "/t"
     build(dir)
     assert(TableStore.quarantineCorrupt(spark, dir).isEmpty)
     truncateFileOf(dir, "2024-05-01")

@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkFixture
@@ -15,11 +14,6 @@ import graft.SparkFixture
 class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    Files.createTempDirectory(base, "replace").toString
-  }
 
   private def mk(day: String, ids: Range, tag: String = "base") =
     ids.map(i => (i, tag, java.sql.Date.valueOf(day))).toDF("id", "tag", "date")
@@ -31,7 +25,7 @@ class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("replaces exactly the predicate slice; batch-less covered partition is dropped") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("replace") + "/t"
     build(dir)
     // predicate covers 01-02 and 01-03; batch repopulates only 01-02
     val batch = mk("2024-01-02", 100 until 105, "rebuilt")
@@ -47,7 +41,7 @@ class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("partitions outside the predicate keep byte-identical files") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("replace") + "/t"
     build(dir)
     def files() = TableStore.dataFiles(spark, dir)
       .filter(_.contains("date=2024-01-01")).sorted
@@ -58,7 +52,7 @@ class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a batch row violating the predicate aborts before any write") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("replace") + "/t"
     build(dir)
     val rogue = mk("2024-01-01", 999 until 1000, "rogue") // outside slice
       .unionByName(mk("2024-01-02", 100 until 101, "ok"))
@@ -73,7 +67,7 @@ class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a batch missing a table column is rejected (no silent NULL rewrite)") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("replace") + "/t"
     build(dir)
     val narrow = Seq((100, java.sql.Date.valueOf("2024-01-02")))
       .toDF("id", "date") // no `tag`
@@ -85,7 +79,7 @@ class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a batch with an extra undeclared column is rejected") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("replace") + "/t"
     build(dir)
     val wide = mk("2024-01-02", 100 until 101, "r")
       .withColumn("rogue_col", lit(1))
@@ -96,7 +90,7 @@ class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("re-running the same replace is a state-level no-op (idempotent backfill)") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("replace") + "/t"
     build(dir)
     val batch = mk("2024-01-02", 100 until 103, "r")
     TableStore.replaceWhere(spark, batch, dir, $"date" === "2024-01-02")
@@ -114,8 +108,8 @@ class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
     // never stale predicate rows beside committed replacements. Simulate
     // the exact mid-crash state (drops applied, upsert not) and show the
     // same replaceWhere call converges to the clean-run result.
-    val clean = tmpDir() + "/clean"
-    val crashed = tmpDir() + "/crashed"
+    val clean = tmpDir("replace") + "/clean"
+    val crashed = tmpDir("replace") + "/crashed"
     for (dir <- Seq(clean, crashed)) build(dir)
     val batch = mk("2024-01-02", 100 until 105, "rebuilt")
     val pred = $"date" >= "2024-01-02"
@@ -133,7 +127,7 @@ class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("NULL predicate rows are kept (SQL WHERE semantics, as deleteWhere)") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("replace") + "/t"
     val withNull = Seq((1, "a"), (2, null), (3, "b"))
       .toDF("id", "tag")
       .withColumn("date", lit(java.sql.Date.valueOf("2024-01-01")))

@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import java.sql.Date
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ class Scd2Spec extends AnyFunSuite with SparkFixture {
   private def d(s: String) = Date.valueOf(s)
 
   private def newDim(): String = {
-    val dir = Files.createTempDirectory("scd2").toString + "/dim"
+    val dir = tmpDir("scd2") + "/dim"
     Scd2.init(Seq((1L, "gold", 10.0), (2L, "silver", 20.0))
       .toDF("id", "tier", "bal"), dir, d("2024-01-01"))
     dir
@@ -48,7 +47,7 @@ class Scd2Spec extends AnyFunSuite with SparkFixture {
 
   test("apply on an EMPTY dimension inserts every batch row (no NPE on " +
     "the missing max valid_from)") {
-    val dir = Files.createTempDirectory("scd2").toString + "/dim"
+    val dir = tmpDir("scd2") + "/dim"
     Scd2.init(Seq.empty[(Long, String, Double)]
       .toDF("id", "tier", "bal"), dir, d("2024-01-01"))
     Scd2.apply(spark, dir,

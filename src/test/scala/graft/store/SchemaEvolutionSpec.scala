@@ -8,7 +8,7 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("evolve").toString + "/t"
+    tmpDir("evolve") + "/t"
 
   test("widen-on-append: new column surfaces, historical rows read NULL") {
     val dir = tmp()

@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkFixture
@@ -14,7 +13,7 @@ class StorageAuditSpec extends AnyFunSuite with SparkFixture {
 
   test("per-column value counts equal row count (nulls counted); totals " +
     "sum across files; compressed bytes bounded by the file on disk") {
-    val dir = Files.createTempDirectory("saudit").toString + "/t"
+    val dir = tmpDir("saudit") + "/t"
     val df = (1L to 1000L).map(i =>
       (i, if (i % 3 == 0) None else Some(s"v$i"), i * 0.5))
       .toDF("id", "s", "v")

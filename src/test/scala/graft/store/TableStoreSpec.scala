@@ -8,18 +8,13 @@ import graft.SparkFixture
 class TableStoreSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    Files.createTempDirectory(base, "store").toString
-  }
 
   private def mkBatch(day: String, ids: Range) =
     ids.map(i => (i, s"u$i", java.sql.Date.valueOf(day)))
       .toDF("id", "user", "date")
 
   test("append accumulates batches under date partitions (S6)") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("store") + "/t"
     TableStore.append(mkBatch("2024-01-01", 0 until 10), dir)
     TableStore.append(mkBatch("2024-01-02", 10 until 30), dir)
     val back = TableStore.read(spark, dir)
@@ -32,7 +27,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     // for the store's layout — pin it: the filter must land in the scan's
     // PartitionFilters (pruning at file listing), not as a post-scan
     // Filter over all partitions.
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("store") + "/t"
     TableStore.append(mkBatch("2024-01-01", 0 until 10), dir)
     TableStore.append(mkBatch("2024-01-02", 10 until 30), dir)
     val q = TableStore.read(spark, dir)
@@ -44,7 +39,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("upsertPartitions is idempotent per partition (T4 exactly-once)") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("store") + "/t"
     TableStore.append(mkBatch("2024-01-01", 0 until 10), dir)
     // re-run of the same hour replaces, not duplicates
     TableStore.upsertPartitions(spark, mkBatch("2024-01-01", 0 until 10), dir)
@@ -57,7 +52,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compact collapses to one file per partition and preserves rows (S8/S9)") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("store") + "/t"
     // 4 small appends x 2 dates = many files
     (1 to 4).foreach { k =>
       TableStore.append(mkBatch("2024-01-01", k * 100 until k * 100 + 5), dir)
@@ -73,7 +68,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compactDates bin-packs only the touched partitions; untouched files never move") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("store") + "/t"
     (1 to 4).foreach { k =>
       TableStore.append(mkBatch("2024-01-01", k * 100 until k * 100 + 5), dir)
       TableStore.append(mkBatch("2024-01-02", k * 100 until k * 100 + 5), dir)
@@ -101,7 +96,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compact bin-packs to the target file size: hot partitions split, small ones stay single") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("store") + "/t"
     TableStore.append(mkBatch("2024-01-01", 0 until 2000), dir)
     TableStore.append(mkBatch("2024-01-02", 0 until 10), dir)
     val hotBytes = TableStore.dataFiles(spark, dir)
@@ -126,7 +121,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compaction swap keeps the superseded generation alive for in-flight readers") {
-    val dir = tmpDir() + "/t"
+    val dir = tmpDir("store") + "/t"
     TableStore.append(mkBatch("2024-01-01", 0 until 10), dir)
     // a reader resolves its file list BEFORE the swap...
     val preSwapFiles = TableStore.dataFiles(spark, dir)
@@ -147,7 +142,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("overwrite replaces result tables (S7)") {
-    val dir = tmpDir() + "/r"
+    val dir = tmpDir("store") + "/r"
     TableStore.overwrite(Seq((1, "a")).toDF("k", "v"), dir)
     TableStore.overwrite(Seq((2, "b"), (3, "c")).toDF("k", "v"), dir)
     val back = TableStore.read(spark, dir).orderBy("k")
@@ -156,7 +151,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("time travel: the superseded generation stays queryable until the next rewrite") {
-    val dir = tmpDir() + "/tt"
+    val dir = tmpDir("store") + "/tt"
     TableStore.overwriteVersioned(Seq((1, "v1")).toDF("k", "v"), dir) // g0
     TableStore.overwriteVersioned(Seq((2, "v2")).toDF("k", "v"), dir) // g1
     assert(Generations.list(spark, dir) === Seq(0, 1))
@@ -172,29 +167,6 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("vacuumed"))
   }
 
-  test("time travel depth: retainGenerations keeps a deeper history window") {
-    val dir = tmpDir() + "/ttd"
-    def ow(v: String) = TableStore.overwriteVersioned(
-      Seq((1, v)).toDF("k", "v"), dir, retainGenerations = 3)
-    ow("v1"); ow("v2"); ow("v3") // g0, g1, g2 — all inside the window
-    assert(Generations.list(spark, dir) === Seq(0, 1, 2))
-    assert(Generations.read(spark, dir, 0).head().getString(1) === "v1")
-    assert(Generations.read(spark, dir, 1).head().getString(1) === "v2")
-    assert(TableStore.read(spark, dir).head().getString(1) === "v3")
-    ow("v4") // g3 vacuums g0 only: window slides, depth holds
-    assert(Generations.list(spark, dir) === Seq(1, 2, 3))
-    assert(Generations.read(spark, dir, 1).head().getString(1) === "v2")
-    val e = intercept[IllegalArgumentException] {
-      Generations.read(spark, dir, 0)
-    }
-    assert(e.getMessage.contains("vacuumed"))
-    // retention 1 = no history: the swap itself remains atomic, but the
-    // superseded generation goes immediately
-    TableStore.overwriteVersioned(Seq((1, "v5")).toDF("k", "v"), dir,
-      retainGenerations = 1)
-    assert(Generations.list(spark, dir) === Seq(4))
-  }
-
   test("schema evolution: a declared read schema bridges old and new file layouts") {
     // a long-lived curated table accumulates files written under different
     // code versions; the GhaSchemas-style DECLARED schema (not inference,
@@ -202,7 +174,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     // files predating a column yield nulls, survive compaction, and never
     // force a schema-merge scan over every footer at 100 TB
     import org.apache.spark.sql.types._
-    val dir = tmpDir() + "/evo"
+    val dir = tmpDir("store") + "/evo"
     TableStore.append(Seq((1L, "2024-01-01"))
       .toDF("id", "date"), dir) // v1 layout: no score column
     TableStore.append(Seq((2L, 0.7, "2024-01-02"))
@@ -221,7 +193,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("concurrent generation writers: the second claimant loses CLEANLY") {
-    val dir = tmpDir() + "/race"
+    val dir = tmpDir("store") + "/race"
     (1 to 3).foreach(k =>
       TableStore.append(mkBatch("2024-01-01", k * 10 until k * 10 + 5), dir))
     // writer A holds the claim on the next generation (g0: never compacted)
@@ -246,7 +218,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("stale claims expire: a crashed writer blocks only until the timeout") {
-    val dir = tmpDir() + "/stale"
+    val dir = tmpDir("store") + "/stale"
     TableStore.append(mkBatch("2024-01-01", 0 until 10), dir)
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -259,7 +231,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compact writes a _stats sidecar and readPruned plans against it") {
-    val dir = tmpDir() + "/sc"
+    val dir = tmpDir("store") + "/sc"
     (1 to 4).foreach(k =>
       TableStore.append(
         (k * 100 until k * 100 + 20)
@@ -284,7 +256,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compactDates keeps the sidecar fresh for the touched partitions") {
-    val dir = tmpDir() + "/scd"
+    val dir = tmpDir("store") + "/scd"
     def batch(day: String, ids: Range) =
       ids.map(i => (i.toLong, java.sql.Date.valueOf(day))).toDF("id", "date")
     TableStore.append(batch("2024-01-01", 0 until 50), dir)
@@ -319,7 +291,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     for ((name, df, want) <- Seq(("empty", empty, Set.empty[String]),
         ("null", withNull, Set("2024-01-01", null)),
         ("escaped", escaped, Set("a/b:c%d", "plain")))) {
-      val got = TableStore.append(df, tmpDir() + "/t")
+      val got = TableStore.append(df, tmpDir("store") + "/t")
       assert(got.size === got.distinct.size, name)
       assert(got.toSet === collected(df), name)
       assert(got.toSet === want, name)
@@ -328,7 +300,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
 
   test("a crash between the sidecar refresh's write and its swap leaves " +
     "readPruned on footers; vacuum drops the orphaned sibling") {
-    val dir = tmpDir() + "/swap"
+    val dir = tmpDir("store") + "/swap"
     def batch(day: String, ids: Range) =
       ids.map(i => (i.toLong, java.sql.Date.valueOf(day))).toDF("id", "date")
     TableStore.append(batch("2024-01-01", 0 until 50), dir)
@@ -364,7 +336,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compactDates publish is crash-recoverable from the retained stage") {
-    val dir = tmpDir() + "/crash"
+    val dir = tmpDir("store") + "/crash"
     def batch(day: String, ids: Range) =
       ids.map(i => (i.toLong, java.sql.Date.valueOf(day))).toDF("id", "date")
     TableStore.append(batch("2024-01-01", 0 until 40), dir)
@@ -393,7 +365,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
 
   test("first compaction of a legacy FLAT table does not swallow its own " +
     "stats sidecar as rebased data") {
-    val dir = tmpDir() + "/flat"
+    val dir = tmpDir("store") + "/flat"
     // legacy layout: date= partitions at the table root, no generation
     mkBatch("2024-03-01", 0 until 20)
       .write.mode("overwrite").partitionBy("date").parquet(dir)
@@ -412,7 +384,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
 
   test("appendEvolving on a legacy FLAT table keeps the pre-existing " +
     "columns in the declared schema") {
-    val dir = tmpDir() + "/flatevolve"
+    val dir = tmpDir("store") + "/flatevolve"
     mkBatch("2024-03-02", 0 until 5)
       .write.mode("overwrite").partitionBy("date").parquet(dir)
     val f = new org.apache.hadoop.fs.Path(dir)
@@ -430,7 +402,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("an uncommitted stage (no _SUCCESS) is discarded, source untouched") {
-    val dir = tmpDir() + "/halfstage"
+    val dir = tmpDir("store") + "/halfstage"
     def batch(day: String, ids: Range) =
       ids.map(i => (i.toLong, java.sql.Date.valueOf(day))).toDF("id", "date")
     TableStore.append(batch("2024-01-01", 0 until 30), dir)

@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,9 +9,7 @@ class ZOrderSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   private def tmpStore(): (java.nio.file.Path, String) = {
-    val base = java.nio.file.Paths.get("/root/repo/target/tmp")
-    Files.createDirectories(base)
-    val root = Files.createTempDirectory(base, "graft_zspec")
+    val root = java.nio.file.Paths.get(tmpDir("graft_zspec"))
     (root, root.toString + "/t")
   }
 

@@ -65,7 +65,7 @@ class IncrementsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("watermark ignores the null-date partition (__HIVE_DEFAULT_PARTITION__)") {
-    val dir = "/root/repo/target/tmp/wm_hive_" + System.nanoTime()
+    val dir = tmpDir("wm_hive_") + "/t"
     val df = Seq(("2024-02-29 02:30:00", "2024-02-29"))
       .toDF("s", "d")
       .select(to_timestamp($"s").as("created_at"), to_date($"d").as("date"))
@@ -82,7 +82,7 @@ class IncrementsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("watermark scans ONLY the latest date partition (metadata-cheap at scale)") {
-    val dir = "/root/repo/target/tmp/wm_part_" + System.nanoTime()
+    val dir = tmpDir("wm_part_") + "/t"
     val df = Seq(
       ("2024-02-28 23:59:00", "2024-02-28"),
       ("2024-02-29 01:00:00", "2024-02-29"),
@@ -99,9 +99,9 @@ class IncrementsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("watermark reads max(created_at); None for missing table (S5)") {
-    assert(Increments.watermark(spark, "/root/repo/target/tmp/nope_missing")
+    assert(Increments.watermark(spark, tmpDir("wm_missing_") + "/nope")
       === None)
-    val dir = "/root/repo/target/tmp/wm_" + System.nanoTime()
+    val dir = tmpDir("wm_") + "/t"
     Seq("2024-02-29 01:00:00", "2024-02-29 02:30:00")
       .toDF("s").select(to_timestamp($"s").as("created_at"))
       .write.parquet(dir)

@@ -6,7 +6,11 @@
 #      tools/jrun.sh graft.Probe "$SF" jobs q_pagerank --replicate 3   (README: Dev probes)
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# temp files (the storage keys' stores among them) go under target/tmp, as
+# in build.sbt's forked JVMs
+mkdir -p target/tmp
 exec java -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -Djava.io.tmpdir="$PWD/target/tmp" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
