@@ -89,8 +89,8 @@ object Retrieval {
       .agg(Tables.cnt.as("tf"), first(col("dl")).as("dl"))
     // df over matched postings IS the corpus-wide df for those terms
     val dfs = tf.groupBy("term").agg(Tables.cnt.as("df"))
-    // corpus length stats: one scalar row, broadcast-crossed (PlanLint's
-    // provably-1-row BNLJ shape)
+    // corpus length stats: one scalar row, broadcast-crossed (the registry
+    // plan lint's provably-1-row BNLJ shape)
     val stats = base.agg(Tables.cnt.as("n"),
       avg(size(col("ws"))).as("avgdl"))
     val idf = log(lit(1.0) +
@@ -182,7 +182,7 @@ object Retrieval {
     // count IS its corpus-wide df — the ad-hoc form's identity); no
     // stored sidecar
     val dfs = tf.groupBy("th").agg(Tables.cnt.as("df"))
-    // the global Aggregate is PROVABLY single-row (the PlanLint shape)
+    // the global Aggregate is PROVABLY single-row (the plan lint's shape)
     val stats = spark.read.parquet(s"$dir/stats")
       .agg(sum(col("n")).as("n"),
         (sum(col("dl_sum")) / sum(col("n"))).as("avgdl"))

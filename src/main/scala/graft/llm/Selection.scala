@@ -16,7 +16,7 @@ import graft.query.Tables.cnt
   *  - [[budgetSelect]] is the "fill a token budget with the best docs"
   *    primitive. The semantics need a GLOBAL cumulative sum under a total
   *    order — the naive form is an unpartitioned window (one task sorts
-  *    the corpus; PlanLint bans it). This is the classic two-phase scan
+  *    the corpus; the plan lint bans it). This is the classic two-phase scan
   *    instead: range-partition on the order key, per-partition token
   *    totals (a partitions-sized collect), driver prefix offsets, then a
   *    per-partition window that runs ONLY on partitions whose offset is

@@ -189,8 +189,8 @@ object Pipelines {
 
     // ---- S8b: Bloom-sidecar equality file skipping ------------------------------
     // The store is z-laid on (user_id, value), so event_id SCATTERS across
-    // files — per-file [min,max] on event_id straddles every probe and the
-    // stats sidecar can prune nothing; the 8 KiB-per-file Bloom sidecar
+    // files — per-file [min,max] on event_id straddles every probe and
+    // footer min/max can prune nothing; the 8 KiB-per-file Bloom sidecar
     // answers "can this file hold id v?" and drops the rest (skip evidence
     // pinned in BloomSpec). The query is the point-lookup read: probe
     // the sidecar, read the surviving files, row-filter. Oracle = the

@@ -9,25 +9,26 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §2.1) — the Delta/Iceberg bloom-index analog for the
   * generation store.
   *
-  * The `_stats` min/max sidecar ([[TableStore.readPruned]]) proves absence
+  * Footer min/max skipping ([[TableStore.readPruned]]) proves absence
   * only for RANGE predicates over clustered layouts; a point lookup on a
   * high-cardinality UNCLUSTERED column ("fetch these 3 document ids out of
   * 100 TB") finds every file's [min,max] straddling the probe and prunes
   * nothing. A per-file Bloom filter answers "can this file contain value
   * v?" probabilistically-no/definitely-maybe: false positives only cost
   * extra files read, never correctness — the same conservative contract as
-  * the stats sidecar.
+  * min/max skipping.
   *
   * Layout: one row per (file, col) with a fixed 8 KiB bitset
-  * (`bloom_g<N>` sibling of the generation dir, same hidden-from-readers
-  * reasoning as `stats_g<N>`). Build is one distributed scan of the
-  * indexed columns — per-file bitsets compose as an associative/
-  * commutative OR `Aggregator`, so map-side partials apply and nothing
-  * driver-sized materializes. The probe path reads ONLY the sidecar: probe
-  * positions are derived driver-side (same `XXH64` kernel the build uses)
-  * and compiled into bit-test column expressions, so the keep/drop verdict
-  * computes inside the sidecar scan and only the dropped-file list reaches
-  * the driver — O(files) strings, never O(files x 8 KiB) bitsets.
+  * (`bloom_g<N>` sibling of the generation dir: readers resolve only
+  * `g<N>`, so a sibling is invisible to them). Build is one distributed
+  * scan of the indexed columns — per-file bitsets compose as an
+  * associative/commutative OR `Aggregator`, so map-side partials apply
+  * and nothing driver-sized materializes. The probe path reads ONLY the
+  * sidecar: probe positions are derived driver-side (same `XXH64` kernel
+  * the build uses) and compiled into bit-test column expressions, so the
+  * keep/drop verdict computes inside the sidecar scan and only the
+  * dropped-file list reaches the driver — O(files) strings, never
+  * O(files x 8 KiB) bitsets.
   *
   * 8 KiB x 5 probes holds ~6k distinct values/file at <1% false-positive —
   * sized for compacted files carrying high-cardinality ids; a hotter
@@ -121,8 +122,8 @@ object BloomSkip {
   /** Build (or rebuild) the Bloom sidecar for `cols` (long-typed id
     * columns) over the CURRENT generation's files. One distributed scan
     * per indexed column; file paths stored relative to the generation dir
-    * (the stats-sidecar convention — the sidecar survives a directory
-    * move and swaps/vacuums with its generation).
+    * (the sidecar survives a directory move and swaps/vacuums with its
+    * generation).
     */
   def write(spark: SparkSession, dir: String, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "bloom sidecar needs >=1 column")

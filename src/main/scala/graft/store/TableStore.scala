@@ -1002,119 +1002,12 @@ object TableStore {
   final case class ColRange(name: String, lo: Double, hi: Double)
 
   /** A pruned read plus the skipping evidence for observability/tests.
-    * `statsSource` records where the min/max came from: "sidecar" (the
-    * `_stats` table written at compact time) or "footers" (the per-query
-    * distributed footer pass — the fallback for never-compacted data).
+    * `statsSource` records where the per-file evidence came from:
+    * "footers" ([[readPruned]]'s footer pass) or "bloom"
+    * ([[BloomSkip.readPrunedEq]]).
     */
   final case class PrunedRead(df: DataFrame, filesKept: Int, filesTotal: Int,
       statsSource: String = "footers")
-
-  /** Sidecar location: a SIBLING of the generation dir (`stats_g<N>` next
-    * to `g<N>`) — Spark's file index treats `_`/`.`-prefixed paths as
-    * hidden and refuses to read them back, and anything INSIDE the
-    * generation would pollute its partition discovery. The table root is
-    * never itself the target of a data read once generations exist, so a
-    * sibling is invisible to readers and swaps/vacuums with its
-    * generation. Legacy flat layouts have no sidecar (guarded by the
-    * GenName check at use sites).
-    */
-  private def statsPath(dataDir: String): Path = {
-    val p = new Path(dataDir)
-    new Path(p.getParent, s"stats_${p.getName}")
-  }
-
-  private def isGenerationDir(dataDir: String): Boolean =
-    GenName.matches(new Path(dataDir).getName)
-
-  /** Write the `_stats` sidecar for every data file under `dataDir`: one
-    * row per (file, numeric column) with its min/max — the Delta
-    * add-action-stats analog (`preprocess.py:181-186`), computed ONCE at
-    * compact time from the footers just written, so [[readPruned]] plans
-    * against a single tiny parquet instead of re-reading O(files) footers
-    * on every query. Paths are stored RELATIVE to the generation dir (the
-    * sidecar survives a directory move). Visibility follows the sidecar's
-    * own `_SUCCESS`: readers seeing a half-written sidecar fall back to
-    * footers.
-    */
-  private def writeStatsSidecar(spark: SparkSession, dataDir: String): Unit = {
-    import spark.implicits._
-    val f = fs(spark, dataDir)
-    val qualBase = f.makeQualified(new Path(dataDir)).toString
-    val files = listParquet(spark, dataDir)
-    // every column that can carry numeric footer stats — cheap to probe
-    // from one footer; an empty table simply writes an empty sidecar.
-    // The stats rows flow executor-side from footer read to sidecar write
-    // (footerStatsDf) — no O(files) driver materialization at any scale.
-    val rows =
-      if (files.isEmpty)
-        Seq.empty[(String, String, Double, Double)]
-          .toDF("file", "col", "mn", "mx")
-      else footerStatsDf(spark, files, qualBase)
-    rows
-      .coalesce(1).write.mode("overwrite").parquet(statsPath(dataDir).toString)
-  }
-
-  /** Refresh the sidecar rows for `dates` only (after a [[compactDates]]
-    * partition rewrite): keep other files' rows, re-derive the touched
-    * partitions' rows from their new footers — O(touched) footer reads,
-    * never O(table).
-    *
-    * Swap protocol: retract the live sidecar's `_SUCCESS` first (readers
-    * fall back to footers from here on), write the union to the sibling
-    * `stats_g<N>.swap`, then delete the live dir and rename the sibling
-    * over it. A crash anywhere before the rename leaves readers on
-    * footers, never on a torn or stale sidecar; the next refresh
-    * overwrites the leftover sibling, and [[vacuum]] drops one left behind
-    * by a superseded generation.
-    */
-  private def updateStatsSidecar(spark: SparkSession, dataDir: String,
-      dates: Seq[String]): Unit = {
-    // empty `dates` = nothing in the generation changed (e.g. recoverStage
-    // re-publishing a stage whose every rename already landed) — the
-    // existing sidecar is already correct, and the filter below would
-    // `reduce` an empty set
-    if (dates.isEmpty) return
-    import spark.implicits._
-    val f = fs(spark, dataDir)
-    val sp = statsPath(dataDir)
-    val swap = new Path(sp.getParent, s"${sp.getName}.swap")
-    val live = new Path(sp, "_SUCCESS")
-    val qualBase = f.makeQualified(new Path(dataDir)).toString
-    val touched = dates.map(d => s"date=$d/").toSet
-    import org.apache.spark.sql.functions.{col => c}
-    def noRows = Seq.empty[(String, String, Double, Double)]
-      .toDF("file", "col", "mn", "mx")
-    // kept rows stay DISTRIBUTED: the sidecar is O(files x cols) — at 10^6
-    // files that's a driver-memory hazard as a collect. They are read with
-    // the sidecar's declared schema (no inference job) and written to the
-    // sibling, so the read never races an overwrite of its own path.
-    val existing: DataFrame =
-      if (isGenerationDir(dataDir) && f.exists(live)) {
-        f.delete(live, false)
-        spark.read.schema(statsSchema).parquet(sp.toString)
-          .filter(!touched.map(p => c("file").startsWith(p))
-            .reduce(_ || _))
-      } else noRows
-    val touchedFiles = dates
-      .flatMap(d => listParquet(spark, s"$dataDir/date=$d"))
-    val fresh =
-      if (touchedFiles.isEmpty) noRows
-      else footerStatsDf(spark, touchedFiles, qualBase)
-    existing.unionByName(fresh)
-      .coalesce(1).write.mode("overwrite").parquet(swap.toString)
-    beforeSidecarSwapHook()
-    f.delete(sp, true)
-    require(f.rename(swap, sp), s"stats sidecar swap failed: $swap -> $sp")
-  }
-
-  /** Test hook: runs between the sidecar refresh's sibling write and its
-    * swap into place. Production no-op.
-    */
-  private[store] var beforeSidecarSwapHook: () => Unit = () => ()
-
-  /** The sidecar's own layout: one row per (data file, numeric column). */
-  private val statsSchema = new StructType().add("file", "string")
-    .add("col", "string").add("mn", "double").add("mx", "double")
 
   /** File-level data skipping from parquet footer stats — the engine-side
     * half of Delta data skipping (Delta reads min/max from its tx log; a
@@ -1133,32 +1026,7 @@ object TableStore {
       schema: Option[StructType] = None): PrunedRead = {
     val dataDir = resolveDataDir(spark, dir)
     val files = listParquet(spark, dataDir)
-    val f = fs(spark, dataDir)
-    val sp = statsPath(dataDir)
-    val (kept, statsSource) =
-      if (isGenerationDir(dataDir) && f.exists(new Path(sp, "_SUCCESS")))
-        try {
-          // PLAN AGAINST THE SIDECAR: one tiny parquet read; the only
-          // driver-resident state is the DROPPED-file list (and the kept
-          // list the read plan needs anyway) — never a per-file stats map,
-          // and no footer is opened on the query path.
-          import org.apache.spark.sql.functions.{col => c, lit}
-          // explicit schema: the sidecar layout is ours, so the read skips
-          // the footer-inference job — one less job on every pruned query
-          val st = spark.read.schema(statsSchema).parquet(sp.toString)
-          val dropCond = ranges.map(r =>
-            c("col") === r.name && (c("mx") < r.lo || c("mn") > r.hi))
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val dropped = st.filter(dropCond).select("file").distinct()
-            .collect().iterator.map(row =>
-              f.makeQualified(new Path(dataDir, row.getString(0))).toString)
-            .toSet
-          (files.filterNot(dropped), "sidecar")
-        } catch { case scala.util.control.NonFatal(_) =>
-          // sidecar being rewritten under us — fall back to footers
-          (keptByFooters(spark, files, ranges), "footers")
-        }
-      else (keptByFooters(spark, files, ranges), "footers")
+    val kept = keptByFooters(spark, files, ranges)
     val reader = schema.orElse(declaredSchema(spark, dir))
       .fold(spark.read)(s => spark.read.schema(s))
     val df =
@@ -1167,10 +1035,10 @@ object TableStore {
         reader.option("basePath", dataDir).parquet(files.head)
           .where(org.apache.spark.sql.functions.lit(false))
       else reader.option("basePath", dataDir).parquet(kept: _*)
-    PrunedRead(df, kept.size, files.size, statsSource)
+    PrunedRead(df, kept.size, files.size)
   }
 
-  /** The no-sidecar fallback: distributed footer pass over every file. */
+  /** The files whose footer ranges overlap every one of `ranges`. */
   private def keptByFooters(spark: SparkSession, files: Seq[String],
       ranges: Seq[ColRange]): Seq[String] = {
     val stats = footerStats(spark, files, ranges.map(_.name))
@@ -1185,44 +1053,55 @@ object TableStore {
     }
   }
 
-  /** Per-file `col → (min, max)` over the footers of `files`, read in
-    * parallel tasks (a 100 TB table's stats pass is O(files) footer reads
-    * spread over the cluster — the same stats Delta materializes in its
-    * log; [[writeStatsSidecar]] materializes them ONCE at compact time and
-    * this pass remains only for never-compacted data). `allCols = true`
-    * records every column with usable stats (the sidecar build).
+  /** Per-file `col → (min, max)` of `cols` over the footers of `files`,
+    * read in parallel tasks (a 100 TB table's stats pass is O(files) footer
+    * reads spread over the cluster — the same stats Delta materializes in
+    * its log).
     */
   private def footerStats(spark: SparkSession, files: Seq[String],
-      cols: Seq[String] = Nil, allCols: Boolean = false)
-      : Map[String, Map[String, (Double, Double)]] =
-    if (files.isEmpty || (cols.isEmpty && !allCols))
-      Map.empty
-    else footerStatsRdd(spark, files, cols, allCols).collect().toMap
-
-  /** [[footerStats]] as (file, col, mn, mx) ROWS that never land on the
-    * driver — the sidecar build path ([[writeStatsSidecar]] /
-    * [[updateStatsSidecar]]): at 10^5–10^6 files the stats are executor
-    * rows flowing straight into the sidecar write. The collected-map form
-    * above remains only for [[keptByFooters]], the per-query fallback for
-    * never-compacted data.
-    */
-  private def footerStatsDf(spark: SparkSession, files: Seq[String],
-      relativeTo: String): DataFrame = {
-    import spark.implicits._
-    val base = relativeTo
-    // qualify each path against the same FS as `relativeTo` so stripPrefix
-    // always matches — an unqualified caller path would otherwise store an
-    // absolute path in the sidecar's `file` column, which no date= prefix
-    // or range filter would ever match (silent stale-row accumulation)
-    val f = fs(spark, relativeTo)
-    val qualified = files.map(p => f.makeQualified(new Path(p)).toString)
-    footerStatsRdd(spark, qualified, Nil, allCols = true)
-      .flatMap { case (p, m) =>
-        val rel = p.stripPrefix(base).stripPrefix("/")
-        m.iterator.map { case (c, (mn, mx)) => (rel, c, mn, mx) }
-      }
-      .toDF("file", "col", "mn", "mx")
-  }
+      cols: Seq[String]): Map[String, Map[String, (Double, Double)]] =
+    if (files.isEmpty || cols.isEmpty) Map.empty
+    else {
+      val colSet = cols.toSet
+      // the SESSION's Hadoop conf must reach the tasks (S3A credentials /
+      // endpoints land there via CloudStorage.configure; a bare
+      // `new Configuration()` would see none of it). Configuration itself
+      // isn't serializable — ship the entries and rebuild per task.
+      import scala.jdk.CollectionConverters._
+      val confEntries = spark.sparkContext.hadoopConfiguration.iterator()
+        .asScala.map(e => (e.getKey, e.getValue)).toArray
+      spark.sparkContext
+        .parallelize(files, math.max(1, math.min(files.size, 64)))
+        .map { p =>
+          import scala.jdk.CollectionConverters._
+          val conf = new org.apache.hadoop.conf.Configuration()
+          confEntries.foreach { case (k, v) => conf.set(k, v) }
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromPath(new Path(p), conf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try {
+            val m = scala.collection.mutable.Map[String, (Double, Double)]()
+            val keep = (Double.NegativeInfinity, Double.PositiveInfinity)
+            for (b <- r.getFooter.getBlocks.asScala;
+                 c <- b.getColumns.asScala) {
+              val name = c.getPath.toDotString
+              if (colSet.contains(name)) {
+                val st = c.getStatistics
+                val range: Option[(Double, Double)] =
+                  if (st == null || st.isEmpty) Some(keep) // no stats → keep file
+                  else if (!st.hasNonNullValue) None // all-null block: no row matches
+                  else numericRange(st).orElse(Some(keep)) // non-numeric → keep
+                range.foreach { case (mn, mx) =>
+                  m(name) = m.get(name).fold((mn, mx)) { t =>
+                    (math.min(t._1, mn), math.max(t._2, mx))
+                  }
+                }
+              }
+            }
+            (p, m.toMap)
+          } finally r.close()
+        }.collect().toMap
+    }
 
   /** S21: corrupt-file quarantine — the anti-entropy sweep for a store
     * whose object layer can hand back truncated or garbage objects (the
@@ -1276,50 +1155,6 @@ object TableStore {
     bad
   }
 
-  private def footerStatsRdd(spark: SparkSession, files: Seq[String],
-      cols: Seq[String], allCols: Boolean)
-      : org.apache.spark.rdd.RDD[(String, Map[String, (Double, Double)])] = {
-    val colSet = cols.toSet
-    // the SESSION's Hadoop conf must reach the tasks (S3A credentials /
-    // endpoints land there via CloudStorage.configure; a bare
-    // `new Configuration()` would see none of it). Configuration itself
-    // isn't serializable — ship the entries and rebuild per task.
-    import scala.jdk.CollectionConverters._
-    val confEntries = spark.sparkContext.hadoopConfiguration.iterator()
-      .asScala.map(e => (e.getKey, e.getValue)).toArray
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 64)))
-      .map { p =>
-        import scala.jdk.CollectionConverters._
-        val conf = new org.apache.hadoop.conf.Configuration()
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(p), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val m = scala.collection.mutable.Map[String, (Double, Double)]()
-          val keep = (Double.NegativeInfinity, Double.PositiveInfinity)
-          for (b <- r.getFooter.getBlocks.asScala;
-               c <- b.getColumns.asScala) {
-            val name = c.getPath.toDotString
-            if (allCols || colSet.contains(name)) {
-              val st = c.getStatistics
-              val range: Option[(Double, Double)] =
-                if (st == null || st.isEmpty) Some(keep) // no stats → keep file
-                else if (!st.hasNonNullValue) None // all-null block: no row matches
-                else numericRange(st).orElse(Some(keep)) // non-numeric → keep
-              range.foreach { case (mn, mx) =>
-                m(name) = m.get(name).fold((mn, mx)) { t =>
-                  (math.min(t._1, mn), math.max(t._2, mx))
-                }
-              }
-            }
-          }
-          (p, m.toMap)
-        } finally r.close()
-      }
-  }
-
   private def numericRange(
       st: org.apache.parquet.column.statistics.Statistics[_])
       : Option[(Double, Double)] = st match {
@@ -1338,9 +1173,8 @@ object TableStore {
     listParquetStatus(spark, dir).map(_._1)
 
   /** Recursive (path, bytes) of every parquet DATA file under `dir` —
-    * files inside hidden (`_`/`.`-prefixed) subdirs such as the `_stats`
-    * sidecar are metadata, not data, exactly as Spark's own file index
-    * treats them.
+    * files inside hidden (`_`/`.`-prefixed) subdirs such as `_quarantine`
+    * are not data, exactly as Spark's own file index treats them.
     */
   private def listParquetStatus(spark: SparkSession, dir: String)
       : Seq[(String, Long)] = {
@@ -1431,10 +1265,10 @@ object TableStore {
     // For a legacy FLAT root the recursive listing must ignore generation
     // dirs (our own in-progress g<N> would otherwise read as source data
     // at re-list time) AND the metadata sidecars that live at the table
-    // root without an underscore prefix (stats_g<N> / bloom_g<N>): our own
-    // writeStatsSidecar lands dir/stats_g0 BEFORE the locked re-list, and
-    // without this filter its parquet read as a "concurrent append" and
-    // was rebase-copied INTO the new generation as foreign-schema data.
+    // root without an underscore prefix: bloom_g<N> (BloomSkip), and the
+    // stats_g<N> min/max sidecars earlier builds wrote. Unfiltered, their
+    // parquet reads as a "concurrent append" and is rebase-copied INTO the
+    // new generation as foreign-schema data.
     def listSrc(): Seq[(String, Long)] = {
       def sidecar(first: String) =
         first.startsWith("stats_") || first.startsWith("bloom_")
@@ -1491,9 +1325,6 @@ object TableStore {
       .option("partitionOverwriteMode", "static")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(tgt)
-    // sidecar from the staged output only; files rebased below simply have
-    // no stats rows, and pruning keeps stats-less files conservatively
-    writeStatsSidecar(spark, tgt)
     beforeCommitHook()
     withCommitLock(f, dir, staleLockMs) {
       val after = listSrc()
@@ -1634,7 +1465,7 @@ object TableStore {
       }
     withDateClaims(f, dir, (dates.map(String.valueOf) ++ stagedDates).distinct,
       30L * 60 * 1000) {
-    recoverStage(spark, f, stage, dataDir)
+    recoverStage(f, stage, dataDir)
     val partDirs = dates.distinct
       .map(d => new Path(dataDir, s"date=$d"))
       .filter(f.exists(_)).map(_.toString)
@@ -1660,19 +1491,19 @@ object TableStore {
     binPack(df, bucketsFor)
       .write.mode("overwrite").partitionBy("date")
       .option("partitionOverwriteMode", "static").parquet(stage.toString)
-    publishStage(spark, f, stage, dataDir)
+    publishStage(f, stage, dataDir)
     val after = partDirs.map(p => listParquetStatus(spark, p).size.toLong).sum
     (before, after)
     }
   }
 
   /** Swap every staged `date=` dir into the generation via rename, keep
-    * the generation's visibility marker, refresh the sidecar for the
-    * touched dates, and only then drop the stage. Idempotent: each
-    * partition is either still in stage (publish it) or already renamed
-    * in (done) — safe to re-run after a crash at any point.
+    * the generation's visibility marker, and only then drop the stage.
+    * Idempotent: each partition is either still in stage (publish it) or
+    * already renamed in (done) — safe to re-run after a crash at any
+    * point.
     */
-  private def publishStage(spark: SparkSession, f: FileSystem, stage: Path,
+  private def publishStage(f: FileSystem, stage: Path,
       dataDir: String): Unit = {
     val staged = f.listStatus(stage)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
@@ -1686,9 +1517,6 @@ object TableStore {
     // generation's visibility marker must survive
     val marker = new Path(dataDir, "_SUCCESS")
     if (!f.exists(marker)) f.create(marker).close()
-    updateStatsSidecar(spark, dataDir,
-      staged.toSeq.map(s =>
-        unescapePath(s.getPath.getName.stripPrefix("date="))))
     f.delete(stage, true)
   }
 
@@ -1707,7 +1535,7 @@ object TableStore {
     * recovery is indistinguishable from the crash window and the staged
     * copy is restored — closing it needs a generation-bound stage marker.
     */
-  private def recoverStage(spark: SparkSession, f: FileSystem, stage: Path,
+  private def recoverStage(f: FileSystem, stage: Path,
       dataDir: String): Unit =
     if (f.exists(stage)) {
       if (f.exists(new Path(stage, "_SUCCESS"))) {
@@ -1722,8 +1550,6 @@ object TableStore {
         }
         val marker = new Path(dataDir, "_SUCCESS")
         if (!f.exists(marker)) f.create(marker).close()
-        updateStatsSidecar(spark, dataDir, missing.toSeq.map(s =>
-          unescapePath(s.getPath.getName.stripPrefix("date="))))
         f.delete(stage, true)
       } else f.delete(stage, true)
     }
@@ -1763,17 +1589,13 @@ object TableStore {
     val root = new Path(dir)
     if (!f.exists(root)) return
     val ClaimName = "^g(\\d+)\\.claim$".r
+    // stats_g<N>: min/max sidecars earlier builds wrote; nothing reads them
     val StatsName = "^stats_g(\\d+)$".r
-    val SwapName = "^stats_g(\\d+)\\.swap$".r
     val BloomName = "^bloom_g(\\d+)$".r
-    // a sidecar refresh only ever targets the current generation, so the
-    // swap sibling of any older one is a crashed refresh's orphan
-    val current = currentGenNumber(spark, dir)
     f.listStatus(root).foreach { s =>
       if (s.isDirectory) s.getPath.getName match {
         case GenName(n) if n.toInt < keepFrom => f.delete(s.getPath, true)
         case StatsName(n) if n.toInt < keepFrom => f.delete(s.getPath, true)
-        case SwapName(n) if n.toInt < current => f.delete(s.getPath, true)
         case BloomName(n) if n.toInt < keepFrom => f.delete(s.getPath, true)
         case name if name.startsWith("date=") && keepFrom >= 0 =>
           f.delete(s.getPath, true)

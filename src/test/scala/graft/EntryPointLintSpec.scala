@@ -210,9 +210,7 @@ class EntryPointLintSpec extends AnyFunSuite {
       "graft.ingest.GhaPipeline.chaosHook_$eq" ->
         "crash-window tests throw from a named point of the tick",
       "graft.store.TableStore.beforeCommitHook_$eq" ->
-        "concurrent-writer tests act between a write and its commit",
-      "graft.store.TableStore.beforeSidecarSwapHook_$eq" ->
-        "crash tests act between a stats sidecar's write and its swap")
+        "concurrent-writer tests act between a write and its commit")
     val reached = reachedMethods(
       mains.map(_ -> "main([Ljava/lang/String;)V") ++
         confOnly.map(_ -> "<init>()V"))

@@ -28,7 +28,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[graft.llm.References.minhashPairsPlan]] /
   * [[graft.llm.VectorOps.cosinePairsPlan]]) because the public entry
   * points materialize through `localCheckpoint`, which truncates the
-  * plan the registry-level PlanLintSpec can see.
+  * plan the registry-level plan lint in `QueriesSpec` can see.
   */
 class FanoutSortLintSpec extends AnyFunSuite with SparkFixture {
 

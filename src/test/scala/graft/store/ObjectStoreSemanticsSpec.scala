@@ -48,10 +48,9 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
     // the swap committed a fresh generation on the mock store
     assert(TableStore.currentGeneration(spark, tbl).map(_._1) === Some(1))
 
-    // pruned read plans against the sidecar written during compact
+    // pruned read plans from the compacted generation's footers
     val pruned = TableStore.readPruned(spark, tbl,
       Seq(TableStore.ColRange("user_id", 2, 2)))
-    assert(pruned.statsSource === "sidecar")
     assert(pruned.df.filter(col("user_id") === 2).count() ===
       df.filter(col("user_id") === 2).count() * 2)
 
@@ -148,15 +147,13 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
     Files.createDirectories(stale)
     Files.createFile(stale.resolve("_SUCCESS"))
     // the next tick's recoverStage must treat this as already-published
-    // (empty-dates sidecar refresh = no-op, not an empty-reduce crash) and
-    // then run its own compaction normally
+    // (nothing left to rename) and then run its own compaction normally
     TableStore.compactDates(spark, tbl, Seq("2024-03-01", "2024-03-02"))
     assert(!Files.exists(stale))
     assert(TableStore.read(spark, tbl).count() === 200)
-    // the sidecar survived the empty refresh: pruned reads still plan on it
+    // pruned reads still plan over the published generation
     val pruned = TableStore.readPruned(spark, tbl,
       Seq(TableStore.ColRange("event_id", 1, 5)))
-    assert(pruned.statsSource === "sidecar")
     assert(pruned.df.filter(col("event_id") <= 5).count() === 5)
   }
 

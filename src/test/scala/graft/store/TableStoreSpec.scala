@@ -230,49 +230,50 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     assert(TableStore.read(spark, dir).count() === 10)
   }
 
-  test("compact writes a _stats sidecar and readPruned plans against it") {
+  test("readPruned skips files of a z-ordered compaction by footer stats") {
     val dir = tmpDir("store") + "/sc"
     (1 to 4).foreach(k =>
       TableStore.append(
         (k * 100 until k * 100 + 20)
           .map(i => (i.toLong, java.sql.Date.valueOf("2024-01-01")))
           .toDF("id", "date"), dir))
-    // pre-compact: no sidecar -> the footer fallback carries the pruning
+    // pre-compact: one file per append batch, each with its own id range
     val pr0 = TableStore.readPruned(spark, dir,
       Seq(TableStore.ColRange("id", 100, 119)))
     assert(pr0.statsSource === "footers")
     assert(pr0.filesKept < pr0.filesTotal)
     val expected = pr0.df.filter($"id".between(100, 119)).count()
-    // z-order layout keeps per-file id ranges tight, so the sidecar has
+    // z-order layout keeps per-file id ranges tight, so the footers have
     // something to prove (hash bin-packing scatters ids across files —
     // ZOrderSpec covers that conservative case)
     TableStore.compact(spark, dir, zorderBy = Seq("id"),
       targetFileBytes = 1024)
     val pr = TableStore.readPruned(spark, dir,
       Seq(TableStore.ColRange("id", 100, 119)))
-    assert(pr.statsSource === "sidecar")
-    assert(pr.filesKept < pr.filesTotal) // sidecar stats actually skip files
+    assert(pr.filesKept < pr.filesTotal) // footer stats actually skip files
     assert(pr.df.filter($"id".between(100, 119)).count() === expected)
   }
 
-  test("compactDates keeps the sidecar fresh for the touched partitions") {
+  test("readPruned after compactDates returns the same rows as a plain filter") {
     val dir = tmpDir("store") + "/scd"
     def batch(day: String, ids: Range) =
       ids.map(i => (i.toLong, java.sql.Date.valueOf(day))).toDF("id", "date")
     TableStore.append(batch("2024-01-01", 0 until 50), dir)
     TableStore.append(batch("2024-01-02", 1000 until 1050), dir)
-    TableStore.compact(spark, dir, targetFileBytes = 1024)
-    // new data lands in one partition; its files are NOT in the sidecar yet
+    TableStore.compact(spark, dir, zorderBy = Seq("id"),
+      targetFileBytes = 1024)
+    // new data lands in one partition, which compactDates rewrites
     TableStore.append(batch("2024-01-02", 2000 until 2050), dir)
     TableStore.compactDates(spark, dir, Seq("2024-01-02"),
       targetFileBytes = 1024)
+    val inRange = $"id".between(2000, 2049)
     val pr = TableStore.readPruned(spark, dir,
       Seq(TableStore.ColRange("id", 2000, 2049)))
-    assert(pr.statsSource === "sidecar")
-    // pruning still sees through to the rewritten files: day-1 files skip,
-    // and the new rows are all present
+    // the z-ordered day-1 files skip; the rewritten files are read
     assert(pr.filesKept < pr.filesTotal)
-    assert(pr.df.filter($"id" >= 2000).count() === 50)
+    val plain = TableStore.read(spark, dir).filter(inRange)
+    assert(pr.df.filter(inRange).collect().toSet === plain.collect().toSet)
+    assert(plain.count() === 50)
     // untouched partition rows intact
     assert(TableStore.read(spark, dir).count() === 150)
   }
@@ -296,43 +297,6 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
       assert(got.toSet === collected(df), name)
       assert(got.toSet === want, name)
     }
-  }
-
-  test("a crash between the sidecar refresh's write and its swap leaves " +
-    "readPruned on footers; vacuum drops the orphaned sibling") {
-    val dir = tmpDir("store") + "/swap"
-    def batch(day: String, ids: Range) =
-      ids.map(i => (i.toLong, java.sql.Date.valueOf(day))).toDF("id", "date")
-    TableStore.append(batch("2024-01-01", 0 until 50), dir)
-    TableStore.append(batch("2024-01-02", 1000 until 1050), dir)
-    TableStore.compact(spark, dir, targetFileBytes = 1024)
-    TableStore.append(batch("2024-01-02", 2000 until 2050), dir)
-    val ranges = Seq(TableStore.ColRange("id", 2000, 2049))
-    assert(TableStore.readPruned(spark, dir, ranges).statsSource === "sidecar")
-    TableStore.beforeSidecarSwapHook =
-      () => throw new RuntimeException("killed before the sidecar swap")
-    try intercept[RuntimeException](TableStore.compactDates(spark, dir,
-      Seq("2024-01-02"), targetFileBytes = 1024))
-    finally TableStore.beforeSidecarSwapHook = () => ()
-    val gen = new org.apache.hadoop.fs.Path(
-      TableStore.resolveDataDir(spark, dir)).getName
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val orphan = new org.apache.hadoop.fs.Path(dir, s"stats_$gen.swap")
-    assert(f.exists(orphan), "the crash point left no sibling sidecar")
-    // the live sidecar predates the rewrite (it lists the replaced files,
-    // not the new ones), so readers must be back on footers
-    val pr = TableStore.readPruned(spark, dir, ranges)
-    assert(pr.statsSource === "footers")
-    assert(pr.df.filter($"id" >= 2000).count() === 50)
-    assert(TableStore.read(spark, dir).count() === 150)
-    // the next full compaction supersedes the generation; its vacuum
-    // removes the dead refresh's sibling along with nothing live
-    TableStore.compact(spark, dir, targetFileBytes = 1024)
-    assert(!f.exists(orphan), "vacuum left the orphaned sibling sidecar")
-    val after = TableStore.readPruned(spark, dir, ranges)
-    assert(after.statsSource === "sidecar")
-    assert(after.df.filter($"id" >= 2000).count() === 50)
   }
 
   test("compactDates publish is crash-recoverable from the retained stage") {
@@ -372,9 +336,13 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false)
+    // the min/max sidecar an earlier build left at the flat root
+    Seq(("date=2024-03-01/part-0.parquet", "id", 0.0, 19.0))
+      .toDF("file", "col", "mn", "mx")
+      .coalesce(1).write.parquet(s"$dir/stats_g0")
     TableStore.compact(spark, dir)
-    // the sidecar (dir/stats_g0, written before the locked re-list) must
-    // NOT have been rebase-copied into g0 as foreign-schema "data"
+    // the sidecar (dir/stats_g0) must NOT have been compacted or
+    // rebase-copied into g0 as foreign-schema "data"
     assert(!f.exists(new org.apache.hadoop.fs.Path(dir, "g0/stats_g0")),
       "stats sidecar leaked into the generation as data")
     val t = TableStore.read(spark, dir)
