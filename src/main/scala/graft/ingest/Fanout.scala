@@ -10,8 +10,9 @@ import org.apache.spark.graft.CoreBridge
   * of small jobs separated by driver-only file-system work; run one after
   * another, the cluster idles through every gap. Run side by side, one
   * chain's jobs fill another's gaps. The hourly tick runs two fan-outs:
-  * the appends beside the view folds, then the compactions beside the
-  * result overwrites ([[GhaPipeline.incrementalRunWithViews]]).
+  * the appends beside the view folds, then the compactions of the dates
+  * the tick closes beside the result overwrites
+  * ([[GhaPipeline.incrementalRunWithViews]]).
   *
   * Contract:
   *  - a fresh thread per task for every call (no shared pool, no knob);

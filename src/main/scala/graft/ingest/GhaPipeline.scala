@@ -21,11 +21,12 @@ import graft.time.Increments
   * fan-outs. Phase A ([[ingestWith]]): the six curated appends off one
   * persisted parse, beside the three view folds, which read only the same
   * batch frames. Phase B ([[compactTouched]]): the six per-table
-  * `compactDates` calls, beside the two result-table overwrites, which
-  * read only the views phase A finished. The results come from the views
-  * ([[IncrementalViews.queryData]]), never from a full-history recompute;
-  * the test tree keeps that recompute as the reference the views are
-  * tested against.
+  * `compactDates` calls over the dates the tick closes (none on most
+  * ticks: a date compacts once, after its last hour), beside the two
+  * result-table overwrites, which read only the views phase A finished.
+  * The results come from the views ([[IncrementalViews.queryData]]),
+  * never from a full-history recompute; the test tree keeps that
+  * recompute as the reference the views are tested against.
   */
 object GhaPipeline {
 
@@ -42,8 +43,8 @@ object GhaPipeline {
     *    per curated table and `post-view:<v>` per view, in any order;
     *  - `post-ingest`, once every phase A task finished;
     *  - on phase B's threads, after each task's write: `post-compact:<t>`
-    *    per curated table and `post-result:commits` /
-    *    `post-result:comments`, in any order;
+    *    per curated table (on a tick that closes a date only) and
+    *    `post-result:commits` / `post-result:comments`, in any order;
     *  - `post-compact` then `post-results`, both once every phase B task
     *    finished (the compactions and the publish end together);
     *  - `post-hwm`.
@@ -67,8 +68,8 @@ object GhaPipeline {
     * Whichever task's job reaches the unloaded parse cache first loads
     * it. A task whose plan has a shuffle (the aggregating `repo_counts`
     * fold) and is planned before that happened adds a job of its own that
-    * waits on the load (AQE's table-cache stage), so the tick runs 37 or
-    * 38 jobs depending on thread timing.
+    * waits on the load (AQE's table-cache stage), so a tick that closes
+    * no date runs 15 or 16 jobs depending on thread timing.
     */
   def ingestWith(spark: SparkSession, paths: Seq[String], storeDir: String)(
       besides: Map[String, DataFrame] => Seq[(String, () => Unit)])
@@ -91,28 +92,37 @@ object GhaPipeline {
     } finally raw.unpersist()
   }
 
-  /** Hourly maintenance: bin-pack only the date partitions the tick's
-    * batch touched. The full-table compact rewrites ALL of history into a
-    * new generation — O(table) every hour, which at 100 TB dwarfs the
-    * O(batch) tick it rides on (Delta's OPTIMIZE, the reference's analog
-    * at `preprocess.py:199-206`, only rewrites under-target file groups
-    * for the same reason).
+  /** Hourly maintenance: bin-pack each date partition once, in the tick
+    * that closes it. `dates` is the set [[incrementalRunWithViews]]
+    * closes: the dates the batch touched plus the date the previous tick
+    * left open, minus the date of the batch's last hour. Until its date
+    * closes, each table keeps one append file set per ingested hour there.
+    * No reader on the serve path needs the rewrite sooner: only
+    * [[recover]]'s rollback and [[IncrementalViews.rebuild]] read the
+    * curated tables. Re-packing every touched date on every tick would
+    * rewrite each hour's rows about 12 times a day, and the full-table
+    * compact rewrites ALL of history (Delta's OPTIMIZE, the reference's
+    * analog at `preprocess.py:199-206`, rewrites only under-target file
+    * groups for the same reason).
     *
-    * Phase B of the hourly tick: the six tables compact concurrently, in
-    * one [[Fanout]] with the named tasks `besides` (the tick's two
-    * result overwrites), which therefore must not read the curated
-    * tables. A failure in any task surfaces only after every other has
-    * finished, so no `compact_stage.tmp` is mid-write when recovery runs.
+    * Phase B of the hourly tick: the tables compact concurrently, in one
+    * [[Fanout]] with the named tasks `besides` (the tick's two result
+    * overwrites), which therefore must not read the curated tables. With
+    * no date to close the fan-out runs `besides` alone. A failure in any
+    * task surfaces only after every other has finished, so no
+    * `compact_stage.tmp` is mid-write when recovery runs.
     */
   def compactTouched(spark: SparkSession, storeDir: String,
-      dates: Seq[String], besides: Seq[(String, () => Unit)]): Unit =
-    Fanout(spark, "compact", graft.schema.GhaSchemas.tableNames.map { t =>
+      dates: Seq[String], besides: Seq[(String, () => Unit)]): Unit = {
+    val tables = if (dates.isEmpty) Nil else graft.schema.GhaSchemas.tableNames
+    Fanout(spark, "compact", tables.map { t =>
       t -> { () =>
         TableStore.compactDates(spark, s"$storeDir/$t", dates,
           Some(graft.schema.GhaSchemas.curated(t)))
         chaosHook(s"post-compact:$t")
       }
     } ++ besides)
+  }
 
   /** The tick's two result overwrites as named tasks (`results/commits`,
     * `results/comments`), each firing `post-result:<commits|comments>`
@@ -261,8 +271,7 @@ object GhaPipeline {
           val affectedDates: Seq[String] = Iterator
             .iterate(start)(_.plusSeconds(3600))
             .takeWhile(_.isBefore(stopEx))
-            .map(_.atZone(java.time.ZoneOffset.UTC).toLocalDate.toString)
-            .distinct.toSeq
+            .map(utcDate).distinct.toSeq
           val lo = java.sql.Timestamp.from(start)
           val hi = java.sql.Timestamp.from(stopEx)
           graft.schema.GhaSchemas.tableNames.foreach { t =>
@@ -342,19 +351,25 @@ object GhaPipeline {
     *
     * The tick is two fan-outs, each returning only after all its tasks
     * finished: phase A appends the batch to the six curated tables beside
-    * the three view folds ([[ingestWith]]); phase B bin-packs the touched
-    * partitions of the six tables beside the two result overwrites
-    * ([[compactTouched]]). Every write of both phases sits inside the
-    * `_ingest_inflight` scope, so a crash in any task leaves `_mv_stale`
-    * to be set by the next tick's recovery, which rolls the curated
-    * tables back and rebuilds the views. The happy path never scans
-    * history.
+    * the three view folds ([[ingestWith]]); phase B bin-packs the dates
+    * this tick closes beside the two result overwrites
+    * ([[compactTouched]]). The open date is the UTC date of the batch's
+    * last hour. A tick closes the dates its batch touched and the date of
+    * the hwm it started from, except the open date; the rule reads only
+    * the batch and the hwm, so a re-run after a crash closes the same
+    * dates. Every write of both phases sits inside the `_ingest_inflight`
+    * scope, so a crash in any task leaves `_mv_stale` to be set by the
+    * next tick's recovery, which rolls the curated tables back and
+    * rebuilds the views. The happy path never scans history.
     */
   def incrementalRunWithViews(spark: SparkSession, landingDir: String,
       storeDir: String, mvDir: String, now: java.time.Instant,
       backfillStart: java.time.Instant,
       keyword: String = " dask"): Seq[String] = {
     recover(spark, storeDir, mvDir, keyword)
+    // the date the previous tick left open; read before this tick moves
+    // the hwm, so a re-run after a crash closes the same dates
+    val prevOpen = readHwm(spark, storeDir).map(utcDate)
     val hourly = pendingHours(spark, landingDir, storeDir, now, backfillStart)
     if (hourly.nonEmpty) {
       val lastHour = hourly.last._1
@@ -374,8 +389,10 @@ object GhaPipeline {
         }
       }
       chaosHook("post-ingest")
-      // maintenance stays O(batch): bin-pack only the touched partitions
-      compactTouched(spark, storeDir, touched, publishTasks(storeDir,
+      // maintenance stays O(batch): bin-pack a date once, when it closes
+      val open = utcDate(lastHour)
+      val closed = (touched ++ prevOpen).distinct.filterNot(_ == open)
+      compactTouched(spark, storeDir, closed, publishTasks(storeDir,
         IncrementalViews.queryData(spark, mvDir, keyword)))
       chaosHook("post-compact")
       chaosHook("post-results")
@@ -403,6 +420,10 @@ object GhaPipeline {
 
   private val hourFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd-").withZone(java.time.ZoneOffset.UTC)
+
+  /** The `date` partition value of instant `h`: its UTC date. */
+  private def utcDate(h: java.time.Instant): String =
+    h.atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
 
   /** GH-Archive file name for hour `h` (unpadded hour), without extension. */
   def hourStem(h: java.time.Instant): String =

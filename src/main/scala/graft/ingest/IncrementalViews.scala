@@ -121,6 +121,13 @@ object IncrementalViews {
   /** `query_data` (`preprocess.py:209-244`) over the views: identical
     * output to a full-history recompute on the same history — the scans
     * are just proportional to keyword survivors instead of full history.
+    *
+    * Each frame is one partition sorted in place, so it writes one file in
+    * the result's total order. A global `orderBy` gives the same file but
+    * plans a range exchange, which costs a `RangePartitioner` sample job
+    * and a shuffle job to order a few hundred rows. The squeeze is the
+    * reference's own move (`repartition(npartitions=1)` on its repo
+    * counts, `preprocess.py:216`), here applied to the small result.
     */
   def queryData(spark: SparkSession, mvDir: String,
       keyword: String = " dask", minWatches: Long = 5)
@@ -133,12 +140,14 @@ object IncrementalViews {
       .read(spark, s"$mvDir/kw_commits", GhaSchemas.curated("commit"))
       .join(popular, Seq("repo"))
       .select("username", "repo", "message", "count")
-      .orderBy(desc("count"), asc("username"), asc("message"))
+      .coalesce(1).sortWithinPartitions(
+        desc("count"), asc("username"), asc("message"))
     val comments = TableStore
       .read(spark, s"$mvDir/kw_comments", GhaSchemas.curated("comment"))
       .join(popular, Seq("repo"))
       .select("username", "repo", "comment", "count")
-      .orderBy(desc("count"), asc("username"), asc("comment"))
+      .coalesce(1).sortWithinPartitions(
+        desc("count"), asc("username"), asc("comment"))
     (commits, comments)
   }
 

@@ -1401,11 +1401,11 @@ object TableStore {
   /** Delta-OPTIMIZE-shaped INCREMENTAL maintenance: bin-pack ONLY `dates`,
     * rewriting those partitions in place (staged write, then dynamic
     * partition overwrite) inside the current generation. The hourly tick
-    * passes just the dates its batch touched, so per-tick maintenance is
-    * O(touched partitions) — rewriting the whole table into a new
-    * generation every hour would make the tick O(history), which is
-    * exactly what Delta's OPTIMIZE avoids by rewriting only under-target
-    * file groups. The table-wide [[compact]] remains the full-OPTIMIZE /
+    * passes just the dates it closes (each date once, after its last
+    * hour), so per-tick maintenance is O(closed partitions) — rewriting
+    * the whole table into a new generation every hour would make the
+    * tick O(history), which is exactly what Delta's OPTIMIZE avoids by
+    * rewriting only under-target file groups. The table-wide [[compact]] remains the full-OPTIMIZE /
     * re-layout (z-order) path with its reader-safe generation swap.
     *
     * Guarantees (weaker than the generation swap, same as [[append]] /

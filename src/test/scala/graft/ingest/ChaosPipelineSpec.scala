@@ -26,16 +26,24 @@ import graft.store.TableStore
   * The kill is an exception thrown from `GhaPipeline.chaosHook`
   * (everything the process wrote up to that point stays on disk, exactly
   * like a kill -9 at that instruction); the injected clock makes each
-  * tick's hour range deterministic.
+  * tick's hour range deterministic. The ticks ingest hours 23:00, 00:00
+  * and 01:00: tick 2 closes the date tick 1 left open, so it is a tick
+  * that compacts and every point fires in it.
   */
 class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
 
-  private def watchLine(user: String, h: Int) =
-    s"""{"type":"WatchEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:10:00Z","payload":{"action":"started"}}"""
-  private def pushLine(user: String, h: Int) =
-    s"""{"type":"PushEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:20:00Z","payload":{"commits":[{"sha":"s$h","message":"use dask"}]}}"""
-  private def commentLine(user: String, h: Int) =
-    s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:30:00Z","payload":{"issue":{"number":1,"title":"t","created_at":"2024-02-29T01:00:00Z","user":{"login":"x"}},"comment":{"body":"try dask for this","author_association":"NONE"}}}"""
+  /** The hour tick `tick` (1 to 3) ingests. */
+  private def hourOf(tick: Int): Instant =
+    Instant.parse("2024-02-28T23:00:00Z").plusSeconds(3600L * (tick - 1))
+  private def at(tick: Int, minute: Int): String =
+    hourOf(tick).plusSeconds(60L * minute).toString
+
+  private def watchLine(user: String, t: Int) =
+    s"""{"type":"WatchEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"${at(t, 10)}","payload":{"action":"started"}}"""
+  private def pushLine(user: String, t: Int) =
+    s"""{"type":"PushEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"${at(t, 20)}","payload":{"commits":[{"sha":"s$t","message":"use dask"}]}}"""
+  private def commentLine(user: String, t: Int) =
+    s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"${at(t, 30)}","payload":{"issue":{"number":1,"title":"t","created_at":"2024-02-28T01:00:00Z","user":{"login":"x"}},"comment":{"body":"try dask for this","author_association":"NONE"}}}"""
 
   private val hours: Seq[(Int, Seq[String])] = Seq(
     1 -> ((1 to 6).map(i => watchLine(s"w$i", 1)) ++
@@ -43,9 +51,8 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
     2 -> Seq(watchLine("w7", 2), watchLine("w8", 2), pushLine("bob", 2)),
     3 -> Seq(watchLine("w9", 3), pushLine("carol", 3), commentLine("eve", 3)))
 
-  private val backfill = Instant.parse("2024-02-29T01:00:00Z")
-  private def tickNow(h: Int): Instant =
-    Instant.parse(f"2024-02-29T0${h + 2}%d:10:00Z")
+  private val backfill = hourOf(1)
+  private def tickNow(t: Int): Instant = hourOf(t).plusSeconds(7800)
 
   private def mkDirs(tag: String): (String, String, String) = {
     val dir = tmpDir(s"chaos_$tag")
@@ -54,14 +61,14 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
     (landing, s"$dir/store", s"$dir/mv")
   }
 
-  private def land(landing: String, h: Int): Unit =
-    Files.write(Paths.get(s"$landing/2024-02-29-$h.json"),
-      hours.find(_._1 == h).get._2.mkString("\n").getBytes)
+  private def land(landing: String, t: Int): Unit =
+    Files.write(Paths.get(s"$landing/${GhaPipeline.hourStem(hourOf(t))}.json"),
+      hours.find(_._1 == t).get._2.mkString("\n").getBytes)
 
   private def tick(landing: String, store: String, mv: String,
-      h: Int): Seq[String] =
+      t: Int): Seq[String] =
     GhaPipeline.incrementalRunWithViews(
-      spark, landing, store, mv, tickNow(h), backfill)
+      spark, landing, store, mv, tickNow(t), backfill)
 
   /** Everything observable, as sorted row strings — the content-identity
     * fingerprint (file names/UUIDs legitimately differ across runs).
@@ -150,6 +157,35 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
       assert(at("post-ingest") < at(p) && at(p) < at("post-compact"), p)
     assert(order.take(2) === Seq("post-inflight-marker", "pre-views"))
     assert(order.takeRight(3) === Seq("post-compact", "post-results", "post-hwm"))
+  }
+
+  test("a tick that closes no date fires no post-compact:<t> and leaves " +
+    "one file set per ingested hour in the open date") {
+    val (l, s, m) = mkDirs("open")
+    for (t <- 1 to 2) { land(l, t); assert(tick(l, s, m, t).size === 1) }
+    land(l, 3)
+    val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    GhaPipeline.chaosHook = name => fired.add(name)
+    try assert(tick(l, s, m, 3).size === 1) finally resetHook()
+    import scala.jdk.CollectionConverters._
+    assert(fired.asScala.toSeq.sorted ===
+      killPoints.filterNot(_.startsWith("post-compact:")).sorted)
+    import org.apache.spark.sql.functions.{col, date_trunc}
+    for (t <- tables) {
+      val dir = s"$s/$t"
+      // the open date: hours 00:00 and 01:00, one append each
+      val openHours = TableStore.read(spark, dir,
+          graft.schema.GhaSchemas.curated(t))
+        .filter(col("date") === "2024-02-29")
+        .select(date_trunc("hour", col("created_at"))).distinct().count()
+      assert(TickFiles.fileSets(spark, dir, "2024-02-29").size === openHours,
+        s"$t: open date file sets")
+      // the date tick 2 closed holds one compacted file, when it has rows
+      assert(TickFiles.fileSets(spark, dir, "2024-02-28").values.sum <= 1,
+        s"$t: closed date files")
+    }
+    assert(TickFiles.fileSets(spark, s"$s/watch", "2024-02-29").size === 2)
+    assert(TickFiles.fileSets(spark, s"$s/watch", "2024-02-28").values.sum === 1)
   }
 
   test("kill tick 2 at EVERY chaos point: the resumed run is " +
