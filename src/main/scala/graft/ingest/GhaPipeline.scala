@@ -20,10 +20,11 @@ import graft.time.Increments
   * hours and the steady hourly run take the same path. It is two
   * fan-outs. Phase A ([[ingestWith]]): the six curated appends off one
   * persisted parse, beside the three view folds, which read only the same
-  * batch frames. Phase B ([[compactTouched]]): the six per-table
-  * `compactDates` calls over the dates the tick closes (none on most
-  * ticks: a date compacts once, after its last hour), beside the two
-  * result-table overwrites, which read only the views phase A finished.
+  * batch frames. Phase B ([[compactTouched]]): the `compactDates` calls of
+  * the six curated tables and two keyword views over the dates the tick
+  * closes (none on most ticks: a date compacts once, after its last
+  * hour), beside the two result-table overwrites, which read only the
+  * views phase A finished.
   * The results come from the views ([[IncrementalViews.queryData]]),
   * never from a full-history recompute; the test tree keeps that
   * recompute as the reference the views are tested against.
@@ -49,9 +50,9 @@ object GhaPipeline {
     *    finished (the compactions and the publish end together);
     *  - `post-hwm`.
     *
-    * A tick whose recovery rebuilds the views also fires
-    * `post-result:commits` / `post-result:comments` there, before
-    * `post-inflight-marker`, when it publishes the rebuilt views.
+    * A tick whose recovery rebuilds the views (adoption, keyword change)
+    * also fires `post-result:commits` / `post-result:comments` there,
+    * before `post-inflight-marker`, when it publishes the rebuilt views.
     */
   @volatile private[ingest] var chaosHook: String => Unit = _ => ()
 
@@ -97,31 +98,35 @@ object GhaPipeline {
     * closes: the dates the batch touched plus the date the previous tick
     * left open, minus the date of the batch's last hour. Until its date
     * closes, each table keeps one append file set per ingested hour there.
-    * No reader on the serve path needs the rewrite sooner: only
-    * [[recover]]'s rollback and [[IncrementalViews.rebuild]] read the
-    * curated tables. Re-packing every touched date on every tick would
-    * rewrite each hour's rows about 12 times a day, and the full-table
-    * compact rewrites ALL of history (Delta's OPTIMIZE, the reference's
-    * analog at `preprocess.py:199-206`, rewrites only under-target file
-    * groups for the same reason).
+    * No reader on the serve path needs the rewrite sooner, and re-packing
+    * every touched date on every tick would rewrite each hour's rows about
+    * 12 times a day (Delta's OPTIMIZE, the reference's analog at
+    * `preprocess.py:199-206`, rewrites only under-target file groups for
+    * the same reason). The two keyword views (`mvDir/kw_commits`,
+    * `mvDir/kw_comments`) compact under the same rule.
     *
     * Phase B of the hourly tick: the tables compact concurrently, in one
     * [[Fanout]] with the named tasks `besides` (the tick's two result
-    * overwrites), which therefore must not read the curated tables. With
-    * no date to close the fan-out runs `besides` alone. A failure in any
-    * task surfaces only after every other has finished, so no
-    * `compact_stage.tmp` is mid-write when recovery runs.
+    * overwrites). Each compaction is one log commit, so the overwrites
+    * keep reading the view snapshot they planned on. With no date to close
+    * the fan-out runs `besides` alone. A failure in any task surfaces only
+    * after every other has finished.
     */
-  def compactTouched(spark: SparkSession, storeDir: String,
+  def compactTouched(spark: SparkSession, storeDir: String, mvDir: String,
       dates: Seq[String], besides: Seq[(String, () => Unit)]): Unit = {
-    val tables = if (dates.isEmpty) Nil else graft.schema.GhaSchemas.tableNames
-    Fanout(spark, "compact", tables.map { t =>
+    import graft.schema.GhaSchemas.{curated, tableNames}
+    val tables = if (dates.isEmpty) Nil else tableNames.map { t =>
       t -> { () =>
-        TableStore.compactDates(spark, s"$storeDir/$t", dates,
-          Some(graft.schema.GhaSchemas.curated(t)))
+        TableStore.compactDates(spark, s"$storeDir/$t", dates, Some(curated(t)))
         chaosHook(s"post-compact:$t")
       }
-    } ++ besides)
+    } ++ Seq("kw_commits" -> "commit", "kw_comments" -> "comment").map {
+      case (v, t) => s"mv/$v" -> { () =>
+        TableStore.compactDates(spark, s"$mvDir/$v", dates, Some(curated(t)))
+        ()
+      }
+    }
+    Fanout(spark, "compact", tables ++ besides)
   }
 
   /** The tick's two result overwrites as named tasks (`results/commits`,
@@ -144,22 +149,31 @@ object GhaPipeline {
   }
 
   // ---- exactly-once bookkeeping -------------------------------------------
-  // Two tiny marker files play the role of the Delta tx log the reference
-  // leans on (`preprocess.py:169-186`):
+  // Two tiny marker files sit beside the tables' logs (the reference leans
+  // on Delta's, `preprocess.py:169-186`):
   //  - `_ingest_hwm`     : start instant of the last fully ingested hour —
   //                        the O(1) resume point (no table scan at all);
-  //  - `_ingest_inflight`: "<start>|<stop>" written BEFORE a batch's appends
-  //                        and cleared AFTER `_ingest_hwm` advances. Its
-  //                        presence on startup means a previous run died
-  //                        mid-append, and the covered hours must be rolled
-  //                        back before re-ingesting (appends alone would
-  //                        duplicate them — Delta gets this from ACID).
+  //  - `_ingest_inflight`: "<start>|<stop>|<table>=<version>,..." written
+  //                        BEFORE a batch's appends, naming the log version
+  //                        of each of the nine logged tables (six curated,
+  //                        three views), and cleared AFTER `_ingest_hwm`
+  //                        advances. Its presence on startup means a run
+  //                        died mid-tick: recovery restores every table to
+  //                        its recorded version (one restore commit each).
   // Two more live beside the views (see [[recover]]):
   //  - `<mvDir>/_mv_stale`  : the views must be rebuilt from the curated
-  //                           store before the next fold;
+  //                           store before the next fold (adoption, keyword
+  //                           change);
   //  - `<mvDir>/_mv_keyword`: the keyword the views were built for
   //                           (URL-encoded: a keyword may start with a
   //                           space, and markers are read trimmed).
+
+  /** The nine logged tables of a tick, by the name the inflight marker
+    * records them under.
+    */
+  private def loggedTables(storeDir: String, mvDir: String): Seq[(String, String)] =
+    graft.schema.GhaSchemas.tableNames.map(t => t -> s"$storeDir/$t") ++
+      Seq("repo_counts", "kw_commits", "kw_comments").map(v => s"mv/$v" -> s"$mvDir/$v")
 
   private def markerFs(spark: SparkSession, p: String) =
     new org.apache.hadoop.fs.Path(p)
@@ -204,40 +218,27 @@ object GhaPipeline {
   /** Start-of-tick recovery, run before the range is read. Two jobs, in
     * this order:
     *
-    *  - Curated tables: roll back the half-written batch a dead run left
-    *    behind (`_ingest_inflight` present, hwm short of its last hour).
-    *    For every curated table, rewrite the date partitions the batch
-    *    touched WITHOUT its rows (dynamic partition overwrite —
-    *    `TableStore.upsertPartitions`), and drop partitions whose every row
-    *    came from the batch. Hour-grained events inside date-grained
-    *    partitions are why plain dynamic overwrite can't be the ingest
-    *    path itself: overwriting date D with only hour H would erase D's
-    *    other hours.
-    *  - Views: the folds are not idempotent, so views that saw a
-    *    rolled-back batch — or that never saw the store's history — are
-    *    rebuilt from the recovered store ([[IncrementalViews.rebuild]]).
-    *    "Rebuild pending" is recorded DURABLY in `_mv_stale` before the
-    *    rollback starts, while the inflight marker still exists, and
-    *    cleared only after a COMPLETED rebuild: a crash between marker
-    *    deletion and rebuild would otherwise leave the views silently
-    *    diverged forever (the next tick would see no marker and re-fold
-    *    the replayed hour into double-counted views). The rebuilt views
-    *    are published to the result tables before the marker is
-    *    cleared, since a tick with no new hour publishes nothing else.
-    *
-    * Adoption: a store that has ingested hours (`_ingest_hwm`) but whose
-    * `mvDir` holds no committed `repo_counts` (views added to an existing
-    * store, or deleted) is marked stale too, so its first fold starts
-    * from the store's history rather than from the batch alone. So are
-    * views built for another keyword (a daemon restarted with a new
-    * `keyword`): the keyword slices hold only their keyword's rows. The
-    * checks are marker reads and one listing; an empty store and a store
-    * whose views exist for this keyword never rebuild. Views that predate
-    * the keyword marker are taken to match.
+    *  - Roll back the tick a dead run left behind (`_ingest_inflight`
+    *    present, hwm short of its last hour): each of the nine logged
+    *    tables gets one restore commit back to the version the marker
+    *    recorded ([[TableStore.restore]]). The rollback knows exactly which
+    *    files the batch wrote — rows of an hour file that fall on the
+    *    previous date included — and covers the views' folds and
+    *    compactions too, so the views need no rebuild after a crash.
+    *  - Adoption: a store that has ingested hours (`_ingest_hwm`) but whose
+    *    `mvDir` holds no committed `repo_counts` (views added to an
+    *    existing store, or deleted) is marked stale (`_mv_stale`), so its
+    *    first fold starts from the store's history rather than from the
+    *    batch alone. So are views built for another keyword (a daemon
+    *    restarted with a new `keyword`): the keyword slices hold only
+    *    their keyword's rows. The stale views are rebuilt
+    *    ([[IncrementalViews.rebuild]]) and published to the result tables
+    *    before the marker clears, since a tick with no new hour publishes
+    *    nothing else; a crash in between leaves the rebuild pending. Views
+    *    that predate the keyword marker are taken to match.
     */
   private def recover(spark: SparkSession, storeDir: String, mvDir: String,
       keyword: String): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
     val marker = s"$storeDir/_ingest_inflight"
     val stale = s"$mvDir/_mv_stale"
     val kwMarker = s"$mvDir/_mv_keyword"
@@ -246,58 +247,35 @@ object GhaPipeline {
     readMarker(spark, marker) match {
       case None =>
         if (built.exists(_ != kw) || (readHwm(spark, storeDir).isDefined &&
-            TableStore.currentGeneration(spark, s"$mvDir/repo_counts").isEmpty))
+            TableStore.version(spark, s"$mvDir/repo_counts") < 0))
           writeMarker(spark, stale, "rebuild-pending")
       case Some(v) =>
-        writeMarker(spark, stale, "rebuild-pending")
         // a corrupt marker must fail ACTIONABLY: an unhandled MatchError /
         // parse error here would escape every tick forever (the marker is
         // never cleared and Serve just backs off) with no hint at the cause
         val parsed = v.split('|') match {
-          case Array(s, e) =>
-            try Some((java.time.Instant.parse(s), java.time.Instant.parse(e)))
-            catch { case _: java.time.format.DateTimeParseException => None }
+          case Array(s, e, vs) =>
+            try Some((java.time.Instant.parse(s), java.time.Instant.parse(e),
+              vs.split(',').map(_.split('=')).collect {
+                case Array(t, n) => t -> n.toLong
+              }.toMap))
+            catch {
+              case _: java.time.format.DateTimeParseException |
+                  _: NumberFormatException => None
+            }
           case _ => None
         }
-        val (start, stopInst) = parsed.getOrElse(throw new java.io.IOException(
-          s"""corrupt _ingest_inflight marker at $marker (contents: "$v") — """ +
-            "cannot determine the half-written batch's hour range. Inspect " +
-            "the store, roll back the affected partitions manually, then " +
-            "delete the marker to resume."))
-        val stopEx = stopInst.plusSeconds(3600)
-        val hwmOk = readHwm(spark, storeDir)
-          .exists(h => !h.isBefore(stopInst))
-        if (!hwmOk) {
-          val affectedDates: Seq[String] = Iterator
-            .iterate(start)(_.plusSeconds(3600))
-            .takeWhile(_.isBefore(stopEx))
-            .map(utcDate).distinct.toSeq
-          val lo = java.sql.Timestamp.from(start)
-          val hi = java.sql.Timestamp.from(stopEx)
-          graft.schema.GhaSchemas.tableNames.foreach { t =>
-            val dir = s"$storeDir/$t"
-            val df = try {
-              Some(TableStore.read(spark, dir, graft.schema.GhaSchemas.curated(t)))
-            } catch { case _: org.apache.spark.sql.AnalysisException => None }
-            df.foreach { d =>
-              // materialize the survivors BEFORE overwriting: the rewrite
-              // targets the very path the filter reads (localCheckpoint
-              // breaks the read-own-write-path conflict; the survivor set is
-              // bounded by the batch's few date partitions)
-              val keep = d
-                .filter(col("date").cast("string").isin(affectedDates: _*))
-                .filter(!(col("created_at") >= lit(lo) &&
-                  col("created_at") < lit(hi)))
-                .localCheckpoint()
-              val present = keep.select(col("date").cast("string"))
-                .distinct().collect().map(_.getString(0)).toSet
-              if (present.nonEmpty)
-                TableStore.upsertPartitions(spark, keep, dir)
-              affectedDates.filterNot(present).foreach(dd =>
-                TableStore.dropPartition(spark, dir, dd))
-            }
+        val (_, stop, versions) = parsed
+          .filter(_._3.size == loggedTables(storeDir, mvDir).size)
+          .getOrElse(throw new java.io.IOException(
+            s"""corrupt _ingest_inflight marker at $marker (contents: "$v") — """ +
+              "cannot determine the half-written tick's table versions. " +
+              "Inspect the store, restore the affected tables manually, then " +
+              "delete the marker to resume."))
+        if (!readHwm(spark, storeDir).exists(h => !h.isBefore(stop)))
+          loggedTables(storeDir, mvDir).foreach { case (t, dir) =>
+            TableStore.restore(spark, dir, versions(t))
           }
-        }
         deleteMarker(spark, marker)
     }
     if (readMarker(spark, stale).isDefined) {
@@ -358,9 +336,9 @@ object GhaPipeline {
     * the hwm it started from, except the open date; the rule reads only
     * the batch and the hwm, so a re-run after a crash closes the same
     * dates. Every write of both phases sits inside the `_ingest_inflight`
-    * scope, so a crash in any task leaves `_mv_stale` to be set by the
-    * next tick's recovery, which rolls the curated tables back and
-    * rebuilds the views. The happy path never scans history.
+    * scope, which records each logged table's version first, so a crash
+    * in any task is undone by the next tick's recovery: one restore commit
+    * per table. The happy path never scans history.
     */
   def incrementalRunWithViews(spark: SparkSession, landingDir: String,
       storeDir: String, mvDir: String, now: java.time.Instant,
@@ -373,8 +351,11 @@ object GhaPipeline {
     val hourly = pendingHours(spark, landingDir, storeDir, now, backfillStart)
     if (hourly.nonEmpty) {
       val lastHour = hourly.last._1
+      val versions = loggedTables(storeDir, mvDir).map { case (t, dir) =>
+        s"$t=${TableStore.version(spark, dir)}"
+      }
       writeMarker(spark, s"$storeDir/_ingest_inflight",
-        s"${hourly.head._1}|$lastHour")
+        s"${hourly.head._1}|$lastHour|${versions.mkString(",")}")
       chaosHook("post-inflight-marker")
       // touched dates come from the batch DATA (the partitions the appends
       // committed), not the hour range: an event's created_at (the
@@ -392,7 +373,7 @@ object GhaPipeline {
       // maintenance stays O(batch): bin-pack a date once, when it closes
       val open = utcDate(lastHour)
       val closed = (touched ++ prevOpen).distinct.filterNot(_ == open)
-      compactTouched(spark, storeDir, closed, publishTasks(storeDir,
+      compactTouched(spark, storeDir, mvDir, closed, publishTasks(storeDir,
         IncrementalViews.queryData(spark, mvDir, keyword)))
       chaosHook("post-compact")
       chaosHook("post-results")

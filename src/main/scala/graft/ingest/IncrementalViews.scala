@@ -32,13 +32,13 @@ import graft.store.TableStore
   * table instead of everything.
   *
   * Crash contract: [[maintainTick]]'s folds are NOT idempotent (counts
-  * would double-merge, appends would duplicate) — they must run inside
-  * the same `_ingest_inflight` marker scope as the curated appends, and a
-  * recovery that rolled curated tables back must [[rebuild]] the views
-  * from them (full recompute as the RECOVERY path only; the happy path
-  * stays incremental). [[GhaPipeline.incrementalRunWithViews]] wires
-  * both: the folds run beside the curated appends, and the result tables
-  * are published from [[queryData]] beside the compactions.
+  * would double-merge, appends would duplicate) — they run inside the
+  * same `_ingest_inflight` scope as the curated appends, and a recovery
+  * restores each view to the log version that scope recorded, exactly as
+  * it restores the curated tables. [[rebuild]] (full recompute) serves
+  * only adoption and keyword changes. [[GhaPipeline.incrementalRunWithViews]]
+  * wires both: the folds run beside the curated appends, and the result
+  * tables are published from [[queryData]] beside the compactions.
   */
 object IncrementalViews {
 
@@ -92,31 +92,22 @@ object IncrementalViews {
         ()
       })
 
-  /** Counts merge: stored totals ∪ batch partials → sum by repo, into a
-    * new generation (the read of g<N> feeds the write of g<N+1>).
+  /** Counts merge: stored totals ∪ batch partials → sum by repo, one
+    * commit replacing the counts (the read of version N feeds the write of
+    * N+1).
     */
   private def maintainCounts(spark: SparkSession, batchWatch: DataFrame,
       mvDir: String): Unit = {
     val partial = batchWatch.groupBy("repo")
       .agg(count(lit(1)).cast(LongType).as("count"))
-    val merged = readCounts(spark, mvDir) match {
-      case Some(cur) => cur.unionByName(partial)
-        .groupBy("repo").agg(sum("count").cast(LongType).as("count"))
-      case None => partial
-    }
+    val merged = readCounts(spark, mvDir).unionByName(partial)
+      .groupBy("repo").agg(sum("count").cast(LongType).as("count"))
     TableStore.overwriteVersioned(merged, s"$mvDir/repo_counts")
   }
 
-  /** The stored counts, or None before the first fold. Resolves and lists
-    * the current generation once and reads exactly the listed files (the
-    * table is unpartitioned), instead of listing it again through
-    * `TableStore.read`.
-    */
-  private def readCounts(spark: SparkSession, mvDir: String): Option[DataFrame] = {
-    val files = TableStore.dataFiles(spark, s"$mvDir/repo_counts")
-    if (files.isEmpty) None
-    else Some(spark.read.schema(countsSchema).parquet(files: _*))
-  }
+  /** The stored counts; empty before the first fold. */
+  private def readCounts(spark: SparkSession, mvDir: String): DataFrame =
+    TableStore.read(spark, s"$mvDir/repo_counts", countsSchema)
 
   /** `query_data` (`preprocess.py:209-244`) over the views: identical
     * output to a full-history recompute on the same history — the scans
@@ -132,10 +123,7 @@ object IncrementalViews {
   def queryData(spark: SparkSession, mvDir: String,
       keyword: String = " dask", minWatches: Long = 5)
       : (DataFrame, DataFrame) = {
-    val popular = readCounts(spark, mvDir)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], countsSchema))
-      .filter(col("count") > minWatches)
+    val popular = readCounts(spark, mvDir).filter(col("count") > minWatches)
     val commits = TableStore
       .read(spark, s"$mvDir/kw_commits", GhaSchemas.curated("commit"))
       .join(popular, Seq("repo"))
@@ -151,31 +139,21 @@ object IncrementalViews {
     (commits, comments)
   }
 
-  /** Recovery/bootstrap: recompute every view from the curated store (the
-    * one full scan, paid only after a crash rollback or when adopting the
-    * views over an existing store).
+  /** Adoption: recompute every view from the curated store — the one full
+    * scan, paid when views are added to a store with history or rebuilt
+    * for another keyword. A curated table never created reads as empty.
     */
   def rebuild(spark: SparkSession, storeDir: String, mvDir: String,
       keyword: String = " dask"): Unit = {
     import GhaSchemas.curated
-    // a first-tick crash can leave some curated tables never created; the
-    // views still need a consistent (empty) rebuild — the same guard the
-    // tick's rollback applies per table
-    def readOrEmpty(name: String): DataFrame = {
-      val dir = s"$storeDir/$name"
-      try TableStore.read(spark, dir, curated(name))
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          curated(name))
-      }
-    }
-    TableStore.overwriteVersioned(readOrEmpty("watch").groupBy("repo")
+    def read(name: String): DataFrame =
+      TableStore.read(spark, s"$storeDir/$name", curated(name))
+    TableStore.overwriteVersioned(read("watch").groupBy("repo")
         .agg(count(lit(1)).cast(LongType).as("count")),
       s"$mvDir/repo_counts")
-    TableStore.overwriteVersioned(commitFilter(readOrEmpty("commit"), keyword),
+    TableStore.overwriteVersioned(commitFilter(read("commit"), keyword),
       s"$mvDir/kw_commits", partitionCols = Seq("date"))
-    TableStore.overwriteVersioned(commentFilter(readOrEmpty("comment"), keyword),
+    TableStore.overwriteVersioned(commentFilter(read("comment"), keyword),
       s"$mvDir/kw_comments", partitionCols = Seq("date"))
   }
 }

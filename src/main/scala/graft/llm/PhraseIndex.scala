@@ -118,8 +118,7 @@ object PhraseIndex {
     * candidate (files-read-bounded, asserted in PhraseIndexSpec), plus the
     * kilobyte sidecar.
     *
-    * `docsDir` is the document store (flat parquet dir or generation
-    * store; build its sidecar once with `BloomSkip.write(spark, docsDir,
+    * `docsDir` is the document store (flat parquet dir or log table; build its sidecar once with `BloomSkip.write(spark, docsDir,
     * Seq("doc_id"))` — files appended after the sidecar are kept
     * conservatively, never wrongly skipped). Degenerate regimes fall back
     * LOUDLY-DOCUMENTED rather than breaking the bound silently: a phrase
@@ -139,8 +138,7 @@ object PhraseIndex {
     checkMeta(spark, indexDir, n, nBuckets)
     val verify = concat(lit(" "), col("text"), lit(" "))
       .contains(s" $phrase ")
-    def fullDocs = spark.read.parquet(
-      graft.store.TableStore.resolveDataDir(spark, docsDir))
+    def fullDocs = graft.store.TableStore.read(spark, docsDir)
     val grams = phraseGramHashes(spark, phrase, n)
     if (grams.isEmpty)
       return fullDocs.filter(verify).select("doc_id")

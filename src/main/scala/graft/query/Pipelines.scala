@@ -150,7 +150,7 @@ object Pipelines {
         TableStore.appendEvolving(
           o.filter(col("o_orderkey") % 2 === 1)
             .select("o_orderkey", "o_orderpriority", "date"), dir)
-        TableStore.readEvolved(s, dir)
+        TableStore.read(s, dir)
           .agg(cnt.as("n_rows"),
             sum(when(col("o_orderpriority").isNull, 1L).otherwise(0L))
               .as("n_null_priority"),

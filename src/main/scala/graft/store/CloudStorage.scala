@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Unlike the reference's `AWS_S3_ALLOW_UNSAFE_RENAME=true` (needed because
   * delta-rs lacks a locking provider on S3), the engine's commit safety does
-  * not depend on rename atomicity: table visibility is gated on generation
-  * `_SUCCESS` markers (`TableStore`), and the fetch stage's temp+rename is
+  * not depend on rename at all: `TableStore` writes data files in place
+  * and commits a table version with one put-if-absent log file (atomic on
+  * S3 with conditional writes), and the fetch stage's temp+rename is
   * per-file idempotent, so a lost rename race re-downloads rather than
   * corrupts.
   */

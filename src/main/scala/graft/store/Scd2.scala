@@ -5,19 +5,19 @@ import org.apache.spark.sql.functions._
 
 /** S23: slowly-changing-dimension (type 2) maintenance — row-level
   * validity intervals, the warehouse capability BETWEEN table-grain time
-  * travel (a retained generation answers "the whole table as of generation
+  * travel (a retained log version answers "the whole table as of version
   * N") and row-grain MERGE (which overwrites history): every key keeps
   * its full attribute history as `[valid_from, valid_to)` versions, and
   * any past date is queryable with a plain predicate — no log replay, no
-  * generation archaeology. The reference's Delta tables get this from
+  * version archaeology. The reference's Delta tables get this from
   * hand-written MERGE recipes; here it is an operator.
   *
   * Layout and scale stance: a DIMENSION is small relative to facts (the
   * reference's six curated tables are all fact-shaped; dims are the
   * customer/part side of the star), so each apply REWRITES the dimension
-  * through [[TableStore.overwriteVersioned]] — one atomic generation
-  * swap, readers never see a half-applied batch, and the previous
-  * generation remains readable (crash rollback = do nothing). Row counts
+  * through [[TableStore.overwriteVersioned]] — one atomic log commit,
+  * readers never see a half-applied batch, and the previous version
+  * remains readable (crash rollback = do nothing). Row counts
   * grow only by the number of CHANGED keys per apply. Fact-side history
   * at 100 TB is the MERGE/append machinery's job, not this one's.
   *
@@ -58,7 +58,7 @@ object Scd2 {
     require(updates.select(keyCols.map(col): _*).distinct().count() == updCount,
       "update batch must carry exactly one row per key")
     // Optimistic transaction (Delta's retry loop): the whole read-derive
-    // body re-runs against the new current generation if another applier
+    // body re-runs against the new current version if another applier
     // committed first — two OVERLAPPING appliers both land, serially.
     TableStore.transactVersioned(spark, dir) {
       val dim = TableStore.read(spark, dir)

@@ -32,9 +32,9 @@ object Increments {
     * (`preprocess.py:181-186`). None when the table doesn't exist yet.
     *
     * NOT a full-table scan: `date` derives from `created_at`, so the global
-    * max lives in the lexically-last `date=` partition — [[watermarkScan]]
-    * reads exactly that one partition (directory listing is metadata-only;
-    * the reference's tx-log stats read is O(1) the same way). Hourly cost is
+    * max lives in the lexically-last `date` partition — [[watermarkScan]]
+    * reads exactly that partition's files, picked from the table's log
+    * (the reference's tx-log stats read is O(1) the same way). Hourly cost is
     * therefore O(one day's data) regardless of table size; non-partitioned
     * tables fall back to a full scan of Parquet footer-backed pages.
     */
@@ -45,34 +45,22 @@ object Increments {
       if (r.isNullAt(0)) None else Some(r.getTimestamp(0))
     }
 
-  /** The frame [[watermark]] aggregates over: just the latest `date=`
-    * partition of the table's current generation (the whole table when not
+  /** The frame [[watermark]] aggregates over: just the latest `date`
+    * partition of the table's current version (the whole table when not
     * date-partitioned). Exposed so tests can assert the scan's `inputFiles`
     * never leave the latest partition. None if the table is missing/empty.
     */
   def watermarkScan(spark: SparkSession, tableDir: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val dataDir = graft.store.TableStore.resolveDataDir(spark, tableDir)
-    val p = new Path(dataDir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return None
-    val dates = f.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("date="))
-      // the null-date partition sorts AFTER every real date ('_' > '9');
-      // picking it would read max(created_at) over null rows -> watermark
-      // None -> full re-backfill with duplicated history
-      .filter(_ != "date=__HIVE_DEFAULT_PARTITION__")
-    try {
-      if (dates.nonEmpty)
-        // read ONLY the latest partition dir; basePath keeps `date` a column
-        Some(spark.read.option("basePath", dataDir)
-          .parquet(s"$dataDir/${dates.max}"))
-      else Some(spark.read.parquet(dataDir))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => None
-    }
+    import graft.store.TableStore
+    val s = TableStore.snapshot(spark, tableDir)
+    // the null-date partition would sort AFTER every real date; picking it
+    // would read max(created_at) over null rows -> watermark None -> full
+    // re-backfill with duplicated history
+    val dates = s.files.values.flatMap(a => Option(a.date))
+    if (s.files.isEmpty) None
+    else Some(TableStore.frame(spark, tableDir, s,
+      if (dates.isEmpty) s.files.values
+      else s.files.values.filter(_.date == dates.max)))
   }
 
   /** T2: incremental range [start, stop] — start is the hour STRICTLY after

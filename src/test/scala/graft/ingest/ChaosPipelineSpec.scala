@@ -219,18 +219,6 @@ class ChaosPipelineSpec extends AnyFunSuite with SparkFixture {
         assert(finished.asScala.toSet === phase.filterNot(_ == victim).toSet,
           s"$victim: siblings still running when the tick returned: " +
             s"only $finished had finished")
-        val f = new org.apache.hadoop.fs.Path(store)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        for (dir <- tables.map(t => s"$store/$t") ++ views.map(v => s"$mv/$v")) {
-          val staging = new org.apache.hadoop.fs.Path(s"$dir/.staging")
-          val inFlight = if (!f.exists(staging)) Nil
-            else f.listStatus(staging).toSeq.map(_.getPath.getName)
-              .filter(_.startsWith("append-"))
-          assert(inFlight.isEmpty, s"$victim: $dir has staged appends $inFlight")
-          assert(!f.exists(new org.apache.hadoop.fs.Path(
-            s"$dir/compact_stage.tmp")),
-            s"$victim: $dir has a compaction stage left")
-        }
       }
     }
   }

@@ -53,13 +53,11 @@ class ContinuousPipelineSpec extends AnyFunSuite with SparkFixture {
     // the inflight marker is still up, the hwm never advanced ---------------
     land(landing, 2, Seq(watchLine("w7", 2), watchLine("w8", 2),
       pushLine("bob", 2)))
-    val hour2 = s"$landing/2024-02-29-2.json"
-    var folded: Map[String, org.apache.spark.sql.DataFrame] = Map.empty
-    Files.write(Paths.get(s"$store/_ingest_inflight"),
-      "2024-02-29T02:00:00Z|2024-02-29T02:00:00Z".getBytes)
-    GhaPipeline.ingestWith(spark, Seq(hour2), store) { tables =>
-      IncrementalViews.maintainTick(spark, tables, mv)
-    }
+    GhaPipeline.chaosHook = p =>
+      if (p == "post-ingest") throw new RuntimeException("chaos kill")
+    try intercept[RuntimeException](GhaPipeline.incrementalRunWithViews(
+      spark, landing, store, mv, t, backfill))
+    finally GhaPipeline.chaosHook = _ => ()
     // dead: no hwm advance, no marker cleanup. The half-committed state is
     // visible (8 watches in curated, 8 in the counts view).
     assert(TableStore.read(spark, s"$store/watch",

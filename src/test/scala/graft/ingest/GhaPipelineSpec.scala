@@ -192,12 +192,14 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
     tick(dir, "2024-02-29T02:10:00Z")
     assert(comments(dir) === Seq("u1"))
 
-    // simulate a run that appended hour 2 but DIED before advancing the hwm:
-    // data is in, inflight marker is still there
-    val hour2 = land(dir, 2, Seq(commentLine("u2", 2)))
-    GhaPipeline.ingestWith(spark, Seq(hour2), s"$dir/store")(_ => Nil)
-    Files.write(Paths.get(s"$dir/store/_ingest_inflight"),
-      "2024-02-29T02:00:00Z|2024-02-29T02:00:00Z".getBytes)
+    // a run that appended hour 2 but DIED before advancing the hwm: data
+    // is in, inflight marker is still there
+    land(dir, 2, Seq(commentLine("u2", 2)))
+    GhaPipeline.chaosHook = p =>
+      if (p == "post-ingest") throw new RuntimeException("chaos kill")
+    try intercept[RuntimeException](tick(dir, "2024-02-29T03:10:00Z"))
+    finally GhaPipeline.chaosHook = _ => ()
+    assert(Files.exists(Paths.get(s"$dir/store/_ingest_inflight")))
     assert(comments(dir) === Seq("u1", "u2"))
 
     // next tick: recovery rolls hour 2 back, then re-ingests it exactly once
@@ -209,12 +211,17 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
     val dir = tmp("gha_crash2")
     land(dir, 1, Seq(commentLine("u1", 1)))
     tick(dir, "2024-02-29T03:10:00Z")
-    // hwm says hour 1 is committed; a stale marker for hour 1 must be a no-op
-    Files.write(Paths.get(s"$dir/store/_ingest_inflight"),
-      "2024-02-29T01:00:00Z|2024-02-29T01:00:00Z".getBytes)
-    assert(tick(dir, "2024-02-29T03:10:00Z").isEmpty) // no re-ingest
-    // a rollback would have removed u1 for good: the hwm is past hour 1
-    assert(comments(dir) === Seq("u1"))
+    land(dir, 2, Seq(commentLine("u2", 2)))
+    // the tick dies after the hwm names hour 2, before the marker clears
+    GhaPipeline.chaosHook = p =>
+      if (p == "post-hwm") throw new RuntimeException("chaos kill")
+    try intercept[RuntimeException](tick(dir, "2024-02-29T04:10:00Z"))
+    finally GhaPipeline.chaosHook = _ => ()
+    assert(Files.exists(Paths.get(s"$dir/store/_ingest_inflight")))
+    // the stale marker for hour 2 must be a no-op
+    assert(tick(dir, "2024-02-29T04:10:00Z").isEmpty) // no re-ingest
+    // a rollback would have removed u2 for good: the hwm is past hour 2
+    assert(comments(dir) === Seq("u1", "u2"))
     assert(!Files.exists(Paths.get(s"$dir/store/_ingest_inflight")))
   }
 
@@ -313,6 +320,9 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
     assert(closed.last.filter(_._2 > 0).keySet === Set("watch", "commit", "comment"))
     assert(filesIn(dir, "2024-03-01").filter(_._2 > 0) ===
       Map("watch" -> 1, "commit" -> 1, "comment" -> 1))
+    // the keyword views compact the closed date under the same rule
+    for (v <- Seq("kw_commits", "kw_comments"))
+      assert(TickFiles.fileSets(spark, s"$dir/mv/$v", "2024-02-29").size === 1, v)
   }
 
   test("an hour-0 batch whose rows all carry the previous date compacts " +
@@ -331,6 +341,32 @@ class GhaPipelineSpec extends AnyFunSuite with SparkFixture {
     assert(filesIn(dir, "2024-02-29").filter(_._2 > 0) ===
       Map("watch" -> 1, "commit" -> 1, "comment" -> 1))
     assert(resultsMatchRecompute(dir) === 2L)
+  }
+
+  test("a crashed tick whose hour-0 file holds a previous-date row rolls " +
+    "back exactly: each row is stored once and the results equal the " +
+    "recompute") {
+    for (kp <- Seq("post-ingest", "post-compact:comment")) {
+      val dir = tmp("gha_rollback")
+      val backfill = "2024-02-29T23:00:00Z"
+      landAt(dir, backfill, (1 to 6).map(i =>
+          watchAt(s"w$i", "org/popular", "2024-02-29T23:05:00Z")) :+
+        commentAt("ada", "org/popular", "try dask", "2024-02-29T23:20:00Z"))
+      assert(tickFrom(dir, "2024-03-01T00:10:00Z", backfill).size === 1)
+      // the 00:00 file carries one comment from the previous date
+      landAt(dir, "2024-03-01T00:00:00Z", Seq(
+        commentAt("late", "org/popular", "use dask late", "2024-02-29T23:59:50Z"),
+        commentAt("early", "org/popular", "use dask early", "2024-03-01T00:10:00Z")))
+      GhaPipeline.chaosHook = p => if (p == kp) {
+        GhaPipeline.chaosHook = _ => ()
+        throw new RuntimeException(s"chaos kill @ $kp")
+      }
+      try intercept[RuntimeException](tickFrom(dir, "2024-03-01T01:10:00Z", backfill))
+      finally GhaPipeline.chaosHook = _ => ()
+      assert(tickFrom(dir, "2024-03-01T01:10:00Z", backfill).size === 1, kp)
+      assert(comments(dir) === Seq("ada", "early", "late"), kp)
+      assert(resultsMatchRecompute(dir) === 3L, kp)
+    }
   }
 
   test("an empty hour at the boundary closes the date the previous tick " +

@@ -87,26 +87,23 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
       "a sidecar-less file must never be skipped")
   }
 
-  test("compaction supersedes the bloom sidecar safely; vacuum reclaims it") {
+  test("compaction keeps the bloom sidecar safe: its new files are kept " +
+    "until a rebuild indexes them") {
     val dir = scatteredStore()
-    // compact writes generation N+1; its bloom sidecar does not exist yet,
-    // so the pruned read falls back to keep-everything — never stale bits
+    // the compacted files have no sidecar rows yet, so the pruned read
+    // keeps them all — never stale bits
     TableStore.compact(spark, dir)
     val pr = BloomSkip.readPrunedEq(spark, dir, "id", Seq(17L))
     assert(pr.filesKept === pr.filesTotal)
     assert(pr.df.filter($"id" === 17L).count() === 1)
-    // rebuilding targets the live generation; the orphaned old-generation
-    // sidecar is reclaimed by the NEXT compaction's vacuum
+    // rebuilding indexes the current version's files in place
     BloomSkip.write(spark, dir, Seq("id"))
     val pr2 = BloomSkip.readPrunedEq(spark, dir, "id", Seq(17L))
     assert(pr2.filesKept < pr2.filesTotal)
-    TableStore.compact(spark, dir)
-    TableStore.compact(spark, dir) // second swap GCs generation-0 siblings
+    assert(pr2.df.filter($"id" === 17L).count() === 1)
     val root = new java.io.File(dir.stripPrefix("file:"))
-    val orphans = root.listFiles().map(_.getName)
-      .filter(n => n.startsWith("bloom_g") || n.startsWith("stats_g"))
-      .filter(_.endsWith("g0"))
-    assert(orphans.isEmpty, s"generation-0 sidecars leaked: ${orphans.toSeq}")
+    assert(root.listFiles().map(_.getName).filter(_.contains("bloom")).toSeq ===
+      Seq("_bloom"))
   }
 
   test("a 3k-value probe stays a constant-size plan (literal probe array " +
@@ -126,8 +123,8 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
 
   test("a FLAT table whose root dir is NAMED g<digits> is still a flat " +
     "table: sidecar lands inside it, not orphaned beside it") {
-    // layout is decided by what currentGeneration RESOLVES, never by the
-    // directory's name — the name-pattern trap this pins
+    // the sidecar's place never depends on the directory's name — the
+    // name-pattern trap this pins
     val dir = tmpDir("bloom") + "/g5"
     (0L until 400L).map { i =>
       (i, s"p$i", java.sql.Date.valueOf(s"2024-01-0${i % 4 + 1}"))
@@ -146,28 +143,6 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
     assert(pr.statsSource === "bloom")
     assert(pr.filesKept < pr.filesTotal)
     assert(pr.df.filter($"id" === 17L).count() === 1)
-  }
-
-  test("a flat table's PRE-_bloom sidecar at the legacy sibling location " +
-    "keeps being consulted until the next write rebuilds it in place") {
-    val dir = tmpDir("bloom") + "/legacy"
-    (0L until 400L).map { i =>
-      (i, s"p$i", java.sql.Date.valueOf(s"2024-01-0${i % 4 + 1}"))
-    }.toDF("id", "payload", "date")
-      .write.mode("overwrite").partitionBy("date").parquet(dir)
-    val hp = new org.apache.hadoop.fs.Path(dir)
-    val f = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false)
-    BloomSkip.write(spark, dir, Seq("id"))
-    // relocate the sidecar to where the pre-change convention put it
-    assert(f.rename(new org.apache.hadoop.fs.Path(dir, "_bloom"),
-      new org.apache.hadoop.fs.Path(hp.getParent, "bloom_legacy")))
-    val pr = BloomSkip.readPrunedEq(spark, dir, "id", Seq(17L))
-    assert(pr.statsSource === "bloom")
-    assert(pr.filesKept < pr.filesTotal,
-      "legacy sibling sidecar ignored — skipping silently lost")
-    assert(pr.df.filter($"id" === 17L).count() === 1)
-    f.delete(new org.apache.hadoop.fs.Path(hp.getParent, "bloom_legacy"), true)
   }
 
   test("probe positions are stable across build and probe sides") {

@@ -1,40 +1,26 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Inspection of a versioned table's retained generations: which `g<N>`
-  * directories are committed, and the data of one of them. The store keeps
-  * the current generation and the one it superseded; the specs read the
-  * old one to check retention, vacuum and rollback.
+/** Inspection of a log table's retained versions: which versions a reader
+  * can still travel to, and the data of one of them. The specs read old
+  * versions to check retention, vacuum and rollback.
   */
 object Generations {
 
-  /** Committed generations of the table, oldest first. */
-  def list(spark: SparkSession, dir: String): Seq[Int] = {
-    val f = TableStore.fs(spark, dir)
-    val root = new Path(dir)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).iterator
-      .filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName match {
-        case TableStore.GenName(n) if f.exists(new Path(s.getPath, "_SUCCESS")) =>
-          Some(n.toInt)
-        case _ => None
-      })
-      .toSeq.sorted
+  /** Retained versions of the table, oldest first (empty before the first
+    * commit).
+    */
+  def list(spark: SparkSession, dir: String): Seq[Long] = {
+    val latest = TableStore.snapshot(spark, dir).version
+    if (latest < 0) Nil else math.max(0L, latest - TableStore.Retained) to latest
   }
 
-  /** One retained generation, read with the table's declared schema when
-    * it has one; fails naming the retained set when it was vacuumed.
+  /** One retained version; fails naming the retained window when it was
+    * vacuumed.
     */
-  def read(spark: SparkSession, dir: String, generation: Int): DataFrame = {
-    val gens = list(spark, dir)
-    require(gens.contains(generation),
-      s"generation $generation not present for $dir (retained: " +
-        s"${gens.mkString(", ")}) — older generations are vacuumed")
-    TableStore.declaredSchema(spark, dir)
-      .fold(spark.read)(s => spark.read.schema(s))
-      .parquet(s"$dir/g$generation")
+  def read(spark: SparkSession, dir: String, version: Long): DataFrame = {
+    val s = TableStore.snapshot(spark, dir, Some(version))
+    TableStore.frame(spark, dir, s, s.files.values)
   }
 }

@@ -37,15 +37,10 @@ class MergeSpec extends AnyFunSuite with SparkFixture {
     val dir = tmpDir("merge") + "/t"
     TableStore.append(mkRows("2024-01-01", 0 until 10, "v0-"), dir)
     TableStore.append(mkRows("2024-01-02", 10 until 20, "v0-"), dir)
-    val dataDir = TableStore.resolveDataDir(spark, dir)
-      .stripPrefix("file:")
-    def files(day: String): Map[String, Long] = {
-      val d = new File(s"$dataDir/date=$day")
-      Option(d.listFiles()).getOrElse(
-        fail(s"missing partition dir $d"))
-        .filter(_.getName.endsWith(".parquet"))
+    def files(day: String): Map[String, Long] =
+      TableStore.dataFiles(spark, dir).filter(_.contains(s"date=$day/"))
+        .map(f => new File(new java.net.URI(f).getPath))
         .map(f => f.getName -> f.lastModified()).toMap
-    }
     val day2Before = files("2024-01-02")
     TableStore.merge(spark, mkRows("2024-01-01", 3 until 5, "v1-"), dir, Seq("id"))
     // untouched partition: byte-identical file list, mtimes unchanged

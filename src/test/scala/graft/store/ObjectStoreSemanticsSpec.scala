@@ -12,9 +12,10 @@ import graft.ingest.GhaPipeline
   * ([[NonAtomicRenameFs]]: rename = copy-then-delete, with crash windows) —
   * the sandbox stand-in for the reference's S3 deployment
   * (`/root/reference/preprocess.py:30,144-147`). What these tests pin:
-  * nothing in TableStore/GhaPipeline silently assumes an atomic rename or
-  * POSIX directory, so the same code drives `s3a://` via
-  * `CloudStorage.applyS3FromEnv` without a correctness cliff.
+  * TableStore never renames (its commit is a put-if-absent log version),
+  * and GhaPipeline's marker swaps survive rename crash windows, so the
+  * same code drives `s3a://` via `CloudStorage.applyS3FromEnv` without a
+  * correctness cliff.
   */
 class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
 
@@ -28,7 +29,8 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
   private def commentLine(user: String, h: Int) =
     s"""{"type":"IssueCommentEvent","actor":{"login":"$user"},"repo":{"name":"r/x"},"created_at":"2024-02-29T0$h:30:00Z","payload":{"issue":{"number":1,"title":"t","created_at":"2024-02-29T01:00:00Z","user":{"login":"x"}},"comment":{"body":"b","author_association":"NONE"}}}"""
 
-  test("append → compact → prune → vacuum all run through non-atomic renames") {
+  test("append, merge, compactDates, compact and overwriteVersioned make " +
+    "zero renames on an object store") {
     NonAtomicRenameFs.reset()
     val dir = mockDir("objstore_")
     val tbl = s"$dir/events_t"
@@ -41,59 +43,31 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
     TableStore.append(df.repartition(4), tbl)
     TableStore.append(df.repartition(4), tbl) // second batch: 800 rows total
     assert(TableStore.read(spark, tbl).count() === 800)
-
+    TableStore.merge(spark, df.filter($"event_id" <= 3)
+      .withColumn("value", lit(-1.0)), tbl, Seq("event_id"))
+    assert(TableStore.read(spark, tbl).count() === 800 - 3)
+    val (b1, a1) = TableStore.compactDates(spark, tbl, Seq("2024-03-01"))
+    assert(b1 > a1)
     val (before, after) = TableStore.compact(spark, tbl)
     assert(before > after)
-    assert(TableStore.read(spark, tbl).count() === 800)
-    // the swap committed a fresh generation on the mock store
-    assert(TableStore.currentGeneration(spark, tbl).map(_._1) === Some(1))
+    assert(TableStore.read(spark, tbl).count() === 797)
 
-    // pruned read plans from the compacted generation's footers
+    // pruned read plans from the compacted version's footers
     val pruned = TableStore.readPruned(spark, tbl,
       Seq(TableStore.ColRange("user_id", 2, 2)))
     assert(pruned.df.filter(col("user_id") === 2).count() ===
-      df.filter(col("user_id") === 2).count() * 2)
-
-    // a second compact vacuums g0; the current generation serves reads
-    TableStore.compact(spark, tbl)
-    assert(Generations.list(spark, tbl) === Seq(1, 2))
-    assert(TableStore.read(spark, tbl).count() === 800)
-    // sanity: the mock FS actually handled this table's traffic
-    assert(NonAtomicRenameFs.renames.get() > 0)
+      TableStore.read(spark, tbl).filter(col("user_id") === 2).count())
+    val counts = s"$dir/counts"
+    TableStore.overwriteVersioned(Seq(("a", 1L)).toDF("k", "n"), counts)
+    TableStore.overwriteVersioned(Seq(("a", 2L)).toDF("k", "n"), counts)
+    assert(TableStore.read(spark, counts).as[(String, Long)].collect().toSeq ===
+      Seq(("a", 2L)))
+    assert(NonAtomicRenameFs.renames.get() === 0)
   }
 
-  test("a generation visible mid-copy (no _SUCCESS yet) is never read") {
+  test("data files written but not yet committed are never read") {
     NonAtomicRenameFs.reset()
     val dir = mockDir("objstore_gate_")
-    val tbl = s"$dir/t"
-    val spark2 = spark
-    import spark2.implicits._
-    val df = (1 to 50).map(i => (i.toLong, java.sql.Date.valueOf("2024-03-01")))
-      .toDF("event_id", "date")
-    TableStore.append(df, tbl)
-    assert(TableStore.read(spark, tbl).count() === 50)
-
-    // simulate the copy phase of a non-atomic publish: g1 exists and even
-    // holds data files, but its _SUCCESS has not landed — an object-store
-    // lister WILL surface this dir to readers mid-swap
-    val local = tbl.stripPrefix("mock3://")
-    val g0 = Paths.get(local, "g0")
-    val g1 = Paths.get(local, "g1")
-    Files.createDirectories(g1)
-    val dateDir = Files.createDirectories(g1.resolve("date=2024-03-01"))
-    Files.list(g0.resolve("date=2024-03-01")).forEach { p =>
-      if (p.getFileName.toString.endsWith(".parquet"))
-        Files.copy(p, dateDir.resolve(p.getFileName))
-    }
-    // readers must stay on g0 — the half-copied g1 is invisible
-    assert(TableStore.currentGeneration(spark, tbl).map(_._1) === Some(0))
-    assert(TableStore.read(spark, tbl).count() === 50)
-  }
-
-  test("compactDates mid-publish crash on an object store re-publishes " +
-      "from the committed stage") {
-    NonAtomicRenameFs.reset()
-    val dir = mockDir("objstore_cd_")
     val tbl = s"$dir/t"
     val spark2 = spark
     import spark2.implicits._
@@ -101,65 +75,25 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
         ((off + i).toLong, java.sql.Date.valueOf(s"2024-03-0${i % 2 + 1}")))
       .toDF("event_id", "date")
     TableStore.append(batch(0).repartition(3), tbl)
-    TableStore.compact(spark, tbl) // generational layout (g1)
-    TableStore.append(batch(1000).repartition(3), tbl) // small files again
-    val filesBefore = TableStore.dataFiles(spark, tbl).size
-
-    // the publish's first partition rename dies AFTER the copy landed —
-    // the S3 crash signature: dst complete, staged source never deleted
-    NonAtomicRenameFs.failPathContains = "compact_stage.tmp"
-    NonAtomicRenameFs.failMode = "after-copy"
-    intercept[IllegalArgumentException] {
+    TableStore.append(batch(1000).repartition(3), tbl)
+    val files = TableStore.dataFiles(spark, tbl)
+    // the writer dies after its files landed in the date= dirs an
+    // object-store lister would surface, before its log version exists
+    TableStore.beforeCommitHook = () => throw new RuntimeException("killed")
+    try intercept[RuntimeException] {
       TableStore.compactDates(spark, tbl, Seq("2024-03-01", "2024-03-02"))
-    }
-    NonAtomicRenameFs.reset()
-    // rows are never lost in between: the generation keeps its _SUCCESS
+    } finally TableStore.beforeCommitHook = () => ()
+    assert(TableStore.dataFiles(spark, tbl) === files)
     assert(TableStore.read(spark, tbl).count() === 400)
-
-    // the retry finds the committed stage and finishes the publish
+    // the retry compacts; rows are never lost or doubled in between
     TableStore.compactDates(spark, tbl, Seq("2024-03-01", "2024-03-02"))
-    assert(TableStore.read(spark, tbl).count() === 400)
     assert(TableStore.read(spark, tbl).select("event_id").distinct().count()
       === 400)
-    val filesAfter = TableStore.dataFiles(spark, tbl).size
-    assert(filesAfter < filesBefore) // bin-pack actually landed
-    // the stage is gone — nothing left to double-publish
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
-      tbl.stripPrefix("mock3://"), "compact_stage.tmp")))
+    assert(TableStore.dataFiles(spark, tbl).size < files.size)
   }
 
-  test("a stage that fully published (all renames landed, delete pending) " +
-      "recovers as a no-op instead of wedging compaction") {
-    NonAtomicRenameFs.reset()
-    val dir = mockDir("objstore_cd2_")
-    val tbl = s"$dir/t"
-    val spark2 = spark
-    import spark2.implicits._
-    val df = (1 to 200).map(i =>
-        (i.toLong, java.sql.Date.valueOf(s"2024-03-0${i % 2 + 1}")))
-      .toDF("event_id", "date")
-    TableStore.append(df.repartition(3), tbl)
-    TableStore.compact(spark, tbl)
-    // manufacture the LAST crash window of a compactDates publish: every
-    // partition rename landed (the stage holds no date= dirs any more) but
-    // the stage itself — _SUCCESS included — was never deleted
-    val stale = Paths.get(tbl.stripPrefix("mock3://"), "compact_stage.tmp")
-    Files.createDirectories(stale)
-    Files.createFile(stale.resolve("_SUCCESS"))
-    // the next tick's recoverStage must treat this as already-published
-    // (nothing left to rename) and then run its own compaction normally
-    TableStore.compactDates(spark, tbl, Seq("2024-03-01", "2024-03-02"))
-    assert(!Files.exists(stale))
-    assert(TableStore.read(spark, tbl).count() === 200)
-    // pruned reads still plan over the published generation
-    val pruned = TableStore.readPruned(spark, tbl,
-      Seq(TableStore.ColRange("event_id", 1, 5)))
-    assert(pruned.df.filter(col("event_id") <= 5).count() === 5)
-  }
-
-  test("a contended claim on the object store loses CLEANLY — the " +
-    "conditional-create adjudication for _commit.lock / g<N>.claim / " +
-    "date claims") {
+  test("a contended log version on the object store: a conflicting winner " +
+    "fails the writer CLEANLY, a harmless one is committed past") {
     NonAtomicRenameFs.reset()
     val dir = mockDir("objstore_claim_")
     val tbl = s"$dir/t"
@@ -169,41 +103,32 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
         (i, s"u$i", java.sql.Date.valueOf("2024-03-01")))
       .toDF("id", "user", "date")
     TableStore.append(df, tbl)
-
     val f = new Path(tbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // another writer holds the date claim, created through the store's
-    // create-exclusive (the conditional-PUT stand-in — see atomicCreate's
-    // deployment adjudication): a same-date merge must fail BEFORE touching
-    // any file, leaving the store untorn
-    val claim = new Path(tbl, "_claims/date=2024-03-01.claim")
-    f.mkdirs(claim.getParent)
-    f.create(claim, false).close()
-    val e = intercept[TableStore.ConcurrentWriteException] {
-      TableStore.merge(spark,
-        df.limit(3).withColumn("user", org.apache.spark.sql.functions.lit("X")),
-        tbl, Seq("id"))
+    val v = TableStore.version(spark, tbl)
+    def logFile(n: Long) = new Path(tbl, f"_log/$n%020d.json")
+    val file = TableStore.snapshot(spark, tbl).files.keys.head
+    def winner(line: String): () => Unit = () => {
+      TableStore.beforeCommitHook = () => ()
+      val out = f.create(logFile(v + 1), false)
+      try out.write((line + "\n").getBytes("UTF-8")) finally out.close()
     }
-    assert(e.getMessage.contains("rewrite claim"))
-    val back = TableStore.read(spark, tbl)
-    assert(back.count() === 10)
-    assert(back.filter(col("user") === "X").count() === 0)
-
-    // a contended generation claim fails a compaction the same clean way
-    val gclaim = new Path(tbl, "g1.claim")
-    f.create(gclaim, false).close()
-    val e2 = intercept[TableStore.ConcurrentWriteException] {
-      TableStore.compact(spark, tbl)
-    }
-    assert(e2.getMessage.contains("holds the claim"))
-
-    // holders release; both operations then converge on the object store
-    f.delete(claim, false)
-    f.delete(gclaim, false)
-    TableStore.merge(spark,
-      df.limit(3).withColumn("user", org.apache.spark.sql.functions.lit("X")),
-      tbl, Seq("id"))
-    TableStore.compact(spark, tbl)
+    val upd = df.limit(3).withColumn("user", lit("X"))
+    // another writer takes the next version (through the store's
+    // create-exclusive, the conditional-PUT stand-in) removing the file
+    // this merge rewrites: the merge must fail and add nothing
+    TableStore.beforeCommitHook = winner(s"""{"remove":{"path":"$file"}}""")
+    val e = try intercept[TableStore.ConcurrentWriteException] {
+      TableStore.merge(spark, upd, tbl, Seq("id"))
+    } finally TableStore.beforeCommitHook = () => ()
+    assert(e.getMessage.contains("removed"))
+    assert(TableStore.version(spark, tbl) === v + 1)
+    // a winner touching nothing this writer touches is committed past
+    f.delete(logFile(v + 1), false)
+    TableStore.beforeCommitHook = winner("""{"op":"other"}""")
+    try TableStore.merge(spark, upd, tbl, Seq("id"))
+    finally TableStore.beforeCommitHook = () => ()
     val after = TableStore.read(spark, tbl)
+    assert(TableStore.version(spark, tbl) === v + 2)
     assert(after.count() === 10)
     assert(after.filter(col("user") === "X").count() === 3)
   }

@@ -45,33 +45,28 @@ class QuarantineSpec extends AnyFunSuite with SparkFixture {
     assert(back.select(countDistinct("date")).head().getLong(0) === 2)
     // the torn bytes are preserved for forensics, out of readers' sight
     val q = new java.io.File(
-      new java.net.URI(TableStore.resolveDataDir(spark, dir)).getPath,
-      "_quarantine")
-    // local FS renames drag the hidden .crc sidecar along — count data
+      new java.net.URI(dir).getPath, "_quarantine")
+    // the local FS writes a hidden .crc sidecar beside the copy — count data
     val moved = q.listFiles().filter(!_.getName.startsWith("."))
     assert(q.isDirectory && moved.length === 1, moved.mkString(","))
   }
 
-  test("a failed quarantine move fails LOUDLY instead of reporting success") {
-    // r7 (ADVICE): rename's boolean was ignored — a file that could not
-    // move (destination already occupied) was still reported quarantined
-    // while staying in the read path. Recreate that exact collision: sweep
-    // a torn file, then put a NEW torn file at the same path so the next
-    // sweep's rename target exists.
+  test("a quarantined file leaves the read path for good: new bytes at " +
+    "its path are never read back") {
+    // sweep a torn file, then put NEW torn bytes at the same path: the
+    // quarantine commit removed the path from the table, so nothing reads
+    // or re-sweeps it
     val dir = tmpDir("quar") + "/t"
     build(dir)
     val victim = truncateFileOf(dir, "2024-05-02")
     assert(TableStore.quarantineCorrupt(spark, dir).size === 1)
     val victimPath = Paths.get(new java.net.URI(victim).getPath)
     Files.write(victimPath, Array.fill[Byte](10)(7))
-    val e = intercept[IllegalArgumentException] {
-      TableStore.quarantineCorrupt(spark, dir)
-    }
-    assert(e.getMessage.contains("quarantine move failed"),
-      e.getMessage.take(200))
-    // and the file is demonstrably still in the read path (the honest
-    // outcome the old silent success hid)
-    assert(TableStore.dataFiles(spark, dir).exists(_ == victim))
+    // the log no longer names the path: the sweep has nothing to do and
+    // readers never open it
+    assert(TableStore.quarantineCorrupt(spark, dir).isEmpty)
+    assert(!TableStore.dataFiles(spark, dir).contains(victim))
+    assert(TableStore.read(spark, dir).count() === 200)
   }
 
   test("clean store: the sweep is a no-op; sweeping twice finds nothing") {

@@ -102,27 +102,25 @@ class ReplaceWhereSpec extends AnyFunSuite with SparkFixture {
     assert(TableStore.read(spark, dir).orderBy("id").collect().toSeq === once)
   }
 
-  test("crash between the drop and the upsert converges on rerun (r7 ordering)") {
-    // r7 reordered the sweep: predicate-emptied partitions drop BEFORE the
-    // repopulating upsert, so a crash between the two leaves missing data,
-    // never stale predicate rows beside committed replacements. Simulate
-    // the exact mid-crash state (drops applied, upsert not) and show the
-    // same replaceWhere call converges to the clean-run result.
+  test("a replaceWhere that dies before its commit changes nothing; the " +
+    "rerun converges to the clean-run result") {
+    // the swap of every touched date is one log commit: a crash before it
+    // leaves the old version whole (no half-dropped slice)
     val clean = tmpDir("replace") + "/clean"
     val crashed = tmpDir("replace") + "/crashed"
     for (dir <- Seq(clean, crashed)) build(dir)
     val batch = mk("2024-01-02", 100 until 105, "rebuilt")
     val pred = $"date" >= "2024-01-02"
     TableStore.replaceWhere(spark, batch, clean, pred)
-    // mid-crash state on `crashed`: 01-03 (emptied) already dropped,
-    // 01-02 still holds its STALE pre-replace rows
-    TableStore.dropPartition(spark, crashed, "2024-01-03")
-    assert(TableStore.read(spark, crashed)
-      .filter($"date" === "2024-01-02" && $"tag" === "base").count() === 10)
-    TableStore.replaceWhere(spark, batch, crashed, pred)
     def state(dir: String) = TableStore.read(spark, dir)
       .select("id", "tag", "date").as[(Int, String, java.sql.Date)]
       .collect().sortBy(_._1).toSeq
+    val before = state(crashed)
+    TableStore.beforeCommitHook = () => throw new RuntimeException("killed")
+    try intercept[RuntimeException](TableStore.replaceWhere(spark, batch, crashed, pred))
+    finally TableStore.beforeCommitHook = () => ()
+    assert(state(crashed) === before)
+    TableStore.replaceWhere(spark, batch, crashed, pred)
     assert(state(crashed) === state(clean))
   }
 

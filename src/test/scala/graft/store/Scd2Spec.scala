@@ -119,10 +119,12 @@ class Scd2Spec extends AnyFunSuite with SparkFixture {
   test("each apply is one atomic generation swap: the prior generation " +
     "still reads while the new one commits") {
     val dir = newDim()
+    val before = TableStore.read(spark, dir).collect().map(_.toString).sorted
     Scd2.apply(spark, dir, Seq((1L, "platinum", 10.0)).toDF("id", "tier", "bal"),
       Seq("id"), d("2024-02-01"))
-    // two generations on disk (retainGenerations default 2)
-    val gens = new java.io.File(dir).list().filter(_.startsWith("g")).sorted
-    assert(gens.length == 2, gens.mkString(","))
+    // init and apply: two versions, the first still readable as it was
+    assert(Generations.list(spark, dir) === Seq(0L, 1L))
+    assert(Generations.read(spark, dir, 0).collect().map(_.toString).sorted
+      === before)
   }
 }

@@ -18,12 +18,12 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
     TableStore.appendEvolving(
       Seq((3L, "hot", "2024-01-02"))
         .toDF("id", "tag", "date").withColumn("date", $"date".cast("date")), dir)
-    val got = TableStore.readEvolved(spark, dir)
+    val got = TableStore.read(spark, dir)
       .select("id", "tag").orderBy("id")
       .collect().map(r => (r.getLong(0), Option(r.getString(1))))
     assert(got === Array(1L -> None, 2L -> None, 3L -> Some("hot")))
     // declared schema is the widened contract
-    val s = TableStore.declaredSchema(spark, dir).get
+    val s = TableStore.snapshot(spark, dir).schema.get
     assert(s.fieldNames.toSeq === Seq("id", "date", "tag"))
   }
 
@@ -47,9 +47,9 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
     TableStore.appendEvolving(
       Seq((2L, "2024-01-02")).toDF("id", "date")
         .withColumn("date", $"date".cast("date")), dir)
-    val s = TableStore.declaredSchema(spark, dir).get
+    val s = TableStore.snapshot(spark, dir).schema.get
     assert(s.fieldNames.contains("score"))
-    val rows = TableStore.readEvolved(spark, dir).orderBy("id")
+    val rows = TableStore.read(spark, dir).orderBy("id")
       .select("id", "score")
       .collect().map(r => (r.getLong(0), Option(r.get(1))))
     assert(rows === Array(1L -> Some(0.5), 2L -> None))
@@ -64,21 +64,21 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
       Seq((3L, 9L, "2024-01-01")).toDF("id", "extra", "date")
         .withColumn("date", $"date".cast("date")), dir)
     TableStore.compact(spark, dir)
-    val got = TableStore.readEvolved(spark, dir)
+    val got = TableStore.read(spark, dir)
       .select("id", "extra").orderBy("id")
       .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
     assert(got === Array(1L -> -1L, 2L -> -1L, 3L -> 9L))
-    // post-compact files all carry the full schema; sidecar still present
-    assert(TableStore.declaredSchema(spark, dir).get.fieldNames
+    // post-compact files all carry the full schema; the log keeps it
+    assert(TableStore.snapshot(spark, dir).schema.get.fieldNames
       .contains("extra"))
   }
 
-  test("never-evolved tables have no sidecar; readEvolved == read") {
+  test("a never-evolved table declares its first writer's schema") {
     val dir = tmp()
-    TableStore.append(
-      Seq((1L, "2024-01-01")).toDF("id", "date")
-        .withColumn("date", $"date".cast("date")), dir)
-    assert(TableStore.declaredSchema(spark, dir).isEmpty)
-    assert(TableStore.readEvolved(spark, dir).count() === 1L)
+    val df = Seq((1L, "2024-01-01")).toDF("id", "date")
+      .withColumn("date", $"date".cast("date"))
+    TableStore.append(df, dir)
+    assert(TableStore.snapshot(spark, dir).schema === Some(df.schema))
+    assert(TableStore.read(spark, dir).count() === 1L)
   }
 }

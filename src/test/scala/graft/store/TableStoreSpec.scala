@@ -38,16 +38,17 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     assert(pf.contains("date"), s"date not in partition filters:\n$scan")
   }
 
-  test("upsertPartitions is idempotent per partition (T4 exactly-once)") {
+  test("a partition replacement is idempotent per partition (T4 exactly-once)") {
     val dir = tmpDir("store") + "/t"
+    val day1 = $"date" === "2024-01-01"
     TableStore.append(mkBatch("2024-01-01", 0 until 10), dir)
     // re-run of the same hour replaces, not duplicates
-    TableStore.upsertPartitions(spark, mkBatch("2024-01-01", 0 until 10), dir)
-    TableStore.upsertPartitions(spark, mkBatch("2024-01-01", 0 until 10), dir)
+    TableStore.replaceWhere(spark, mkBatch("2024-01-01", 0 until 10), dir, day1)
+    TableStore.replaceWhere(spark, mkBatch("2024-01-01", 0 until 10), dir, day1)
     assert(TableStore.read(spark, dir).count() === 10)
     // other partitions untouched
     TableStore.append(mkBatch("2024-01-02", 0 until 5), dir)
-    TableStore.upsertPartitions(spark, mkBatch("2024-01-01", 0 until 10), dir)
+    TableStore.replaceWhere(spark, mkBatch("2024-01-01", 0 until 10), dir, day1)
     assert(TableStore.read(spark, dir).count() === 15)
   }
 
@@ -63,7 +64,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     assert(before >= 8)
     assert(after === 2) // one per date partition
     assert(TableStore.read(spark, dir).count() === rowsBefore)
-    // vacuum removed the old generation
+    // the current version names only the compacted files
     assert(TableStore.dataFiles(spark, dir).size === 2)
   }
 
@@ -73,7 +74,7 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
       TableStore.append(mkBatch("2024-01-01", k * 100 until k * 100 + 5), dir)
       TableStore.append(mkBatch("2024-01-02", k * 100 until k * 100 + 5), dir)
     }
-    TableStore.compact(spark, dir) // establish a generation
+    TableStore.compact(spark, dir)
     // re-fragment one date only
     (1 to 3).foreach { k =>
       TableStore.append(mkBatch("2024-01-02", k * 1000 until k * 1000 + 5), dir)
@@ -81,12 +82,10 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     val rowsBefore = TableStore.read(spark, dir).count()
     val untouchedBefore = TableStore.dataFiles(spark, dir)
       .filter(_.contains("date=2024-01-01")).toSet
-    val gen = TableStore.currentGeneration(spark, dir).get._1
     val (before, after) = TableStore.compactDates(spark, dir,
       Seq("2024-01-02"))
     assert(before >= 4 && after === 1) // compacted file + appends -> 1
-    // same generation (in-place maintenance, not a swap); rows preserved
-    assert(TableStore.currentGeneration(spark, dir).get._1 === gen)
+    // rows preserved
     assert(TableStore.read(spark, dir).count() === rowsBefore)
     // the untouched partition's files are byte-for-byte the same paths
     assert(TableStore.dataFiles(spark, dir)
@@ -123,22 +122,22 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
   test("compaction swap keeps the superseded generation alive for in-flight readers") {
     val dir = tmpDir("store") + "/t"
     TableStore.append(mkBatch("2024-01-01", 0 until 10), dir)
-    // a reader resolves its file list BEFORE the swap...
+    // a reader resolves its file list BEFORE the compaction...
     val preSwapFiles = TableStore.dataFiles(spark, dir)
     assert(preSwapFiles.nonEmpty)
     TableStore.compact(spark, dir)
-    // ...and every one of those files still exists after it (the old
-    // generation is vacuumed only by the NEXT compaction)
-    preSwapFiles.foreach(f =>
-      assert(Files.exists(java.nio.file.Paths.get(
-        f.stripPrefix("file:"))), s"reader lost $f mid-scan"))
-    // new readers resolve to the compacted generation
+    // ...and every one of those files still exists after it
+    def exists(f: String) = Files.exists(java.nio.file.Paths.get(f.stripPrefix("file:")))
+    preSwapFiles.foreach(f => assert(exists(f), s"reader lost $f mid-scan"))
+    // new readers resolve to the compacted version
     assert(TableStore.dataFiles(spark, dir).size === 1)
     assert(TableStore.read(spark, dir).count() === 10)
-    // second compaction vacuums the generation the old reader was using
+    // vacuum deletes them once Retained later versions have committed
+    (1 until TableStore.Retained).foreach(_ => TableStore.compact(spark, dir))
+    assert(preSwapFiles.forall(exists))
     TableStore.compact(spark, dir)
-    assert(preSwapFiles.forall(f =>
-      !Files.exists(java.nio.file.Paths.get(f.stripPrefix("file:")))))
+    assert(preSwapFiles.forall(f => !exists(f)))
+    assert(TableStore.read(spark, dir).count() === 10)
   }
 
   test("overwrite replaces result tables (S7)") {
@@ -150,17 +149,19 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     assert(back.head().getInt(0) === 2)
   }
 
-  test("time travel: the superseded generation stays queryable until the next rewrite") {
+  test("time travel: a superseded version stays queryable while retained") {
     val dir = tmpDir("store") + "/tt"
-    TableStore.overwriteVersioned(Seq((1, "v1")).toDF("k", "v"), dir) // g0
-    TableStore.overwriteVersioned(Seq((2, "v2")).toDF("k", "v"), dir) // g1
-    assert(Generations.list(spark, dir) === Seq(0, 1))
-    // current read sees g1; VERSION AS OF 0 still sees the old rows
+    TableStore.overwriteVersioned(Seq((1, "v1")).toDF("k", "v"), dir) // v0
+    TableStore.overwriteVersioned(Seq((2, "v2")).toDF("k", "v"), dir) // v1
+    assert(Generations.list(spark, dir) === Seq(0L, 1L))
+    // current read sees v1; VERSION AS OF 0 still sees the old rows
     assert(TableStore.read(spark, dir).head().getString(1) === "v2")
     assert(Generations.read(spark, dir, 0).head().getString(1) === "v1")
-    // a third rewrite vacuums g0: time travel to it must fail actionably
-    TableStore.overwriteVersioned(Seq((3, "v3")).toDF("k", "v"), dir) // g2
-    assert(Generations.list(spark, dir) === Seq(1, 2))
+    // Retained more rewrites vacuum v0: time travel to it fails actionably
+    (3 to TableStore.Retained + 2).foreach(i =>
+      TableStore.overwriteVersioned(Seq((i, s"v$i")).toDF("k", "v"), dir))
+    assert(Generations.list(spark, dir).head === 1L)
+    assert(Generations.read(spark, dir, 1).head().getString(1) === "v2")
     val e = intercept[IllegalArgumentException] {
       Generations.read(spark, dir, 0)
     }
@@ -196,38 +197,21 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     val dir = tmpDir("store") + "/race"
     (1 to 3).foreach(k =>
       TableStore.append(mkBatch("2024-01-01", k * 10 until k * 10 + 5), dir))
-    // writer A holds the claim on the next generation (g0: never compacted)
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.create(new org.apache.hadoop.fs.Path(dir, "g1.claim"), false).close()
     val rows = TableStore.read(spark, dir).count()
-    // writer B (this thread) must abort before touching ANY file
-    intercept[TableStore.ConcurrentWriteException] {
+    val v = TableStore.version(spark, dir)
+    // compaction A commits inside compaction B's pre-commit window
+    TableStore.beforeCommitHook = () => {
+      TableStore.beforeCommitHook = () => ()
       TableStore.compact(spark, dir)
     }
-    // store untorn: same generation, same rows, no g1 debris
+    val e = try intercept[TableStore.ConcurrentWriteException] {
+      TableStore.compact(spark, dir)
+    } finally TableStore.beforeCommitHook = () => ()
+    assert(e.getMessage.contains("removed"))
+    // store untorn: A's version only, same rows, one compacted file
+    assert(TableStore.version(spark, dir) === v + 1)
     assert(TableStore.read(spark, dir).count() === rows)
-    assert(Generations.list(spark, dir) === Seq(0))
-    // A crashed without committing: after the staleness window the claim
-    // is reclaimable and compaction proceeds
-    f.delete(new org.apache.hadoop.fs.Path(dir, "g1.claim"), false)
-    val (before, after) = TableStore.compact(spark, dir)
-    assert(before > after && TableStore.read(spark, dir).count() === rows)
-    // ... and the successful writer released its own claim
-    assert(!f.exists(new org.apache.hadoop.fs.Path(dir, "g1.claim")))
-  }
-
-  test("stale claims expire: a crashed writer blocks only until the timeout") {
-    val dir = tmpDir("store") + "/stale"
-    TableStore.append(mkBatch("2024-01-01", 0 until 10), dir)
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.create(new org.apache.hadoop.fs.Path(dir, "g1.claim"), false).close()
-    Thread.sleep(30)
-    // with a tiny staleness window the leftover claim is reclaimed
-    val (before, after) = TableStore.compact(spark, dir, staleLockMs = 10L)
-    assert(before >= after)
-    assert(TableStore.read(spark, dir).count() === 10)
+    assert(TableStore.dataFiles(spark, dir).size === 1)
   }
 
   test("readPruned skips files of a z-ordered compaction by footer stats") {
@@ -299,32 +283,23 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("compactDates publish is crash-recoverable from the retained stage") {
+  test("a compactDates that dies before its commit leaves the table " +
+    "untouched; the re-run compacts") {
     val dir = tmpDir("store") + "/crash"
     def batch(day: String, ids: Range) =
       ids.map(i => (i.toLong, java.sql.Date.valueOf(day))).toDF("id", "date")
     TableStore.append(batch("2024-01-01", 0 until 40), dir)
-    TableStore.compact(spark, dir)
     TableStore.append(batch("2024-01-01", 100 until 140), dir)
-    // simulate the worst crash point: stage fully committed, then the
-    // publish died AFTER deleting the old partition and BEFORE renaming
-    // the staged one in — the pre-fix path would have lost the partition
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataDir = TableStore.resolveDataDir(spark, dir)
-    val stage = new org.apache.hadoop.fs.Path(dir, "compact_stage.tmp")
-    // build a committed stage exactly like compactDates does
-    spark.read.option("basePath", dataDir)
-      .parquet(s"$dataDir/date=2024-01-01")
-      .write.mode("overwrite").partitionBy("date")
-      .option("partitionOverwriteMode", "static").parquet(stage.toString)
-    assert(f.exists(new org.apache.hadoop.fs.Path(stage, "_SUCCESS")))
-    f.delete(new org.apache.hadoop.fs.Path(dataDir, "date=2024-01-01"), true)
-    // the partition is gone from the live generation... but the next
-    // maintenance call recovers it from the stage before doing new work
-    TableStore.compactDates(spark, dir, Seq("2024-01-01"))
+    val files = TableStore.dataFiles(spark, dir)
+    TableStore.beforeCommitHook = () => throw new RuntimeException("killed")
+    try intercept[RuntimeException] {
+      TableStore.compactDates(spark, dir, Seq("2024-01-01"))
+    } finally TableStore.beforeCommitHook = () => ()
+    // the written files are unreferenced: readers see the old version
+    assert(TableStore.dataFiles(spark, dir) === files)
     assert(TableStore.read(spark, dir).count() === 80)
-    assert(!f.exists(stage)) // stage dropped only after the publish landed
+    assert(TableStore.compactDates(spark, dir, Seq("2024-01-01"))._2 === 1L)
+    assert(TableStore.read(spark, dir).count() === 80)
   }
 
   test("first compaction of a legacy FLAT table does not swallow its own " +
@@ -362,25 +337,10 @@ class TableStoreSpec extends AnyFunSuite with SparkFixture {
     val evolved = Seq((100, 0.5, java.sql.Date.valueOf("2024-03-03")))
       .toDF("id", "score", "date")
     TableStore.appendEvolving(evolved, dir)
-    val t = TableStore.readEvolved(spark, dir)
+    val t = TableStore.read(spark, dir)
     assert(t.columns.toSet === Set("id", "user", "score", "date"),
       "flat table's pre-existing columns erased from the declared schema")
     assert(t.filter($"user".isNotNull).count() === 5)
     assert(t.filter($"score".isNotNull).count() === 1)
-  }
-
-  test("an uncommitted stage (no _SUCCESS) is discarded, source untouched") {
-    val dir = tmpDir("store") + "/halfstage"
-    def batch(day: String, ids: Range) =
-      ids.map(i => (i.toLong, java.sql.Date.valueOf(day))).toDF("id", "date")
-    TableStore.append(batch("2024-01-01", 0 until 30), dir)
-    TableStore.compact(spark, dir)
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(dir, "compact_stage.tmp")
-    f.mkdirs(new org.apache.hadoop.fs.Path(stage, "date=2024-01-01"))
-    TableStore.compactDates(spark, dir, Seq("2024-01-01"))
-    assert(TableStore.read(spark, dir).count() === 30)
-    assert(!f.exists(stage))
   }
 }
