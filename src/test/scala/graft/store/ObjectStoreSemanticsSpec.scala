@@ -71,6 +71,29 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite with SparkFixture {
     val tbl = s"$dir/t"
     val spark2 = spark
     import spark2.implicits._
+    val df = (1 to 50).map(i => (i.toLong, java.sql.Date.valueOf("2024-03-01")))
+      .toDF("event_id", "date")
+    TableStore.append(df, tbl)
+    val files = TableStore.dataFiles(spark, tbl)
+    assert(TableStore.read(spark, tbl).count() === 50)
+
+    // another writer's data files have landed in the date= dir, where an
+    // object-store lister WILL surface them, but no log version names them
+    val dateDir = Paths.get(tbl.stripPrefix("mock3://"), "date=2024-03-01")
+    Files.list(dateDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(p => Files.copy(p, dateDir.resolve("uncommitted-" + p.getFileName)))
+    // readers stay on the committed version: the stray files are invisible
+    assert(TableStore.dataFiles(spark, tbl) === files)
+    assert(TableStore.read(spark, tbl).count() === 50)
+  }
+
+  test("an object-store compactDates that dies uncommitted is retried") {
+    NonAtomicRenameFs.reset()
+    val dir = mockDir("objstore_cd_")
+    val tbl = s"$dir/t"
+    val spark2 = spark
+    import spark2.implicits._
     def batch(off: Int) = (1 to 200).map(i =>
         ((off + i).toLong, java.sql.Date.valueOf(s"2024-03-0${i % 2 + 1}")))
       .toDF("event_id", "date")
